@@ -19,6 +19,7 @@ import json
 import math
 import os
 import shutil
+import signal
 import subprocess
 import sys
 
@@ -29,8 +30,10 @@ CLASSES = os.path.join(HERE, "target", "scala-2.13", "classes")
 STAMP = os.path.join(HERE, "target", "perfbench.sources")
 WORK = os.path.join(ROOT, ".bench_work")
 OUT = os.path.join(ROOT, ".bench_out")
-SPARK_JARS = os.environ.get("SPARK_JARS_DIR") or os.path.join(os.environ.get("SPARK_HOME", "."), "jars")
-RUN_TIMEOUT_S = 170
+SPARK_JARS = os.environ.get("SPARK_JARS_DIR", "/opt/spark/jars")  # as bin/graft.sh
+# a watchdog, so that the JVM never outlives this script: the slowest run,
+# a traced ingest_tick, takes about 110 s on a 4-core box
+RUN_TIMEOUT_S = 300
 
 # JDK 17 module opens Spark needs outside spark-submit (as in bin/graft.sh)
 ADD_OPENS = [
@@ -86,10 +89,11 @@ def heap():
     return f"{min(8, max(2, kb // 2097152))}g"
 
 
-def expected_metrics(trace):
+def listed_metrics(trace):
+    """The metrics this run prints, as BENCHMARK.json lists them."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    return {m["name"]: m["unit"] for m in spec["per_layer" if trace else "end_to_end"]}
+    return [(m["name"], m["unit"]) for m in spec["per_layer" if trace else "end_to_end"]]
 
 
 def main():
@@ -103,8 +107,8 @@ def main():
     if not os.path.isdir(os.path.join(PROGRAM_SOURCES, "graft")):
         fail(f"no program sources under {PROGRAM_SOURCES}; run from the root of a full checkout")
     if not os.path.isdir(SPARK_JARS):
-        fail(f"no Spark jars at {SPARK_JARS}; set SPARK_HOME or SPARK_JARS_DIR")
-    expected = expected_metrics(a.trace == "1")
+        fail(f"no Spark jars at {SPARK_JARS}; set SPARK_JARS_DIR")
+    listed = listed_metrics(a.trace == "1")
     build()
 
     run_dir = os.path.join(WORK, "run")
@@ -122,10 +126,18 @@ def main():
               f"-Dspark.sql.warehouse.dir={os.path.join(WORK, 'spark-warehouse')}",
               f"-Xmx{heap()}", "perfbench.Main",
               "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
-              "--trace", a.trace, "--work", run_dir, "--out", OUT])
+              "--trace", a.trace, "--work", run_dir, "--out", OUT,
+              "--metrics", ",".join(f"{n}:{u}" for n, u in listed)])
     log_path = os.path.join(OUT, f"{a.workload}-s{a.seed}-t{a.trace}.log")
     with open(log_path, "w") as log:
         proc = subprocess.Popen(cmd, cwd=ROOT, env=env, stdout=subprocess.PIPE, stderr=log, text=True)
+
+        def stop(signum, _frame):
+            proc.kill()
+            proc.wait()
+            sys.exit(128 + signum)
+        signal.signal(signal.SIGTERM, stop)
+        signal.signal(signal.SIGINT, stop)
         try:
             stdout, _ = proc.communicate(timeout=RUN_TIMEOUT_S)
         except subprocess.TimeoutExpired:
@@ -141,8 +153,8 @@ def main():
         fail(f"no result line (exit {proc.returncode}); log in {log_path}")
     result = json.loads(lines[-1])
     metrics = result["metrics"]
-    if {n: m["unit"] for n, m in metrics.items()} != expected:
-        fail(f"metrics differ from BENCHMARK.json: {sorted(set(metrics) ^ set(expected))}")
+    if {n: m["unit"] for n, m in metrics.items()} != dict(listed):
+        fail(f"metrics differ from BENCHMARK.json: {sorted(set(metrics) ^ set(dict(listed)))}")
     if not all(isinstance(m["value"], (int, float)) and math.isfinite(m["value"]) for m in metrics.values()):
         fail("a metric is not a finite number")
     if proc.returncode != 0 or not result["correct"]:

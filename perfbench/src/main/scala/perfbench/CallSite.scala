@@ -49,14 +49,15 @@ object CallSite {
     *   entry method itself; None when the entry method issued the job
     * @param site the innermost program frame
     * @param stageBuild the stack passes through `SessionCache.getOrBuild`
-    * @param viaBench the stack reaches the benchmark's own code
+    * @param bench the innermost frame of the benchmark's own code, if the
+    *   stack reaches it
     */
   final case class Attribution(
       entry: Option[String],
       step: Option[String],
       site: Option[String],
       stageBuild: Boolean,
-      viaBench: Boolean
+      bench: Option[String]
   )
 
   def attribute(frames: Seq[Frame]): Attribution = {
@@ -68,7 +69,7 @@ object CallSite {
       step.map(_.key),
       program.headOption.map(_.key),
       stageBuild = frames.exists(f => f.isProgram && f.key == "SessionCache.getOrBuild"),
-      viaBench = frames.exists(_.isBench)
+      bench = frames.find(_.isBench).map(_.key)
     )
   }
 }

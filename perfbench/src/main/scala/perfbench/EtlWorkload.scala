@@ -105,7 +105,7 @@ final class EtlWorkload(env: Env) extends Workload {
   def attributed(call: Call, job: Job): Boolean = stepOf(job).isDefined
 
   def layers(traced: Seq[(Timed, Seq[Job])], all: Seq[Timed]): Map[String, Double] = {
-    val calls = Workload.steady(traced)
+    val calls = traced.filterNot(_._1.cold) // a traced run always traces a warm pass
     val n = calls.size.toDouble
     val perStep = Steps.map(step => step -> LayerAgg.of(calls.map(_._2.filter(stepOf(_).contains(step))))).toMap
     val stepMetrics = perStep.toSeq.flatMap { case (step, a) =>

@@ -15,45 +15,33 @@ import graft.core.Sessions
 /** One benchmark run in one JVM:
   *
   *   perfbench.Main --workload <name> --seed <n> --seconds <s> --trace <0|1>
-  *                  --work <dir> --out <dir>
+  *                  --work <dir> --out <dir> --metrics <name:unit,...>
+  *
+  * `--metrics` lists the metrics to print, in order, with their units: the
+  * end-to-end ones of `BENCHMARK.json` for an untraced run, the per-layer
+  * ones for a traced run.
   *
   * Prints one JSON object as its last line of standard output and exits 0
   * when every output check passed, 1 when one failed.
   */
 object Main {
 
-  final case class Opts(workload: String, seed: Long, seconds: Int, trace: Boolean, work: Path, out: Path)
+  final case class Opts(workload: String, seed: Long, seconds: Int, trace: Boolean, work: Path, out: Path,
+      metrics: Seq[(String, String)])
 
   val Workloads: Seq[String] = Seq("etl_backfill", "registry_cold", "ingest_tick")
-
-  /** Per-layer metrics, printed by the traced run. A layer the workload
-    * does not run reads 0.
-    */
-  val PerLayer: Seq[String] =
-    Seq("core.session_s", "trace.unattributed_share", "trace_overhead_s") ++
-      EtlWorkload.Steps.flatMap(s => Seq("busy_s", "jobs", "tasks", "cpu_s", "input_mb", "shuffle_mb").map(m => s"etl.$s.$m")) ++
-      Seq("etl.gc_s", "etl.route_s", "etl.driver_s", "etl.rollup.rows_per_cpu_s", "etl.load.rewrite_ratio",
-        "etl.jobs_per_date") ++
-      IngestWorkload.Maintainers.values.toSeq.sorted.flatMap(m => Seq(s"tick.$m.busy_s", s"tick.$m.jobs")) ++
-      Seq("tick.cpu_s", "tick.driver_s", "tick.state_write_mb") ++
-      RegistryWorkload.Sample.map(_._2).sorted.flatMap(f => Seq(s"registry.$f.cold_s", s"registry.$f.warm_s")) ++
-      Seq("registry.jobs_cold", "registry.stage_build_s", "registry.driver_s", "registry.cpu_util")
-
-  def unit(metric: String): String = metric.split('.').last match {
-    case "rows_per_cpu_s"               => "rows/s"
-    case "jobs_per_date"                => "jobs/date"
-    case "jobs" | "tasks" | "jobs_cold" => "count"
-    case m if m.endsWith("_s")          => "s"
-    case m if m.endsWith("_mb")         => "MB"
-    case _                              => "ratio"
-  }
 
   def parse(args: Array[String]): Opts = {
     val m = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
     def need(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
     val w = need("workload")
     require(Workloads.contains(w), s"unknown workload $w; one of ${Workloads.mkString(", ")}")
-    Opts(w, need("seed").toLong, need("seconds").toInt, need("trace") == "1", Paths.get(need("work")), Paths.get(need("out")))
+    val metrics = need("metrics").split(',').toSeq.map { m =>
+      val Array(name, unit) = m.split(':')
+      name -> unit
+    }
+    Opts(w, need("seed").toLong, need("seconds").toInt, need("trace") == "1", Paths.get(need("work")), Paths.get(need("out")),
+      metrics)
   }
 
   def main(args: Array[String]): Unit = {
@@ -87,23 +75,33 @@ object Main {
   private def processCpuNs(): Long =
     ManagementFactory.getOperatingSystemMXBean.asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime
 
+  private def threadCpuNs(): Long = ManagementFactory.getThreadMXBean.getCurrentThreadCpuTime
+
   private def peakRssMb(): Double =
     scala.io.Source.fromFile("/proc/self/status").getLines().find(_.startsWith("VmHWM:"))
       .map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(Double.NaN)
 
   def run(o: Opts): Int = {
     val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime
-    var ownS = 0.0 // the benchmark's own work before the first timed call
-    def own[T](f: => T): T = {
-      val t0 = System.nanoTime()
-      try f
-      finally ownS += (System.nanoTime() - t0) / 1e9
-    }
-
     val t0 = System.nanoTime()
     val spark = Sessions.local("perfbench")
     val sessionS = (System.nanoTime() - t0) / 1e9
     val sc = spark.sparkContext
+    val taskCpu = new TaskCpu
+    sc.addSparkListener(taskCpu)
+    // work CPU so far: this thread's, which counts from the JVM's creation
+    // (the launcher creates the JVM on the thread that runs main), plus the
+    // executor tasks'
+    def workNs(): Long = { PerfbenchBus.drain(sc); threadCpuNs() + taskCpu.ns }
+
+    var ownS = 0.0 // the benchmark's own work before the first timed call
+    var ownCpuNs = 0L
+    def own[T](f: => T): T = {
+      val (t0, c0) = (System.nanoTime(), workNs())
+      try f
+      finally { ownS += (System.nanoTime() - t0) / 1e9; ownCpuNs += workNs() - c0 }
+    }
+
     val checks = new Checks
     val w = workload(o.workload, Env(spark, o.work, o.seed, checks, sc.defaultParallelism))
 
@@ -122,20 +120,26 @@ object Main {
 
     val calls = ArrayBuffer.empty[Timed]
     var attempted, failed = 0L
-    var setupS = Double.NaN
+    var setupS, setupWallS = Double.NaN
     def perform(c: Call, cold: Boolean, traced: Boolean): Unit = {
       own {
         w.reset(c)
         tracing(traced)
         if (traced) w.beforeTraced(c)
       }
-      if (setupS.isNaN) setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3 - ownS
+      val work0 = workNs()
+      if (setupS.isNaN) {
+        setupS = (work0 - ownCpuNs) / 1e9
+        setupWallS = (System.currentTimeMillis() - jvmStartMs) / 1e3 - ownS
+      }
       val startMs = System.currentTimeMillis()
       val t0 = System.nanoTime()
-      val cpu0 = processCpuNs()
+      val process0 = processCpuNs()
       val result = try Right(c.body()) catch { case NonFatal(e) => Left(e) }
-      val t = Timed(c, cold, traced, startMs, System.currentTimeMillis(), (System.nanoTime() - t0) / 1e9,
-        (processCpuNs() - cpu0) / 1e9)
+      val endMs = System.currentTimeMillis()
+      val wallS = (System.nanoTime() - t0) / 1e9
+      val processS = (processCpuNs() - process0) / 1e9
+      val t = Timed(c, cold, traced, startMs, endMs, wallS, (workNs() - work0) / 1e9, processS)
       calls += t
       if (traced) w.afterTraced(c, t)
       result match {
@@ -150,18 +154,23 @@ object Main {
       }
     }
 
+    val steal = new Steal
+    val measureStart = System.nanoTime()
     w.coldPass.foreach(perform(_, cold = true, traced = o.trace))
-    // warm passes until the time is up: at least one, and in the traced run
-    // one traced and one untraced, so the tracing overhead is measured
+    // warm passes until --seconds of calls (the cold pass included) are
+    // measured, but at least the ones the output checks need, and in the
+    // traced run one traced and one untraced, so the tracing overhead is
+    // measured
     val loopStart = System.nanoTime()
-    val minPasses = if (o.trace) 2 else 1
+    val minPasses = if (o.trace) 2 else w.warmPassesUntraced
     val passes = ArrayBuffer.empty[Seq[Timed]]
-    while (passes.size < minPasses || System.nanoTime() - loopStart < o.seconds * 1000000000L) {
+    while (passes.size < minPasses || System.nanoTime() - measureStart < o.seconds * 1000000000L) {
       val before = calls.size
       w.nextWarm().foreach(perform(_, cold = false, traced = o.trace && passes.size % 2 == 0))
       passes += calls.drop(before).toSeq
     }
     val loopS = (System.nanoTime() - loopStart) / 1e9
+    steal.stop()
     tracing(false)
 
     val calEnd = calibration(spark)
@@ -170,7 +179,8 @@ object Main {
     val warm = calls.filterNot(_.cold).map(_.wallS).toSeq
     val cold = calls.filter(_.cold)
     val (coldS, coldCpuS) = (cold.map(_.wallS).sum, cold.map(_.cpuS).sum)
-    val (passS, passCpuS) = (passes.map(_.map(_.wallS).sum).toSeq, passes.map(_.map(_.cpuS).sum).toSeq)
+    def perPass(f: Timed => Double) = passes.map(_.map(f).sum).toSeq
+    def median(xs: Seq[Double]) = if (xs.isEmpty) Double.NaN else Stats.median(xs)
 
     val details = scala.collection.mutable.LinkedHashMap[String, Any](
       "workload" -> o.workload,
@@ -180,31 +190,32 @@ object Main {
       "session_s" -> sessionS,
       "generate_s" -> genS,
       "setup_s" -> setupS,
+      "setup_wall_s" -> setupWallS,
       "cold_s" -> coldS,
-      "op_s" -> Stats.median(passS),
       "cold_cpu_s" -> coldCpuS,
-      "op_cpu_s" -> Stats.median(passCpuS),
+      "cold_process_cpu_s" -> cold.map(_.processCpuS).sum,
+      "op_s" -> median(perPass(_.wallS)),
+      "op_cpu_s" -> median(perPass(_.cpuS)),
+      "op_process_cpu_s" -> median(perPass(_.processCpuS)),
+      "steal_share" -> steal.share,
       "warm_loop_s" -> loopS,
-      "warm_passes_s" -> passS,
-      "warm_passes_cpu_s" -> passCpuS,
+      "warm_passes_s" -> perPass(_.wallS),
+      "warm_passes_cpu_s" -> perPass(_.cpuS),
       "warm_calls" -> warm.size,
-      "warm_p50_s" -> Stats.median(warm),
-      "warm_quartiles_s" -> Seq(Stats.quantile(warm, 0.25), Stats.quantile(warm, 0.75)),
-      "warm_tail" -> Stats.tail(warm).map(t => Map("percentile" -> t.percentile, "value_s" -> t.value, "samples" -> t.samples,
-        "beyond" -> t.beyond)).getOrElse("fewer than 11 warm samples"),
+      "warm_p50_s" -> median(warm),
       "attempted" -> attempted,
       "failed" -> failed,
       "error_rate" -> (if (attempted > 0) failed.toDouble / attempted else 0.0),
       "peak_rss_mb" -> peakRssMb(),
       "calibration_s" -> Map("start" -> calStart, "end" -> calEnd),
       "calls" -> calls.map(t => Map("name" -> t.call.name, "cold" -> t.cold, "traced" -> t.traced, "wall_s" -> t.wallS,
-        "cpu_s" -> t.cpuS)).toSeq,
+        "cpu_s" -> t.cpuS, "process_cpu_s" -> t.processCpuS)).toSeq,
       "failures" -> checks.all
     ) ++ w.details
 
-    val metrics: Seq[(String, Double)] = tracer match {
+    val produced: Map[String, Double] = tracer match {
       case None =>
-        Seq("setup_s" -> setupS, "stored_mb" -> storedMb)
+        Map("setup_s" -> setupS, "cold_cpu_s" -> coldCpuS, "stored_mb" -> storedMb)
       case Some(tr) =>
         val jobs = tr.jobs(sc)
         val traced = calls.filter(_.traced).toSeq.map(t => t -> jobs.filter(j => j.start >= t.startMs && j.start <= t.endMs))
@@ -221,16 +232,17 @@ object Main {
           "jobs_outside_calls" -> (jobs.size - program.size)
         )
         writeSpans(o, traced)
-        val layer = w.layers(traced, calls.toSeq) ++ Map(
+        w.layers(traced, calls.toSeq) ++ Map(
           "core.session_s" -> sessionS,
           "trace.unattributed_share" -> (if (program.isEmpty) 0.0 else unattributed.size.toDouble / program.size),
           "trace_overhead_s" -> overhead
         )
-        val unknown = layer.keySet -- PerLayer
-        require(unknown.isEmpty, s"metrics missing from the per-layer list: $unknown")
-        PerLayer.map(n => n -> layer.getOrElse(n, 0.0))
     }
-    details("metrics") = metrics.toMap
+    // every listed metric is printed; a layer this workload does not run reads 0
+    val unknown = produced.keySet -- o.metrics.map(_._1)
+    require(unknown.isEmpty, s"metrics missing from BENCHMARK.json: ${unknown.toSeq.sorted.mkString(", ")}")
+    val metrics = o.metrics.map { case (n, u) => (n, produced.getOrElse(n, 0.0), u) }
+    details("metrics") = metrics.map { case (n, v, _) => n -> v }.toMap
 
     Files.createDirectories(o.out)
     val stem = s"${o.workload}-s${o.seed}-t${if (o.trace) 1 else 0}"
@@ -242,7 +254,7 @@ object Main {
       "correct" -> correct,
       "attempted" -> attempted,
       "failed" -> failed,
-      "metrics" -> metrics.map { case (n, v) => n -> Map("value" -> v, "unit" -> unit(n)) }.toMap
+      "metrics" -> metrics.map { case (n, v, u) => n -> Map("value" -> v, "unit" -> u) }.toMap
     )
     spark.stop()
     println(Json.of(line))
@@ -256,7 +268,8 @@ object Main {
         "cold" -> t.cold, "start_ms" -> t.startMs, "end_ms" -> t.endMs, "self_ms" -> Workload.driverS(t, js) * 1e3)
       parent +: js.map { j =>
         val a = j.attribution
-        Map("span" -> s"job-${j.id}", "parent" -> s"call-$i", "name" -> a.step.orElse(a.entry).getOrElse("(sink)"),
+        val name = a.step.orElse(a.entry).orElse(a.bench.map(b => s"perfbench:$b")).getOrElse("(none)")
+        Map("span" -> s"job-${j.id}", "parent" -> s"call-$i", "name" -> name,
           "site" -> a.site.orNull, "stage_build" -> a.stageBuild, "start_ms" -> j.start, "end_ms" -> j.end,
           "self_ms" -> (j.end - j.start), "tasks" -> j.tasks, "cpu_s" -> j.cpuNs / 1e9, "input_bytes" -> j.inputBytes,
           "shuffle_bytes" -> j.shuffleBytes, "spill_bytes" -> j.spillBytes)

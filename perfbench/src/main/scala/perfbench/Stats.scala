@@ -15,21 +15,6 @@ object Stats {
     s(lo) + (s(hi) - s(lo)) * (pos - lo)
   }
 
-  /** The tail sample: the highest percentile that still has at least
-    * `beyond` samples above it. With `n` sorted samples that is the sample
-    * of 1-based rank `n - beyond`, i.e. percentile `100 * (n - beyond) / n`.
-    * None when there are not more than `beyond` samples.
-    */
-  final case class Tail(percentile: Double, value: Double, samples: Int, beyond: Int)
-
-  def tail(xs: Seq[Double], beyond: Int = 10): Option[Tail] =
-    if (xs.size <= beyond) None
-    else {
-      val s = xs.sorted
-      val rank = s.size - beyond
-      Some(Tail(100.0 * rank / s.size, s(rank - 1), s.size, beyond))
-    }
-
   /** Total length covered by half-open intervals [start, end). */
   def unionLength(intervals: Iterable[(Long, Long)]): Long = {
     var total = 0L

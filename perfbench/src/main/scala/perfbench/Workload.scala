@@ -8,11 +8,14 @@ import org.apache.spark.sql.SparkSession
 final case class Call(name: String, group: String, body: () => Any)
 
 /** A timed call as it happened. `startMs`/`endMs` bound the span for job
-  * attribution; `wallS` is measured with the monotonic clock; `cpuS` is the
-  * CPU time every thread of the process used meanwhile (driver, executor
-  * tasks, GC and JIT).
+  * attribution; `wallS` is measured with the monotonic clock. `cpuS` is the
+  * CPU time of the work the call did: the calling thread's (planning, driver
+  * code, driver-side I/O) plus the executor CPU of the tasks it ran.
+  * `processCpuS` is what every thread of the process used meanwhile, GC and
+  * JIT compilation included.
   */
-final case class Timed(call: Call, cold: Boolean, traced: Boolean, startMs: Long, endMs: Long, wallS: Double, cpuS: Double)
+final case class Timed(call: Call, cold: Boolean, traced: Boolean, startMs: Long, endMs: Long, wallS: Double, cpuS: Double,
+    processCpuS: Double)
 
 /** A workload drives the program only through its public entry points.
   *
@@ -25,6 +28,8 @@ trait Workload {
   def generate(): Unit
   def coldPass: Seq[Call]
   def nextWarm(): Seq[Call]
+  /** Warm passes an untraced run makes at least: the ones its checks need. */
+  def warmPassesUntraced: Int = 1
   def reset(call: Call): Unit = ()
   /** Checks a call's result; returns (operations attempted, failed). */
   def check(call: Call, result: Any): (Long, Long)
@@ -35,7 +40,9 @@ trait Workload {
     * every timed call, traced or not.
     */
   def layers(calls: Seq[(Timed, Seq[Job])], all: Seq[Timed]): Map[String, Double]
-  /** Whether a program job inside a call belongs to a named layer. */
+  /** Whether a job inside a call belongs to a named layer; the rest are
+    * reported as unattributed.
+    */
   def attributed(call: Call, job: Job): Boolean
   /** Facts for the details file. */
   def details: Map[String, Any] = Map.empty
@@ -50,12 +57,6 @@ object Workload {
   /** Driver time of a call: its span minus the part its jobs cover. */
   def driverS(call: Timed, jobs: Seq[Job]): Double =
     Stats.selfTime((call.startMs, call.endMs), jobs.map(j => (j.start, j.end))) / 1e3
-
-  /** The warm calls, or the cold one when no warm call was traced. */
-  def steady(traced: Seq[(Timed, Seq[Job])]): Seq[(Timed, Seq[Job])] = {
-    val warm = traced.filterNot(_._1.cold)
-    if (warm.isEmpty) traced else warm
-  }
 }
 
 /** Collects output-check failures; any failure makes the run incorrect. */

@@ -42,7 +42,7 @@ class CallSiteSpec extends AnyFunSuite {
     assert(a.entry === Some("Pipeline.run"))
     assert(a.step === Some("ParquetWarehouse.loadPrepared"))
     assert(a.site === Some("ParquetWarehouse.load"))
-    assert(a.viaBench && !a.stageBuild)
+    assert(a.bench === Some("EtlWorkload.run") && !a.stageBuild)
   }
 
   test("a job the entry issues itself has no step; program frames above the benchmark's are ignored") {
@@ -71,13 +71,14 @@ class CallSiteSpec extends AnyFunSuite {
     assert(a.entry === Some("Dedup.queries") && a.step === Some("Dedup.q101LshDupClusters"))
   }
 
-  test("a job issued by the benchmark's own call (a noop sink) has no program frame") {
+  test("a job issued by the benchmark's own sink has no program frame and names the sink") {
     val sink = Seq(
-      "org.apache.spark.sql.DataFrameWriter.save(DataFrameWriter.scala:250)",
-      "perfbench.RegistryWorkload.$anonfun$call$1(RegistryWorkload.scala:30)"
+      "org.apache.spark.sql.Dataset.head(Dataset.scala:3300)",
+      "perfbench.RegistryWorkload$.digest(RegistryWorkload.scala:150)",
+      "perfbench.RegistryWorkload.$anonfun$coldPass$1(RegistryWorkload.scala:30)"
     ).mkString("\n")
     val a = CallSite.attribute(CallSite.parse(sink))
-    assert(a.entry === None && a.step === None && a.viaBench)
-    assert(!CallSite.attribute(Nil).viaBench)
+    assert(a.entry === None && a.step === None && a.bench === Some("RegistryWorkload.digest"))
+    assert(CallSite.attribute(Nil).bench === None)
   }
 }

@@ -4,21 +4,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class StatsSpec extends AnyFunSuite {
 
-  test("tail: the highest percentile with ten samples beyond it") {
-    val xs = (1 to 100).map(_.toDouble)
-    val t = Stats.tail(xs).get
-    assert(t.value === 90.0) // 10 samples (91..100) lie beyond it
-    assert(t.percentile === 90.0)
-    assert(t.samples === 100 && t.beyond === 10)
-    assert(xs.count(_ > t.value) === 10)
-  }
-
-  test("tail: none without more than ten samples; order of input is irrelevant") {
-    assert(Stats.tail((1 to 10).map(_.toDouble)).isEmpty)
-    val t = Stats.tail(Seq(5.0, 1.0, 11.0, 3.0, 2.0, 4.0, 6.0, 7.0, 8.0, 9.0, 10.0)).get
-    assert(t.value === 1.0 && t.percentile === 100.0 / 11)
-  }
-
   test("quantiles interpolate linearly; the median of an even count is the midpoint") {
     assert(Stats.median(Seq(4.0, 1.0, 3.0, 2.0)) === 2.5)
     assert(Stats.quantile(Seq(1.0, 2.0, 3.0, 4.0, 5.0), 0.25) === 2.0)
