@@ -3,7 +3,10 @@ package graft.etl
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Exact-name single-file CSV sink (SURVEY §2.1 S8): the reference coalesces
   * to 1 and writes `task1_output_<date>.csv` via pandas
@@ -11,25 +14,47 @@ import org.apache.spark.sql.DataFrame
   * construction, so a driver-side collect + java.io write is the right
   * tool — a distributed writer would produce part-files needing a rename,
   * for 24 rows. (For large frames use `df.write.csv`; this sink is
-  * deliberately small-report-only.)
+  * deliberately small-report-only.) Task 2 reads the file back the same
+  * way: one collect, then a driver-local frame.
   */
 object CsvWriter {
 
   val MaxCollectRows = 10000
 
-  /** Writes df as a single CSV with header; returns the path. Refuses frames
-    * larger than MaxCollectRows — this sink is for small final reports only.
+  /** Collects a small frame to the driver. Refuses frames larger than
+    * MaxCollectRows, so a large one fails loudly instead of being pulled
+    * into driver memory.
     */
-  def writeSingleFile(df: DataFrame, outPath: String): String = {
+  private[etl] def collectSmall(df: DataFrame): Array[Row] = {
     val rows = df.limit(MaxCollectRows + 1).collect()
-    require(rows.length <= MaxCollectRows, s"CsvWriter is a small-report sink; got > $MaxCollectRows rows")
+    require(rows.length <= MaxCollectRows, s"small-report step; got > $MaxCollectRows rows")
+    rows
+  }
+
+  /** Writes df as a single CSV with header; returns the number of rows
+    * written. Refuses frames larger than MaxCollectRows — this sink is for
+    * small final reports only.
+    */
+  def writeSingleFile(df: DataFrame, outPath: String): Long = {
+    val rows = collectSmall(df)
     val header = df.columns.mkString(",")
     val body = rows.map(_.toSeq.map(csvCell).mkString(","))
     val content = (header +: body).mkString("", "\n", "\n")
     val p = Paths.get(outPath)
     if (p.getParent != null) Files.createDirectories(p.getParent)
     Files.write(p, content.getBytes(StandardCharsets.UTF_8))
-    outPath
+    rows.length.toLong
+  }
+
+  /** Reads a single CSV with header back as a driver-local frame (a
+    * LocalRelation): one Spark job parses the file with Spark's CSV reader,
+    * and every later plan over the frame that only filters and projects is
+    * evaluated on the driver without a job. Refuses files larger than
+    * MaxCollectRows.
+    */
+  def readSingleFile(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val rows = collectSmall(spark.read.option("header", "true").schema(schema).csv(path))
+    spark.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   private def csvCell(v: Any): String = v match {

@@ -1,11 +1,13 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
+import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.core.StagedTable
 
 /** Warehouse load semantics (SURVEY §2.1 S10-S13, §2.3 J2-J3, §3.2)
   * re-expressed Spark-first over parquet tables.
@@ -19,23 +21,35 @@ import org.apache.spark.sql.functions._
   *
   * This container ships no SQL JDBC driver (only hive-jdbc), so the same
   * semantics run against parquet directories:
-  *   - transaction  → stage-then-atomic-swap: each table version is fully
-  *     written to `<table>.staging`, then moved over `<table>` — readers see
-  *     old or new, never partial. (On HDFS/S3 this becomes a rename/commit;
-  *     with a real JDBC sink the seam is `load()` below — swap the writer,
-  *     keep the plan.)
+  *   - transaction  → [[graft.core.StagedTable]]: each table version is
+  *     fully written to `<table>.staging` as one parquet file, then swapped
+  *     in by two renames. A crash at any point leaves a complete version
+  *     where [[readTable]] looks (the table, or its retired `.old` copy),
+  *     and the next commit heals that state before deleting anything. (On
+  *     HDFS/S3 this becomes a rename/commit; with a real JDBC sink the seam
+  *     is `load()` below — swap the writer, keep the plan.)
   *   - DELETE range → filter NOT BETWEEN on rewrite (range, not per-date —
   *     preserving the reference's min..max semantics, SURVEY §7.4.6).
   *   - archive anti-join → left_anti on datetime, append.
   *   - upsert       → union + row_number over (datetime, source_file) keeping
   *     the newest audit timestamp.
   *
+  * A rewrite reads the version it replaces. No snapshot of that version is
+  * taken: the staging write finishes before the swap moves the old files,
+  * so the lazy read never sees them change. Row counts of a rewrite are
+  * observed on the write itself ([[org.apache.spark.sql.Observation]])
+  * rather than by reading the new version back.
+  *
+  * Tables are read with their declared schemas, so no read runs a parquet
+  * schema-inference job, and a column a table version lacks (the quarantine
+  * counts, added after the first layout) reads as null.
+  *
   * Scale notes: report tables are hour-grained aggregates (tiny relative to
   * raw events), so full-rewrite-on-load is proportional to the table, not the
-  * raw data. At true warehouse scale the same logical plan lands on a
-  * transactional table format (Delta/Iceberg MERGE) — the operators here
-  * (anti-join, range filter, keyed last-writer-wins) are exactly the ones
-  * those formats execute.
+  * raw data, and one file per version is the right layout. At true warehouse
+  * scale the same logical plan lands on a transactional table format
+  * (Delta/Iceberg MERGE) — the operators here (anti-join, range filter,
+  * keyed last-writer-wins) are exactly the ones those formats execute.
   */
 class ParquetWarehouse(spark: SparkSession, baseDir: String) extends WarehouseSink {
 
@@ -44,31 +58,25 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends WarehouseSi
   override def loadPrepared(prepared: DataFrame): Long = load(prepared).rowsLoaded
   override def storeInvalidRows(invalid: DataFrame): Unit = { storeInvalid(invalid); () }
 
-  private def tableDir(name: String): Path = Paths.get(baseDir, name)
+  private def tableDir(name: String): String = Paths.get(baseDir, name).toString
 
-  def readTable(name: String): Option[DataFrame] = {
-    val dir = tableDir(name)
-    if (Files.isDirectory(dir)) Some(spark.read.parquet(dir.toString)) else None
+  def readTable(name: String): Option[DataFrame] =
+    StagedTable.current(tableDir(name)).map(spark.read.schema(Schemas(name)).parquet(_))
+
+  /** Stages `df` as the next version of table `name`, in one parquet file,
+    * and returns how many rows `counted` (a part of `df`'s plan) produced.
+    */
+  private def stageTable(df: DataFrame, name: String, counted: Observation): Long = {
+    StagedTable.stage(df.coalesce(1), tableDir(name))
+    counted.get(RowsMetric).asInstanceOf[Long]
   }
 
-  /** Stage-then-swap write: the "transaction commit" of this sink. The old
-    * version is moved aside (not deleted) before the staging move, so the
-    * window where no table directory exists is two renames wide and a crash
-    * inside it leaves both `.old` and `.staging` for manual recovery —
-    * never zero copies of the data.
-    */
-  private def writeTable(df: DataFrame, name: String): Unit = {
-    val staging = Paths.get(baseDir, s"$name.staging")
-    val old = Paths.get(baseDir, s"$name.old")
-    val target = tableDir(name)
-    // materialize BEFORE touching the target (df may read from the target)
-    val snapshot = df.collectResult()
-    deleteRecursively(staging)
-    snapshot.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    deleteRecursively(old)
-    if (Files.exists(target)) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(old)
+  /** Commits `df` as the next version of table `name`; returns its rows. */
+  private def writeTable(df: DataFrame, name: String): Long = {
+    val rows = Observation()
+    val n = stageTable(observeRows(df, rows), name, rows)
+    StagedTable.promote(tableDir(name))
+    n
   }
 
   /** Prepare a report frame for load (reference `warehouse.py:331-389`):
@@ -85,37 +93,38 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends WarehouseSi
       totalClicks: Long
   )
 
-  /** Archive → delete range → insert → verify (one logical transaction). */
+  /** Archive → delete range → insert → verify (one logical transaction).
+    * The [lo, hi] bounds come from the prepared rows on the driver: a report
+    * is hour-grained, and over a driver-local frame the collect runs no job.
+    */
   def load(prepared: DataFrame): LoadReport = {
-    val bounds = prepared.agg(min(col("datetime")), max(col("datetime"))).collect().head
-    require(!bounds.isNullAt(0), "cannot load an empty report")
-    val (lo, hi) = (bounds.getTimestamp(0), bounds.getTimestamp(1))
+    val keys = CsvWriter.collectSmall(prepared.select(col("datetime"))).flatMap(r => Option(r.getTimestamp(0)))
+    require(keys.nonEmpty, "cannot load an empty report")
+    val (lo, hi) = (keys.minBy(_.getTime), keys.maxBy(_.getTime))
+    val inRange = col("datetime").between(lo, hi)
 
+    // archive rows not already archived (anti-join on the key; J2): the new
+    // archive version is staged, and committed only when it adds rows
     val existing = readTable(ClientReport)
-    val overlapped = existing
-      .map(_.filter(col("datetime").between(lo, hi)))
-      .getOrElse(prepared.limit(0))
-
-    // archive rows not already archived (anti-join on the key; J2)
-    val archived = readTable(ClientReportArchive) match {
-      case Some(arch) =>
-        val fresh = overlapped.join(arch.select("datetime"), Seq("datetime"), "left_anti")
-        val n = fresh.count()
-        if (n > 0) writeTable(arch.unionByName(fresh), ClientReportArchive)
-        n
-      case None =>
-        val n = overlapped.count()
-        if (n > 0) writeTable(overlapped, ClientReportArchive)
-        n
+    val archived = existing.fold(0L) { report =>
+      val archive = readTable(ClientReportArchive)
+      val overlapped = report.filter(inRange)
+      val freshRows = Observation()
+      val fresh = observeRows(
+        archive.fold(overlapped)(a => overlapped.join(a.select("datetime"), Seq("datetime"), "left_anti")),
+        freshRows
+      )
+      val n = stageTable(archive.fold(fresh)(_.unionByName(fresh)), ClientReportArchive, freshRows)
+      val dir = tableDir(ClientReportArchive)
+      if (n > 0) StagedTable.promote(dir) else StagedTable.discard(dir)
+      n
     }
 
     // delete range + insert, as one rewritten version
-    val retained = existing.map(_.filter(!col("datetime").between(lo, hi)))
-    val next = retained.map(_.unionByName(prepared)).getOrElse(prepared)
-    writeTable(next, ClientReport)
+    writeTable(existing.fold(prepared)(_.filter(!inRange).unionByName(prepared)), ClientReport)
 
     val stats = readTable(ClientReport).get
-      .filter(col("datetime").between(lo, hi))
+      .filter(inRange)
       .agg(
         count(lit(1)),
         coalesce(sum(col("impression_count")), lit(0L)),
@@ -128,17 +137,12 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends WarehouseSi
 
   /** Quarantine upsert keyed on (datetime, source_file), last writer (by
     * audit timestamp) wins — the reference's staged `ON CONFLICT DO UPDATE`
-    * (`warehouse.py:258-329`).
+    * (`warehouse.py:258-329`). Returns the quarantine table's row count.
     */
   def storeInvalid(invalid: DataFrame): Long = {
     if (invalid.isEmpty) return 0L
     val incoming = ParquetWarehouse.shapeInvalid(invalid)
-    val all = readTable(ClientReportInvalid) match {
-      // allowMissingColumns: tables written before the counts were carried
-      // read back with nulls in the new columns rather than failing.
-      case Some(existing) => existing.unionByName(incoming, allowMissingColumns = true)
-      case None           => incoming
-    }
+    val all = readTable(ClientReportInvalid).fold(incoming)(_.unionByName(incoming))
     // Upsert on (datetime, source_file), last writer by audit ts — but ONLY
     // for non-null keys: SQL ON CONFLICT never fires on NULLs (Postgres
     // treats them as distinct), so null-datetime quarantine rows (e.g.
@@ -151,9 +155,7 @@ class ParquetWarehouse(spark: SparkSession, baseDir: String) extends WarehouseSi
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
-    val merged = keyed.unionByName(all.filter(col("datetime").isNull))
-    writeTable(merged, ClientReportInvalid)
-    readTable(ClientReportInvalid).get.count()
+    writeTable(keyed.unionByName(all.filter(col("datetime").isNull)), ClientReportInvalid)
   }
 
   /** Load verification summary (reference `warehouse.py:487-531`). */
@@ -186,6 +188,25 @@ object ParquetWarehouse {
   val ClientReportArchive = "client_report_archive"
   val ClientReportInvalid = "client_report_invalid"
 
+  /** The tables' declared schemas: the columns of the SQL sink's DDL
+    * ([[JdbcWarehouse]]), as Spark types.
+    */
+  val Schemas: Map[String, StructType] = {
+    val sparkType = Map("TIMESTAMP" -> TimestampType, "BIGINT" -> LongType, "TEXT" -> StringType)
+    def schema(cols: Seq[(String, String, Boolean)]) =
+      StructType(cols.map { case (name, sqlType, _) => StructField(name, sparkType(sqlType)) })
+    Map(
+      ClientReport -> schema(JdbcWarehouse.ReportCols),
+      ClientReportArchive -> schema(JdbcWarehouse.ReportCols),
+      ClientReportInvalid -> schema(JdbcWarehouse.InvalidCols)
+    )
+  }
+
+  private val RowsMetric = "rows"
+
+  private def observeRows(df: DataFrame, rows: Observation): DataFrame =
+    df.observe(rows, count(lit(1)).as(RowsMetric))
+
   /** Prepare a report frame for load (reference `warehouse.py:331-389`):
     * datetime key = date + hour:00:00, counts cast long, audit stamp.
     * Shared by the parquet and JDBC sinks — the load plan is identical,
@@ -201,7 +222,6 @@ object ParquetWarehouse {
       .withColumn("click_count", col("click_count").cast("long"))
       .withColumn("audit_loaded_datetime", current_timestamp())
       .select(col("datetime"), col("impression_count"), col("click_count"), col("audit_loaded_datetime"))
-      .orderBy(col("datetime"))
 
   /** Canonical quarantine frame, shared by both sinks (the reference's
     * client_report_invalid shape, `warehouse.py:67-76`): the offending
@@ -221,17 +241,5 @@ object ParquetWarehouse {
       col("validation_error"),
       col("source_file")
     )
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-
-  /** Pin a DataFrame's current contents so a table rewrite can read from the
-    * table it is about to replace: localCheckpoint materializes the rows on
-    * the executors and cuts the lineage back to the source files.
-    */
-  implicit private[etl] class Snapshot(private val df: DataFrame) extends AnyVal {
-    def collectResult(): DataFrame = df.localCheckpoint(eager = true)
   }
 }

@@ -2,6 +2,7 @@ package graft.etl
 
 import java.nio.file.Paths
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
@@ -80,13 +81,13 @@ object Pipeline {
           userAgent
         )
         val out = Paths.get(outputDir, CsvWriter.taskOutputName(date)).toString
-        CsvWriter.writeSingleFile(df, out)
+        val rows = CsvWriter.writeSingleFile(df, out)
         if (deleteInputs)
           deleted += FileRouter.deleteFiles(
             routed.impressionsByDate.getOrElse(date, Seq.empty) ++
               routed.clicksByDate.getOrElse(date, Seq.empty)
           )
-        DateResult(date, out, 24L)
+        DateResult(date, out, rows)
       }
     }
     val ok = results.collect { case (_, Success(r)) => r }
@@ -94,15 +95,19 @@ object Pipeline {
 
     // Task 2: load each CSV into the warehouse with validation + quarantine —
     // per-file error isolation, mirroring Task 1 (one bad load must not
-    // discard the run's results).
+    // discard the run's results). The CSV is read once into a driver-local
+    // frame, so validation, quarantine keying and load preparation are
+    // evaluated on the driver; the quarantine rows are collected once and
+    // the same rows go to the sink.
     var quarantined = 0L
     val loadResults = ok.map { r =>
       r.csvPath -> Try {
-        val raw = spark.read.option("header", "true").schema(csvSchema).csv(r.csvPath)
-        val v = QualityRules.validate(raw, Paths.get(r.csvPath).getFileName.toString)
+        val report = CsvWriter.readSingleFile(spark, r.csvPath, csvSchema)
+        val v = QualityRules.validate(report, Paths.get(r.csvPath).getFileName.toString)
         val invalid = prepareInvalid(v.quarantined)
-        quarantined += invalid.count()
-        sink.storeInvalidRows(invalid)
+        val invalidRows = invalid.collect()
+        quarantined += invalidRows.length
+        sink.storeInvalidRows(spark.createDataFrame(invalidRows.toSeq.asJava, invalid.schema))
         sink.loadPrepared(ParquetWarehouse.prepare(v.cleaned))
       }
     }

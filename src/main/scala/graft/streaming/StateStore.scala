@@ -1,67 +1,27 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.StagedTable
+
 /** Parquet state tables for incremental maintainers (SCD2 history, corpus
-  * build state): stage-then-swap commits (ParquetWarehouse's two-rename
-  * shape — never zero copies on disk, `.old`/`.staging` recoverable on
-  * crash) plus a plain-text high-watermark sidecar. The sidecar is written
-  * AFTER the table swap: a crash between the two leaves an older watermark
-  * and a newer table, and maintainers are built so re-applying the covered
-  * delta is a no-op.
+  * build state), committed with [[StagedTable.commit]] (never zero copies
+  * on disk, the retired `.old` read during a crashed swap), plus a
+  * plain-text high-watermark sidecar. The sidecar is written AFTER the
+  * table swap: a crash between the two leaves an older watermark and a
+  * newer table, and maintainers are built so re-applying the covered delta
+  * is a no-op.
   */
 private[streaming] object StateStore {
 
   def readTable(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    if (Files.isDirectory(Paths.get(dir))) spark.read.parquet(dir)
-    else if (Files.isDirectory(Paths.get(dir + ".old")))
-      // crash-window fallback: a crash between commit's retire and promote
-      // renames leaves the complete pre-tick table in `.old` only
-      spark.read.parquet(dir + ".old")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** Two-rename commit. The staging write reads the OLD table lazily —
-    * distinct directories, safe self-reference.
-    */
-  def commit(df: DataFrame, dir: String): Unit = {
-    df.write.mode("overwrite").parquet(dir + ".staging")
-    promoteStaging(dir)
-  }
-
-  /** Swap a fully-written `<dir>.staging` into `<dir>` with no loss window.
-    * Heals a prior crash first: if a crash struck between the retire and
-    * promote renames (target missing, `.old` holding the complete pre-tick
-    * table), the replayed commit restores `.old` to the canonical slot
-    * BEFORE any delete. So `.old` is only ever deleted while the target
-    * holds a complete table, and EVERY crash prefix leaves a complete copy
-    * where [[readTable]] looks (target, or `.old` via its fallback) —
-    * without the heal, the replay's first delete removed the only copy and
-    * a second crash before the promote left none.
-    *
-    * `failAfterStep` is a test-only crash injection: throws after that many
-    * filesystem steps completed, so a spec can assert the invariant on
-    * every prefix.
-    */
-  private[streaming] def promoteStaging(dir: String, failAfterStep: Int = Int.MaxValue): Unit = {
-    val staging = Paths.get(dir + ".staging")
-    val old = Paths.get(dir + ".old")
-    val target = Paths.get(dir)
-    var done = 0
-    def step(): Unit = {
-      if (done >= failAfterStep) throw new IllegalStateException(s"injected crash after $done steps")
-      done += 1
-    }
-    if (!Files.exists(target) && Files.exists(old)) {
-      step(); Files.move(old, target, StandardCopyOption.ATOMIC_MOVE)
-    }
-    step(); delete(old)
-    if (Files.exists(target)) { step(); Files.move(target, old, StandardCopyOption.ATOMIC_MOVE) }
-    step(); Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    step(); delete(old)
-  }
+    StagedTable
+      .current(dir)
+      .map(spark.read.parquet(_))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
 
   def readWatermark(path: java.nio.file.Path): Long =
     if (Files.exists(path)) new String(Files.readAllBytes(path), "UTF-8").trim.toLong else -1L
@@ -70,12 +30,6 @@ private[streaming] object StateStore {
     Files.write(path, w.toString.getBytes("UTF-8"))
     ()
   }
-
-  def delete(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-    }
 }
 
 /** A slice-accumulating state family: ticks append `<dir>/delta_<lo>/`
@@ -119,13 +73,8 @@ private[streaming] object SliceStore {
     */
   private def layout(dir: String): (Option[Path], Long, Seq[(Long, Path)], Seq[Path]) = {
     val d = Paths.get(dir)
-    val base = d.resolve("base")
-    val baseOld = d.resolve("base.old")
-    // same heal-first promote machinery as StateStore.commit: base, or the
-    // retired base.old during the crash window
-    val pick = if (Files.isDirectory(base)) Some(base)
-    else if (Files.isDirectory(baseOld)) Some(baseOld)
-    else None
+    // base, or the retired base.old during a crashed promote
+    val pick = StagedTable.current(d.resolve("base").toString).map(Paths.get(_))
     val covered = pick.map(coveredOf).getOrElse(Long.MinValue)
     val slices =
       if (!Files.isDirectory(d)) Seq.empty
@@ -171,7 +120,7 @@ private[streaming] object SliceStore {
     */
   def maybeCompact(spark: SparkSession, dir: String, coveredHi: Long): Boolean = {
     val (pick, _, live, dead) = layout(dir)
-    dead.foreach(StateStore.delete)
+    dead.foreach(StagedTable.delete)
     val threshold = spark.conf
       .getOption("graft.stream.compactSlices")
       .map(_.toInt)
@@ -183,10 +132,10 @@ private[streaming] object SliceStore {
     val staging = dir + "/base.staging"
     merged.write.mode("overwrite").parquet(staging)
     Files.write(Paths.get(staging, "_covered"), coveredHi.toString.getBytes("UTF-8"))
-    StateStore.promoteStaging(dir + "/base")
+    StagedTable.promote(dir + "/base")
     // GC the folded slices — a crash anywhere in this loop is safe, the
     // promoted _covered watermark already excludes them from every read
-    live.foreach { case (_, p) => StateStore.delete(p) }
+    live.foreach { case (_, p) => StagedTable.delete(p) }
     true
   }
 }

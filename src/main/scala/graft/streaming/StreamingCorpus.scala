@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.core.StagedTable
 import graft.operators.Curation
 
 /** Incremental corpus build: maintains the q77 curation-build state as
@@ -92,7 +93,7 @@ object StreamingCorpus {
     // char mass is genuinely unknown); everything else is exact.
     val preStages = StateStore.readTable(spark, stagesDir, stageSchema)
     if (!preStages.columns.contains("n_chars"))
-      StateStore.commit(
+      StagedTable.commit(
         preStages
           .join(all.select(col("doc_id"), col("n_chars")), Seq("doc_id"), "left")
           .select(stageSchema.fieldNames.map(col): _*),
@@ -209,12 +210,12 @@ object StreamingCorpus {
           .select(col("sh_key"), col("doc_id"))
       )
 
-    StateStore.commit(updatedStages, stagesDir)
+    StagedTable.commit(updatedStages, stagesDir)
     // append-only families: one slice per tick, overwrite-idempotent under
     // the stable delta_<lo> name (replay rewrites its own slice)
     newCanonRows.write.mode("overwrite").parquet(s"$fpDir/delta_$lo")
     newTestSh.write.mode("overwrite").parquet(s"$testShDir/delta_$lo")
-    StateStore.commit(keptEligSh, eligShDir)
+    StagedTable.commit(keptEligSh, eligShDir)
     StateStore.writeWatermark(Paths.get(s"$stateDir/watermark"), newWatermark)
     SliceStore.maybeCompact(spark, fpDir, newWatermark)
     SliceStore.maybeCompact(spark, testShDir, newWatermark)

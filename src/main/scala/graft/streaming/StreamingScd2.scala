@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
+import graft.core.StagedTable
 import graft.operators.Temporal
 
 /** Live SCD2 dimension maintenance: keeps a versioned-history table current
@@ -59,7 +60,7 @@ object StreamingScd2 {
     StateStore.readTable(spark, historyDir, historySchema)
 
   private def commitHistory(df: DataFrame, historyDir: String): Unit =
-    StateStore.commit(df, historyDir)
+    StagedTable.commit(df, historyDir)
 
   /** One maintenance tick over the accumulated event log (exposed for the
     * batch/cron path and the spec; the stream calls exactly this).

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
+import graft.core.StagedTable
 import graft.operators.Curation
 
 /** Live exact-substring monitoring: keeps the q110 per-doc span-dedup stats
@@ -128,7 +129,7 @@ object StreamingSpanDedup {
       .unionByName(recomputed)
       .localCheckpoint()
 
-    StateStore.commit(newStats, s"$stateDir/stats")
+    StagedTable.commit(newStats, s"$stateDir/stats")
     StateStore.writeWatermark(wmPath, hi)
     // corpus grew: batch artifacts cached over the pre-append corpus must
     // rebuild on next access (same contract as StreamingDupClusters.tick)
@@ -141,7 +142,7 @@ object StreamingSpanDedup {
 
   /** The maintained stats table — empty with the right schema before the
     * first tick; falls back to the `.old` copy if a crash struck between
-    * StateStore.commit's two renames.
+    * StagedTable.commit's two renames.
     */
   def readStats(spark: SparkSession, stateDir: String): DataFrame =
     readState(spark, s"$stateDir/stats", statsSchema)

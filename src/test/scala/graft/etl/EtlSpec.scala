@@ -123,7 +123,8 @@ class EtlSpec extends SparkSpec {
   test("csv writer: exact name, header, round-trips through spark csv reader") {
     val out = Files.createTempDirectory("csv_out")
     val df = HourlyRollup.forDate(spark, "2022-05-27", Seq.empty, Seq.empty, Fixtures.UA)
-    val path = CsvWriter.writeSingleFile(df, out.resolve(CsvWriter.taskOutputName("2022-05-27")).toString)
+    val path = out.resolve(CsvWriter.taskOutputName("2022-05-27")).toString
+    assert(CsvWriter.writeSingleFile(df, path) === 24L)
     assert(Paths.get(path).getFileName.toString === "task1_output_2022-05-27.csv")
     val lines = Files.readAllLines(Paths.get(path)).asScala
     assert(lines.head === "date,hour,impression_count,click_count")
@@ -250,7 +251,8 @@ class EtlSpec extends SparkSpec {
     import spark.implicits._
     val out = Files.createTempDirectory("q_out")
     val df = Seq(("a,b", "say \"hi\"", 1L)).toDF("x", "y", "n")
-    val p = CsvWriter.writeSingleFile(df, out.resolve("t.csv").toString)
+    val p = out.resolve("t.csv").toString
+    assert(CsvWriter.writeSingleFile(df, p) === 1L)
     val lines = Files.readAllLines(Paths.get(p)).asScala
     assert(lines(1) === "\"a,b\",\"say \"\"hi\"\"\",1")
     // RFC-4180 doubled-quote escaping: Spark's reader needs escape='"'
@@ -317,6 +319,8 @@ class EtlSpec extends SparkSpec {
     assert(result.success)
     assert(result.processedDates.map(_.date) === Seq("2022-05-27"))
     assert(Files.exists(out.resolve("task1_output_2022-05-27.csv")))
+    val csvLines = Files.readAllLines(out.resolve("task1_output_2022-05-27.csv")).size
+    assert(result.processedDates.map(_.rows) === Seq(csvLines - 1L), "rows = the CSV's lines minus the header")
     assert(FileRouter.listParquet(in.toString).isEmpty, "inputs are consumed after output write")
     assert(result.warehouseSummary("row_count") === 24L)
     assert(result.warehouseSummary("total_impressions") === 10L)

@@ -5,9 +5,10 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.SparkSpec
+import graft.core.StagedTable
 
 /** Crash-safety of the shared stage-then-swap commit: a crash after ANY
-  * prefix of promoteStaging's filesystem steps must leave a complete table
+  * prefix of StagedTable.promote's filesystem steps must leave a complete table
   * where readTable looks (target or `.old`) — including the double-crash
   * case where a prior crash already left only `.old` and the REPLAYED
   * commit crashes mid-swap. The pre-fix ordering deleted `.old` before the
@@ -51,7 +52,7 @@ class StateStoreSpec extends SparkSpec {
       import spark.implicits._
       writeTable(dir + ".staging", newRows)
       val crashed =
-        try { StateStore.promoteStaging(dir, failAt); false }
+        try { StagedTable.promote(dir, failAt); false }
         catch { case _: IllegalStateException => true }
 
       val visible = readRows(dir)
@@ -62,7 +63,7 @@ class StateStoreSpec extends SparkSpec {
 
       if (crashed) {
         // the NEXT replay (no crash) must converge to the new table
-        StateStore.commit(newRows.toDF("k", "v"), dir)
+        StagedTable.commit(newRows.toDF("k", "v"), dir)
       }
       assert(readRows(dir) === newRows.toSet, s"failAt=$failAt: replay must converge")
       assert(!Files.exists(Paths.get(dir + ".old")), s"failAt=$failAt: clean commit retires .old")
@@ -116,9 +117,9 @@ class StateStoreSpec extends SparkSpec {
   test("plain commit cycle: overwrite semantics, no leftover side dirs") {
     import spark.implicits._
     val dir = Files.createTempDirectory("ss_plain").toString + "/t"
-    StateStore.commit(oldRows.toDF("k", "v"), dir)
+    StagedTable.commit(oldRows.toDF("k", "v"), dir)
     assert(readRows(dir) === oldRows.toSet)
-    StateStore.commit(newRows.toDF("k", "v"), dir)
+    StagedTable.commit(newRows.toDF("k", "v"), dir)
     assert(readRows(dir) === newRows.toSet)
     assert(!Files.exists(Paths.get(dir + ".old")) && !Files.exists(Paths.get(dir + ".staging")))
   }
