@@ -1384,12 +1384,12 @@ object Dedup {
     } else q113Md5Verified(spark, dir).orderBy(col("lang"), col("doc_a"), col("doc_b"))
   }
 
-  /** The md5 path's candidate frame — staged separately so
-    * [[graft.tools.ProfileQ113]] can time the band-tuple join apart from
-    * the verify (the r15 watch item on the ~1 s residual over the native
-    * twin). The profiler showed the cost IS this stage: 2-row band tuples
-    * at j>=0.8 collide per band with p~0.64, so the dup-dense corpus fans
-    * ~1.9M distinct candidates at sf0.1. The verify's cheap conjuncts
+  /** The md5 path's candidate frame — staged separately so the band-tuple
+    * join can be timed apart from the verify (the r15 watch item on the
+    * ~1 s residual over the native twin). Profiling showed the cost IS
+    * this stage: 2-row band tuples at j>=0.8 collide per band with
+    * p~0.64, so the dup-dense corpus fans ~1.9M distinct candidates at
+    * sf0.1. The verify's cheap conjuncts
     * (lang equality, the 0.799 size-ratio prune) are therefore applied
     * BEFORE the distinct — they reject nothing the verify would keep, so
     * the final rows (what the oracle gates) are identical, but the

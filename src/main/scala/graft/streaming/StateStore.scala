@@ -8,12 +8,13 @@ import org.apache.spark.sql.types.StructType
 import graft.core.StagedTable
 
 /** Parquet state tables for incremental maintainers (SCD2 history, corpus
-  * build state), committed with [[StagedTable.commit]] (never zero copies
-  * on disk, the retired `.old` read during a crashed swap), plus a
-  * plain-text high-watermark sidecar. The sidecar is written AFTER the
-  * table swap: a crash between the two leaves an older watermark and a
-  * newer table, and maintainers are built so re-applying the covered delta
-  * is a no-op.
+  * build state, span stats), committed with [[StagedTable.commit]] (never
+  * zero copies on disk, the retired `.old` read during a crashed swap). The
+  * watermark that says which delta a table covers lives beside it in the
+  * tick protocol's JSON sidecar ([[SliceMaintainer.Sidecar]]), written
+  * AFTER the table swap: a crash between the two leaves an older watermark
+  * and a newer table, and maintainers are built so re-applying the covered
+  * delta is a no-op.
   */
 private[streaming] object StateStore {
 
@@ -22,14 +23,6 @@ private[streaming] object StateStore {
       .current(dir)
       .map(spark.read.parquet(_))
       .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-
-  def readWatermark(path: java.nio.file.Path): Long =
-    if (Files.exists(path)) new String(Files.readAllBytes(path), "UTF-8").trim.toLong else -1L
-
-  def writeWatermark(path: java.nio.file.Path, w: Long): Unit = {
-    Files.write(path, w.toString.getBytes("UTF-8"))
-    ()
-  }
 }
 
 /** A slice-accumulating state family: ticks append `<dir>/delta_<lo>/`

@@ -55,13 +55,7 @@ object StreamingBloomScreen {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
   ): StreamingQuery =
-    SliceMaintainer.start(
-      spark,
-      dataDir,
-      stateDir,
-      "_bloom_checkpoint",
-      trigger,
-      onTick,
-      () => tick(spark, dataDir, stateDir)
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_bloom_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
     )
 }

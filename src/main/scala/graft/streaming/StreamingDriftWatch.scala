@@ -68,5 +68,7 @@ object StreamingDriftWatch {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
   ): StreamingQuery =
-    SliceMaintainer.start(spark, dataDir, stateDir, "_drift_checkpoint", trigger, onTick, () => tick(spark, dataDir, stateDir))
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_drift_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
+    )
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.core.StagedTable
 import graft.operators.Dedup
 
 /** Live dup-cluster maintenance: keeps a persisted (doc_id, cluster,
@@ -25,9 +25,11 @@ import graft.operators.Dedup
   *   - `toks/delta_<lo>/`    token sets + minhash sigs per ingest slice
   *   - `buckets/delta_<lo>/` (doc_id, sz, band, key) LSH bucket rows (sz
   *     rides so the delta probe can size-ratio-prune before its distinct)
-  *   - `labels/current/`     the label table (retire-promote rewrite, with
-  *                           `labels/prev/` as the crash-window fallback)
-  *   - `state.json`          watermark sidecar {max_doc_id}
+  *   - `labels/current/`     the label table, rewritten per tick through
+  *                           [[StagedTable.commit]] (`labels/current.old/`
+  *                           serves reads inside a crashed swap)
+  *   - `state.json`          watermark sidecar {max_doc_id, format}
+  *                           ([[SliceMaintainer.Sidecar]])
   *
   * The toks/buckets slices are APPEND-ONLY under names keyed by the
   * delta's first doc id (stable across a crashed tick's replay even when
@@ -63,111 +65,70 @@ object StreamingDupClusters {
     * of delta docs processed (0 = no-op tick). Callable directly (cron
     * cadence) — `start` wires it to a file stream.
     */
-  def tick(spark: SparkSession, dataDir: String, stateDir: String): Long = {
-    requireStateFormat(stateDir)
-    val wm = readWatermark(stateDir)
-    val docs = graft.core.Tables.documents(spark, dataDir)
-    val delta = docs.filter(col("doc_id") > wm)
-    val mm = delta.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"), count(lit(1)).as("n")).head()
-    val n = mm.getAs[Long]("n")
-    if (n == 0L) return 0L
-    val (lo, hi) = (mm.getAs[Long]("lo"), mm.getAs[Long]("hi"))
+  def tick(spark: SparkSession, dataDir: String, stateDir: String): Long =
+    SliceMaintainer.run(
+      spark,
+      graft.core.Tables.documents(spark, dataDir),
+      SliceMaintainer.Sidecar(s"$stateDir/", "doc_id", StateFormat),
+      dataDir,
+      Seq(s"$stateDir/toks", s"$stateDir/buckets")
+    )(_ => 0L) { d =>
+      // first, so an older build's label layout fails before any write
+      val oldLabels = readLabels(spark, stateDir)
+      val tDelta = Dedup
+        .tokenSetsFrom(spark, d.rows)
+        .filter(size(col("toks")) > 0)
+        .withColumn("sig", expr("minhash_sigs16(toks)"))
+        .localCheckpoint() // one tokenize+sign pass feeds toks, buckets, AND the probe
 
-    val tDelta = Dedup
-      .tokenSetsFrom(spark, delta)
-      .filter(size(col("toks")) > 0)
-      .withColumn("sig", expr("minhash_sigs16(toks)"))
-      .localCheckpoint() // one tokenize+sign pass feeds toks, buckets, AND the probe
+      // append this slice's state under a name keyed by the delta's LOW id
+      // only: lo = watermark + first landed id is stable across a crashed
+      // tick's replay even if MORE documents land before the rerun (hi
+      // grows), so the rerun overwrites the stale partial slice instead of
+      // leaving an overlapping doc range behind to be double-read forever
+      val sliceName = s"delta_${d.lo}"
+      tDelta.write.mode("overwrite").parquet(s"$stateDir/toks/$sliceName")
+      Dedup
+        .bandBuckets(tDelta.select(col("doc_id"), col("sig"), col("sz")))
+        .write
+        .mode("overwrite")
+        .parquet(s"$stateDir/buckets/$sliceName")
 
-    // append this slice's state under a name keyed by the delta's LOW id
-    // only: lo = watermark + first landed id is stable across a crashed
-    // tick's replay even if MORE documents land before the rerun (hi
-    // grows), so the rerun overwrites the stale partial slice instead of
-    // leaving an overlapping doc range behind to be double-read forever
-    val sliceName = s"delta_$lo"
-    tDelta.write.mode("overwrite").parquet(s"$stateDir/toks/$sliceName")
-    Dedup
-      .bandBuckets(tDelta.select(col("doc_id"), col("sig"), col("sz")))
-      .write
-      .mode("overwrite")
-      .parquet(s"$stateDir/buckets/$sliceName")
+      // candidates: delta band keys probe the FULL persisted bucket table
+      // (which now includes this slice) — new-new and new-old pairs only.
+      // SliceStore.read lists the compacted base + live slices explicitly,
+      // so tick cost stays O(delta + matching state) instead of growing
+      // with every historical slice's file count
+      val allBuckets = SliceStore.read(spark, s"$stateDir/buckets")
+      val deltaBuckets = spark.read.parquet(s"$stateDir/buckets/$sliceName")
+      val cand = Dedup.deltaCandidates(deltaBuckets, allBuckets)
 
-    // candidates: delta band keys probe the FULL persisted bucket table
-    // (which now includes this slice) — new-new and new-old pairs only.
-    // SliceStore.read lists the compacted base + live slices explicitly, so
-    // tick cost stays O(delta + matching state) instead of growing with
-    // every historical slice's file count
-    val allBuckets = SliceStore.read(spark, s"$stateDir/buckets")
-    val deltaBuckets = spark.read.parquet(s"$stateDir/buckets/$sliceName")
-    val cand = Dedup.deltaCandidates(deltaBuckets, allBuckets)
+      // verification reads candidate docs' token sets from persisted state
+      val allToks = SliceStore.read(spark, s"$stateDir/toks")
+      val edges = Dedup.verifyEdges(allToks, cand)
 
-    // verification reads candidate docs' token sets from persisted state
-    val allToks = SliceStore.read(spark, s"$stateDir/toks")
-    val edges = Dedup.verifyEdges(allToks, cand)
-
-    val oldLabels = readLabels(spark, stateDir)
-    val updated = Dedup.applyEdgesToLabels(edges, oldLabels).localCheckpoint()
-
-    // label rewrite with no loss window — stage the full new table, then
-    // the heal-first retire/promote rename dance (see promoteStagedLabels)
-    updated.write.mode("overwrite").parquet(s"$stateDir/labels/stage")
-    promoteStagedLabels(stateDir)
-    Files.writeString(
-      Paths.get(stateDir, "state.json"),
-      s"""{"max_doc_id": $hi, "format": $StateFormat}"""
-    )
-    // the corpus under dataDir grew: any batch artifact this session cached
-    // over the pre-append corpus (pair graphs, signatures, ANN indexes, LM
-    // counts) must rebuild on its next access
-    graft.operators.SessionCache.invalidateAllFor(spark, dataDir)
-    // fold accumulated slices into the compacted base once enough piled up,
-    // so tick cost never grows with tick COUNT (only with state size)
-    SliceStore.maybeCompact(spark, s"$stateDir/toks", hi)
-    SliceStore.maybeCompact(spark, s"$stateDir/buckets", hi)
-    n
-  }
-
-  /** Promote a fully-written `labels/stage/` into `labels/current/` with no
-    * loss window: heal a prior crash first (cur missing + prev complete →
-    * restore prev to the canonical slot BEFORE any delete), then retire cur
-    * to prev, promote the stage, and only then drop prev. The heal is what
-    * makes a crash DURING a replayed promote safe: without it, the replay's
-    * first deleteRecursively(prev) removed the only on-disk copy, and a
-    * second crash before the stage move left neither current/ nor prev/ —
-    * the next tick would then apply its delta to an EMPTY table, silently
-    * dropping every cluster the delta didn't touch. With the heal, prev is
-    * only ever deleted while cur holds a complete table, so EVERY crash
-    * prefix leaves a complete table where [[readLabels]] looks.
-    *
-    * `failAfterStep` is a test-only crash injection: the promote throws
-    * after that many filesystem steps have completed, letting the spec
-    * assert the every-prefix invariant directly.
-    */
-  private[streaming] def promoteStagedLabels(stateDir: String, failAfterStep: Int = Int.MaxValue): Unit = {
-    val cur = Paths.get(stateDir, "labels", "current")
-    val prev = Paths.get(stateDir, "labels", "prev")
-    var done = 0
-    def step(): Unit = {
-      if (done >= failAfterStep) throw new IllegalStateException(s"injected crash after $done steps")
-      done += 1
+      val updated = Dedup.applyEdgesToLabels(edges, oldLabels).localCheckpoint()
+      StagedTable.commit(updated, labelsDir(stateDir))
+      d.n
     }
-    if (!Files.exists(cur) && Files.exists(prev)) { step(); Files.move(prev, cur) }
-    step(); deleteRecursively(prev)
-    if (Files.exists(cur)) { step(); Files.move(cur, prev) }
-    step(); Files.move(Paths.get(stateDir, "labels", "stage"), cur)
-    step(); deleteRecursively(prev)
-  }
 
-  /** Current label table — empty with the right schema before first tick;
-    * falls back to the retired prev/ copy if a crash struck between the
-    * retire and promote renames in [[tick]].
+  private def labelsDir(stateDir: String): String = s"$stateDir/labels/current"
+
+  /** Current label table — empty with the right schema before the first
+    * tick; the retired `.old` copy if a crash struck inside
+    * [[StagedTable.commit]]'s swap. A `labels/prev/` directory is the
+    * crash-window copy of an older build's swap: it fails loudly, since
+    * `labels/current/` may then be missing or stale.
     */
   def readLabels(spark: SparkSession, stateDir: String): DataFrame = {
-    val cur = Paths.get(stateDir, "labels", "current")
     val prev = Paths.get(stateDir, "labels", "prev")
-    val pick = if (Files.exists(cur)) Some(cur) else if (Files.exists(prev)) Some(prev) else None
-    pick match {
-      case Some(p) => spark.read.parquet(p.toString).select(col("doc_id"), col("cluster"))
+    if (Files.exists(prev))
+      throw new IllegalStateException(
+        s"$prev is the crash-window copy of an older build's label swap; this build cannot tell whether " +
+          "it or labels/current holds the complete table. Rebuild the state dir from the corpus before ticking."
+      )
+    StagedTable.current(labelsDir(stateDir)) match {
+      case Some(p) => spark.read.parquet(p).select(col("doc_id"), col("cluster"))
       case None =>
         import spark.implicits._
         Seq.empty[(Long, Long)].toDF("doc_id", "cluster")
@@ -204,40 +165,6 @@ object StreamingDupClusters {
       StreamingCorpus.readStages(spark, corpusStateDir).select(col("doc_id"), col("source"))
     )
 
-  private def readWatermark(stateDir: String): Long = {
-    val p = Paths.get(stateDir, "state.json")
-    if (!Files.exists(p)) Long.MinValue
-    else {
-      val s = Files.readString(p)
-      val m = "\"max_doc_id\"\\s*:\\s*(-?\\d+)".r.findFirstMatchIn(s)
-      m.map(_.group(1).toLong).getOrElse(Long.MinValue)
-    }
-  }
-
-  /** Refuse to tick over a state dir written by a different state format
-    * (a missing `format` field is format 1 — the pre-sz slice schema). A
-    * fresh dir (no state.json) is fine: the first tick stamps the current
-    * format.
-    */
-  private[streaming] def requireStateFormat(stateDir: String): Unit = {
-    val p = Paths.get(stateDir, "state.json")
-    if (Files.exists(p)) {
-      val s = Files.readString(p)
-      val found = "\"format\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(s).map(_.group(1).toInt).getOrElse(1)
-      require(
-        found == StateFormat,
-        s"StreamingDupClusters state at $stateDir is format $found, this build writes " +
-          s"format $StateFormat (buckets/toks slice schema changed — e.g. the sz column). " +
-          "Rebuild the state dir from the corpus, or backfill the new columns, before ticking: " +
-          "mixing formats would silently drop candidate pairs for old-slice documents."
-      )
-    }
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-
   /** Wire the tick to a file stream over the documents landing path —
     * `Trigger.AvailableNow` drains what has landed and stops (cron /
     * entrypoint cadence); pass a processing-time trigger for a long-lived
@@ -249,18 +176,8 @@ object StreamingDupClusters {
       stateDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
-  ): StreamingQuery = {
-    val docPath = s"$dataDir/documents.parquet"
-    val schema = spark.read.parquet(docPath).schema
-    spark.readStream
-      .schema(schema)
-      .parquet(docPath)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$stateDir/_clusters_checkpoint")
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        onTick(tick(spark, dataDir, stateDir))
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_clusters_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
+    )
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Similarity
@@ -40,25 +40,16 @@ object StreamingIndexer {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Seq[(String, Similarity.PersistOutcome)] => Unit = _ => ()
   ): StreamingQuery = {
-    val embPath = s"$dataDir/embeddings.parquet"
-    val schema = spark.read.parquet(embPath).schema
     val maintainer = spark.newSession()
     maintainer.conf.set(Similarity.IndexDirConf, indexDir)
     maintainer.conf.set(Similarity.RefreshConf, "append")
-    spark.readStream
-      .schema(schema)
-      .parquet(embPath)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$indexDir/_indexer_checkpoint")
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        onTick(graft.tools.AnnBuild.run(maintainer, dataDir, indexDir, profiles))
-        // embeddings grew: persist* invalidates the maintainer clone's own
-        // index caches, but artifacts cached on the SERVING session over the
-        // pre-append table (planted corpora, in-session indexes) are stale too
-        graft.operators.SessionCache.invalidateAllFor(spark, dataDir)
-      }
-      .start()
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/embeddings.parquet", s"$indexDir/_indexer_checkpoint", trigger) {
+      onTick(graft.tools.AnnBuild.run(maintainer, dataDir, indexDir, profiles))
+      // embeddings grew: persist* invalidates the maintainer clone's own
+      // index caches, but artifacts cached on the SERVING session over the
+      // pre-append table (planted corpora, in-session indexes) are stale too
+      graft.operators.SessionCache.invalidateAllFor(spark, dataDir)
+    }
   }
 
   /** The lexical sibling: keeps the persisted BM25 postings index current
@@ -75,21 +66,12 @@ object StreamingIndexer {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Similarity.PersistOutcome => Unit = _ => ()
   ): StreamingQuery = {
-    val docsPath = s"$dataDir/documents.parquet"
-    val schema = spark.read.parquet(docsPath).schema
     val maintainer = spark.newSession()
     maintainer.conf.set(graft.operators.Retrieval.Bm25IndexDirConf, indexDir)
     maintainer.conf.set(graft.operators.Retrieval.Bm25RefreshConf, "append")
-    spark.readStream
-      .schema(schema)
-      .parquet(docsPath)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$indexDir/_bm25_indexer_checkpoint")
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        onTick(graft.operators.Retrieval.persistBm25Index(maintainer, dataDir, indexDir))
-        graft.operators.SessionCache.invalidateAllFor(spark, dataDir)
-      }
-      .start()
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$indexDir/_bm25_indexer_checkpoint", trigger) {
+      onTick(graft.operators.Retrieval.persistBm25Index(maintainer, dataDir, indexDir))
+      graft.operators.SessionCache.invalidateAllFor(spark, dataDir)
+    }
   }
 }

@@ -155,13 +155,7 @@ object StreamingMediaFps {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
   ): StreamingQuery =
-    SliceMaintainer.start(
-      spark,
-      dataDir,
-      stateDir,
-      "_media_fp_checkpoint",
-      trigger,
-      onTick,
-      () => tick(spark, dataDir, stateDir)
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_media_fp_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
     )
 }

@@ -102,13 +102,7 @@ object StreamingPack {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
   ): StreamingQuery =
-    SliceMaintainer.start(
-      spark,
-      dataDir,
-      stateDir,
-      "_pack_checkpoint",
-      trigger,
-      onTick,
-      () => tick(spark, dataDir, stateDir)
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_pack_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
     )
 }

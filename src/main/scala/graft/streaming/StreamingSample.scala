@@ -56,5 +56,7 @@ object StreamingSample {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
   ): StreamingQuery =
-    SliceMaintainer.start(spark, dataDir, stateDir, "_sample_checkpoint", trigger, onTick, () => tick(spark, dataDir, stateDir))
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_sample_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
+    )
 }

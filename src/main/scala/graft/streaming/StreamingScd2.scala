@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -50,45 +48,39 @@ object StreamingScd2 {
     )
   )
 
-  def readWatermark(historyDir: String): Long =
-    StateStore.readWatermark(Paths.get(historyDir + ".watermark"))
-
-  private def writeWatermark(historyDir: String, w: Long): Unit =
-    StateStore.writeWatermark(Paths.get(historyDir + ".watermark"), w)
-
   def readHistory(spark: SparkSession, historyDir: String): DataFrame =
     StateStore.readTable(spark, historyDir, historySchema)
 
-  private def commitHistory(df: DataFrame, historyDir: String): Unit =
-    StagedTable.commit(df, historyDir)
-
   /** One maintenance tick over the accumulated event log (exposed for the
-    * batch/cron path and the spec; the stream calls exactly this).
+    * batch/cron path and the spec; the stream calls exactly this). The
+    * watermark sidecar is `<historyDir>.state.json` ([[SliceMaintainer.Sidecar]]).
     */
   def tick(spark: SparkSession, eventsDir: String, historyDir: String): TickOutcome = {
     val all = spark.read.parquet(eventsDir).select("user_id", "event_type", "ts", "event_id")
-    val watermark = readWatermark(historyDir)
-    val delta = all.filter(col("event_id") > watermark).localCheckpoint(true)
-    val newWatermark =
-      Option(all.agg(max(col("event_id"))).head().get(0)).map(_.asInstanceOf[Long]).getOrElse(-1L)
-    if (delta.isEmpty) return TickOutcome("noop", readHistory(spark, historyDir).count(), watermark)
+    SliceMaintainer.run(
+      spark,
+      all,
+      SliceMaintainer.Sidecar(s"$historyDir.", "event_id", SliceMaintainer.BaseFormat),
+      eventsDir,
+      Nil
+    )(wm => TickOutcome("noop", readHistory(spark, historyDir).count(), wm)) { d =>
+      val delta = d.rows.localCheckpoint(true)
+      val history = readHistory(spark, historyDir).localCheckpoint(true)
+      // landing-contract check: any delta event at-or-before its user's open
+      // interval start makes the incremental seed ordering invalid → rebuild
+      val open = history.filter(col("is_current")).select(col("user_id"), col("valid_from"))
+      val outOfOrder = delta
+        .join(open, Seq("user_id"))
+        .filter(col("ts") <= col("valid_from"))
+        .limit(1)
+        .count() > 0
 
-    val history = readHistory(spark, historyDir).localCheckpoint(true)
-    // landing-contract check: any delta event at-or-before its user's open
-    // interval start makes the incremental seed ordering invalid → rebuild
-    val open = history.filter(col("is_current")).select(col("user_id"), col("valid_from"))
-    val outOfOrder = delta
-      .join(open, Seq("user_id"))
-      .filter(col("ts") <= col("valid_from"))
-      .limit(1)
-      .count() > 0
-
-    val (mode, updated) =
-      if (outOfOrder) ("rebuild", Temporal.scd2Of(all))
-      else ("incremental", Temporal.scd2Apply(history, delta))
-    commitHistory(updated.select(historySchema.fieldNames.map(col): _*), historyDir)
-    writeWatermark(historyDir, newWatermark)
-    TickOutcome(mode, readHistory(spark, historyDir).count(), newWatermark)
+      val (mode, updated) =
+        if (outOfOrder) ("rebuild", Temporal.scd2Of(all))
+        else ("incremental", Temporal.scd2Apply(history, delta))
+      StagedTable.commit(updated.select(historySchema.fieldNames.map(col): _*), historyDir)
+      TickOutcome(mode, readHistory(spark, historyDir).count(), d.hi)
+    }
   }
 
   /** Start the maintainer over `eventsDir` (parquet drops). Ticks are
@@ -100,17 +92,8 @@ object StreamingScd2 {
       historyDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: TickOutcome => Unit = _ => ()
-  ): StreamingQuery = {
-    val schema = spark.read.parquet(eventsDir).schema
-    spark.readStream
-      .schema(schema)
-      .parquet(eventsDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", historyDir + ".checkpoint")
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        onTick(tick(spark, eventsDir, historyDir))
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    SliceMaintainer.onFileDrop(spark, eventsDir, historyDir + ".checkpoint", trigger)(
+      onTick(tick(spark, eventsDir, historyDir))
+    )
 }

@@ -72,5 +72,7 @@ object StreamingSourceSketch {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
   ): StreamingQuery =
-    SliceMaintainer.start(spark, dataDir, stateDir, "_sketch_checkpoint", trigger, onTick, () => tick(spark, dataDir, stateDir))
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_sketch_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
+    )
 }

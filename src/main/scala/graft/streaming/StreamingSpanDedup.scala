@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -49,9 +47,9 @@ import graft.operators.Curation
   *                         periodically folded into `grams/base/` by
   *                         SliceStore.maybeCompact so the per-tick listing
   *                         and scan setup never grow with tick count
-  *   - `stats/`            the maintained q110 output table (StateStore
+  *   - `stats/`            the maintained q110 output table (StagedTable
   *                         two-rename commit, `.old` fallback on crash)
-  *   - `watermark`         plain-text high-watermark sidecar
+  *   - `state.json`        watermark sidecar ([[SliceMaintainer.Sidecar]])
   *
   * At 100 TB the grams store would be BUCKETED on `key` (`sources/Layouts`
   * — the three key-probes become zero-shuffle bucket probes instead of
@@ -73,84 +71,69 @@ object StreamingSpanDedup {
   /** One maintenance tick; returns (delta docs, retroactively recomputed
     * old docs) — (0, 0) = no-op tick.
     */
-  def tick(spark: SparkSession, dataDir: String, stateDir: String): (Long, Long) = {
-    val wmPath = Paths.get(stateDir, "watermark")
-    val wm = StateStore.readWatermark(wmPath)
-    val docs = graft.core.Tables.documents(spark, dataDir)
-    val delta = docs.filter(col("doc_id") > wm)
-    val mm = delta.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"), count(lit(1)).as("n")).head()
-    val n = mm.getAs[Long]("n")
-    if (n == 0L) return (0L, 0L)
-    val (lo, hi) = (mm.getAs[Long]("lo"), mm.getAs[Long]("hi"))
+  def tick(spark: SparkSession, dataDir: String, stateDir: String): (Long, Long) =
+    SliceMaintainer.run(
+      spark,
+      graft.core.Tables.documents(spark, dataDir),
+      SliceMaintainer.Sidecar(s"$stateDir/", "doc_id", SliceMaintainer.BaseFormat),
+      dataDir,
+      Seq(s"$stateDir/grams")
+    )(_ => (0L, 0L)) { case SliceMaintainer.Delta(delta, wm, lo, _, n) =>
+      // slice name keyed by the delta's LOW id: stable across a crashed
+      // tick's replay even if more documents land before the rerun
+      val slicePath = s"$stateDir/grams/delta_$lo"
+      Curation.spanGramInstances(spark, delta).write.mode("overwrite").parquet(slicePath)
+      val deltaInst = spark.read.parquet(slicePath)
+      // compacted base + live slices, listed explicitly (see SliceStore)
+      val allInst = SliceStore.read(spark, s"$stateDir/grams")
 
-    // slice name keyed by the delta's LOW id: stable across a crashed
-    // tick's replay even if more documents land before the rerun
-    val slicePath = s"$stateDir/grams/delta_$lo"
-    Curation.spanGramInstances(spark, delta).write.mode("overwrite").parquet(slicePath)
-    val deltaInst = spark.read.parquet(slicePath)
-    // compacted base + live slices, listed explicitly (see SliceStore)
-    val allInst = SliceStore.read(spark, s"$stateDir/grams")
+      // flip set: among the DELTA's keys, those whose corpus count reaches
+      // >=2 only once the delta is included — global counts scoped to delta
+      // keys by the bucket-friendly semi-join, O(matching rows)
+      val deltaCounts = deltaInst.groupBy(col("key")).agg(count(lit(1)).as("n_delta"))
+      val flipped = allInst
+        .join(deltaCounts, "key")
+        .groupBy(col("key"))
+        .agg(count(lit(1)).as("n_total"), first(col("n_delta")).as("n_delta"))
+        .filter(col("n_total") >= 2 && col("n_total") - col("n_delta") < 2)
+        .select(col("key"))
 
-    // flip set: among the DELTA's keys, those whose corpus count reaches
-    // >=2 only once the delta is included — global counts scoped to delta
-    // keys by the bucket-friendly semi-join, O(matching rows)
-    val deltaCounts = deltaInst.groupBy(col("key")).agg(count(lit(1)).as("n_delta"))
-    val flipped = allInst
-      .join(deltaCounts, "key")
-      .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_total"), first(col("n_delta")).as("n_delta"))
-      .filter(col("n_total") >= 2 && col("n_total") - col("n_delta") < 2)
-      .select(col("key"))
+      val affectedOld = allInst
+        .join(flipped, "key")
+        .filter(col("doc_id") <= wm)
+        .select(col("doc_id"))
+        .distinct()
+        .localCheckpoint() // reused three times below (targets, anti-join, count)
+      val nAffected = affectedOld.count()
 
-    val affectedOld = allInst
-      .join(flipped, "key")
-      .filter(col("doc_id") <= wm)
-      .select(col("doc_id"))
-      .distinct()
-      .localCheckpoint() // reused three times below (targets, anti-join, count)
-    val nAffected = affectedOld.count()
+      // recompute stats for exactly delta ∪ affected: their FULL instance
+      // rows, dup-flagged against global counts scoped to the keys those
+      // docs actually hold
+      val targets = affectedOld.unionByName(deltaInst.select(col("doc_id")).distinct())
+      val targetInst = allInst.join(targets, "doc_id").localCheckpoint()
+      val dupKeys = allInst
+        .join(targetInst.select(col("key")).distinct(), "key")
+        .groupBy(col("key"))
+        .agg(count(lit(1)).as("n_occ"))
+        .filter(col("n_occ") >= 2)
+        .select(col("key"))
+      val recomputed = Curation.spanStatsFrom(targetInst, dupKeys)
 
-    // recompute stats for exactly delta ∪ affected: their FULL instance
-    // rows, dup-flagged against global counts scoped to the keys those
-    // docs actually hold
-    val targets = affectedOld.unionByName(deltaInst.select(col("doc_id")).distinct())
-    val targetInst = allInst.join(targets, "doc_id").localCheckpoint()
-    val dupKeys = allInst
-      .join(targetInst.select(col("key")).distinct(), "key")
-      .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") >= 2)
-      .select(col("key"))
-    val recomputed = Curation.spanStatsFrom(targetInst, dupKeys)
+      val newStats = readStats(spark, stateDir)
+        .join(targets, Seq("doc_id"), "left_anti")
+        .unionByName(recomputed)
+        .localCheckpoint()
 
-    val oldStats = readState(spark, s"$stateDir/stats", statsSchema)
-    val newStats = oldStats
-      .join(targets, Seq("doc_id"), "left_anti")
-      .unionByName(recomputed)
-      .localCheckpoint()
-
-    StagedTable.commit(newStats, s"$stateDir/stats")
-    StateStore.writeWatermark(wmPath, hi)
-    // corpus grew: batch artifacts cached over the pre-append corpus must
-    // rebuild on next access (same contract as StreamingDupClusters.tick)
-    graft.operators.SessionCache.invalidateAllFor(spark, dataDir)
-    // fold accumulated gram slices once enough piled up — tick cost must
-    // never grow with tick COUNT, only with state size
-    SliceStore.maybeCompact(spark, s"$stateDir/grams", hi)
-    (n, nAffected)
-  }
+      StagedTable.commit(newStats, s"$stateDir/stats")
+      (n, nAffected)
+    }
 
   /** The maintained stats table — empty with the right schema before the
     * first tick; falls back to the `.old` copy if a crash struck between
     * StagedTable.commit's two renames.
     */
   def readStats(spark: SparkSession, stateDir: String): DataFrame =
-    readState(spark, s"$stateDir/stats", statsSchema)
-
-  private def readState(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    if (Files.isDirectory(Paths.get(dir))) spark.read.parquet(dir)
-    else if (Files.isDirectory(Paths.get(dir + ".old"))) spark.read.parquet(dir + ".old")
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    StateStore.readTable(spark, s"$stateDir/stats", statsSchema)
 
   /** Wire the tick to a file stream over the documents landing path — the
     * StreamingDupClusters shape: `Trigger.AvailableNow` drains and stops,
@@ -162,18 +145,8 @@ object StreamingSpanDedup {
       stateDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: ((Long, Long)) => Unit = _ => ()
-  ): StreamingQuery = {
-    val docPath = s"$dataDir/documents.parquet"
-    val schema = spark.read.parquet(docPath).schema
-    spark.readStream
-      .schema(schema)
-      .parquet(docPath)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", s"$stateDir/_spans_checkpoint")
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        onTick(tick(spark, dataDir, stateDir))
-      }
-      .start()
-  }
+  ): StreamingQuery =
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_spans_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
+    )
 }

@@ -93,5 +93,7 @@ object StreamingWinnow {
       trigger: Trigger = Trigger.AvailableNow(),
       onTick: Long => Unit = _ => ()
   ): StreamingQuery =
-    SliceMaintainer.start(spark, dataDir, stateDir, "_winnow_checkpoint", trigger, onTick, () => tick(spark, dataDir, stateDir))
+    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_winnow_checkpoint", trigger)(
+      onTick(tick(spark, dataDir, stateDir))
+    )
 }

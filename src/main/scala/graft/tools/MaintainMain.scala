@@ -91,7 +91,8 @@ object SpanMaintainMain {
   *
   * Expects the standard layout under dataDir (`documents.parquet`, and
   * optionally `embeddings.parquet` — the ANN append-refresh is skipped when
-  * absent). State lands under stateDir/{corpus,clusters,spans,drift,sketch,winnow,sample,bloom,pack,ann,bm25}.
+  * absent). State lands under
+  * stateDir/{corpus,clusters,spans,drift,sketch,winnow,sample,bloom,pack,media,ann,bm25}.
   */
 object IngestTick {
 

@@ -85,20 +85,24 @@ class StreamingDupClustersSpec extends SparkSpec {
 
   test("crash window between label retire and promote: prev/ fallback keeps full pre-tick state") {
     import java.nio.file.{Files, Paths}
+    import spark.implicits._
     val dataDir = java.nio.file.Files.createTempDirectory("sdc_crash_data").toString
     val stateDir = java.nio.file.Files.createTempDirectory("sdc_crash_state").toString
+    val labelsDir = s"$stateDir/labels/current"
     val oldDocs = Seq[(Long, Seq[String])](0L -> aToks, 1L -> aToks, 2L -> bToks, 3L -> bToks)
     writeDocs(dataDir, "overwrite", oldDocs)
     assert(StreamingDupClusters.tick(spark, dataDir, stateDir) === 4L)
     val before = readState(stateDir)
 
-    // simulate the tick-2 crash exactly between retire (current -> prev)
-    // and promote (stage -> current): current is GONE, only prev survives
-    Files.move(Paths.get(stateDir, "labels", "current"), Paths.get(stateDir, "labels", "prev"))
+    // simulate the tick-2 crash exactly between retire (current -> .old)
+    // and promote (.staging -> current): current is GONE, only .old survives
+    Seq((8L, 8L, 1L)).toDF("doc_id", "cluster", "cluster_size").write.parquet(s"$labelsDir.staging")
+    intercept[IllegalStateException](graft.core.StagedTable.promote(labelsDir, failAfterStep = 2))
+    assert(!Files.exists(Paths.get(labelsDir)) && Files.exists(Paths.get(s"$labelsDir.old")))
     assert(
       StreamingDupClusters.readLabels(spark, stateDir).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
         before.view.mapValues(_._1).toMap,
-      "readLabels must serve the retired prev/ copy during the crash window"
+      "readLabels must serve the retired .old copy during the crash window"
     )
 
     // the replayed tick (new docs landed meanwhile) must see full pre-tick
@@ -108,22 +112,23 @@ class StreamingDupClustersSpec extends SparkSpec {
     assert(StreamingDupClusters.tick(spark, dataDir, stateDir) === 1L)
     assert(readState(stateDir) === exactClusters(oldDocs ++ newDocs),
       "replay after the crash window must not lose untouched clusters")
-    assert(!Files.exists(Paths.get(stateDir, "labels", "prev")), "a clean tick retires prev/")
+    assert(!Files.exists(Paths.get(s"$labelsDir.old")), "a clean tick retires .old")
   }
 
   test("double crash: every crash prefix of a REPLAYED label promote keeps a complete table") {
     import java.nio.file.{Files, Paths}
     import spark.implicits._
-    val pre = Seq((0L, 0L, 2L), (1L, 0L, 2L))  // pre-tick table (prior crash left it in prev/)
+    val pre = Seq((0L, 0L, 2L), (1L, 0L, 2L))  // pre-tick table (prior crash left it in .old)
     val post = Seq((0L, 0L, 3L), (1L, 0L, 3L), (2L, 0L, 3L)) // replayed tick's staged result
     def labels(stateDir: String): Set[(Long, Long)] =
       StreamingDupClusters.readLabels(spark, stateDir).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     for (failAt <- 0 to 5) {
       val stateDir = Files.createTempDirectory(s"sdc_dc$failAt").toString
-      pre.toDF("doc_id", "cluster", "cluster_size").write.parquet(s"$stateDir/labels/prev")
-      post.toDF("doc_id", "cluster", "cluster_size").write.parquet(s"$stateDir/labels/stage")
+      val labelsDir = s"$stateDir/labels/current"
+      pre.toDF("doc_id", "cluster", "cluster_size").write.parquet(s"$labelsDir.old")
+      post.toDF("doc_id", "cluster", "cluster_size").write.parquet(s"$labelsDir.staging")
       val crashed =
-        try { StreamingDupClusters.promoteStagedLabels(stateDir, failAt); false }
+        try { graft.core.StagedTable.promote(labelsDir, failAt); false }
         catch { case _: IllegalStateException => true }
       val seen = labels(stateDir)
       assert(
@@ -131,11 +136,10 @@ class StreamingDupClustersSpec extends SparkSpec {
         s"failAt=$failAt: crash prefix must leave the complete pre- or post-tick table, got $seen"
       )
       if (crashed) { // the next replay re-stages and promotes cleanly
-        post.toDF("doc_id", "cluster", "cluster_size").write.mode("overwrite").parquet(s"$stateDir/labels/stage")
-        StreamingDupClusters.promoteStagedLabels(stateDir)
+        graft.core.StagedTable.commit(post.toDF("doc_id", "cluster", "cluster_size"), labelsDir)
       }
       assert(labels(stateDir) === post.map(t => (t._1, t._2)).toSet, s"failAt=$failAt: replay must converge")
-      assert(!Files.exists(Paths.get(stateDir, "labels", "prev")), s"failAt=$failAt: clean promote retires prev/")
+      assert(!Files.exists(Paths.get(s"$labelsDir.old")), s"failAt=$failAt: clean promote retires .old")
     }
   }
 
