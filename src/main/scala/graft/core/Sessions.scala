@@ -29,6 +29,8 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       // nested-column pruning matters for the adform-style nested scans
       .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
+      // local files without a forked `chmod` per created file and directory
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

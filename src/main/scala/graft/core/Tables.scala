@@ -1,19 +1,103 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 
 /** Loaders for the driver-provided test tables (`/root/repo/TESTDATA.md`):
   * TPC-H-ish star schema + `events` stream table + `documents`/`embeddings`
   * for the training-data-pipeline operators. One parquet file per table.
   *
-  * All loads are plain `spark.read.parquet` so Catalyst predicate pushdown,
-  * column pruning and partition pruning apply to every downstream query —
-  * at 100 TB these would be partitioned/bucketed tables and the same
-  * DataFrame code would pick that up from the catalog unchanged.
+  * All loads are plain parquet scans ([[parquet]]) so Catalyst predicate
+  * pushdown, column pruning and partition pruning apply to every downstream
+  * query — at 100 TB these would be partitioned/bucketed tables and the
+  * same DataFrame code would pick that up from the catalog unchanged.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** Opens parquet `paths` as `spark.read.parquet(paths: _*)` does, with the
+    * schema that Spark's non-merging inference would return — read on the
+    * driver from the one footer inference picks (the first data file in
+    * path order), instead of by the one-task job inference runs per read.
+    * Every parquet read of the program goes through here. Where the choice
+    * is not a flat listing, Spark infers as before: a missing path or one
+    * without data files (so it fails as Spark does), a nested or
+    * partitioned directory, summary files, glob patterns, or schema merging.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    inferenceFile(spark, paths) match {
+      case Some(f) => spark.read.schema(FooterSchema.of(spark, f)).parquet(paths: _*)
+      case None    => spark.read.parquet(paths: _*)
+    }
+
+  // the file whose footer Spark's inference reads (ParquetUtils.inferSchema
+  // without mergeSchema: the first leaf in path order), when every path is
+  // a data file or a flat directory of them; hidden names as Spark's listing
+  private def inferenceFile(spark: SparkSession, paths: Seq[String]): Option[FileStatus] = {
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")
+    def summary(name: String) = name.startsWith("_metadata") || name.startsWith("_common_metadata")
+    def leaves(p: String): Option[Seq[FileStatus]] = {
+      val path = new Path(p)
+      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val st = try Some(fs.getFileStatus(path)) catch { case _: java.io.FileNotFoundException => None }
+      st.flatMap { s =>
+        if (!s.isDirectory) Some(Seq(s))
+        else {
+          val children = fs.listStatus(path).toSeq
+          val names = children.map(_.getPath.getName)
+          if (children.exists(c => c.isDirectory && !hidden(c.getPath.getName)) || names.exists(summary)) None
+          else Some(children.filter(c => !c.isDirectory && !hidden(c.getPath.getName)))
+        }
+      }
+    }
+    val plain = paths.nonEmpty && !paths.exists(_.exists("{}[]*?\\".contains(_))) &&
+      !spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+    if (!plain) None
+    else {
+      val listed = paths.map(leaves)
+      if (listed.exists(_.isEmpty)) None
+      else listed.flatten.flatten.sortBy(_.getPath.toString).headOption
+    }
+  }
+
+  /** `compute` memoized per snapshot of the parquet files `df` reads: the
+    * key is `what`, every data file's (path, length, mtime) and `df`'s
+    * analyzed-plan hash, so an added, removed or rewritten file — or a
+    * different frame derived from the same files — takes a fresh entry. For
+    * aggregates over immutable files that several callers ask of the same
+    * snapshot (the maintainers' delta probe, index fingerprints, trained
+    * ANN geometry). A frame that reads anything but files is computed every
+    * time. The file list is the one the plan's file index already holds;
+    * no session is retained, and the oldest entries are dropped past a
+    * small bound.
+    */
+  def memoOnFiles[T](df: DataFrame, what: String)(compute: => T): T = {
+    val plan = df.queryExecution.analyzed
+    val leaves = plan.collectWithSubqueries { case l if l.children.isEmpty => l }
+    val indexes = leaves
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => i }
+    if (indexes.isEmpty || indexes.size != leaves.size) compute
+    else {
+      val files = indexes.flatMap(_.allFiles()).map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      val key = (what, files.sorted, plan.semanticHash())
+      snapshots.synchronized(Option(snapshots.get(key))) match {
+        case Some(v) => v.asInstanceOf[T]
+        case None =>
+          val v = compute
+          snapshots.synchronized(snapshots.put(key, v.asInstanceOf[AnyRef]))
+          v
+      }
+    }
+  }
+
+  private val snapshots = new java.util.LinkedHashMap[AnyRef, AnyRef](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, AnyRef]): Boolean = size() > 64
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")

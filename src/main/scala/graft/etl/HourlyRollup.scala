@@ -53,8 +53,8 @@ object HourlyRollup {
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptyCountsSchema)
     else
-      spark.read
-        .parquet(paths: _*)
+      graft.core.Tables
+        .parquet(spark, paths: _*)
         .filter(col("device_settings.user_agent") === userAgent)
         .withColumn(
           "hour",

@@ -112,7 +112,7 @@ object VerifySetup {
     if (testdataDir != SkipTestdata)
       checks += (try {
         val ok = Files.isDirectory(Paths.get(testdataDir)) &&
-          spark.read.parquet(s"$testdataDir/lineitem.parquet").limit(1).count() == 1
+          graft.core.Tables.parquet(spark, s"$testdataDir/lineitem.parquet").limit(1).count() == 1
         Check("testdata_readable", ok, testdataDir)
       } catch { case e: Exception => Check("testdata_readable", ok = false, e.toString) })
 

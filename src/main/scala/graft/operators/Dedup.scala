@@ -698,6 +698,41 @@ object Dedup {
   private[operators] def clustersFrom(pairs: DataFrame): DataFrame =
     clustersFromEdges(doubledEdges(pairs, eager = false), chainedRounds = 1)
 
+  /** (repr, new_label): every endpoint of the undirected pair frame
+    * (doc_a, doc_b) with the minimum id of its connected component — the
+    * (doc_id, cluster) of [[clustersFrom]]. `pairs` is materialized once;
+    * a graph of at most `maxDriverEdges` edges is then collected and
+    * labelled on the driver by union-find with min-id roots (one job where
+    * the propagation loop runs a few dozen), a larger one goes through
+    * [[clustersFrom]].
+    */
+  private[operators] def componentMinima(pairs: DataFrame, maxDriverEdges: Long): DataFrame = {
+    val m = pairs.localCheckpoint()
+    val small = m.limit(math.min(maxDriverEdges, Int.MaxValue - 1L).toInt + 1).collect()
+    if (small.length > maxDriverEdges)
+      clustersFrom(m).select(col("doc_id").as("repr"), col("cluster").as("new_label"))
+    else {
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def root(x: Long): Long = {
+        var r = parent.getOrElseUpdate(x, x)
+        while (parent(r) != r) r = parent(r)
+        var n = x // path compression
+        while (parent(n) != r) { val next = parent(n); parent(n) = r; n = next }
+        r
+      }
+      small.foreach { e =>
+        val (a, b) = (root(e.getLong(0)), root(e.getLong(1)))
+        if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      }
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      val rows = parent.keys.toSeq.map(n => org.apache.spark.sql.Row(n, root(n)))
+      pairs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*),
+        StructType(Seq(StructField("repr", LongType), StructField("new_label", LongType)))
+      )
+    }
+  }
+
   private def clustersFromEdges(edges: DataFrame, chainedRounds: Int = 2): DataFrame = {
     // Round 1 runs against IDENTITY labels (label(node) == node), so its
     // offer join collapses to a direct (dst, min src) aggregate, and the
@@ -764,7 +799,7 @@ object Dedup {
         // the remaining diameter per round (O(log d) materializations on
         // chain topologies)
         val frontier = m.filter(col("label") < col("old")).select(col("node"), col("label"))
-        val fSide = if (changed <= 1000000L) broadcast(frontier) else frontier
+        val fSide = if (changed <= DriverSideRows) broadcast(frontier) else frontier
         val best = edges
           .join(fSide, edges("src") === fSide("node"))
           .select(col("dst").as("n"), col("label").as("cand"))
@@ -1163,6 +1198,12 @@ object Dedup {
     applyEdgesToLabels(verifyEdges(t, deltaCandidates(newBuckets, allBuckets)), oldLabels)
   }
 
+  /** Row count up to which a frame counts as driver-sized: the propagation
+    * loop broadcasts a frontier this small, and the label repair collects a
+    * contracted graph this small.
+    */
+  private val DriverSideRows = 1000000L
+
   /** The label-repair half of the incremental path: merge a verified edge
     * frame (every edge touches >= 1 unlabeled-or-new doc) into an existing
     * label table via the contracted-graph propagation. Shared by the q108
@@ -1182,12 +1223,11 @@ object Dedup {
       .select(coalesce(col("la"), col("doc_a")).as("doc_a"), coalesce(col("lb"), col("doc_b")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
       .distinct()
-      .localCheckpoint()
-    // delta-sized propagation: nodes are cluster labels, old singletons,
+    // delta-sized components: nodes are cluster labels, old singletons,
     // and new docs — labels are component minima of MEMBER ids, and every
     // old label IS its cluster's min member, so min over super-nodes is
     // min over members
-    val remap = clustersFrom(superEdges).select(col("doc_id").as("repr"), col("cluster").as("new_label"))
+    val remap = componentMinima(superEdges, DriverSideRows)
     val updatedOld = oldLabels
       .join(remap.select(col("repr").as("cluster"), col("new_label")), Seq("cluster"), "left")
       .select(col("doc_id"), coalesce(col("new_label"), col("cluster")).as("cluster"))

@@ -694,7 +694,7 @@ object Retrieval {
           val path = bm25Path(ix, dir)
           Similarity
             .resolvePersistedFor(spark, docSource(spark, dir), "doc_id", bm25Table(dir), path, bm25Spec)
-            .map(postings => (postings, bm25ConstsFrom(spark.read.parquet(bm25StatsPath(path))).localCheckpoint()))
+            .map(postings => (postings, bm25ConstsFrom(Tables.parquet(spark, bm25StatsPath(path))).localCheckpoint()))
         }
       persisted.getOrElse {
         val tok = bm25TokFrame(docSource(spark, dir)).localCheckpoint()

@@ -725,9 +725,15 @@ object Similarity {
     */
   private val TRAIN_SAMPLE = 4096
 
-  /** Train the coarse quantizer from any (vec_id, embedding) frame. */
+  /** Train the coarse quantizer from any (vec_id, embedding) frame — once
+    * per file snapshot and `c`: IVF and IVF-PQ train the same centroids.
+    */
   def trainCentroidsFrom(emb: DataFrame, c: Int = C): Array[Array[Double]] = {
     graft.functions.VecFunctions.install(emb.sparkSession)
+    Tables.memoOnFiles(emb, s"ivf centroids c=$c")(trainCentroidsOnce(emb, c)).map(_.clone)
+  }
+
+  private def trainCentroidsOnce(emb: DataFrame, c: Int): Array[Array[Double]] = {
     // Deterministic hash-prefix sample: the TRAIN_SAMPLE vectors with the
     // smallest xxhash64(vec_id) — planned as a TakeOrdered top-k, ONE corpus
     // scan with no shuffle (vs the previous 3 full-corpus Lloyd iterations,
@@ -939,10 +945,15 @@ object Similarity {
   /** PQ codebooks from any (vec_id, embedding) frame: per subspace j,
     * PQ_K codewords trained over the UNIT-normalized bounded sample's
     * j-th subvectors (codes quantize unit vectors, so ADC approximates
-    * cosine directly). books(j)(k) is a PQ_SUB-dim codeword.
+    * cosine directly). books(j)(k) is a PQ_SUB-dim codeword. Trained once
+    * per file snapshot: PQ and IVF-PQ train the same codebooks.
     */
   def trainPqBooksFrom(emb: DataFrame): Array[Array[Array[Double]]] = {
     graft.functions.VecFunctions.install(emb.sparkSession)
+    Tables.memoOnFiles(emb, "pq codebooks")(trainPqBooksOnce(emb)).map(_.map(_.clone))
+  }
+
+  private def trainPqBooksOnce(emb: DataFrame): Array[Array[Array[Double]]] = {
     val sample: Array[Array[Double]] = withUnit(emb, "embedding", "u")
       .select(col("vec_id"), col("u"))
       .orderBy(expr("xxhash64(vec_id)"), col("vec_id"))
@@ -1669,12 +1680,14 @@ object Similarity {
   /** Generalized fingerprint over any source table with a monotone LONG id
     * column — lets other index families (Retrieval's BM25 postings index
     * over `documents`) reuse this file's persist/serve/append machinery
-    * instead of growing a parallel copy.
+    * instead of growing a parallel copy. One scan per file snapshot: the
+    * index families of one build share it.
     */
-  private[operators] def fingerprintOf(source: DataFrame, idCol: String): (Long, Long) = {
-    val r = source.agg(count(lit(1)), max(col(idCol))).collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-  }
+  private[operators] def fingerprintOf(source: DataFrame, idCol: String): (Long, Long) =
+    Tables.memoOnFiles(source, s"fingerprint $idCol") {
+      val r = source.agg(count(lit(1)), max(col(idCol))).collect()(0)
+      (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+    }
 
   private[operators] final case class Sidecar(buckets: Int, keys: Seq[String], rows: Long, maxId: Long, params: String)
 
@@ -1781,7 +1794,7 @@ object Similarity {
     }
     if (mismatched) spark.sql(s"DROP TABLE IF EXISTS `$table`")
     if (!spark.catalog.tableExists(table)) {
-      val schemaDdl = spark.read.parquet(dataPath).schema.toDDL
+      val schemaDdl = Tables.parquet(spark, dataPath).schema.toDDL
       val keyList = keys.map(k => s"`$k`").mkString(", ")
       spark.sql(
         s"CREATE TABLE `$table` ($schemaDdl) USING PARQUET " +
@@ -1820,9 +1833,9 @@ object Similarity {
       idCol: String,
       s: Sidecar
   ): Option[(DataFrame, (Long, Long), Long)] = {
-    val r = source
-      .agg(count(lit(1)), max(col(idCol)), count(when(col(idCol) <= s.maxId, 1)))
-      .collect()(0)
+    val r = Tables.memoOnFiles(source, s"append probe $idCol <= ${s.maxId}") {
+      source.agg(count(lit(1)), max(col(idCol)), count(when(col(idCol) <= s.maxId, 1))).collect()(0)
+    }
     val total = r.getLong(0)
     val maxId = if (r.isNullAt(1)) -1L else r.getLong(1)
     if (maxId > s.maxId && r.getLong(2) == s.rows)
@@ -1936,7 +1949,7 @@ object Similarity {
         // declared bucketing while the scan itself may execute non-bucketed
         // (autoBucketedScan), leaving the writer with arbitrary splits and
         // a files-per-bucket count no better than before
-        val raw = spark.read.parquet(path)
+        val raw = Tables.parquet(spark, path)
         graft.sources.Layouts.writeBucketed(
           raw.repartition(spec.buckets, spec.keys.map(raw.col): _*),
           tmpTable,
@@ -2245,15 +2258,15 @@ object Similarity {
   }
 
   private def readCentroidsAt(spark: SparkSession, path: String): Array[Array[Double]] =
-    spark.read
-      .parquet(path)
+    Tables
+      .parquet(spark, path)
       .orderBy(col("cluster"))
       .collect()
       .map(_.getSeq[Double](1).toArray)
 
   private def readBooksAt(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
-    val rows = spark.read
-      .parquet(path)
+    val rows = Tables
+      .parquet(spark, path)
       .orderBy(col("subspace"), col("k"))
       .collect()
     Array.tabulate(PQ_M) { j =>

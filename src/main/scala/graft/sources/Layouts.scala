@@ -119,7 +119,7 @@ object Layouts {
   ): CompactionReport = {
     val (nBefore, bytesBefore) = dirStats(spark, inDir)
     val nOut = math.max(1, math.ceil(bytesBefore.toDouble / targetBytes).toInt)
-    spark.read.parquet(inDir).coalesce(nOut).write.mode(SaveMode.Overwrite).parquet(outDir)
+    graft.core.Tables.parquet(spark, inDir).coalesce(nOut).write.mode(SaveMode.Overwrite).parquet(outDir)
     val (nAfter, bytesAfter) = dirStats(spark, outDir)
     CompactionReport(nBefore, bytesBefore, nAfter, bytesAfter)
   }

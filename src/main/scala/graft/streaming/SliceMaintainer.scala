@@ -14,8 +14,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * crash-safety protocol lives in ONE place:
   *   1. read the watermark sidecar;
   *   2. derive the delta (rows with an id above the watermark) and its
-  *      first id, last id and row count in ONE job — an empty delta is a
-  *      no-op tick;
+  *      first id, last id and row count in ONE probe, shared by every
+  *      maintainer that asks it of the same input files and watermark
+  *      ([[graft.core.Tables.memoOnFiles]]) — an empty delta is a no-op
+  *      tick;
   *   3. run the maintainer's body, which commits its tables: append slices
   *      under `<family>/delta_<lo>/`, rewritten tables through
   *      [[graft.core.StagedTable]];
@@ -111,7 +113,9 @@ private[streaming] object SliceMaintainer {
     val wm = sidecar.read()
     val id = col(sidecar.idCol)
     val delta = rows.filter(id > wm)
-    val mm = delta.agg(min(id), max(id), count(lit(1))).head()
+    val mm = graft.core.Tables.memoOnFiles(delta, s"delta probe ${sidecar.idCol} > $wm") {
+      delta.agg(min(id), max(id), count(lit(1))).head()
+    }
     if (mm.getLong(2) == 0L) noop(wm)
     else {
       val d = Delta(delta, wm, mm.getLong(0), mm.getLong(1), mm.getLong(2))
@@ -171,7 +175,7 @@ private[streaming] object SliceMaintainer {
       onBatch: => Unit
   ): StreamingQuery =
     spark.readStream
-      .schema(spark.read.parquet(path).schema)
+      .schema(graft.core.Tables.parquet(spark, path).schema)
       .parquet(path)
       .writeStream
       .trigger(trigger)

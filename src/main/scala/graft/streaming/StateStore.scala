@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.StagedTable
+import graft.core.{StagedTable, Tables}
 
 /** Parquet state tables for incremental maintainers (SCD2 history, corpus
   * build state, span stats), committed with [[StagedTable.commit]] (never
@@ -18,10 +18,14 @@ import graft.core.StagedTable
   */
 private[streaming] object StateStore {
 
+  /** The table's current version ([[StagedTable.current]]) with the schema
+    * its files carry; `schema` types only the empty table returned before
+    * the first commit.
+    */
   def readTable(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     StagedTable
       .current(dir)
-      .map(spark.read.parquet(_))
+      .map(Tables.parquet(spark, _))
       .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
 }
 
@@ -88,7 +92,7 @@ private[streaming] object SliceStore {
   def read(spark: SparkSession, dir: String): DataFrame = {
     val (pick, _, live, _) = layout(dir)
     val paths = pick.map(_.toString).toSeq ++ live.map(_._2.toString)
-    spark.read.parquet(paths: _*)
+    Tables.parquet(spark, paths: _*)
   }
 
   /** Contents EXCLUDING the slice keyed `loExclusive` and above — "state as
@@ -103,7 +107,7 @@ private[streaming] object SliceStore {
     val paths = pick.map(_.toString).toSeq ++ live.collect { case (lo, p) if lo < loExclusive => p.toString }
     if (paths.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(paths: _*)
+    else Tables.parquet(spark, paths: _*)
   }
 
   /** Fold live slices into the base once their count reaches the threshold;
@@ -121,7 +125,7 @@ private[streaming] object SliceStore {
     if (live.size < threshold) return false
 
     val srcPaths = pick.map(_.toString).toSeq ++ live.map(_._2.toString)
-    val merged = spark.read.parquet(srcPaths: _*)
+    val merged = Tables.parquet(spark, srcPaths: _*)
     val staging = dir + "/base.staging"
     merged.write.mode("overwrite").parquet(staging)
     Files.write(Paths.get(staging, "_covered"), coveredHi.toString.getBytes("UTF-8"))

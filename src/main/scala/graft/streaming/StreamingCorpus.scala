@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.core.StagedTable
+import graft.core.{StagedTable, Tables}
 import graft.operators.Curation
 
 /** Incremental corpus build: maintains the q77 curation-build state as
@@ -78,7 +78,7 @@ object StreamingCorpus {
   /** One maintenance tick over the accumulated documents directory. */
   def tick(spark: SparkSession, docsDir: String, stateDir: String): TickOutcome = {
     val (stagesDir, fpDir, testShDir, eligShDir) = dirs(stateDir)
-    val all = spark.read.parquet(docsDir)
+    val all = Tables.parquet(spark, docsDir)
     // state-schema migration (r16: the stage table grew `n_chars` so the
     // q179 surface can serve char mass without re-reading documents): a
     // stage table written under the old schema self-heals on the FIRST
@@ -109,14 +109,16 @@ object StreamingCorpus {
     ) { wm =>
       backfillNChars()
       TickOutcome("noop", 0L, 0L, wm)
-    } { case SliceMaintainer.Delta(delta, _, lo, hi, _) =>
+    } { case SliceMaintainer.Delta(delta, _, lo, hi, n) =>
       backfillNChars()
       // the delta's first ingest id (lo) keys this tick's append slices AND
       // the "state as of the previous watermark" reads below — stable
       // across a crashed tick's replay even when more documents land in
       // between
       val sig = Curation.buildSignals(delta).localCheckpoint(true)
-      val stages = StateStore.readTable(spark, stagesDir, stageSchema).localCheckpoint(true)
+      // the state reads stay lazy: every commit below stages its new
+      // version in full before its swap touches the version it reads
+      val stages = StateStore.readTable(spark, stagesDir, stageSchema)
       // the two APPEND-ONLY accumulators (fp→canon, test shingles) live as
       // SliceStore families: each tick appends one slice instead of rewriting
       // the whole table (O(delta) writes, not O(state)), with periodic
@@ -126,9 +128,9 @@ object StreamingCorpus {
       // replace) and stay stage-then-swap full rewrites; at 100 TB those
       // become dynamic-partition overwrites keyed on doc_id range (retro
       // flips touch old partitions sparsely), same commit discipline.
-      val fpCanon = SliceStore.readBelow(spark, fpDir, lo, fpSchema).localCheckpoint(true)
-      val testSh = SliceStore.readBelow(spark, testShDir, lo, testShSchema).localCheckpoint(true)
-      val eligSh = StateStore.readTable(spark, eligShDir, eligShSchema).localCheckpoint(true)
+      val fpCanon = SliceStore.readBelow(spark, fpDir, lo, fpSchema)
+      val testSh = SliceStore.readBelow(spark, testShDir, lo, testShSchema)
+      val eligSh = StateStore.readTable(spark, eligShDir, eligShSchema)
 
       // --- test-shingle growth (delta test docs only) --------------------------
       val newTestSh = Curation
@@ -222,7 +224,8 @@ object StreamingCorpus {
       newCanonRows.write.mode("overwrite").parquet(s"$fpDir/delta_$lo")
       newTestSh.write.mode("overwrite").parquet(s"$testShDir/delta_$lo")
       StagedTable.commit(keptEligSh, eligShDir)
-      TickOutcome("incremental", deltaStaged.count(), retro, hi)
+      // every delta doc stages exactly one row
+      TickOutcome("incremental", n, retro, hi)
     }
   }
 

@@ -100,7 +100,7 @@ object StreamingDupClusters {
       // so tick cost stays O(delta + matching state) instead of growing
       // with every historical slice's file count
       val allBuckets = SliceStore.read(spark, s"$stateDir/buckets")
-      val deltaBuckets = spark.read.parquet(s"$stateDir/buckets/$sliceName")
+      val deltaBuckets = graft.core.Tables.parquet(spark, s"$stateDir/buckets/$sliceName")
       val cand = Dedup.deltaCandidates(deltaBuckets, allBuckets)
 
       // verification reads candidate docs' token sets from persisted state
@@ -128,7 +128,7 @@ object StreamingDupClusters {
           "it or labels/current holds the complete table. Rebuild the state dir from the corpus before ticking."
       )
     StagedTable.current(labelsDir(stateDir)) match {
-      case Some(p) => spark.read.parquet(p).select(col("doc_id"), col("cluster"))
+      case Some(p) => graft.core.Tables.parquet(spark, p).select(col("doc_id"), col("cluster"))
       case None =>
         import spark.implicits._
         Seq.empty[(Long, Long)].toDF("doc_id", "cluster")

@@ -56,7 +56,7 @@ object StreamingScd2 {
     * watermark sidecar is `<historyDir>.state.json` ([[SliceMaintainer.Sidecar]]).
     */
   def tick(spark: SparkSession, eventsDir: String, historyDir: String): TickOutcome = {
-    val all = spark.read.parquet(eventsDir).select("user_id", "event_type", "ts", "event_id")
+    val all = graft.core.Tables.parquet(spark, eventsDir).select("user_id", "event_type", "ts", "event_id")
     SliceMaintainer.run(
       spark,
       all,

@@ -157,4 +157,75 @@ class TablesSpec extends SparkSpec {
       s"testdata contract changed: events.ts range [$lo, $hi] left the plausible window"
     )
   }
+
+  // --- Tables.parquet: footer-read schemas ----------------------------------
+
+  private def tmp(name: String): String = java.nio.file.Files.createTempDirectory(name).toString
+
+  test("footer schemas: every testdata table opens with the schema Spark infers") {
+    val tables = new java.io.File(sfDir).listFiles().map(_.getName).filter(_.endsWith(".parquet")).sorted
+    assert(tables.contains("documents.parquet") && tables.contains("events.parquet"))
+    for (t <- tables) {
+      val p = s"$sfDir/$t"
+      scala.util.Try(spark.read.parquet(p).schema) match {
+        case scala.util.Success(inferred) => assert(Tables.parquet(spark, p).schema === inferred, t)
+        // a file Spark cannot infer (events.ts as TIMESTAMP(NANOS)) must fail here too
+        case scala.util.Failure(_) => assert(scala.util.Try(Tables.parquet(spark, p)).isFailure, t)
+      }
+    }
+    assert(Tables.events(spark, sfDir).schema("ts").dataType === TimestampType)
+  }
+
+  test("footer schemas: several paths take the first data file in path order, as inference does") {
+    import spark.implicits._
+    val root = tmp("fs_multi")
+    Seq((1L, "a")).toDF("id", "s").write.parquet(s"$root/b")
+    Seq((2L, "b", 1.5)).toDF("id", "s", "x").write.parquet(s"$root/a")
+    Seq((3L, 4)).toDF("id", "n").coalesce(1).write.parquet(s"$root/c")
+    val c = new java.io.File(s"$root/c").listFiles().map(_.getPath).filter(_.endsWith(".parquet")).head
+    for (paths <- Seq(Seq(s"$root/b", s"$root/a"), Seq(s"$root/a", s"$root/b"), Seq(c, s"$root/b"))) {
+      assert(Tables.parquet(spark, paths: _*).schema === spark.read.parquet(paths: _*).schema, paths)
+      assert(Tables.parquet(spark, paths: _*).count() === spark.read.parquet(paths: _*).count())
+    }
+    // a partitioned directory is left to Spark's own listing and inference
+    Seq((5L, "p")).toDF("id", "k").write.partitionBy("k").parquet(s"$root/part")
+    assert(Tables.parquet(spark, s"$root/part").schema === spark.read.parquet(s"$root/part").schema)
+  }
+
+  test("footer schemas: an empty or missing dir fails as spark.read.parquet does") {
+    val empty = tmp("fs_empty")
+    val onlyHidden = tmp("fs_hidden")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(onlyHidden, "_SUCCESS"))
+    for (p <- Seq(empty, onlyHidden, s"$empty/missing")) {
+      val want = intercept[Exception](spark.read.parquet(p))
+      val got = intercept[Exception](Tables.parquet(spark, p))
+      assert(got.getClass === want.getClass, p)
+    }
+  }
+
+  // --- Tables.memoOnFiles ----------------------------------------------------
+
+  test("memoOnFiles: one computation per file snapshot and plan") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val dir = tmp("memo")
+    Seq(1L, 2L).toDF("id").write.mode("append").parquet(dir)
+    var runs = 0
+    def probe(df: org.apache.spark.sql.DataFrame): Long = Tables.memoOnFiles(df, "count") { runs += 1; df.count() }
+    // two separately opened frames over the same files share one entry
+    assert(probe(Tables.parquet(spark, dir)) === 2L && probe(Tables.parquet(spark, dir)) === 2L)
+    assert(runs === 1)
+    // another frame over the same files is another entry
+    assert(probe(Tables.parquet(spark, dir).filter(col("id") > 1)) === 1L && runs === 2)
+    // an added file is a new snapshot
+    Seq(3L).toDF("id").write.mode("append").parquet(dir)
+    assert(probe(Tables.parquet(spark, dir)) === 3L && runs === 3)
+    // a rewrite with the same row count is a new snapshot too
+    Seq(7L, 8L, 9L).toDF("id").write.mode("overwrite").parquet(dir)
+    assert(probe(Tables.parquet(spark, dir)) === 3L && runs === 4)
+    // a frame that reads anything but files is never memoized
+    val local = Seq(1L).toDF("id")
+    probe(local); probe(local)
+    assert(runs === 6)
+  }
 }

@@ -69,4 +69,57 @@ class IncrementalClustersPropSpec extends SparkSpec {
       info(s"trial $trial: ${full.map(_.getLong(1)).distinct.length} clusters over ${full.length} docs — 3 pivots equal")
     }
   }
+
+  test("random graphs with long chains: driver-side union-find == propagation, both sides of the bound") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val rnd = new scala.util.Random(61)
+
+    // connected components by BFS: every endpoint -> its component minimum
+    def reference(edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
+      val adj = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }.groupMap(_._1)(_._2)
+      val seen = scala.collection.mutable.Map.empty[Long, Long]
+      adj.keys.toSeq.sorted.foreach { start =>
+        if (!seen.contains(start)) {
+          val comp = scala.collection.mutable.Set(start)
+          var frontier = List(start)
+          while (frontier.nonEmpty) {
+            frontier = frontier.flatMap(adj(_)).filter(comp.add)
+          }
+          comp.foreach(seen(_) = comp.min)
+        }
+      }
+      seen.toSet
+    }
+
+    for (trial <- 1 to 4) {
+      // ids shuffled so a chain's minimum sits anywhere along it
+      val ids = rnd.shuffle((1 to 600).map(_.toLong * 7 % 1009)).toIndexedSeq
+      var next = 0
+      def take(k: Int) = { val s = ids.slice(next, next + k); next += k; s }
+      // diameter >> 2; longer chains make the propagation's round count,
+      // not the labelling, the cost of this spec
+      val chains = Seq.fill(2)(take(12 + rnd.nextInt(13))).flatMap(c => c.zip(c.tail))
+      val random = { val pool = take(80); Seq.fill(60)(pool(rnd.nextInt(80)) -> pool(rnd.nextInt(80))) }
+      val star = { val s = take(12); s.tail.map(s.head -> _) }
+      val edges = (chains ++ random ++ star)
+        .filter { case (a, b) => a != b }
+        .map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) }
+        .distinct
+      val pairs = edges.toDF("doc_a", "doc_b")
+
+      val propagated = Dedup.componentMinima(pairs, 0L)
+      val driver = Dedup.componentMinima(pairs, 1000000L)
+      assert(!propagated.queryExecution.analyzed.isInstanceOf[LocalRelation], "bound 0 must propagate")
+      assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation], "a small graph must label on the driver")
+      assert(driver.schema.map(f => f.name -> f.dataType) === propagated.schema.map(f => f.name -> f.dataType))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val want = reference(edges)
+      assert(rows(propagated) === want, s"trial $trial: propagation != reference")
+      assert(rows(driver) === want, s"trial $trial: union-find != reference")
+      info(s"trial $trial: ${edges.size} edges, ${want.map(_._2).size} components")
+    }
+    val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    assert(Dedup.componentMinima(empty, 1000000L).count() === 0L)
+  }
 }

@@ -1,16 +1,87 @@
 package graft.tools
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
+import graft.core.Tables
 import graft.operators.{Curation, Dedup}
 import graft.streaming.{StreamingCorpus, StreamingDupClusters, StreamingSpanDedup}
 
 /** The composite per-drop pass: after each ingest tick, EVERY maintained
   * surface must equal its batch twin over the corpus landed so far — the
-  * whole point of the one-command entry.
+  * whole point of the one-command entry. Each tick also keeps a Spark job
+  * budget and runs no parquet schema-inference job.
   */
 class IngestTickSpec extends SparkSpec {
+
+  /** Job budgets of the first tick (bootstrap over the first half) and the
+    * second (the second half as a delta), a few jobs above the measured
+    * counts (111 and 142).
+    */
+  private val BootstrapJobs = 115
+  private val DeltaJobs = 145
+
+  /** `body`'s result and the long call site of every Spark job it ran,
+    * bracketed by marker jobs in their own job group (listener delivery is
+    * asynchronous).
+    */
+  private def jobsOf[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val seen = ArrayBuffer.empty[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
+        val group = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        seen += group -> e.stageInfos.sortBy(_.stageId).lastOption.map(_.details).getOrElse("")
+        ()
+      }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.synchronized(seen.exists(_._1 == name)) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.synchronized(seen.exists(_._1 == name)), s"marker job $name was not delivered")
+    }
+    sc.addSparkListener(listener)
+    val out =
+      try {
+        marker("jobs-before")
+        val r = body
+        marker("jobs-after")
+        r
+      } finally sc.removeSparkListener(listener)
+    val sites = seen.synchronized(seen.toSeq)
+    (out, sites.slice(sites.indexWhere(_._1 == "jobs-before") + 1, sites.indexWhere(_._1 == "jobs-after")).map(_._2))
+  }
+
+  /** A parquet schema-inference job: its call site enters Spark through the
+    * reader (a scan with a given schema runs no job there).
+    */
+  private def infersSchema(site: String): Boolean =
+    Seq("inferSchema", "mergeSchemasInParallel", "DataFrameReader.parquet(", "DataFrameReader.load(").exists(site.contains)
+
+  /** Every directory under `root` that holds parquet data files directly. */
+  private def parquetDirs(root: String): Seq[String] = {
+    val s = Files.walk(java.nio.file.Paths.get(root))
+    try
+      s.iterator().asScala.toSeq.collect {
+        case p: Path if Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet") => p.getParent.toString
+      }.distinct.sorted
+    finally s.close()
+  }
+
+  test("the schema-inference detector sees a plain parquet read") {
+    val (_, sites) = jobsOf(spark.read.parquet(s"$sfDir/region.parquet"))
+    assert(sites.exists(infersSchema), sites.mkString("\n---\n"))
+    val (_, none) = jobsOf(Tables.parquet(spark, s"$sfDir/region.parquet"))
+    assert(none.isEmpty, none.mkString("\n---\n"))
+  }
 
   private def copyHalf(srcDir: String, dstDir: String, table: String, idCol: String, firstHalf: Boolean): Unit = {
     val df = spark.read.parquet(s"$srcDir/$table.parquet")
@@ -42,7 +113,11 @@ class IngestTickSpec extends SparkSpec {
     for (first <- Seq(true, false)) {
       copyHalf(sfDir, dataDir, "documents", "doc_id", first)
       copyHalf(sfDir, dataDir, "embeddings", "vec_id", first)
-      val o = IngestTick.run(spark, dataDir, stateDir)
+      val (o, sites) = jobsOf(IngestTick.run(spark, dataDir, stateDir))
+      val budget = if (first) BootstrapJobs else DeltaJobs
+      info(s"drop first=$first: ${sites.size} Spark jobs")
+      assert(sites.size <= budget, s"drop first=$first: IngestTick.run ran ${sites.size} Spark jobs, budget $budget")
+      assert(!sites.exists(infersSchema), s"drop first=$first: schema inference ran: ${sites.filter(infersSchema)}")
       assert(o.corpus.mode === "incremental" && o.corpus.nDelta > 0)
       assert(o.clusterDelta > 0 && o.spanDelta > 0)
 
@@ -161,5 +236,10 @@ class IngestTickSpec extends SparkSpec {
         o3.mediaDelta === 0L
     )
     info(s"two drops + noop tick verified against batch twins")
+
+    // every parquet dir the ticks left opens with the schema Spark infers
+    val dirs = parquetDirs(stateDir) ++ parquetDirs(dataDir)
+    assert(dirs.size > 20, dirs)
+    dirs.foreach(d => assert(Tables.parquet(spark, d).schema === spark.read.parquet(d).schema, d))
   }
 }
