@@ -19,14 +19,8 @@ object Verify {
     // shard/ctx override or an ANN probe/index setting from an earlier
     // tuning run sharing the getOrCreate session) would make the gate
     // compare two different queries and fail opaquely — gated runs always
-    // execute at the defaults.
-    Seq(
-      operators.Curation.ShardsConf,
-      operators.Curation.CtxConf,
-      operators.Similarity.LshProbesConf,
-      operators.Similarity.IvfNprobeConf,
-      operators.Similarity.IndexDirConf
-    ).foreach(k => if (spark.conf.getOption(k).isDefined) spark.conf.unset(k))
+    // execute at the defaults, so every `graft.` key is unset.
+    spark.conf.getAll.keys.filter(_.startsWith("graft.")).foreach(spark.conf.unset)
     new java.io.File(outDir).mkdirs()
     // Queries that throw are recorded in _errors.json (query -> first error
     // line) in addition to stderr: a missing result dir then reads as

@@ -200,7 +200,7 @@ object VecFunctions {
     override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
   }
 
-  /** splitmix64 finalizer — the shared mixer for shingle/minhash functions
+  /** splitmix64 finalizer — the shared mixer for the minhash function
     * and deterministic hyperplane generation.
     */
   @inline private[graft] def mix64(v: Long): Long = {
@@ -209,67 +209,6 @@ object VecFunctions {
     x ^= x >>> 27; x *= 0x94D049BB133111EBL
     x ^= x >>> 31
     x
-  }
-
-  /** SORTED DISTINCT hashes of consecutive token-hash triples (3-word
-    * shingles) in one primitive pass — replaces a nested-lambda pipeline
-    * whose inner transform was re-evaluated per element after projection
-    * collapse (O(tokens × shingles)). Sorted output feeds
-    * sorted_intersect_count (Jaccard) and minhash_sigs directly.
-    * Docs with < 3 tokens fall back to their single-token hashes.
-    */
-  case class ShingleHashes(child: Expression) extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(org.apache.spark.sql.types.LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"shingle_hashes expects array<bigint>, got $t"
-          )
-      }
-
-    private def build(x: ArrayData): Array[Long] = {
-      val n = x.numElements()
-      val m = if (n >= 3) n - 2 else n
-      val out = new Array[Long](m)
-      if (n >= 3) {
-        var i = 0
-        while (i < m) {
-          out(i) = mix64(x.getLong(i) ^ mix64(x.getLong(i + 1) ^ mix64(x.getLong(i + 2))))
-          i += 1
-        }
-      } else {
-        var i = 0
-        while (i < m) { out(i) = x.getLong(i); i += 1 }
-      }
-      java.util.Arrays.sort(out)
-      // in-place dedupe of the sorted array
-      var w = 0
-      var i = 0
-      while (i < m) {
-        if (w == 0 || out(i) != out(w - 1)) { out(w) = out(i); w += 1 }
-        i += 1
-      }
-      if (w == m) out else java.util.Arrays.copyOf(out, w)
-    }
-
-    override protected def nullSafeEval(a: Any): Any =
-      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(build(a.asInstanceOf[ArrayData]))
-
-    // scalar-heavy with array allocation: keep a single implementation and
-    // let codegen call into it (still inside the whole-stage pipeline).
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("shingleFn", this, classOf[ShingleHashes].getName)
-      nullSafeCodeGen(
-        ctx,
-        ev,
-        a => s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($a);"
-      )
-    }
-
-    override protected def withNewChildInternal(c: Expression): ShingleHashes = copy(child = c)
   }
 
   /** K MinHash signature values in one pass: min over elements of
@@ -335,10 +274,6 @@ object VecFunctions {
     ("simhash64", classOf[SimHash64], { args: Seq[Expression] =>
       require(args.length == 1, "simhash64 takes exactly 1 argument")
       SimHash64(args(0))
-    }),
-    ("shingle_hashes", classOf[ShingleHashes], { args: Seq[Expression] =>
-      require(args.length == 1, "shingle_hashes takes exactly 1 argument")
-      ShingleHashes(args(0))
     }),
     ("minhash_sigs16", classOf[MinHashSigs], { args: Seq[Expression] =>
       require(args.length == 1, "minhash_sigs16 takes exactly 1 argument")

@@ -25,28 +25,6 @@ object Curation {
     */
   private val toksExpr = "split(regexp_replace(lower(trim(text)), '\\\\s+', ' '), ' ')"
 
-  /** Shuffle-key hash for the content-keyed stages (q67 shingles, q71
-    * chunks): `md5` (default — 32-byte key, the widest hash DuckDB shares
-    * with Spark, so the registered oracles stay byte-comparable) or
-    * `xxhash64` (8-byte LONG key — the 100 TB choice: every
-    * distinct/join/groupBy on the key moves a quarter of the bytes). The
-    * key never reaches any output column — both queries aggregate it away —
-    * so the setting cannot change results (CurationSpec pins q67/q71
-    * equality under both). NOT applied to q67's train/test bucket split:
-    * that md5 defines WHICH docs are train/test (q49's split semantics),
-    * not how bytes shuffle.
-    */
-  val KeyHashConf = "graft.curation.keyhash"
-  private def keyHashFn(spark: SparkSession): String =
-    spark.conf.getOption(KeyHashConf).map(_.trim.toLowerCase) match {
-      case Some("xxhash64") => "xxhash64"
-      case Some("md5") | None => "md5"
-      case Some(other) =>
-        throw new IllegalArgumentException(
-          s"$KeyHashConf must be md5 or xxhash64, got '$other'"
-        )
-    }
-
   // ---------------------------------------------------------------------------
   // q66 — context-window packing: concatenate documents in doc_id order and
   // cut a bin boundary every CTX=512 tokens; a document belongs to the bin
@@ -251,9 +229,8 @@ object Curation {
   // md5(shingle) — a fixed-width key both engines compute identically —
   // not the raw variable-width 8-gram, so every downstream
   // distinct/join/shuffle moves 32-byte keys instead of ~50-byte strings
-  // (`graft.curation.keyhash=xxhash64` narrows that to an 8-byte LONG at
-  // 100 TB; md5 stays the default — the widest key DuckDB shares with
-  // Spark — so the registered oracle applies). Validation-bucket
+  // (md5 is the widest key DuckDB shares with Spark, so the registered
+  // oracle applies). Validation-bucket
   // docs (205 <= b < 230) are dropped BEFORE the explode/distinct — no
   // consumer reads them, so staging them would be pure waste. The TEST
   // side is benchmark-sized (tiny vs the corpus) — AQE broadcasts it from
@@ -261,19 +238,20 @@ object Curation {
   // its distinct.
   // ---------------------------------------------------------------------------
   /** ONE staged distinct shingle-digest table for both decontamination
-    * screens: (doc_id, split bucket, hashed 8-gram), validation-bucket
-    * docs dropped before the explode (no consumer reads them). The hash
-    * is a parameter because q67 keys SHUFFLES (keyHashFn — md5 default,
-    * xxhash64 at 100 TB) while q166 keys SEMANTICS (bloom positions come
-    * from the digest, so always md5); everything else — tokenizer
-    * convention, bucket arithmetic, shingle width, the size >= 8 guard
-    * (sequence(1, n) needs n >= 1; the oracle's range(1, len-6) is empty
-    * there for the same reason) — must stay in lockstep or q166's
-    * superset-of-q67 guarantee silently breaks. bucket is functional on
+    * screens: (doc_id, split bucket, md5 of each 8-gram), validation-bucket
+    * docs dropped before the explode (no consumer reads them). q67 keys
+    * its shuffles on the digest and q166 its bloom positions, so the two
+    * screens share one tokenizer convention, bucket arithmetic, shingle
+    * width and size >= 8 guard (sequence(1, n) needs n >= 1; the oracle's
+    * range(1, len-6) is empty there for the same reason) — q166's
+    * superset-of-q67 guarantee rests on that. bucket is functional on
     * doc_id, so distinct over (doc_id, bucket, sh_key) equals the per-doc
-    * distinct shingle set.
+    * distinct shingle set. Per-doc LOCAL (a doc's digests depend on
+    * nothing outside the doc), so union-of-slices over an id-partitioned
+    * ingest EQUALS the batch table — the property
+    * [[graft.streaming.StreamingBloomScreen]]'s O(delta) tick rides on.
     */
-  private[graft] def stagedShingles(docs: DataFrame, hashFn: String): DataFrame =
+  private[graft] def stagedShingles(docs: DataFrame): DataFrame =
     docs
       .withColumn("bucket", conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("int"))
       .withColumn("toks", expr(toksExpr))
@@ -285,33 +263,30 @@ object Curation {
         explode(expr("transform(sequence(1, size(toks) - 7), i -> array_join(slice(toks, i, 8), ' '))"))
           .as("shingle")
       )
-      .select(col("doc_id"), col("bucket"), expr(s"$hashFn(shingle)").as("sh_key"))
+      .select(col("doc_id"), col("bucket"), expr("md5(shingle)").as("sh_key"))
       .distinct()
 
-  /** Session-scoped staged shingle table per (dir, hash mode) — the gram
-    * explode + distinct is the expensive pass and FOUR consumers read it
-    * (q67 directly, q163's breadth leg, q172 through q163, q166 under the
-    * md5 semantics), so it builds once per session like the winnow/chunk
-    * stages. Bench names the build phase (`q67_shingles`).
+  /** Session-scoped staged shingle table per dir — the gram explode +
+    * distinct is the expensive pass and FOUR consumers read it (q67
+    * directly, q163's breadth leg, q172 through q163, q166), so it builds
+    * once per session like the winnow/chunk stages. Bench names the build
+    * phase (`q67_shingles`).
     */
   private val shingleCache = new SessionCache[DataFrame]
 
-  private[graft] def stagedShinglesCached(spark: SparkSession, dir: String, hashFn: String): DataFrame =
-    shingleCache.getOrBuild(spark, s"$dir@sh_$hashFn")(
-      stagedShingles(Tables.balanced(Tables.documents(spark, dir)), hashFn).localCheckpoint()
+  private[graft] def stagedShinglesCached(spark: SparkSession, dir: String): DataFrame =
+    shingleCache.getOrBuild(spark, dir)(
+      stagedShingles(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
     )
 
-  /** Warm the staged shingle cache for this session's shuffle-key mode and
-    * for q166's fixed md5 semantics (the same entry under default knobs).
-    */
+  /** Warm the staged shingle cache q67 and q166 share. */
   private[graft] def buildShingleStage(spark: SparkSession, dir: String): Unit = {
-    stagedShinglesCached(spark, dir, keyHashFn(spark))
-    stagedShinglesCached(spark, dir, "md5")
+    stagedShinglesCached(spark, dir)
     ()
   }
 
   def q67Contamination(spark: SparkSession, dir: String): DataFrame =
-    contaminationFromShingles(stagedShinglesCached(spark, dir, keyHashFn(spark)))
+    contaminationFromShingles(stagedShinglesCached(spark, dir))
 
   /** q67 over ANY staged (doc_id, bucket, sh_key) shingle table — shared
     * by the batch query and [[graft.streaming.StreamingDecontam]]'s serve
@@ -382,9 +357,7 @@ object Curation {
   // test gram floored at 64 (fpp ~ 2.4e-3, scale-invariant because m
   // grows with the keyed set) — plain integer arithmetic DuckDB
   // reproduces with a position join, so the false positives are THE SAME
-  // ROWS in both engines and the gate hash-checks them. Bloom keys are
-  // always md5 regardless of graft.curation.keyhash: positions decide
-  // output rows, so they are semantics, not shuffle plumbing.
+  // ROWS in both engines and the gate hash-checks them.
   //
   // Scale shape: one corpus scan into the staged distinct shingle table
   // (q67's localCheckpoint plan; the digest column doubles as the staged
@@ -398,17 +371,6 @@ object Curation {
   // of q67's — spec-pinned alongside a first-principles membership
   // replay.
   // ---------------------------------------------------------------------------
-  /** q166's staged distinct shingle-digest table over a documents frame:
-    * (doc_id, split bucket, md5 digest of each 8-gram), validation-bucket
-    * docs dropped before the explode. Per-doc LOCAL (a doc's digests
-    * depend on nothing outside the doc), so union-of-slices over an
-    * id-partitioned ingest EQUALS the batch table — the property
-    * [[graft.streaming.StreamingBloomScreen]]'s O(delta) tick rides on,
-    * exactly the winnow maintainer's argument.
-    */
-  private[graft] def bloomShingles(docs: DataFrame): DataFrame =
-    stagedShingles(docs, "md5")
-
   /** The screen over a STAGED (caller-checkpointed) shingle table — shared
     * verbatim by the batch query and the streaming maintainer's serve path
     * so the two views cannot drift.
@@ -459,7 +421,7 @@ object Curation {
 
   def q166BloomScreen(spark: SparkSession, dir: String): DataFrame =
     bloomScreenCache.getOrBuild(spark, s"$dir@bloom_screen") {
-      bloomScreenFrom(spark, stagedShinglesCached(spark, dir, "md5")).localCheckpoint()
+      bloomScreenFrom(spark, stagedShinglesCached(spark, dir)).localCheckpoint()
     }
 
   /** The oracle replays membership as a position join: a train gram is a
@@ -1099,25 +1061,19 @@ object Curation {
   // map-side-combined groupBy, so the materialized checkpoint holds one
   // row per distinct chunk per doc (instance multiplicity as a count), a
   // separate presence-distinct shuffle disappears, and every downstream
-  // shuffle moves the deduplicated rows. Chunk keys are md5 by default
-  // (fixed-width, oracle-shared; `graft.curation.keyhash=xxhash64` swaps in
-  // the 8-byte LONG key at 100 TB) — all shuffles key on the hash, never on
-  // passage text.
+  // shuffle moves the deduplicated rows. Chunk keys are md5 (fixed-width,
+  // oracle-shared) — all shuffles key on the hash, never on passage text.
   // ---------------------------------------------------------------------------
   private val SEG = 16
 
-  /** q71's per-(doc, chunk) frame, session-cached per (dir, key mode) —
-    * the chunk-hash table is the intermediate a real pipeline materializes
-    * once; q71 and q117's passage column both read it. The cache key
-    * carries the key mode so switching `graft.curation.keyhash` can never
-    * serve the other mode's frame (the dir-prefix invalidation still
-    * sweeps both on ingest ticks).
+  /** q71's per-(doc, chunk) frame, session-cached per dir — the
+    * chunk-hash table is the intermediate a real pipeline materializes
+    * once; q71 and q117's passage column both read it.
     */
   private val passageChunkCache = new SessionCache[DataFrame]
 
   def q71PassageDedup(spark: SparkSession, dir: String): DataFrame = {
-    val hashFn = keyHashFn(spark)
-    val grouped = passageChunkCache.getOrBuild(spark, s"$dir@$hashFn")(Tables
+    val grouped = passageChunkCache.getOrBuild(spark, dir)(Tables
       .balanced(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
       .withColumn("toks", expr(toksExpr))
       // every doc tokenizes to >= 1 token, but guard anyway: sequence(0, -1)
@@ -1127,7 +1083,7 @@ object Curation {
         "chunks",
         expr(
           s"transform(sequence(0, cast(ceil(size(toks) / $SEG.0) AS int) - 1), " +
-            s"i -> struct($hashFn(array_join(slice(toks, i * $SEG + 1, $SEG), ' ')) AS seg_key, " +
+            s"i -> struct(md5(array_join(slice(toks, i * $SEG + 1, $SEG), ' ')) AS seg_key, " +
             s"size(slice(toks, i * $SEG + 1, $SEG)) AS seg_len))"
         )
       )
@@ -1339,11 +1295,9 @@ object Curation {
   // to (doc, bigram-key) WITH the explode feeding a map-side-combined
   // groupBy, staged once (localCheckpoint) for its two consumers
   // (first-seen table, join-back), and every shuffle keys on the
-  // fixed-width hash of the bigram (`graft.curation.keyhash`), never the
-  // raw string pair.
+  // fixed-width md5 of the bigram, never the raw string pair.
   // ---------------------------------------------------------------------------
   def q73NgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val hashFn = keyHashFn(spark)
     // tokens off the staged token table (TextOps.tokenStage — the same
     // normalize+split this query re-ran from raw text per repetition)
     val grouped = TextOps
@@ -1359,7 +1313,7 @@ object Curation {
           expr("transform(sequence(1, size(toks) - 1), i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))")
         ).as("bg")
       )
-      .select(col("doc_id"), expr(s"$hashFn(bg)").as("bg_key"))
+      .select(col("doc_id"), expr("md5(bg)").as("bg_key"))
       .groupBy(col("doc_id"), col("bg_key"))
       .agg(count(lit(1)).as("n_inst"))
       .localCheckpoint()
@@ -1501,7 +1455,7 @@ object Curation {
   // Scale shape: ONE corpus scan fused into the signal projection (rules +
   // split bucket + dedup fingerprint + sampling coin in one pass), staged
   // once; the dedup groupBy and shingle joins key on fixed-width hashes
-  // (fp = md5(norm); sh_key via `graft.curation.keyhash`); the stage-
+  // (fp = md5(norm); sh_key = md5(shingle)); the stage-
   // attributed table is re-staged NARROW (5 columns) for its two consumers;
   // the mixture plan is dozens of rows with 1-row broadcast totals (the
   // whitelisted q70 pattern); the report is a single groupBy(source).
@@ -1547,8 +1501,7 @@ object Curation {
     * re-splitting norm per consumer is cheaper than checkpointing token
     * arrays). Input needs (doc_id, norm).
     */
-  private[graft] def shingleKeys(spark: SparkSession, df: DataFrame): DataFrame = {
-    val hashFn = keyHashFn(spark)
+  private[graft] def shingleKeys(df: DataFrame): DataFrame =
     df.withColumn("toks", expr("split(norm, ' ')"))
       .filter(size(col("toks")) >= 8)
       .select(
@@ -1556,9 +1509,8 @@ object Curation {
         explode(expr("transform(sequence(1, size(toks) - 7), i -> array_join(slice(toks, i, 8), ' '))"))
           .as("shingle")
       )
-      .select(col("doc_id"), expr(s"$hashFn(shingle)").as("sh_key"))
+      .select(col("doc_id"), expr("md5(shingle)").as("sh_key"))
       .distinct()
-  }
 
   /** The mixture-sampling final stage over a pre-mixture staged frame
     * (doc_id, source, n_tokens, u, stage): rates derive from the CURRENT
@@ -1606,8 +1558,8 @@ object Curation {
     val survivors = withCanon.filter(
       col("reason") === "pass" && col("bucket") < SplitKeepBucket && col("doc_id") === col("canon_id")
     )
-    val testSh = shingleKeys(spark, base.filter(col("bucket") >= TestBucket)).select(col("sh_key")).distinct()
-    val contaminated = shingleKeys(spark, survivors.select(col("doc_id"), col("norm")))
+    val testSh = shingleKeys(base.filter(col("bucket") >= TestBucket)).select(col("sh_key")).distinct()
+    val contaminated = shingleKeys(survivors.select(col("doc_id"), col("norm")))
       .join(testSh, "sh_key")
       .select(col("doc_id"))
       .distinct()
@@ -1764,20 +1716,18 @@ object Curation {
   // consumers; transition and context frequency tables are vocab-sized
   // (Heaps' law) and AQE-broadcast from measured size; the vocab size V is
   // a broadcast single row (the whitelisted q69 1-row BNLJ pattern). All
-  // joins key on `graft.curation.keyhash` fixed-width hashes. The per-doc
+  // joins key on fixed-width md5 hashes. The per-doc
   // average is floored at 4dp (q69's convention): the cross-row double
   // sum's last digits depend on partial-aggregation order.
   // ---------------------------------------------------------------------------
   /** q78's staged per-doc bigram count table and vocabulary as session
-    * artifacts (named bench phase q78_grams; cache keyed on the hash
-    * function the session selects, the passageChunkCache rule): the
-    * tokenize + explode + count collapse is identical across repetitions.
+    * artifacts (named bench phase q78_grams): the tokenize + explode +
+    * count collapse is identical across repetitions.
     */
   private val bigramCache = new SessionCache[(DataFrame, DataFrame)]
 
-  def buildBigramGrams(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val hashFn = keyHashFn(spark)
-    bigramCache.getOrBuild(spark, s"$dir@$hashFn") {
+  def buildBigramGrams(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    bigramCache.getOrBuild(spark, dir) {
       val docs = Tables
         .balanced(Tables.documents(spark, dir).select(col("doc_id"), col("text")))
         .withColumn("toks", expr(toksExpr))
@@ -1788,8 +1738,8 @@ object Curation {
         .select(col("doc_id"), col("toks"), explode(expr("sequence(1, size(toks) - 1)")).as("i"))
         .select(
           col("doc_id"),
-          expr(s"$hashFn(element_at(toks, i))").as("w1k"),
-          expr(s"$hashFn(concat(element_at(toks, i), ' ', element_at(toks, i + 1)))").as("bgk")
+          expr("md5(element_at(toks, i))").as("w1k"),
+          expr("md5(concat(element_at(toks, i), ' ', element_at(toks, i + 1)))").as("bgk")
         )
         .groupBy(col("doc_id"), col("w1k"), col("bgk"))
         .agg(count(lit(1)).as("c"))
@@ -1800,7 +1750,6 @@ object Curation {
         .localCheckpoint()
       (g, vocab)
     }
-  }
 
   def q78BigramLm(spark: SparkSession, dir: String): DataFrame = {
     val (g, vocab) = buildBigramGrams(spark, dir)
@@ -1861,7 +1810,6 @@ object Curation {
   // decorate the pair counts.
   // ---------------------------------------------------------------------------
   def q81SourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val hashFn = keyHashFn(spark)
     val sh = Tables
       .balanced(Tables.documents(spark, dir))
       .withColumn("toks", expr(toksExpr))
@@ -1871,7 +1819,7 @@ object Curation {
         explode(expr("transform(sequence(1, size(toks) - 7), i -> array_join(slice(toks, i, 8), ' '))"))
           .as("shingle")
       )
-      .select(col("source"), expr(s"$hashFn(shingle)").as("sh_key"))
+      .select(col("source"), expr("md5(shingle)").as("sh_key"))
       .distinct()
       .localCheckpoint()
     val totals = sh.groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
@@ -2164,46 +2112,15 @@ object Curation {
   // token / score envelopes — the schedule a curriculum-ordered training run
   // consumes. NTILE over the (prob, doc_id) total order makes tie handling
   // deterministic and identical in both engines.
-  //
-  // Scale note: exact quartiles need a per-language sort, and partitioning
-  // by `lang` alone is skew-prone (one window partition per language), so
-  // `graft.curation.terciles=approx` (the shared q112 knob) SHIPS the
-  // 100 TB path here too: per-language approx-quantile boundaries + a
-  // broadcast value-range assignment — no window sort, ties land by VALUE
-  // not rank (the documented approx trade). The exact NTILE default is the
-  // oracle-gated contract; the spec pins the approx path's buckets close
-  // to it and its plan free of Window sorts.
   // ---------------------------------------------------------------------------
   def q86Curriculum(spark: SparkSession, dir: String): DataFrame = {
     // scored corpus off the session-cached eval frame (same rows/values as
     // qualityScored — the cache IS its projection); binning is the timed path
     val scored = qmEvalFrame(spark, dir)
       .select(col("doc_id"), col("lang"), col("prob"), col("n_tokens"))
-    val staged = spark.conf.getOption(TercilesConf).map(_.trim.toLowerCase) match {
-      case Some("approx") =>
-        val bounds = scored
-          .groupBy(col("lang"))
-          .agg(expr("approx_percentile(prob, array(0.25, 0.5, 0.75), 10000)").as("q"))
-          .select(
-            col("lang"),
-            expr("element_at(q, 1)").as("b1"),
-            expr("element_at(q, 2)").as("b2"),
-            expr("element_at(q, 3)").as("b3")
-          )
-        scored
-          .join(broadcast(bounds), "lang")
-          .withColumn(
-            "stage",
-            lit(1) + (col("prob") > col("b1")).cast("int") + (col("prob") > col("b2")).cast("int") +
-              (col("prob") > col("b3")).cast("int")
-          )
-      case Some("exact") | None =>
-        val w = Window.partitionBy(col("lang")).orderBy(col("prob"), col("doc_id"))
-        scored.withColumn("stage", ntile(4).over(w))
-      case Some(other) =>
-        throw new IllegalArgumentException(s"$TercilesConf must be exact or approx, got '$other'")
-    }
-    staged
+    val w = Window.partitionBy(col("lang")).orderBy(col("prob"), col("doc_id"))
+    scored
+      .withColumn("stage", ntile(4).over(w))
       .groupBy(col("lang"), col("stage"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -2270,8 +2187,7 @@ object Curation {
   // text); the island merge is one doc_id-partitioned window whose two
   // passes (running max, running sum) share a single exchange+sort. No
   // driver traffic, no O(n^2) anywhere — corpus cost is O(total tokens).
-  // Key width follows `graft.curation.keyhash` (md5 default for the shared
-  // oracle; xxhash64 halves shuffle bytes at 100 TB).
+  // Keys are md5, the fixed-width hash the shared oracle computes too.
   // ---------------------------------------------------------------------------
   private val SPAN_K = 8
   private val SPAN_MIN = 16
@@ -2281,8 +2197,7 @@ object Curation {
     * q110 and `streaming/StreamingSpanDedup`'s per-delta slices so the two
     * spec-pinned-equal paths derive instances identically.
     */
-  private[graft] def spanGramInstances(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val hashFn = keyHashFn(spark)
+  private[graft] def spanGramInstances(docs: DataFrame): DataFrame =
     Tables
       .balanced(docs.select(col("doc_id"), col("text")))
       .withColumn("toks", expr(toksExpr))
@@ -2294,12 +2209,11 @@ object Curation {
         explode(
           expr(
             s"transform(sequence(1, size(toks) - $SPAN_K + 1), " +
-              s"i -> struct($hashFn(array_join(slice(toks, i, $SPAN_K), ' ')) AS key, i AS pos))"
+              s"i -> struct(md5(array_join(slice(toks, i, $SPAN_K), ' ')) AS key, i AS pos))"
           )
         ).as("g")
       )
       .select(col("doc_id"), col("n_toks"), col("g.key").as("key"), col("g.pos").as("pos"))
-  }
 
   /** Per-doc span stats over ANY instance frame + dup-key set: mark dup
     * positions, merge overlapping coverage with the gaps-and-islands
@@ -2361,14 +2275,14 @@ object Curation {
   }
 
   /** q110/q154's per-position gram-instance table, session-cached per
-    * (dir, key mode) — the heaviest span-dedup stage, shared by the rollup
+    * dir — the heaviest span-dedup stage, shared by the rollup
     * view, the mask export, and q117's span column.
     */
   private val spanInstCache = new SessionCache[DataFrame]
 
   private def spanInstancesCached(spark: SparkSession, dir: String): DataFrame =
-    spanInstCache.getOrBuild(spark, s"$dir@${keyHashFn(spark)}") {
-      spanGramInstances(spark, Tables.documents(spark, dir)).localCheckpoint()
+    spanInstCache.getOrBuild(spark, dir) {
+      spanGramInstances(Tables.documents(spark, dir)).localCheckpoint()
     }
 
   /** The >= 2-occurrence key set over the staged instance table, cached
@@ -2381,7 +2295,7 @@ object Curation {
   private val spanDupKeyCache = new SessionCache[DataFrame]
 
   private def spanDupKeysCached(spark: SparkSession, dir: String): DataFrame =
-    spanDupKeyCache.getOrBuild(spark, s"$dir@${keyHashFn(spark)}") {
+    spanDupKeyCache.getOrBuild(spark, dir) {
       spanInstancesCached(spark, dir)
         .groupBy(col("key"))
         .agg(count(lit(1)).as("n_occ"))
@@ -2625,42 +2539,14 @@ object Curation {
   // §4.3: LM-score terciles per language, "head" shipped to training). NTILE
   // over the (avg_lp DESC, doc_id) total order makes tie placement
   // deterministic and identical in both engines (the q86 rule).
-  //
-  // Scale note: same as q86 — exact terciles need a per-language sort, so
-  // `graft.curation.terciles=approx` SHIPS the 100 TB path: per-language
-  // approx-quantile boundaries (one aggregation, no window sort) + a
-  // broadcast value-range assignment. Same output schema; docs tied at a
-  // boundary land by VALUE, not rank (the documented approx trade — bucket
-  // sizes drift by the tie mass). The exact NTILE default is the
-  // oracle-gated contract; the spec pins the approx path's buckets close
-  // to it and its plan free of Window sorts.
   // ---------------------------------------------------------------------------
-  val TercilesConf = "graft.curation.terciles"
-
   def q112PerplexityBuckets(spark: SparkSession, dir: String): DataFrame = {
     val scored = q111KnTrigram(spark, dir)
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")), "doc_id")
-    val bucketed = spark.conf.getOption(TercilesConf).map(_.trim.toLowerCase) match {
-      case Some("approx") =>
-        val bounds = scored
-          .groupBy(col("lang"))
-          .agg(expr("approx_percentile(avg_lp, array(0.3333333333333333, 0.6666666666666666), 10000)").as("q"))
-          .select(col("lang"), expr("element_at(q, 1)").as("b1"), expr("element_at(q, 2)").as("b2"))
-        scored
-          .join(broadcast(bounds), "lang")
-          .withColumn(
-            "bucket",
-            when(col("avg_lp") > col("b2"), "head").when(col("avg_lp") > col("b1"), "middle").otherwise("tail")
-          )
-      case Some("exact") | None =>
-        val w = Window.partitionBy(col("lang")).orderBy(col("avg_lp").desc, col("doc_id"))
-        scored
-          .withColumn("b", ntile(3).over(w))
-          .withColumn("bucket", when(col("b") === 1, "head").when(col("b") === 2, "middle").otherwise("tail"))
-      case Some(other) =>
-        throw new IllegalArgumentException(s"$TercilesConf must be exact or approx, got '$other'")
-    }
-    bucketed
+    val w = Window.partitionBy(col("lang")).orderBy(col("avg_lp").desc, col("doc_id"))
+    scored
+      .withColumn("b", ntile(3).over(w))
+      .withColumn("bucket", when(col("b") === 1, "head").when(col("b") === 2, "middle").otherwise("tail"))
       .groupBy(col("lang"), col("bucket"))
       .agg(
         count(lit(1)).as("n_docs"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.CheckpointStats
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -33,15 +34,6 @@ object Dedup {
   /** Whitespace-normalized lowercase text — the canonical dedup form. */
   private val normText: Column = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
 
-  private val tokenHashes: Column = expr("transform(split(norm_text, ' '), t -> xxhash64(t))")
-
-  /** 3-word shingle hashes as the native one-pass `shingle_hashes`
-    * (graft.functions): sorted distinct triple-hashes, no per-shingle string
-    * building, no nested-lambda re-evaluation. Sorted output feeds
-    * sorted_intersect_count and minhash_sigs16 directly.
-    */
-  private val shingleHashes: Column = expr("shingle_hashes(th)")
-
   // ---------------------------------------------------------------------------
   // q29 — exact deduplication (hash-groupBy): one survivor (min doc_id) per
   // normalized-text fingerprint. Output keeps group size so collapsed mass is
@@ -68,7 +60,7 @@ object Dedup {
   // q30 — MinHash + LSH near-duplicate pairs. k=16 permutations, 8 bands ×
   // 2 rows → candidates → exact shingle Jaccard verify >= 0.5 (sorted
   // two-pointer merge). ORACLE-GATED since r15 via q134's md5-affine
-  // discipline: the default signature path hashes each 3-word shingle ONCE
+  // discipline: the signature path hashes each 3-word shingle ONCE
   // with md5 (base integer x = first 15 hex digits, reduced mod the
   // Mersenne prime p = 2^31-1) and derives the 16 permutations as
   // (a_h·x + b_h) mod p with q134's published literal multipliers — every
@@ -76,29 +68,11 @@ object Dedup {
   // over the 60-bit shingle keys) replays verbatim in DuckDB, so the
   // banded computation itself is the oracle (candidates INCLUDED: both
   // engines derive the identical candidate set, so the gate needs no
-  // recall argument). The pre-r15 xxhash64 + native-minhash_sigs16 path
-  // survives as the SERVING twin under `graft.dedup.minhash=native`
-  // (the q121→q125 discipline inverted: the registered query is the
-  // replayable one) — same plan shape, one hash call per shingle either
-  // way; the native expression saves only the md5-vs-xxhash constant.
+  // recall argument).
   // ---------------------------------------------------------------------------
   private val K = 16
   private val BANDS = 8
   private val ROWS_PER_BAND = K / BANDS
-
-  /** Signature-path knob: `md5` (default — the oracle-replayable affine
-    * construction) or `native` (xxhash64 shingles + the codegen'd
-    * minhash_sigs16 expression, the pre-r15 serving path).
-    */
-  val MinhashConf = "graft.dedup.minhash"
-
-  private def minhashPath(spark: SparkSession): String =
-    spark.conf.getOption(MinhashConf).map(_.trim.toLowerCase).filter(_.nonEmpty) match {
-      case None | Some("md5")  => "md5"
-      case Some("native")      => "native"
-      case Some(other) =>
-        throw new IllegalArgumentException(s"$MinhashConf must be md5 or native, got '$other'")
-    }
 
   /** md5-affine signatures: doc_id, sh (sorted distinct 60-bit md5 shingle
     * keys — the verify universe), sig (K affine-permutation mins). One md5
@@ -130,7 +104,7 @@ object Dedup {
       .select(col("doc_id"), col("sh"), array((0 until K).map(h => col(s"m$h")): _*).as("sig"))
   }
 
-  /** Band tuples for the md5 path: band b's key is the VALUE PAIR
+  /** Band tuples of md5-affine signatures: band b's key is the VALUE PAIR
     * (sig[2b], sig[2b+1]) — no engine-private hash in the key, so the
     * oracle joins on the same tuples. Shared by q30's self-join and
     * q113's cross-split join.
@@ -146,15 +120,15 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.v0").as("v0"), col("bk.v1").as("v1"))
 
   /** q30's candidate join with the verify's size-ratio conjunct applied
-    * BEFORE the distinct (the q113 lesson, r16): floored/rounded
-    * jaccard >= 0.5 requires raw j >= 0.4999995, and j <= min(sz)/max(sz),
-    * so a 0.499 ratio prune rejects nothing the verify would keep — the
-    * final rows (what the oracle gates) are identical, but size-skewed
-    * band collisions never reach the distinct's shuffle. `szCol` is the
-    * per-doc shingle-set size of whichever signature path is running.
+    * BEFORE the distinct (the q113 lesson, r16): floored jaccard >= 0.5
+    * requires raw j >= 0.4999995, and j <= min(sz)/max(sz), so a 0.499
+    * ratio prune rejects nothing the verify would keep — the final rows
+    * (what the oracle gates) are identical, but size-skewed band
+    * collisions never reach the distinct's shuffle.
     */
-  private def q30BandCandidates(sigs: DataFrame, bandRows: DataFrame => DataFrame, szCol: Column): DataFrame = {
-    val bands = bandRows(sigs).join(sigs.select(col("doc_id"), szCol.as("sz")), "doc_id")
+  private def q30BandCandidates(sigs: DataFrame): DataFrame = {
+    val bands = md5BandTuples(sigs.select(col("doc_id"), col("sig")))
+      .join(sigs.select(col("doc_id"), size(col("sh")).as("sz")), "doc_id")
     val keys = bands.columns.filter(c => c != "doc_id" && c != "sz").toSeq
     bands
       .as("l")
@@ -165,19 +139,6 @@ object Dedup {
       )
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
       .distinct()
-  }
-
-  /** doc_id, shingles (sorted distinct array<long>), sig (K minhashes). */
-  private def signatures(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecFunctions.install(spark)
-    Tables
-      .balanced(Tables.documents(spark, dir))
-      .withColumn("norm_text", normText)
-      .withColumn("th", tokenHashes)
-      .withColumn("shingles", shingleHashes)
-      .filter(size(col("shingles")) > 0)
-      .withColumn("sig", expr("minhash_sigs16(shingles)"))
-      .select(col("doc_id"), col("shingles"), col("sig"))
   }
 
   /** Banded-LSH candidate pairs (doc_a < doc_b, distinct) from a signature
@@ -232,46 +193,27 @@ object Dedup {
   }
 
   def q30MinhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecFunctions.install(spark) // sorted_intersect_count on both paths
+    graft.functions.VecFunctions.install(spark) // sorted_intersect_count
     // localCheckpoint: the signature pipeline feeds THREE consumers below
     // (buckets, sh_a, sh_b) — round 1 recomputed the full shingle/minhash
     // pass for each. Eager checkpoint runs it ONCE into executor storage
     // (MEMORY_AND_DISK) with lineage truncated; the blocks are reclaimed by
     // the ContextCleaner when the DF becomes unreachable, so nothing pins
     // storage for the session the way a .cache() we can't unpersist would.
-    if (minhashPath(spark) == "native") {
-      val sigs = signatures(spark, dir).localCheckpoint()
-      val candidates =
-        q30BandCandidates(sigs, s => bandBuckets(s.select(col("doc_id"), col("sig"))), size(col("shingles")))
-      val sa = sigs.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"))
-      val sb = sigs.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"))
-      // shingle arrays are sorted-distinct → zero-allocation merge intersect
-      val inter = expr("sorted_intersect_count(sh_a, sh_b)").cast("double")
-      candidates
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("jaccard", round(inter / (size(col("sh_a")) + size(col("sh_b")) - inter), 6))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    } else {
-      val sigs = md5Signatures(spark, dir).localCheckpoint()
-      val candidates =
-        q30BandCandidates(sigs, s => md5BandTuples(s.select(col("doc_id"), col("sig"))), size(col("sh")))
-      val sa = sigs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-      val sb = sigs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-      candidates
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
-        .withColumn(
-          "jaccard",
-          expr("floor(CAST(i AS DOUBLE) * 1e6 / (size(sh_a) + size(sh_b) - i) + 5e-1) / 1e6")
-        )
-        .filter(col("jaccard") >= 0.5)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy(col("doc_a"), col("doc_b"))
-    }
+    val sigs = md5Signatures(spark, dir).localCheckpoint()
+    val sa = sigs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
+    val sb = sigs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
+    q30BandCandidates(sigs)
+      .join(sa, "doc_a")
+      .join(sb, "doc_b")
+      .withColumn("i", expr("sorted_intersect_count(sh_a, sh_b)"))
+      .withColumn(
+        "jaccard",
+        expr("floor(CAST(i AS DOUBLE) * 1e6 / (size(sh_a) + size(sh_b) - i) + 5e-1) / 1e6")
+      )
+      .filter(col("jaccard") >= 0.5)
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** The banded computation replayed outright: one md5 per distinct
@@ -322,7 +264,7 @@ object Dedup {
   // q31 — SimHash near-duplicates: signature from token-multiset hashes
   // (frequency-weighted by construction), candidates from any shared
   // 16-bit chunk (4 tables), verified with bit_count hamming <= 6.
-  // ORACLE-GATED since r15, the q30 discipline: the default path hashes
+  // ORACLE-GATED since r15, the q30 discipline: the signature hashes
   // each TOKEN with md5 (60-bit prefix), and the per-bit majority vote,
   // the chunk-equality candidate join, and the hamming verify all replay
   // in DuckDB (the signature is a 60-column sum aggregate there; here one
@@ -331,30 +273,17 @@ object Dedup {
   // Candidate REPLAY makes the gate sound without any recall argument —
   // the 4x16 chunk scheme is honest sub-1-recall LSH (6 bits can spread
   // 2+2+1+1 over 4 chunks), and both engines derive the identical
-  // candidate set. The xxhash64 signature path stays the serving twin
-  // under `graft.dedup.simhash=native` (saves the md5-vs-xxhash constant;
-  // signatures differ per hash, so the twin is floor-pinned, not
-  // equality-pinned — hamming is hash-dependent, unlike q30's Jaccard).
+  // candidate set.
   // ---------------------------------------------------------------------------
-  val SimhashConf = "graft.dedup.simhash"
-
-  private def simhashPath(spark: SparkSession): String =
-    spark.conf.getOption(SimhashConf).map(_.trim.toLowerCase).filter(_.nonEmpty) match {
-      case None | Some("md5") => "md5"
-      case Some("native")     => "native"
-      case Some(other) =>
-        throw new IllegalArgumentException(s"$SimhashConf must be md5 or native, got '$other'")
-    }
-
   private def simhashed(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    val th =
-      if (simhashPath(spark) == "native") tokenHashes
-      else expr("transform(split(norm_text, ' '), t -> cast(conv(substring(md5(t), 1, 15), 16, 10) AS bigint))")
     Tables
       .balanced(Tables.documents(spark, dir))
       .withColumn("norm_text", normText)
-      .withColumn("th", th)
+      .withColumn(
+        "th",
+        expr("transform(split(norm_text, ' '), t -> cast(conv(substring(md5(t), 1, 15), 16, 10) AS bigint))")
+      )
       .filter(size(col("th")) > 0)
       // bit b of the signature = sign of sum over tokens of (+1/-1 at bit b);
       // one codegen'd pass (graft.functions.SimHash64) instead of a 64-way
@@ -367,7 +296,7 @@ object Dedup {
       .select(col("doc_id"), col("simhash"), col("chunks"))
   }
 
-  /** The md5 path replayed outright: 60 per-bit majority sums (the
+  /** q31 replayed outright: 60 per-bit majority sums (the
     * SimHash64 convention — bit set iff the vote is STRICTLY positive),
     * chunk-tuple candidates, xor/bit_count verify.
     */
@@ -783,11 +712,18 @@ object Dedup {
 
     var labels: DataFrame = null
     var changed = -1L
+    var roundBytes = Option.empty[BigInt]
     while (changed != 0L) {
       // one eager materialization per round serves the labels, the next
       // frontier, AND the convergence count — labels only ever decrease,
-      // so label < old is exactly "changed this round"
-      val m = cur.localCheckpoint()
+      // so label < old is exactly "changed this round". Every round's
+      // table has round 1's rows (one per node) and columns, so it keeps
+      // round 1's size estimate: the estimate a checkpoint carries over
+      // from its lineage multiplies at every join, and compounded over the
+      // rounds of a long chain it grew without bound.
+      val ck = cur.localCheckpoint()
+      val m = roundBytes.fold(ck)(CheckpointStats.withSizeInBytes(ck, _))
+      roundBytes = Some(CheckpointStats.sizeInBytes(m))
       changed = m.filter(col("label") < col("old")).count()
       labels = m.select(col("node"), col("label"))
       if (changed != 0L) {
@@ -1394,73 +1330,19 @@ object Dedup {
   // session-cached token-signature frame, band-bucket equi-join (train
   // side probes test side: the test split is ~10% of the corpus, so the
   // build side is the small one), verification touches candidates only.
-  // ORACLE-GATED since r15 under the q30 discipline: the default
-  // signature path is md5-affine at TOKEN grain (one md5 per distinct
+  // ORACLE-GATED since r15 under the q30 discipline: the signature
+  // path is md5-affine at TOKEN grain (one md5 per distinct
   // (doc, token), q134's literal multipliers, band-TUPLE cross-split
   // candidates, exact same-lang Jaccard >= 0.8 verify over the 60-bit
   // token keys) — the banded screen REPLAYS VERBATIM in DuckDB,
   // candidates included, so the gate needs no recall argument (the
   // exact cross-split recall stays measured by the spec/selfcheck
   // heritage: the screen's contract is the banded computation itself).
-  // The xxhash64 + minhash_sigs16 path (shared sigTokenFrame with q101's
-  // miner) stays the serving twin under [[MinhashConf]].
   // ---------------------------------------------------------------------------
   def q113NeardupContamination(spark: SparkSession, dir: String): DataFrame = {
-    if (minhashPath(spark) == "native") {
-      val t = sigTokenFrame(spark, dir)
-      // both sides filter the session-cached corpus bucket table (the coin is
-      // a pure doc_id expression) instead of re-exploding signatures per side
-      val split = Sampling.hashSplitCoin(col("doc_id"))
-      val trainBuckets = bucketFrame(spark, dir).filter(split =!= "test")
-      val testBuckets = bucketFrame(spark, dir).filter(split === "test")
-      val cand = trainBuckets
-        .as("l")
-        .join(testBuckets.as("r"), Seq("band", "key"))
-        .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-        .distinct()
-      // the shared precision-1 verify — (doc_a, doc_b) here is (train, test)
-      // oriented, not id-canonicalized, and verifyEdges preserves that
-      verifyEdges(t, cand).orderBy(col("lang"), col("doc_a"), col("doc_b"))
-    } else q113Md5Verified(spark, dir).orderBy(col("lang"), col("doc_a"), col("doc_b"))
-  }
-
-  /** The md5 path's candidate frame — staged separately so the band-tuple
-    * join can be timed apart from the verify (the r15 watch item on the
-    * ~1 s residual over the native twin). Profiling showed the cost IS
-    * this stage: 2-row band tuples at j>=0.8 collide per band with
-    * p~0.64, so the dup-dense corpus fans ~1.9M distinct candidates at
-    * sf0.1. The verify's cheap conjuncts
-    * (lang equality, the 0.799 size-ratio prune) are therefore applied
-    * BEFORE the distinct — they reject nothing the verify would keep, so
-    * the final rows (what the oracle gates) are identical, but the
-    * distinct's shuffle input shrinks by every cross-lang / size-skewed
-    * collision.
-    */
-  private[graft] def q113Md5Candidates(spark: SparkSession, dir: String): DataFrame = {
-    val t = md5TokenSignatures(spark, dir)
-    val split = Sampling.hashSplitCoin(col("doc_id"))
-    val bands = md5BandTuples(t.select(col("doc_id"), col("sig")))
-      .join(t.select(col("doc_id"), col("lang"), col("sz")), "doc_id")
-    bands
-      .filter(split =!= "test")
-      .as("l")
-      .join(bands.filter(split === "test").as("r"), Seq("band", "v0", "v1"))
-      .filter(
-        col("l.lang") === col("r.lang") &&
-          col("l.sz") * 0.799 <= col("r.sz") && col("r.sz") * 0.799 <= col("l.sz")
-      )
-      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
-      .distinct()
-  }
-
-  /** The md5 path's verified (UNORDERED) output — q113's else branch minus
-    * the final orderBy, so the profiler can separate verify cost from the
-    * output sort.
-    */
-  private[graft] def q113Md5Verified(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val t = md5TokenSignatures(spark, dir)
-    val cand = q113Md5Candidates(spark, dir)
+    val cand = q113Candidates(spark, dir)
     val a = t.select(col("lang").as("lang_a"), col("doc_id").as("doc_a"), col("toks").as("toks_a"), col("sz").as("sz_a"))
     val b = t.select(col("lang").as("lang_b"), col("doc_id").as("doc_b"), col("toks").as("toks_b"), col("sz").as("sz_b"))
     // cheap conjuncts first inside the filter (the q32 lesson): lang
@@ -1483,6 +1365,34 @@ object Dedup {
       )
       .filter(col("jaccard") >= 0.8)
       .select(col("lang_a").as("lang"), col("doc_a"), col("doc_b"), col("jaccard"))
+      .orderBy(col("lang"), col("doc_a"), col("doc_b"))
+  }
+
+  /** q113's cross-split candidate pairs. Profiling showed the cost IS
+    * this stage: 2-row band tuples at j>=0.8 collide per band with
+    * p~0.64, so the dup-dense corpus fans ~1.9M distinct candidates at
+    * sf0.1. The verify's cheap conjuncts
+    * (lang equality, the 0.799 size-ratio prune) are therefore applied
+    * BEFORE the distinct — they reject nothing the verify would keep, so
+    * the final rows (what the oracle gates) are identical, but the
+    * distinct's shuffle input shrinks by every cross-lang / size-skewed
+    * collision.
+    */
+  private def q113Candidates(spark: SparkSession, dir: String): DataFrame = {
+    val t = md5TokenSignatures(spark, dir)
+    val split = Sampling.hashSplitCoin(col("doc_id"))
+    val bands = md5BandTuples(t.select(col("doc_id"), col("sig")))
+      .join(t.select(col("doc_id"), col("lang"), col("sz")), "doc_id")
+    bands
+      .filter(split =!= "test")
+      .as("l")
+      .join(bands.filter(split === "test").as("r"), Seq("band", "v0", "v1"))
+      .filter(
+        col("l.lang") === col("r.lang") &&
+          col("l.sz") * 0.799 <= col("r.sz") && col("r.sz") * 0.799 <= col("l.sz")
+      )
+      .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
+      .distinct()
   }
 
   /** md5-affine signatures at TOKEN grain — q30's construction over the
@@ -3396,13 +3306,12 @@ object Dedup {
   /** q60 is embedding-space LSH (float hyperplane projections — the dot
     * products are order-sensitive IEEE sums no cross-engine SQL replay can
     * pin) → rows-only plus Verify's data-derived self-check manifest.
-    * q30, q31 AND q113 were PROMOTED to oracle-gated in r15: their default
+    * q30, q31 AND q113 were PROMOTED to oracle-gated in r15: their
     * signature paths are md5-derived (q30/q113: q134's md5-affine
     * permutations at shingle/token grain; q31: simhash64 over md5 token
     * hashes, replayed as a 60-column majority-vote aggregate), so the
     * banded/chunked computations — CANDIDATES INCLUDED — replay verbatim
-    * in DuckDB; the xxhash64/native paths survive as serving twins under
-    * [[MinhashConf]] / [[SimhashConf]].
+    * in DuckDB.
     *
     * The banded CLUSTER composites (q101/q102/q107/q108) ARE gated, each
     * against its exact twin's SQL (q61 / q99 / q106): banding itself is
@@ -3438,7 +3347,7 @@ object Dedup {
     "q107_lsh_safe_split" -> q106Oracle,
     "q108_incremental_clusters" -> q61Oracle,
     // q113 oracle-gated since r15 under the q30 candidate-replay
-    // discipline: the md5-affine default path's banded screen replays
+    // discipline: the md5-affine banded screen replays
     // verbatim in DuckDB, so engine == oracle holds REGARDLESS of the
     // banding's sub-1 recall vs the exact cross-split pair set (1.0 at
     // sf0.01, 0.999956 at sf0.1 — one borderline pair colliding in no

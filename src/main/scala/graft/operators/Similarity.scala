@@ -2257,21 +2257,27 @@ object Similarity {
       .parquet(path)
   }
 
-  private def readCentroidsAt(spark: SparkSession, path: String): Array[Array[Double]] =
+  /** Stored geometry is a few rows: one collect, sorted on the driver,
+    * memoized per file snapshot. Callers get copies, as from
+    * [[trainCentroidsFrom]].
+    */
+  private def readCentroidsAt(spark: SparkSession, path: String): Array[Array[Double]] = {
+    val stored = Tables.parquet(spark, path)
     Tables
-      .parquet(spark, path)
-      .orderBy(col("cluster"))
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
+      .memoOnFiles(stored, "stored centroids") {
+        stored.collect().sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+      }
+      .map(_.clone)
+  }
 
   private def readBooksAt(spark: SparkSession, path: String): Array[Array[Array[Double]]] = {
-    val rows = Tables
-      .parquet(spark, path)
-      .orderBy(col("subspace"), col("k"))
-      .collect()
-    Array.tabulate(PQ_M) { j =>
-      rows.filter(_.getInt(0) == j).map(_.getSeq[Double](2).toArray)
-    }
+    val stored = Tables.parquet(spark, path)
+    Tables
+      .memoOnFiles(stored, "stored codebooks") {
+        val rows = stored.collect().sortBy(r => (r.getInt(0), r.getInt(1)))
+        Array.tabulate(PQ_M)(j => rows.filter(_.getInt(0) == j).map(_.getSeq[Double](2).toArray))
+      }
+      .map(_.map(_.clone))
   }
 
   /** PQ codes for an arbitrary embedding frame under GIVEN codebooks — the

@@ -16,7 +16,7 @@ import graft.operators.Curation
   * Why the tick is trivially exact (the winnow maintainer's argument): a
   * document's 8-gram digests depend on nothing outside the document, so
   * the staged table is per-doc LOCAL and union-of-slices over the
-  * id-partitioned ingest EQUALS the batch [[Curation.bloomShingles]] table.
+  * id-partitioned ingest EQUALS the batch [[Curation.stagedShingles]] table.
   * Both split sides ride the same slice (the bucket column), so a tick
   * that lands new TEST docs automatically changes earlier train docs'
   * screen results at serve time — the retroactive flip comes free because
@@ -34,7 +34,7 @@ object StreamingBloomScreen {
     * to a file stream.
     */
   def tick(spark: SparkSession, dataDir: String, stateDir: String): Long =
-    SliceMaintainer.tick(spark, dataDir, stateDir, "shingles", Curation.bloomShingles)
+    SliceMaintainer.tick(spark, dataDir, stateDir, "shingles", Curation.stagedShingles)
 
   /** The maintained screen — q166's exact output over every document the
     * ticks have covered: fold the slices (already distinct — per-doc

@@ -134,8 +134,8 @@ object StreamingCorpus {
 
       // --- test-shingle growth (delta test docs only) --------------------------
       val newTestSh = Curation
-        .shingleKeys(spark, sig.filter(col("bucket") >= Curation.TestBucket).select(col("doc_id"), col("norm")))
-        .select(col("sh_key").cast("string").as("sh_key"))
+        .shingleKeys(sig.filter(col("bucket") >= Curation.TestBucket).select(col("doc_id"), col("norm")))
+        .select(col("sh_key"))
         .distinct()
         .join(testSh, Seq("sh_key"), "left_anti")
         .localCheckpoint(true)
@@ -166,8 +166,8 @@ object StreamingCorpus {
       // --- forward contamination: delta eligibles vs the FULL test-shingle set -
       val allTestSh = testSh.unionByName(newTestSh)
       val deltaEligSh = Curation
-        .shingleKeys(spark, stagedDelta.filter(col("stage0") === "eligible").select(col("doc_id"), col("norm")))
-        .select(col("sh_key").cast("string").as("sh_key"), col("doc_id"))
+        .shingleKeys(stagedDelta.filter(col("stage0") === "eligible").select(col("doc_id"), col("norm")))
+        .select(col("sh_key"), col("doc_id"))
         .localCheckpoint(true)
       val deltaContam = deltaEligSh
         .join(allTestSh, Seq("sh_key"))

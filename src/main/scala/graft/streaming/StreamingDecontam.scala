@@ -39,11 +39,8 @@ import graft.operators.{Curation, Dedup, Multimodal, Sampling}
   * Serve cost is the batch composition over the maintained tables — the
   * same keyed joins, no corpus re-scan, no re-tokenize/re-winnow/
   * re-decode; each serve entry builds the winnow run-pair frame ONCE and
-  * feeds every consumer that needs it. Note the breadth leg serves q67's
-  * DEFAULT md5 semantics (the bloom slices are pinned md5 because
-  * positions are semantics); a session running
-  * `graft.curation.keyhash=xxhash64` changes only shuffle keys, not
-  * output, so the served table still equals batch.
+  * feeds every consumer that needs it. The breadth leg reads the bloom
+  * slices' md5 digests, the same keys q67 shuffles on.
   */
 object StreamingDecontam {
 

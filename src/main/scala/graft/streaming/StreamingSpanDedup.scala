@@ -82,7 +82,7 @@ object StreamingSpanDedup {
       // slice name keyed by the delta's LOW id: stable across a crashed
       // tick's replay even if more documents land before the rerun
       val slicePath = s"$stateDir/grams/delta_$lo"
-      Curation.spanGramInstances(spark, delta).write.mode("overwrite").parquet(slicePath)
+      Curation.spanGramInstances(delta).write.mode("overwrite").parquet(slicePath)
       val deltaInst = graft.core.Tables.parquet(spark, slicePath)
       // compacted base + live slices, listed explicitly (see SliceStore)
       val allInst = SliceStore.read(spark, s"$stateDir/grams")

@@ -98,7 +98,7 @@ class PlanInvarianceSpec extends SparkSpec {
 
   test("native-expression queries: interpreted evaluation equals codegen") {
     // Every custom Catalyst Expression here (vec_dot, sorted-intersect,
-    // simhash64, shingle_hashes, minhash_sigs16, bloom_contains) carries a
+    // simhash64, minhash_sigs16, bloom_contains) carries a
     // hand-written doGenCode beside its eval — divergence between the two
     // paths is the classic native-expression bug class, and wholestage-off
     // alone does NOT force interpreted eval (Spark still codegens

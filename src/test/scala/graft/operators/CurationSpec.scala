@@ -322,48 +322,6 @@ class CurationSpec extends SparkSpec {
     assert(r(400L) === ((2L, 0L, 20L, 20L, 0.0)), "unique doc untouched")
   }
 
-  test("keyhash conf: q67/q71/q73 aggregates identical under md5 and xxhash64") {
-    // the hash is only ever a shuffle/join key that no output column keeps,
-    // so swapping the 32-byte md5 for the 8-byte xxhash64 (the 100 TB
-    // setting) must leave every aggregate byte-identical
-    def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
-    val md67 = snap(Curation.q67Contamination(spark, sfDir))
-    val md71 = snap(Curation.q71PassageDedup(spark, sfDir))
-    val md73 = snap(Curation.q73NgramNovelty(spark, sfDir))
-    val md78 = snap(Curation.q78BigramLm(spark, sfDir))
-    val md110 = snap(Curation.q110SpanDedup(spark, sfDir))
-    spark.conf.set(Curation.KeyHashConf, "xxhash64")
-    try {
-      assert(snap(Curation.q67Contamination(spark, sfDir)) === md67, "q67 diverged under xxhash64")
-      assert(snap(Curation.q71PassageDedup(spark, sfDir)) === md71, "q71 diverged under xxhash64")
-      assert(snap(Curation.q73NgramNovelty(spark, sfDir)) === md73, "q73 diverged under xxhash64")
-      assert(snap(Curation.q78BigramLm(spark, sfDir)) === md78, "q78 diverged under xxhash64")
-      assert(snap(Curation.q110SpanDedup(spark, sfDir)) === md110, "q110 diverged under xxhash64")
-    } finally spark.conf.unset(Curation.KeyHashConf)
-    spark.conf.set(Curation.KeyHashConf, "sha512")
-    try {
-      intercept[IllegalArgumentException](Curation.q67Contamination(spark, sfDir))
-    } finally spark.conf.unset(Curation.KeyHashConf)
-  }
-
-  test("keyhash conf end-to-end: the COMPOSED pipelines (q77 corpus build, q117 dedup profile) identical under both key modes") {
-    // q67/q71 pin the per-query invariance; this pins the composition — the
-    // 100 TB key mode must survive the full build (dedup -> funnel -> pack
-    // -> shard) and the cross-component profile (q29 x q101 x q71 x q110)
-    // with byte-identical output, because the key is only ever shuffle
-    // plumbing that no output column keeps
-    def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).toSeq.sorted
-    val md77 = snap(Curation.q77CorpusBuild(spark, sfDir))
-    val md117 = snap(Dedup.q117DedupProfile(spark, sfDir))
-    spark.conf.set(Curation.KeyHashConf, "xxhash64")
-    try {
-      assert(snap(Curation.q77CorpusBuild(spark, sfDir)) === md77, "q77 composed build diverged under xxhash64")
-      assert(snap(Dedup.q117DedupProfile(spark, sfDir)) === md117, "q117 composed profile diverged under xxhash64")
-    } finally spark.conf.unset(Curation.KeyHashConf)
-  }
-
   test("q73 novelty: crafted corpus gets the exact attribution accounting") {
     // 10 copies 20 verbatim; 30 shares half its bigram stream with 10; 40
     // is all-new; 50 is one token (no bigrams — excluded)
@@ -945,61 +903,6 @@ class CurationSpec extends SparkSpec {
       assert(byB("head").getAs[Double]("mean_lp") >= byB("tail").getAs[Double]("mean_lp"), s"$lang mean order")
     }
     info(s"sf0.001: ${rows.length} (lang, bucket) rows over ${perDocByLang.size} languages")
-  }
-
-  test("q112 terciles=approx: the 100 TB path tracks exact buckets without a window sort") {
-    val exact = Curation.q112PerplexityBuckets(spark, sfDir).collect()
-    spark.conf.set(Curation.TercilesConf, "approx")
-    try {
-      val df = Curation.q112PerplexityBuckets(spark, sfDir)
-      // the knob's whole point: no per-language NTILE sort in the plan
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Window"), "approx path must not plan a Window sort")
-      val approx = df.collect()
-      val exactN = exact.map(r => (r.getAs[String]("lang"), r.getAs[String]("bucket")) -> r.getAs[Long]("n_docs")).toMap
-      val perLang = exact.groupBy(_.getAs[String]("lang")).view.mapValues(_.map(_.getAs[Long]("n_docs")).sum).toMap
-      approx.foreach { r =>
-        val (lang, bucket) = (r.getAs[String]("lang"), r.getAs[String]("bucket"))
-        val drift = math.abs(r.getAs[Long]("n_docs") - exactN((lang, bucket))).toDouble / perLang(lang)
-        assert(drift <= 0.1, s"($lang,$bucket) bucket mass drifted $drift from exact")
-      }
-      // ordering semantics survive the approximation
-      approx.groupBy(_.getAs[String]("lang")).foreach { case (lang, bs) =>
-        val byB = bs.map(r => r.getAs[String]("bucket") -> r.getAs[Double]("mean_lp")).toMap
-        for (h <- byB.get("head"); t <- byB.get("tail"))
-          assert(h >= t, s"$lang head/tail mean order under approx")
-      }
-    } finally spark.conf.unset(Curation.TercilesConf)
-    spark.conf.set(Curation.TercilesConf, "nearly")
-    try intercept[IllegalArgumentException](Curation.q112PerplexityBuckets(spark, sfDir))
-    finally spark.conf.unset(Curation.TercilesConf)
-  }
-
-  test("q86 quartiles=approx: the 100 TB path tracks exact stages without a window sort") {
-    val exact = Curation.q86Curriculum(spark, sfDir).collect()
-    spark.conf.set(Curation.TercilesConf, "approx")
-    try {
-      val df = Curation.q86Curriculum(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Window"), "approx path must not plan a Window sort")
-      val approx = df.collect()
-      val exactN = exact.map(r => (r.getAs[String]("lang"), r.getAs[Int]("stage")) -> r.getAs[Long]("n_docs")).toMap
-      val perLang = exact.groupBy(_.getAs[String]("lang")).view.mapValues(_.map(_.getAs[Long]("n_docs")).sum).toMap
-      approx.foreach { r =>
-        val (lang, stage) = (r.getAs[String]("lang"), r.getAs[Int]("stage"))
-        val drift = math.abs(r.getAs[Long]("n_docs") - exactN.getOrElse((lang, stage), 0L)).toDouble / perLang(lang)
-        assert(drift <= 0.15, s"($lang,$stage) stage mass drifted $drift from exact")
-      }
-      approx.groupBy(_.getAs[String]("lang")).foreach { case (lang, ss) =>
-        assert(ss.map(_.getAs[Long]("n_docs")).sum === perLang(lang), s"$lang doc conservation under approx")
-        // stage order still tracks quality: min_prob non-decreasing by stage
-        val byStage = ss.sortBy(_.getAs[Int]("stage")).map(_.getAs[Double]("min_prob"))
-        byStage.sliding(2).foreach {
-          case Array(a, b) => assert(b >= a - 1e-9, s"$lang stage quality order under approx")
-          case _           =>
-        }
-      }
-    } finally spark.conf.unset(Curation.TercilesConf)
   }
 
   test("q126 quality AUC equals the naive pairwise definition; all-row aggregates the languages") {

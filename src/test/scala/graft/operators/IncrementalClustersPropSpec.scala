@@ -97,9 +97,8 @@ class IncrementalClustersPropSpec extends SparkSpec {
       val ids = rnd.shuffle((1 to 600).map(_.toLong * 7 % 1009)).toIndexedSeq
       var next = 0
       def take(k: Int) = { val s = ids.slice(next, next + k); next += k; s }
-      // diameter >> 2; longer chains make the propagation's round count,
-      // not the labelling, the cost of this spec
-      val chains = Seq.fill(2)(take(12 + rnd.nextInt(13))).flatMap(c => c.zip(c.tail))
+      // diameter >> 2: the propagation runs many continuation rounds
+      val chains = Seq.fill(2)(take(40 + rnd.nextInt(61))).flatMap(c => c.zip(c.tail))
       val random = { val pool = take(80); Seq.fill(60)(pool(rnd.nextInt(80)) -> pool(rnd.nextInt(80))) }
       val star = { val s = take(12); s.tail.map(s.head -> _) }
       val edges = (chains ++ random ++ star)

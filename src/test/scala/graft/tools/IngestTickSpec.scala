@@ -21,10 +21,10 @@ class IngestTickSpec extends SparkSpec {
 
   /** Job budgets of the first tick (bootstrap over the first half) and the
     * second (the second half as a delta), a few jobs above the measured
-    * counts (111 and 142).
+    * counts (111 and 134).
     */
   private val BootstrapJobs = 115
-  private val DeltaJobs = 145
+  private val DeltaJobs = 137
 
   /** `body`'s result and the long call site of every Spark job it ran,
     * bracketed by marker jobs in their own job group (listener delivery is
