@@ -23,12 +23,12 @@ import org.apache.spark.sql.SparkSession
   * re-measure notes) goes to `bench_details.json` beside the build.
   * BenchLineSpec pins the line budget at a future-proof query count.
   *
-  * ANN index/query phases are timed separately (details `phases` key):
-  * q35/q36 amortize a build-once index, q61/q101 a mined pair graph, q108
-  * its persisted-label state, q111 its KN score table — so their per-query
-  * numbers are WARM-path times (the honest steady-state cost) while the
-  * one-time build cost is reported alongside rather than folded in or
-  * hidden.
+  * Every session stage ([[operators.Stage]]) is built once before the
+  * timed loop, so per-query numbers are WARM-path times (the honest
+  * steady-state cost) while the one-time build cost is reported alongside
+  * rather than folded in or hidden: details `phases` maps each stage to its
+  * own build seconds (plus the profile-keyed q35/q36 ANN index builds) and
+  * `stage_deps` maps each stage to the stages its build entered.
   *
   * `quality` (details) reports ANN recall measured AT THE BENCH SCALE
   * FACTOR against exact baselines — an ANN speedup without its recall
@@ -210,126 +210,26 @@ object Bench {
     // Load-calibration probe, reading 1 of 2 (post-warmup, pre-queries).
     val calStart = sec(calibrationProbe(spark))
 
-    // Build phases, timed before the query loop so every repetition below
-    // measures the warm-artifact query path and the cold cost is a NAMED
-    // number instead of a hidden first repeat.
+    // Every session stage (operators.Stage) is built once before the query
+    // loop, so each repetition below measures the warm path and the cold
+    // cost is a NAMED number instead of a hidden first repeat. `phases`
+    // maps each stage to its own build seconds (nested stage builds are
+    // charged to their own stage, so the walk order moves no cost) and
+    // `stage_deps` to the stages its build entered. The LSH/IVF indexes
+    // are keyed by the session's ANN profile, not stages: they keep their
+    // own timed phases.
     val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
     def phase(name: String)(f: => Unit): Unit =
       try phases(name) = sec(f)
       catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
     phase("q35_build")(operators.Similarity.buildLshIndex(spark, sfDir))
     phase("q36_build")(operators.Similarity.buildIvfIndex(spark, sfDir))
-    phase("q75_build")(operators.Similarity.buildPqIndex(spark, sfDir))
-    phase("q76_build")(operators.Similarity.buildIvfPqIndex(spark, sfDir))
-    phase("q61_graph")(operators.Dedup.buildPairGraph(spark, sfDir))
-    phase("q101_graph")(operators.Dedup.minhashPairGraph(spark, sfDir))
-    // q108's persisted-label state (old-half labels + bucket index) is
-    // session state a real pipeline carries between ingest ticks; build
-    // EXACTLY that here so q108's repeats time the delta apply and the
-    // phase number is the state cost alone (until r16 this phase ran the
-    // full query, so one delta apply was counted twice — once here, once
-    // per timed repetition)
-    phase("q108_state")(operators.Dedup.buildIncrementalState(spark, sfDir))
-    // q111's per-doc KN table is session-cached (q112 terciles it)
-    phase("q111_kn_build")(operators.Curation.q111KnTrigram(spark, sfDir))
-    // q103/q118/q120's shared scoring frame is session-cached
-    phase("q103_scored")(operators.Retrieval.buildBm25Scored(spark, sfDir))
-    // the unit-embedding frame (unit + raw vectors with lang) is
-    // session-cached — q125's candidate block reads it per repetition
-    phase("q125_emb")(operators.Retrieval.buildUnitEmb(spark, sfDir))
-    // q118's fused ranking (<= 2*TOP_K rows) is session-cached — q120's
-    // eval judges the same three lists, so its repetitions read the cached
-    // copy instead of re-running the hybrid build; q118 itself still
-    // computes fresh per repetition (it is the declared fusion query)
-    phase("q118_fused")(operators.Retrieval.buildQ118Fused(spark, sfDir))
-    // q122's inverted index (postings + corpus consts) is session-cached
-    phase("q122_build")(operators.Retrieval.buildBm25Index(spark, sfDir))
-    // q123's Lloyd centroids are session-cached (T distributed passes)
-    phase("q123_centroids")(operators.Cartography.q123CorpusTopics(spark, sfDir))
-    // the per-doc quality-EVAL frame (q84 features + micros + q72 label,
-    // one fused corpus scan) is session-cached — q126/q174/q160/q164/q86
-    // and the q159 training loop all read it; q84/q72 the declared
-    // scorer/battery stay fresh
-    phase("q126_eval")(operators.Curation.buildQmEval(spark, sfDir))
-    // the per-doc exact-dup fingerprint frame is session-cached — q149/q158
-    // both re-ran the q29-style md5 pass per repetition; q29 stays fresh
-    phase("q149_fp")(operators.Curation.buildDocFp(spark, sfDir))
-    // q159's trained quality weights are session-cached (T+1 GD passes)
-    phase("q159_train")(operators.Curation.qualityTrained(spark, sfDir))
-    // the winnow position index is session-cached (one winnow pass feeds
-    // q144/q152/q162/q163)
-    phase("q144_winnow")(operators.Dedup.winnowPositionsCached(spark, sfDir))
-    // the (doc, partner, island) verbatim-run table over the cached winnow
-    // positions is session-cached — q162's profile, the q163_actions run
-    // leg, and q182's mask intervals each rebuilt it per call
-    phase("q162_runs")(operators.Dedup.verbatimRunsCached(spark, sfDir))
-    // q71's chunk table and q110's gram-instance table are session-cached
-    // (each feeds its own query, the mask export, and q117's dashboard)
-    phase("q71_chunks")(operators.Curation.q71PassageDedup(spark, sfDir))
-    phase("q110_grams")(operators.Curation.q110SpanDedup(spark, sfDir))
-    // the staged 8-gram shingle table is session-cached (one gram
-    // explode+distinct feeds q67, q163's breadth leg, q172, and q166)
-    phase("q67_shingles")(operators.Curation.buildShingleStage(spark, sfDir))
-    // the staged media fingerprint tables (image bands, df-capped video
-    // frame fps, df-capped audio energy shingles) are session-cached —
-    // q114/q115/q175 each re-enter per repetition and q176 reads all three
-    phase("media_fps")(operators.Multimodal.buildMediaStage(spark, sfDir))
-    // q181's verified capped pair frame is session-cached (the q101
-    // lshEdgesCache precedent) — q156's clusters and q176's image leg read
-    // it; the mine cost stays visible here and in q181's own timed reps
-    phase("q181_pairs")(operators.Multimodal.cappedPairsCached(spark, sfDir))
-    // the audio/video verified pair frames are session-cached (q176's
-    // dashboard reads all three miners per repetition)
-    phase("q176_pairs")(operators.Multimodal.buildMediaPairs(spark, sfDir))
-    // q161's per-doc alignment cosine frame is session-cached (image decode
-    // + the text-side unit-normalize chain build once)
-    phase("q161_align")(operators.Multimodal.buildAlignStage(spark, sfDir))
-    // the q166 screen table is session-cached (bitset build + position
-    // screen feed q166, q179's bloom leg, and the report) — name the build
-    // so its cost is reported, not hidden inside whichever query runs first
-    phase("q166_screen")(operators.Curation.q166BloomScreen(spark, sfDir))
-    // q163's four-leg decision frame is session-cached (q172 costs it per
-    // call and the serve path re-reads it) — the composition builds once
-    // here, then q163/q172 repetitions time the cached-read path
-    phase("q163_actions")(operators.Dedup.contaminationDepthCached(spark, sfDir))
-    // the staged token table is session-cached (one normalize+split pass
-    // feeds q150's three gram explodes, q151's term frequencies, and
-    // q168's legs)
-    phase("q150_tokens")(operators.TextOps.tokenStage(spark, sfDir))
-    // q69's per-doc unigram-LM frame is session-cached (one tf/freq pass
-    // feeds q69's repetitions, q131's rank join, and q147's three
-    // self-referencing rollups)
-    phase("q69_lm")(operators.Curation.buildQ69Lm(spark, sfDir))
-    // q168's three composed leg outputs (q150/q151/q128, |sources|-row
-    // frames) are session-cached; the leg queries themselves stay fresh
-    phase("q168_legs")(operators.TextOps.buildHealthLegs(spark, sfDir))
-    // the corpus-build stage ledger is session-cached (q77's rollup, the
-    // kept corpus, and the packed export all read it)
-    phase("q77_stages")(operators.Curation.buildCorpusStages(spark, sfDir))
-    // the τ-min exact pair frame is session-cached (one quadratic pass
-    // feeds q133's five thresholds and q146's LSH grid)
-    phase("q133_pairs")(operators.Dedup.buildSweepPairs(spark, sfDir))
-    // the staged bigram count tables (q124's Moore-Lewis grams, q78's LM
-    // grams) are session-cached — the per-repetition explode+count was
-    // each query's dominant scan work
-    phase("q124_grams")(operators.Importance.buildMlGrams(spark, sfDir))
-    // q105's hashed-feature table is session-cached (the gram-table rule):
-    // the tokenize + md5-bucket explode was its dominant per-repetition scan
-    phase("q105_feats")(operators.Importance.dsirFeatures(spark, sfDir))
-    phase("q78_grams")(operators.Curation.buildBigramGrams(spark, sfDir))
-    // q117's per-doc four-leg profile frame is session-cached (the
-    // q163_actions precedent); the rollup stays the timed path
-    phase("q117_base")(operators.Dedup.q117DedupProfile(spark, sfDir).write.format("noop").mode("overwrite").save())
-    // q155's per-label norm/component-sum grid is session-cached (two
-    // corpus scans otherwise re-run per repetition)
-    phase("q155_grid")(operators.Cartography.q155ClassCohesion(spark, sfDir).write.format("noop").mode("overwrite").save())
-    // the per-doc char-entropy signal frame is session-cached (one
-    // embarrassingly-parallel pass feeds q135's output, q168's entropy
-    // leg, and the corpus report)
-    phase("q135_entropy")(operators.TextOps.entropyStage(spark, sfDir))
-    // q113's md5-affine token-signature frame is session-cached (the
-    // oracle-replayable default path re-enters it per repetition)
-    phase("q113_sigs")(operators.Dedup.buildMd5TokenSigStage(spark, sfDir))
+    SparkEntry.queries // initializes every operator object, so Stage.all lists every stage
+    val stages = operators.Stage.all
+    stages.foreach(s => phase(s.name)(s(spark, sfDir)))
+    val ownSeconds = operators.Stage.ownSeconds
+    val stageDeps = operators.Stage.deps
+    stages.foreach(s => if (phases.contains(s.name)) ownSeconds.get(s.name).foreach(phases(s.name) = _))
 
     // repeat each query and report the MEDIAN: single-shot timings on a
     // shared box fold scheduler noise into query cost (observed up to 10x
@@ -640,6 +540,7 @@ object Bench {
         })},
          |"floor_exceeded":${floorExceeded.map("\"" + _ + "\"").mkString("[", ",", "]")},
          |"phases":${jMap(phases.map { case (k, v) => k -> jNum(v) })},
+         |"stage_deps":${jMap(stages.map(s => s.name -> stageDeps.getOrElse(s.name, Nil).map(jStr).mkString("[", ",", "]")))},
          |"quality":${jMap(quality.map { case (k, v) => k -> jNum(v) })},
          |"quality_curves":${curves.mkString("[", ",", "]")},
          |"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},

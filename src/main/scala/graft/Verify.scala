@@ -2,10 +2,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir> [queryName...]"
+  *   python3 tools/check_oracle.py <outDir> <sfDir>
+  *
+  * Named queries restrict the dump (and oracle_sql.json) to those queries
+  * and skip the selfcheck pass — the quick loop for one query. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
+    val (sfDir, outDir, named) = (args(0), args(1), args.drop(2).toSeq)
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val queries = SparkEntry.queries.toSeq.filter { case (n, _) => named.isEmpty || named.contains(n) }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -26,7 +36,7 @@ object Verify {
     // line) in addition to stderr: a missing result dir then reads as
     // "errored, here's why" instead of silently absent from the compare.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    queries.sortBy(_._1).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -48,22 +58,25 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (k, _) => named.isEmpty || named.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     // Data-derived pass/fail for the no-oracle queries (SelfCheck): gives
     // the driver a numeric gate where DuckDB can't express the semantics.
-    val selfJson = SelfCheck
-      .run(spark, sfDir)
-      .map { case (name, r) =>
-        // Locale.ROOT: a comma-decimal default locale would emit 0,997 —
-        // invalid JSON — and crash the driver's gate instead of reporting
-        s"${q(name)}: {${q("check")}: ${q(r.check)}, ${q("metric")}: ${String.format(java.util.Locale.ROOT, "%.6f", Double.box(r.metric))}, " +
-          s"${q("violations")}: ${r.violations}, ${q("pass")}: ${r.pass}}"
-      }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/selfcheck.json"), selfJson)
+    if (named.isEmpty) {
+      val selfJson = SelfCheck
+        .run(spark, sfDir)
+        .map { case (name, r) =>
+          // Locale.ROOT: a comma-decimal default locale would emit 0,997 —
+          // invalid JSON — and crash the driver's gate instead of reporting
+          s"${q(name)}: {${q("check")}: ${q(r.check)}, ${q("metric")}: ${String.format(java.util.Locale.ROOT, "%.6f", Double.box(r.metric))}, " +
+            s"${q("violations")}: ${r.violations}, ${q("pass")}: ${r.pass}}"
+        }
+        .mkString("{", ",", "}")
+      Files.writeString(Paths.get(s"$outDir/selfcheck.json"), selfJson)
+    }
     spark.stop()
   }
 }

@@ -67,10 +67,7 @@ object Cartography {
     * q171 each staged it per call (a scan + checkpoint barrier per timed
     * repetition); one checkpointed copy serves all four.
     */
-  private val pointsCache = new SessionCache[DataFrame]
-
-  private def pointsCached(spark: SparkSession, dir: String): DataFrame =
-    pointsCache.getOrBuild(spark, dir)(points(spark, dir).localCheckpoint())
+  private val stagedPoints = Stage("q123_points")((spark, dir) => points(spark, dir).localCheckpoint())
 
   /** Exact squared distance to one literal centroid (integer micros). */
   private def distTo(cm: Array[Long]): Column =
@@ -120,7 +117,7 @@ object Cartography {
     cents
   }
 
-  private val centroidCache = new SessionCache[Seq[Array[Long]]]()
+  private val centroids = Stage("q123_centroids")((spark, dir) => finalCentroids(stagedPoints(spark, dir)))
 
   /** Empty-corpus contract: no embeddings means no seeds and `nearest` of
     * zero centroids would not even analyze (array() of structs types VOID).
@@ -132,8 +129,8 @@ object Cartography {
     if (cents.isEmpty) Seq(Array.fill(DIM)(0L)) else cents
 
   def q123CorpusTopics(spark: SparkSession, dir: String): DataFrame = {
-    val pts = pointsCached(spark, dir) // staged once, shared session-wide
-    val cents = centsOrDummy(centroidCache.getOrBuild(spark, dir)(finalCentroids(pts)))
+    val pts = stagedPoints(spark, dir) // staged once, shared session-wide
+    val cents = centsOrDummy(centroids(spark, dir))
     val assigned = pts
       .withColumn("n", nearest(cents))
       .select(col("vec_id"), col("n.cluster").as("cluster"), col("n.d2").as("d2"))
@@ -278,8 +275,8 @@ object Cartography {
   }
 
   def q129EmbeddingOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val pts = pointsCached(spark, dir) // staged once, shared session-wide
-    val cents = centsOrDummy(centroidCache.getOrBuild(spark, dir)(finalCentroids(pts)))
+    val pts = stagedPoints(spark, dir) // staged once, shared session-wide
+    val cents = centsOrDummy(centroids(spark, dir))
     val assigned = pts
       .withColumn("n", nearest(cents))
       .select(col("vec_id"), col("n.cluster").as("cluster"), col("n.d2").as("d2"))
@@ -346,7 +343,7 @@ object Cartography {
   private val DRIFT_COS_MICRO = 200000L // cos < 0.2: segment centroid off-axis
 
   def q141EmbeddingDrift(spark: SparkSession, dir: String): DataFrame = {
-    val pts = pointsCached(spark, dir)
+    val pts = stagedPoints(spark, dir)
     val idRange = pts.agg(min(col("vec_id")).as("min_id"), max(col("vec_id")).as("max_id")) // 1 row -> broadcast
     val grid = pts
       .crossJoin(broadcast(idRange))
@@ -443,35 +440,32 @@ object Cartography {
     * the posexplode to component sums) to rebuild a few-thousand-row
     * result. Built once per (session, dir); the audit tail stays fresh.
     */
-  private val cohesionCache = new SessionCache[(DataFrame, DataFrame)]
-
-  private def cohesionStage(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    cohesionCache.getOrBuild(spark, dir) {
-      val pts = Tables
-        .balanced(Tables.embeddings(spark, dir).select(col("vec_id"), col("label"), col("embedding")))
-        .select(col("label"), microsExpr.as("xm"))
-        .withColumn("n2", expr("aggregate(xm, 0L, (acc, v) -> acc + v * v)"))
-        .withColumn(
-          "um",
-          expr("transform(xm, v -> CAST(floor(CAST(v AS double) * 1e6 / sqrt(CAST(n2 AS double)) + 5e-1) AS BIGINT))")
-        )
-        .withColumn("u2", expr("aggregate(um, 0L, (acc, v) -> acc + v * v)"))
-      // labels with a single vector have no intra pair: n*(n-1) = 0 would
-      // divide by zero (Spark's non-ANSI null vs DuckDB's CAST error fail
-      // ASYMMETRICALLY, so the row must not reach the division in either
-      // engine) — drop singletons from the audit up front
-      val per = pts
-        .groupBy(col("label"))
-        .agg(count(lit(1)).as("n"), sum(expr("CAST(u2 AS DECIMAL(19,0))")).as("su2"))
-        .filter(col("n") > 1)
-        .localCheckpoint()
-      val grid = pts
-        .select(col("label"), posexplode(col("um")).as(Seq("pos", "u")))
-        .groupBy(col("label"), col("pos"))
-        .agg(sum(col("u")).as("s"))
-        .localCheckpoint() // |labels| x DIM rows feed the norm and pair passes
-      (per, grid)
-    }
+  private val cohesionStage = Stage("q155_grid") { (spark, dir) =>
+    val pts = Tables
+      .balanced(Tables.embeddings(spark, dir).select(col("vec_id"), col("label"), col("embedding")))
+      .select(col("label"), microsExpr.as("xm"))
+      .withColumn("n2", expr("aggregate(xm, 0L, (acc, v) -> acc + v * v)"))
+      .withColumn(
+        "um",
+        expr("transform(xm, v -> CAST(floor(CAST(v AS double) * 1e6 / sqrt(CAST(n2 AS double)) + 5e-1) AS BIGINT))")
+      )
+      .withColumn("u2", expr("aggregate(um, 0L, (acc, v) -> acc + v * v)"))
+    // labels with a single vector have no intra pair: n*(n-1) = 0 would
+    // divide by zero (Spark's non-ANSI null vs DuckDB's CAST error fail
+    // ASYMMETRICALLY, so the row must not reach the division in either
+    // engine) — drop singletons from the audit up front
+    val per = pts
+      .groupBy(col("label"))
+      .agg(count(lit(1)).as("n"), sum(expr("CAST(u2 AS DECIMAL(19,0))")).as("su2"))
+      .filter(col("n") > 1)
+      .localCheckpoint()
+    val grid = pts
+      .select(col("label"), posexplode(col("um")).as(Seq("pos", "u")))
+      .groupBy(col("label"), col("pos"))
+      .agg(sum(col("u")).as("s"))
+      .localCheckpoint() // |labels| x DIM rows feed the norm and pair passes
+    (per, grid)
+  }
 
   def q155ClassCohesion(spark: SparkSession, dir: String): DataFrame = {
     val (per, grid) = cohesionStage(spark, dir)
@@ -591,7 +585,7 @@ object Cartography {
   private val CORESET_K = 8
 
   def q171CoresetSelect(spark: SparkSession, dir: String): DataFrame = {
-    val pts = pointsCached(spark, dir)
+    val pts = stagedPoints(spark, dir)
     // empty-corpus contract: no points, no seed, 0 picks — the oracle's
     // pick chain likewise selects nothing from an empty embeddings table
     val seedRows = pts.orderBy(col("vec_id")).limit(1).collect()

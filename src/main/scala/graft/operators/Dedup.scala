@@ -559,7 +559,7 @@ object Dedup {
   /** q60's pipeline on the planted clustered corpus. */
   def plantedLshNearDup(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    lshNearDupFrom(Similarity.buildPlantedLshIndex(spark, dir), PLANTED_NEARDUP_THRESHOLD)
+    lshNearDupFrom(Similarity.plantedLshIndex(spark, dir), PLANTED_NEARDUP_THRESHOLD)
   }
 
   // ---------------------------------------------------------------------------
@@ -597,11 +597,11 @@ object Dedup {
     * equality passes, q99/q102/q106-q108's label caches) would otherwise
     * re-run the doubling job and stack another checkpoint per call.
     */
-  private val exactEdgesCache = new SessionCache[DataFrame]
-  private val lshEdgesCache = new SessionCache[DataFrame]
+  private val exactEdges = Stage("q61_edges")((spark, dir) => doubledEdges(pairGraph(spark, dir)))
+  private val lshEdges = Stage("q101_edges")((spark, dir) => doubledEdges(minhashPairGraph(spark, dir)))
 
   def q61DupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersFromEdges(exactEdgesCache.getOrBuild(spark, dir)(doubledEdges(buildPairGraph(spark, dir))))
+    clustersFromEdges(exactEdges(spark, dir))
 
   /** Connected components over ANY undirected pair frame (doc_a, doc_b) —
     * the propagation loop parametrized over its edge supply, so exact pair
@@ -759,8 +759,6 @@ object Dedup {
   }
 
   // -- session-scoped verified pair graph --------------------------------------
-  private val pairGraphCache = new SessionCache[DataFrame]
-
   /** The verified near-dup pair graph — q32's edge set (doc_a, doc_b),
     * unsorted — built once per (session, dir) and materialized via
     * localCheckpoint. q61's propagation loop reads it every round, and
@@ -768,10 +766,9 @@ object Dedup {
     * a dedup pipeline persists as a table between the pair-mining and
     * clustering stages.
     */
-  def buildPairGraph(spark: SparkSession, dir: String): DataFrame =
-    pairGraphCache.getOrBuild(spark, dir) {
-      tokenJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")).localCheckpoint()
-    }
+  private[graft] val pairGraph = Stage("q61_graph") { (spark, dir) =>
+    tokenJaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")).localCheckpoint()
+  }
 
   // ---------------------------------------------------------------------------
   // q101 — dup clusters over the SUB-QUADRATIC pair graph: the 100-TB dedup
@@ -794,28 +791,21 @@ object Dedup {
   // 0.64 at the 0.8 threshold → 1-(1-0.64)^8 ≈ 0.997 per-edge recall, and
   // cluster transitivity repairs most residual missing edges.
   // ---------------------------------------------------------------------------
-  // session-scoped like buildPairGraph: the mined+verified edge set is the
-  // artifact a pipeline persists between pair mining and clustering, and
-  // the bench times the build as its own phase (q101_graph) so the query
+  // a stage like pairGraph: the mined+verified edge set is the artifact a
+  // pipeline persists between pair mining and clustering, so the query
   // number reports the warm-graph clustering cost — symmetric with q61
-  private val minhashGraphCache = new SessionCache[DataFrame]
-
-  def minhashPairGraph(spark: SparkSession, dir: String): DataFrame =
-    minhashGraphCache.getOrBuild(spark, dir)(minhashPairGraphBuild(spark, dir).localCheckpoint())
-
-  private val sigFrameCache = new SessionCache[DataFrame]
+  private[graft] val minhashPairGraph = Stage("q101_graph")((spark, dir) => minhashPairGraphBuild(spark, dir).localCheckpoint())
 
   /** (lang, doc_id, toks, sz, sig) checkpointed once per (session, dir) —
     * one tokenize+sign pass feeds the full miner (q101's graph), the
     * incremental path (q108), and both verify sides.
     */
-  private[graft] def sigTokenFrame(spark: SparkSession, dir: String): DataFrame =
-    sigFrameCache.getOrBuild(spark, dir) {
-      tokenSets(spark, dir)
-        .filter(size(col("toks")) > 0)
-        .withColumn("sig", expr("minhash_sigs16(toks)"))
-        .localCheckpoint()
-    }
+  private[graft] val sigTokenFrame = Stage("q101_sigs") { (spark, dir) =>
+    tokenSets(spark, dir)
+      .filter(size(col("toks")) > 0)
+      .withColumn("sig", expr("minhash_sigs16(toks)"))
+      .localCheckpoint()
+  }
 
   /** Exact verify of candidate pairs: same language AND token-jaccard >=
     * 0.8 (the q32 predicate). Emits (lang, doc_a, doc_b, jaccard) — the ONE
@@ -843,7 +833,7 @@ object Dedup {
   }
 
   def q101LshDupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersFromEdges(lshEdgesCache.getOrBuild(spark, dir)(doubledEdges(minhashPairGraph(spark, dir))))
+    clustersFromEdges(lshEdges(spark, dir))
 
   /** Same components in DuckDB: min-label reachability via a recursive CTE
     * (the UNION dedups (node, label) states, so the fixpoint enumerates
@@ -930,7 +920,7 @@ object Dedup {
     * times (canon selection here; audits, joins elsewhere). q61 itself
     * stays uncached — it MEASURES the propagation loop.
     */
-  private val clusterCache = new SessionCache[DataFrame]
+  private val exactClusters = Stage("q99_clusters")((spark, dir) => q61DupClusters(spark, dir).localCheckpoint())
 
   /** Canonical selection over ANY (doc_id, cluster, cluster_size) frame —
     * like clustersFrom, parametrized over its cluster supply so the exact
@@ -955,7 +945,7 @@ object Dedup {
 
   def q99ClusterCanon(spark: SparkSession, dir: String): DataFrame =
     canonFrom(
-      clusterCache.getOrBuild(spark, dir)(q61DupClusters(spark, dir).localCheckpoint()),
+      exactClusters(spark, dir),
       Curation.qualityScored(spark, dir).select(col("doc_id"), col("prob"))
     )
 
@@ -970,11 +960,11 @@ object Dedup {
   // q102's selfcheck re-derives every keeper as the (prob DESC, doc_id)
   // argmax of its cluster from the run's own data.
   // ---------------------------------------------------------------------------
-  private val lshClusterCache = new SessionCache[DataFrame]
+  private val lshClusters = Stage("q102_clusters")((spark, dir) => q101LshDupClusters(spark, dir).localCheckpoint())
 
   def q102LshClusterCanon(spark: SparkSession, dir: String): DataFrame =
     canonFrom(
-      lshClusterCache.getOrBuild(spark, dir)(q101LshDupClusters(spark, dir).localCheckpoint()),
+      lshClusters(spark, dir),
       Curation.qualityScored(spark, dir).select(col("doc_id"), col("prob"))
     )
 
@@ -1037,7 +1027,7 @@ object Dedup {
 
   def q106LeakageSafeSplit(spark: SparkSession, dir: String): DataFrame =
     splitFrom(
-      clusterCache.getOrBuild(spark, dir)(q61DupClusters(spark, dir).localCheckpoint()),
+      exactClusters(spark, dir),
       Tables.documents(spark, dir).select(col("doc_id"))
     )
 
@@ -1048,7 +1038,7 @@ object Dedup {
   // no-straddle property numerically.
   def q107LshSafeSplit(spark: SparkSession, dir: String): DataFrame =
     splitFrom(
-      lshClusterCache.getOrBuild(spark, dir)(q101LshDupClusters(spark, dir).localCheckpoint()),
+      lshClusters(spark, dir),
       Tables.documents(spark, dir).select(col("doc_id"))
     )
 
@@ -1180,11 +1170,6 @@ object Dedup {
       .orderBy(col("cluster"), col("doc_id"))
   }
 
-  /** Old-half labels as session state: what a real pipeline persists
-    * between ingest ticks.
-    */
-  private val incrLabelCache = new SessionCache[DataFrame]
-
   /** The corpus's (doc_id, sz, band, key) LSH bucket table as a session
     * artifact — the persisted index a real pipeline keeps NEXT TO the label
     * table between ingest ticks (the streaming maintainer's buckets/ store
@@ -1193,12 +1178,9 @@ object Dedup {
     * candidate distinct). The incremental path probes it instead of
     * re-exploding every signature on every read.
     */
-  private val bucketFrameCache = new SessionCache[DataFrame]
-
-  private def bucketFrame(spark: SparkSession, dir: String): DataFrame =
-    bucketFrameCache.getOrBuild(spark, dir) {
-      bandBuckets(sigTokenFrame(spark, dir).select(col("doc_id"), col("sig"), col("sz"))).localCheckpoint()
-    }
+  private val bucketFrame = Stage("q108_buckets") { (spark, dir) =>
+    bandBuckets(sigTokenFrame(spark, dir).select(col("doc_id"), col("sig"), col("sz"))).localCheckpoint()
+  }
 
   /** Persist the corpus LSH bucket table BUCKETED on the (band, key) probe
     * key — the 100 TB layout the scale notes promise, shipped: a delta
@@ -1237,52 +1219,38 @@ object Dedup {
     * tick sees; the result is pivot-invariant (equality with the full
     * rebuild is the spec'd and self-checked contract at EVERY split point).
     */
-  private val incrPivotCache = new SessionCache[Long]
+  // a stage: the pivot is between-ticks state (it derives from the same
+  // corpus snapshot as the old-half labels), and reading it fresh per
+  // repetition cost a scan+agg scheduler barrier per q108 call
+  private val incrPivot = Stage("q108_pivot") { (spark, dir) =>
+    val mm = sigTokenFrame(spark, dir)
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+      .head()
+    mm.getAs[Long]("lo") + (mm.getAs[Long]("hi") - mm.getAs[Long]("lo")) * 9 / 10
+  }
 
-  private def incrPivot(spark: SparkSession, dir: String): Long =
-    // session-cached: the pivot is between-ticks state (it derives from the
-    // same corpus snapshot as the old-half labels), and reading it fresh
-    // per repetition cost a scan+agg scheduler barrier per q108 call
-    incrPivotCache.getOrBuild(spark, dir) {
-      val mm = sigTokenFrame(spark, dir)
-        .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-        .head()
-      mm.getAs[Long]("lo") + (mm.getAs[Long]("hi") - mm.getAs[Long]("lo")) * 9 / 10
-    }
-
-  private def incrOldLabels(spark: SparkSession, dir: String, pivot: Long): DataFrame =
-    incrLabelCache.getOrBuild(spark, dir) {
-      // the old-half mine IS a restriction of the full q101 edge graph:
-      // banding and the jaccard verify are both per-pair deterministic, so
-      // a pair with both ids <= pivot collides (and verifies) over the old
-      // half iff it does over the full corpus. Reuse the session's mined
-      // graph — the q101_graph artifact the bench (and a real pipeline)
-      // already paid for — filtered to doc_b <= pivot (pairs are canonical
-      // doc_a < doc_b, so that one bound covers both endpoints), instead
-      // of re-mining 90% of the corpus a second time.
-      clustersFrom(minhashPairGraph(spark, dir).filter(col("doc_b") <= pivot))
-        .select(col("doc_id"), col("cluster"))
-        .localCheckpoint()
-    }
-
-  /** Materialize exactly the session state an ingest tick carries between
-    * runs — the old-half label table and the corpus bucket index — without
-    * running a delta apply. The bench's q108_state phase times THIS, so the
-    * phase number is the state cost and the timed q108 repetitions are the
-    * only place the delta-apply cost appears (it used to be counted twice:
-    * once inside the phase's full-query run, once per timed repetition).
+  /** Old-half labels as session state: what a real pipeline persists
+    * between ingest ticks.
     */
-  def buildIncrementalState(spark: SparkSession, dir: String): Unit = {
+  private val incrOldLabels = Stage("q108_state") { (spark, dir) =>
     val pivot = incrPivot(spark, dir)
-    incrOldLabels(spark, dir, pivot)
-    bucketFrame(spark, dir)
-    ()
+    // the old-half mine IS a restriction of the full q101 edge graph:
+    // banding and the jaccard verify are both per-pair deterministic, so
+    // a pair with both ids <= pivot collides (and verifies) over the old
+    // half iff it does over the full corpus. Reuse the session's mined
+    // graph — the q101_graph artifact the bench (and a real pipeline)
+    // already paid for — filtered to doc_b <= pivot (pairs are canonical
+    // doc_a < doc_b, so that one bound covers both endpoints), instead
+    // of re-mining 90% of the corpus a second time.
+    clustersFrom(minhashPairGraph(spark, dir).filter(col("doc_b") <= pivot))
+      .select(col("doc_id"), col("cluster"))
+      .localCheckpoint()
   }
 
   def q108IncrementalClusters(spark: SparkSession, dir: String): DataFrame = {
     val t = sigTokenFrame(spark, dir)
     val pivot = incrPivot(spark, dir)
-    val oldLabels = incrOldLabels(spark, dir, pivot)
+    val oldLabels = incrOldLabels(spark, dir)
     // same semantics as clustersApply (a per-doc delta's bandBuckets ==
     // a doc_id filter of the corpus bucket table), but probing the
     // session-persisted bucket index instead of re-exploding signatures —
@@ -1396,47 +1364,35 @@ object Dedup {
   }
 
   /** md5-affine signatures at TOKEN grain — q30's construction over the
-    * distinct token set, carrying lang for the same-lang verify. Cached
-    * per (session, dir): q113 re-enters per bench repetition.
+    * distinct token set, carrying lang for the same-lang verify. A stage:
+    * q113 re-enters it per bench repetition.
     */
-  private val md5TokenSigCache = new SessionCache[DataFrame]
-
-  /** Warm the md5 token-signature stage — named as a bench phase
-    * (`q113_sigs`) so the one-time build cost is reported outside q113's
-    * repetition medians, the q163_actions shape.
-    */
-  private[graft] def buildMd5TokenSigStage(spark: SparkSession, dir: String): Unit = {
-    md5TokenSignatures(spark, dir)
-    ()
-  }
-
-  private def md5TokenSignatures(spark: SparkSession, dir: String): DataFrame =
-    md5TokenSigCache.getOrBuild(spark, dir) {
-      val p = Curation.SKETCH_P
-      val base = Tables
-        .balanced(Tables.documents(spark, dir))
-        .withColumn("norm_text", normText)
-        .select(col("lang"), col("doc_id"), explode(split(col("norm_text"), " ")).as("tok"))
-        .distinct()
-        .withColumn("xs", expr("cast(conv(substring(md5(tok), 1, 15), 16, 10) AS bigint)"))
-        .select(col("lang"), col("doc_id"), col("xs"))
-        .distinct()
-        .withColumn("x", col("xs") % p)
-      val mins = (0 until K).map(h =>
-        min(expr(s"(${Curation.sketchA(h)}L * x + ${Curation.sketchB(h)}L) % $p")).as(s"m$h")
+  private val md5TokenSignatures = Stage("q113_sigs") { (spark, dir) =>
+    val p = Curation.SKETCH_P
+    val base = Tables
+      .balanced(Tables.documents(spark, dir))
+      .withColumn("norm_text", normText)
+      .select(col("lang"), col("doc_id"), explode(split(col("norm_text"), " ")).as("tok"))
+      .distinct()
+      .withColumn("xs", expr("cast(conv(substring(md5(tok), 1, 15), 16, 10) AS bigint)"))
+      .select(col("lang"), col("doc_id"), col("xs"))
+      .distinct()
+      .withColumn("x", col("xs") % p)
+    val mins = (0 until K).map(h =>
+      min(expr(s"(${Curation.sketchA(h)}L * x + ${Curation.sketchB(h)}L) % $p")).as(s"m$h")
+    )
+    base
+      .groupBy(col("lang"), col("doc_id"))
+      .agg(sort_array(collect_set(col("xs"))).as("toks"), mins: _*)
+      .select(
+        col("lang"),
+        col("doc_id"),
+        col("toks"),
+        size(col("toks")).as("sz"),
+        array((0 until K).map(h => col(s"m$h")): _*).as("sig")
       )
-      base
-        .groupBy(col("lang"), col("doc_id"))
-        .agg(sort_array(collect_set(col("xs"))).as("toks"), mins: _*)
-        .select(
-          col("lang"),
-          col("doc_id"),
-          col("toks"),
-          size(col("toks")).as("sz"),
-          array((0 until K).map(h => col(s"m$h")): _*).as("sig")
-        )
-        .localCheckpoint()
-    }
+      .localCheckpoint()
+  }
 
   /** The banded cross-split screen replayed outright: one md5 per distinct
     * (doc, token), the affine mins, band-tuple candidates restricted to
@@ -1505,43 +1461,39 @@ object Dedup {
     * pass, the q29 join, and both passage/span leg tails to rebuild the
     * same doc-grain frame before its per-source rollup.
     */
-  private val dedupProfileCache = new SessionCache[DataFrame]
-
-  private def dedupProfileBase(spark: SparkSession, dir: String): DataFrame =
-    dedupProfileCache.getOrBuild(spark, dir) {
-      // is_dup derives from q29's OWN output (not a re-derivation of its
-      // rule), so a future change to the survivor rule flows through here
-      // structurally — the same dependency shape as q101LshDupClusters below
-      val fp = Tables
-        .balanced(Tables.documents(spark, dir))
-        .select(col("doc_id"), col("source"), md5(normText).as("fingerprint"))
-      val exacts = fp
-        .join(q29ExactDedup(spark, dir), "fingerprint")
-        .select(
-          col("doc_id"),
-          col("source"),
-          when(col("n_copies") > 1 && col("doc_id") =!= col("survivor_doc_id"), 1).otherwise(0).as("is_dup")
-        )
-      // the same session-cached q101 label frame q102/q107 consume — the
-      // materialized table a pipeline keeps after the CC loop, so the profile
-      // does not re-run propagation per read
-      val clustered = lshClusterCache
-        .getOrBuild(spark, dir)(q101LshDupClusters(spark, dir).localCheckpoint())
-        .select(col("doc_id"), lit(1).as("in_cluster"))
-      val pass = Curation
-        .q71PassageDedup(spark, dir)
-        .select(col("doc_id"), expr("CAST(round(shared_frac * 1e6, 0) AS BIGINT)").as("shared_micro"))
-      val span = Curation
-        .q110SpanDedup(spark, dir)
-        .select(col("doc_id"), expr("CAST(round(dup_frac * 1e6, 0) AS BIGINT)").as("dup_micro"))
-      exacts
-        .join(clustered, Seq("doc_id"), "left")
-        .join(pass, Seq("doc_id"), "left")
-        .join(span, Seq("doc_id"), "left")
-        .na
-        .fill(0, Seq("in_cluster"))
-        .localCheckpoint()
-    }
+  private val dedupProfileBase = Stage("q117_base") { (spark, dir) =>
+    // is_dup derives from q29's OWN output (not a re-derivation of its
+    // rule), so a future change to the survivor rule flows through here
+    // structurally — the same dependency shape as q101LshDupClusters below
+    val fp = Tables
+      .balanced(Tables.documents(spark, dir))
+      .select(col("doc_id"), col("source"), md5(normText).as("fingerprint"))
+    val exacts = fp
+      .join(q29ExactDedup(spark, dir), "fingerprint")
+      .select(
+        col("doc_id"),
+        col("source"),
+        when(col("n_copies") > 1 && col("doc_id") =!= col("survivor_doc_id"), 1).otherwise(0).as("is_dup")
+      )
+    // the same session-cached q101 label frame q102/q107 consume — the
+    // materialized table a pipeline keeps after the CC loop, so the profile
+    // does not re-run propagation per read
+    val clustered = lshClusters(spark, dir)
+      .select(col("doc_id"), lit(1).as("in_cluster"))
+    val pass = Curation
+      .q71PassageDedup(spark, dir)
+      .select(col("doc_id"), expr("CAST(round(shared_frac * 1e6, 0) AS BIGINT)").as("shared_micro"))
+    val span = Curation
+      .q110SpanDedup(spark, dir)
+      .select(col("doc_id"), expr("CAST(round(dup_frac * 1e6, 0) AS BIGINT)").as("dup_micro"))
+    exacts
+      .join(clustered, Seq("doc_id"), "left")
+      .join(pass, Seq("doc_id"), "left")
+      .join(span, Seq("doc_id"), "left")
+      .na
+      .fill(0, Seq("in_cluster"))
+      .localCheckpoint()
+  }
 
   def q117DedupProfile(spark: SparkSession, dir: String): DataFrame =
     dedupProfileBase(spark, dir)
@@ -1657,16 +1609,11 @@ object Dedup {
     * from — <= |clusters|·|sources| rows, session-cached per dir so q142's
     * matrix and q185's centrality share one labels ⋈ sources pass.
     */
-  private val clusterSourceCache = new SessionCache[DataFrame]
-
-  private def clusterSourcesCached(spark: SparkSession, dir: String): DataFrame =
-    clusterSourceCache.getOrBuild(spark, dir) {
-      val labels = lshClusterCache
-        .getOrBuild(spark, dir)(q101LshDupClusters(spark, dir).localCheckpoint())
-        .select(col("doc_id"), col("cluster"))
-      val src = Tables.balanced(Tables.documents(spark, dir)).select(col("doc_id"), col("source"))
-      clusterSourcesOver(labels, src).localCheckpoint()
-    }
+  private val clusterSources = Stage("q142_sources") { (spark, dir) =>
+    val labels = lshClusters(spark, dir).select(col("doc_id"), col("cluster"))
+    val src = Tables.balanced(Tables.documents(spark, dir)).select(col("doc_id"), col("source"))
+    clusterSourcesOver(labels, src).localCheckpoint()
+  }
 
   /** The rollup over ANY (doc_id, cluster) label frame and (doc_id,
     * source) attribution frame — shared by the batch cache above and
@@ -1681,7 +1628,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_docs"))
 
   def q142SyndicationMatrix(spark: SparkSession, dir: String): DataFrame =
-    q142MatrixOver(clusterSourcesCached(spark, dir))
+    q142MatrixOver(clusterSources(spark, dir))
 
   /** q142's pair rollup over ANY (cluster, source, n_docs) frame. */
   private[graft] def q142MatrixOver(cs: DataFrame): DataFrame = {
@@ -1737,15 +1684,15 @@ object Dedup {
     * and session-cached — the dashboard re-reads the ranking against the
     * same corpus snapshot, so the warm path is two bounded collects.
     */
-  private val syndGraphCache = new SessionCache[DataFrame]
+  private val syndGraph = Stage("q185_graph") { (spark, dir) =>
+    syndGraphOf(
+      clusterSources(spark, dir),
+      Tables.balanced(Tables.documents(spark, dir)).select(col("source"))
+    ).localCheckpoint()
+  }
 
   def q185SyndicationRank(spark: SparkSession, dir: String): DataFrame =
-    q185RankOfGraph(spark, syndGraphCache.getOrBuild(spark, dir) {
-      syndGraphOf(
-        clusterSourcesCached(spark, dir),
-        Tables.balanced(Tables.documents(spark, dir)).select(col("source"))
-      ).localCheckpoint()
-    })
+    q185RankOfGraph(spark, syndGraph(spark, dir))
 
   /** The bounded syndication graph over ANY (cluster, source, n_docs)
     * frame and (source) attribution frame: symmetric shared-cluster edge
@@ -1882,22 +1829,19 @@ object Dedup {
   // ---------------------------------------------------------------------------
   val SWEEP_TAUS: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
 
-  /** The τ-min exact pair frame as a session artifact (named bench phase
-    * q133_pairs): the ONE quadratic pass that feeds all five of q133's
-    * thresholds and q146's LSH-plan grid — re-running the verify join per
-    * repetition was each query's dominant cost.
+  /** The τ-min exact pair frame as a stage: the ONE quadratic pass that
+    * feeds all five of q133's thresholds and q146's LSH-plan grid —
+    * re-running the verify join per repetition was each query's dominant
+    * cost.
     */
-  private val sweepPairsCache = new SessionCache[DataFrame]
-
-  def buildSweepPairs(spark: SparkSession, dir: String): DataFrame =
-    sweepPairsCache.getOrBuild(spark, dir) {
-      tokenJaccardPairsAt(spark, dir, SWEEP_TAUS.min)
-        .select(col("doc_b"), col("jaccard"))
-        .localCheckpoint()
-    }
+  private[graft] val sweepPairs = Stage("q133_pairs") { (spark, dir) =>
+    tokenJaccardPairsAt(spark, dir, SWEEP_TAUS.min)
+      .select(col("doc_b"), col("jaccard"))
+      .localCheckpoint()
+  }
 
   def q133ThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = buildSweepPairs(spark, dir)
+    val pairs = sweepPairs(spark, dir)
     // token counts off the shared token stage: size(toks) equals the old
     // size(split(trim(text), '\\s+')) for every text (both count maximal
     // whitespace-separated fields of the trimmed string), and the cached
@@ -2094,19 +2038,16 @@ object Dedup {
     * q163's depth leg (each used to re-winnow the corpus per call; the
     * table is the index a real pipeline materializes once).
     */
-  private val winnowPosCache = new SessionCache[DataFrame]
-
-  private[graft] def winnowPositionsCached(spark: SparkSession, dir: String): DataFrame =
-    winnowPosCache.getOrBuild(spark, dir) {
-      winnowFingerprintPositions(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
-    }
+  private[graft] val winnowPositions = Stage("q144_winnow") { (spark, dir) =>
+    winnowFingerprintPositions(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
+  }
 
   /** Distinct (doc_id, fp) winnowing fingerprints per document — the set
     * view of the cached position table (projecting the position away is
     * exactly the fp set, by construction).
     */
   private[graft] def winnowFingerprints(spark: SparkSession, dir: String): DataFrame =
-    winnowPositionsCached(spark, dir).select(col("doc_id"), col("fp")).distinct()
+    winnowPositions(spark, dir).select(col("doc_id"), col("fp")).distinct()
 
   /** The selected (doc_id, wmin) winnow encodings over ANY (doc_id, text)
     * frame — the shared core of the fp-set view (q144/q152/streaming) and
@@ -2309,20 +2250,16 @@ object Dedup {
     * positions, itself session-cached: THREE batch consumers rebuilt it
     * per call (q162's profile, the q163_actions composition's run leg, and
     * q182's mask intervals) — it is the next artifact up the winnow chain
-    * a pipeline persists (positions → runs). Bench names the build
-    * (`q162_runs`). The streaming maintainers keep their own slice-fed
+    * a pipeline persists (positions → runs). The streaming maintainers keep their own slice-fed
     * supplies ([[verbatimRunPairsFromFps]] stays the shared core).
     */
-  private val runPairsCache = new SessionCache[DataFrame]
-
-  private[graft] def verbatimRunsCached(spark: SparkSession, dir: String): DataFrame =
-    runPairsCache.getOrBuild(spark, dir) {
-      verbatimRunPairsFromFps(winnowPositionsCached(spark, dir)).localCheckpoint()
-    }
+  private[graft] val verbatimRuns = Stage("q162_runs") { (spark, dir) =>
+    verbatimRunPairsFromFps(winnowPositions(spark, dir)).localCheckpoint()
+  }
 
   def q162VerbatimRunProfile(spark: SparkSession, dir: String): DataFrame =
     verbatimRunProfileFrom(
-      verbatimRunsCached(spark, dir),
+      verbatimRuns(spark, dir),
       Tables.balanced(Tables.documents(spark, dir)).select(col("doc_id"), col("source"))
     )
 
@@ -2440,28 +2377,24 @@ object Dedup {
   // offenders. The whole decision frame is SESSION-CACHED per (session,
   // dir) — q172 costs it and q179-era dashboards read it repeatedly, and
   // a real pipeline materializes the decision table once per corpus
-  // snapshot (the winnowPositionsCached pattern one level up).
+  // snapshot (the winnowPositions pattern one level up).
   // ---------------------------------------------------------------------------
   private val RUN_BLOCK = 50 // >= 50-token verbatim run -> mask, the Lee et al. convention
 
-  private val q163Cache = new SessionCache[DataFrame]
-
   /** The UNORDERED cached decision frame — q163's serve path orders it,
-    * q172 joins it by doc_id. Bench names the first build `q163_actions`.
+    * q172 joins it by doc_id.
     */
-  private[graft] def contaminationDepthCached(spark: SparkSession, dir: String): DataFrame =
-    q163Cache.getOrBuild(spark, dir) {
-      contaminationDepthFrame(spark, dir).localCheckpoint()
-    }
+  private[graft] val contaminationDepth =
+    Stage("q163_actions")((spark, dir) => contaminationDepthFrame(spark, dir).localCheckpoint())
 
   def q163ContaminationDepth(spark: SparkSession, dir: String): DataFrame =
-    contaminationDepthCached(spark, dir).orderBy(col("doc_id"))
+    contaminationDepth(spark, dir).orderBy(col("doc_id"))
 
   private def contaminationDepthFrame(spark: SparkSession, dir: String): DataFrame =
     contaminationDepthOver(
       Curation.q67Contamination(spark, dir).select(col("doc_id"), col("n_hits").as("ngram_hits")),
-      buildPairGraph(spark, dir), // the session-cached q32 edge set
-      verbatimRunsCached(spark, dir),
+      pairGraph(spark, dir), // the session-cached q32 edge set
+      verbatimRuns(spark, dir),
       Multimodal
         .q178ImageDecontam(spark, dir)
         .select(col("train_id").as("doc_id"), col("n_eval_matches").as("img_leaks"))
@@ -2608,7 +2541,7 @@ object Dedup {
         col("source"),
         size(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")).cast("long").as("n_toks")
       )
-    decontamLedgerOver(train, contaminationDepthCached(spark, dir))
+    decontamLedgerOver(train, contaminationDepth(spark, dir))
   }
 
   /** The ledger rollup over ANY (train-split (doc_id, source, n_toks)
@@ -2690,8 +2623,8 @@ object Dedup {
   // ---------------------------------------------------------------------------
   def q182DecontamMaskExport(spark: SparkSession, dir: String): DataFrame =
     decontamMaskOver(
-      contaminationDepthCached(spark, dir),
-      verbatimRunsCached(spark, dir)
+      contaminationDepth(spark, dir),
+      verbatimRuns(spark, dir)
     )
 
   /** The mask export over ANY (decision frame, run-pair frame) — shared by
@@ -2810,8 +2743,6 @@ object Dedup {
   // (CASE-guarded, the ANSI rule) in both engines (a global aggregate
   // always emits its row).
   // ---------------------------------------------------------------------------
-  private val q179ScopeCache = new SessionCache[DataFrame]
-
   private val q179FracSql =
     "CASE WHEN n_scope = 0 THEN NULL ELSE floor(CAST(n_flagged AS DOUBLE) * 1e6 / n_scope + 5e-1) / 1e6 END"
   private val q179CharsFracSql =
@@ -2823,8 +2754,8 @@ object Dedup {
     // against the same corpus snapshot, and with every leg served from
     // cached state this scan was the only remaining per-call corpus touch
     q179SurfaceOver(
-      trainScopeCached(spark, dir),
-      contaminationDepthCached(spark, dir),
+      trainScope(spark, dir),
+      contaminationDepth(spark, dir),
       Curation.q166BloomScreen(spark, dir)
     )
   }
@@ -2832,15 +2763,14 @@ object Dedup {
   /** The session-cached train-split scope frame (doc_id, n_chars) — one
     * corpus scan shared by q179's surface and q184's overlap matrix.
     */
-  private def trainScopeCached(spark: SparkSession, dir: String): DataFrame =
-    q179ScopeCache.getOrBuild(spark, dir) {
-      Tables
-        .balanced(Tables.documents(spark, dir))
-        .withColumn("bucket", conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("int"))
-        .filter(col("bucket") < Sampling.SPLIT_TRAIN_LT)
-        .select(col("doc_id"), col("n_chars"))
-        .localCheckpoint()
-    }
+  private val trainScope = Stage("q179_scope") { (spark, dir) =>
+    Tables
+      .balanced(Tables.documents(spark, dir))
+      .withColumn("bucket", conv(substring(md5(col("doc_id").cast("string")), 1, 2), 16, 10).cast("int"))
+      .filter(col("bucket") < Sampling.SPLIT_TRAIN_LT)
+      .select(col("doc_id"), col("n_chars"))
+      .localCheckpoint()
+  }
 
   /** The surface rollup over ANY (train-split (doc_id, n_chars) scope,
     * decision frame, q166-flagged frame) — shared by the batch query and
@@ -2992,8 +2922,8 @@ object Dedup {
 
   def q184DecontamOverlap(spark: SparkSession, dir: String): DataFrame =
     q184OverlapOver(
-      trainScopeCached(spark, dir).select(col("doc_id")),
-      contaminationDepthCached(spark, dir),
+      trainScope(spark, dir).select(col("doc_id")),
+      contaminationDepth(spark, dir),
       Curation.q166BloomScreen(spark, dir)
     )
 
@@ -3160,7 +3090,7 @@ object Dedup {
       .mkString("CASE ", " ", " END")
 
   def q146LshPlan(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = buildSweepPairs(spark, dir)
+    val pairs = sweepPairs(spark, dir)
       .select(col("jaccard").as("j"))
     pairs
       .withColumn("cfg", explode(typedLit(LSH_GRID)))

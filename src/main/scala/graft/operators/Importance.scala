@@ -54,25 +54,21 @@ object Importance {
     * the DSIR feature stage a pipeline materializes once per corpus
     * snapshot (the q124_grams/q78_grams discipline): the tokenize +
     * md5-bucket explode is q105's dominant scan and re-ran per repetition.
-    * Bench names the build (`q105_feats`); the histogram/ratio/scoring
-    * tail stays the timed path.
+    * The histogram/ratio/scoring tail stays the timed path.
     */
-  private val dsirFeatCache = new SessionCache[DataFrame]
-
-  private[graft] def dsirFeatures(spark: SparkSession, dir: String): DataFrame =
-    dsirFeatCache.getOrBuild(spark, dir) {
-      Tables
-        .balanced(Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
-        .select(
-          col("doc_id"),
-          col("source"),
-          explode(expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')")).as("term")
-        )
-        .withColumn("bucket", (conv(substring(md5(col("term")), 1, 4), 16, 10).cast("int") % N_BUCKETS))
-        .groupBy(col("doc_id"), col("source"), col("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .localCheckpoint() // one tokenize+explode feeds histograms AND scoring
-    }
+  private[graft] val dsirFeatures = Stage("q105_feats") { (spark, dir) =>
+    Tables
+      .balanced(Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
+      .select(
+        col("doc_id"),
+        col("source"),
+        explode(expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')")).as("term")
+      )
+      .withColumn("bucket", (conv(substring(md5(col("term")), 1, 4), 16, 10).cast("int") % N_BUCKETS))
+      .groupBy(col("doc_id"), col("source"), col("bucket"))
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint() // one tokenize+explode feeds histograms AND scoring
+  }
 
   def q105DsirWeights(spark: SparkSession, dir: String): DataFrame = {
     val db = dsirFeatures(spark, dir)
@@ -190,39 +186,35 @@ object Importance {
     "ln((CAST(c12i AS DOUBLE) + 5e-1) / (CAST(c1i AS DOUBLE) + 5e-1 * v)) - " +
       "ln((CAST(c12g AS DOUBLE) + 5e-1) / (CAST(c1g AS DOUBLE) + 5e-1 * v))"
 
-  /** q124's staged per-doc bigram count table and vocabulary — session
-    * artifacts (named bench phase q124_grams): the tokenize + explode +
-    * count collapse is the query's dominant scan work and is identical
-    * across repetitions.
+  /** q124's staged per-doc bigram count table and vocabulary — a stage:
+    * the tokenize + explode + count collapse is the query's dominant scan
+    * work and is identical across repetitions.
     */
-  private val mlGramCache = new SessionCache[(DataFrame, DataFrame)]
-
-  def buildMlGrams(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    mlGramCache.getOrBuild(spark, dir) {
-      val docs = Tables
-        .balanced(Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
-        .withColumn("toks", expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')"))
-      val g = docs
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), col("source"), col("toks"), explode(expr("sequence(1, size(toks) - 1)")).as("i"))
-        .select(
-          col("doc_id"),
-          col("source"),
-          xxhash64(expr("element_at(toks, i)")).as("w1k"),
-          xxhash64(expr("concat(element_at(toks, i), ' ', element_at(toks, i + 1))")).as("bgk")
-        )
-        .groupBy(col("doc_id"), col("source"), col("w1k"), col("bgk"))
-        .agg(count(lit(1)).as("c"))
-        .localCheckpoint() // one explode feeds all four count tables + rollup
-      val vocab = docs
-        .select(explode(col("toks")).as("tok"))
-        .agg(countDistinct(col("tok")).cast("double").as("v"))
-        .localCheckpoint()
-      (g, vocab)
-    }
+  private val mlGrams = Stage("q124_grams") { (spark, dir) =>
+    val docs = Tables
+      .balanced(Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text")))
+      .withColumn("toks", expr("filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')"))
+    val g = docs
+      .filter(size(col("toks")) >= 2)
+      .select(col("doc_id"), col("source"), col("toks"), explode(expr("sequence(1, size(toks) - 1)")).as("i"))
+      .select(
+        col("doc_id"),
+        col("source"),
+        xxhash64(expr("element_at(toks, i)")).as("w1k"),
+        xxhash64(expr("concat(element_at(toks, i), ' ', element_at(toks, i + 1))")).as("bgk")
+      )
+      .groupBy(col("doc_id"), col("source"), col("w1k"), col("bgk"))
+      .agg(count(lit(1)).as("c"))
+      .localCheckpoint() // one explode feeds all four count tables + rollup
+    val vocab = docs
+      .select(explode(col("toks")).as("tok"))
+      .agg(countDistinct(col("tok")).cast("double").as("v"))
+      .localCheckpoint()
+    (g, vocab)
+  }
 
   def q124MooreLewis(spark: SparkSession, dir: String): DataFrame = {
-    val (g, vocab) = buildMlGrams(spark, dir)
+    val (g, vocab) = mlGrams(spark, dir)
 
     // the four count tables collapse into TWO aggregates with conditional
     // in-domain sums (guide §2.3 — aggregate before you shuffle; the old

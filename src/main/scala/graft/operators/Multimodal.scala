@@ -515,10 +515,12 @@ object Multimodal {
 
   /** q114's staged per-image band table, built once per (session, dir):
     * three readers per call (the candidate explode + both verify joins),
-    * and q176/bench re-enter the miner repeatedly — the stagedShinglesCached
+    * and q176/bench re-enter the miner repeatedly — the shingleStage
     * pattern applied to the media decode stage.
     */
-  private val mediaStageCache = new SessionCache[DataFrame]
+  private[graft] val imageBands = Stage("q114_bands") { (spark, dir) =>
+    imageBandsOf(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
+  }
 
   /** The per-image band table over ANY documents-shaped frame — per-item
     * LOCAL like the fingerprint stages, so the streaming maintainer hashes
@@ -537,11 +539,6 @@ object Multimodal {
       }
       .toDF("media_id", "bands")
   }
-
-  private[graft] def imageBandsCached(spark: SparkSession, dir: String): DataFrame =
-    mediaStageCache.getOrBuild(spark, s"$dir@media_bands") {
-      imageBandsOf(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
-    }
 
   /** q114's banded mine + exact verify over a staged band table — shared
     * verbatim by the batch query and the streaming maintainer's served
@@ -590,7 +587,7 @@ object Multimodal {
   }
 
   def q114ImageNeardup(spark: SparkSession, dir: String): DataFrame =
-    imageNeardupFrom(imageBandsCached(spark, dir))
+    imageNeardupFrom(imageBands(spark, dir))
 
   /** The aHash arithmetic replayed over the verified-ASCII corpus (bytes =
     * codepoints, the q37/q39 contract), then the exact all-pairs hamming
@@ -658,43 +655,28 @@ object Multimodal {
   // <= MEDIA_FP_MAXDF^2/2 candidate pairs.
   // ---------------------------------------------------------------------------
   def q181ImageNeardupCapped(spark: SparkSession, dir: String): DataFrame =
-    imageNeardupFrom(imageBandsCached(spark, dir), Some(MEDIA_FP_MAXDF))
+    imageNeardupFrom(imageBands(spark, dir), Some(MEDIA_FP_MAXDF))
 
-  private val cappedPairCache = new SessionCache[DataFrame]
-
-  /** q181's verified capped pair frame as a session artifact — the edge
-    * supply q156's clusters and q176's image leg read (the q101
-    * lshEdgesCache precedent: the mined+verified pair set is the
-    * intermediate a pipeline persists between mining and clustering, so
-    * its derived consumers must not re-run the mine per read). q181 itself
-    * keeps paying the mine per repetition — it IS the declared mine query.
-    * The bench times this build as the named q181_pairs phase.
+  /** q181's verified capped pair frame as a stage — the edge supply
+    * q156's clusters and q176's image leg read (the q101 lshEdges
+    * precedent: the mined+verified pair set is the intermediate a pipeline
+    * persists between mining and clustering, so its derived consumers must
+    * not re-run the mine per read). q181 itself keeps paying the mine per
+    * repetition — it IS the declared mine query.
     */
-  private[graft] def cappedPairsCached(spark: SparkSession, dir: String): DataFrame =
-    cappedPairCache.getOrBuild(spark, dir)(q181ImageNeardupCapped(spark, dir).localCheckpoint())
+  private[graft] val cappedPairs =
+    Stage("q181_pairs")((spark, dir) => q181ImageNeardupCapped(spark, dir).localCheckpoint())
 
-  /** The audio/video verified pair frames as session artifacts (the same
-    * contract as [[cappedPairsCached]]): q176's dashboard reads all three
-    * miners per repetition, and re-running the audio/video band joins per
-    * read is exactly the re-mining the image leg already avoids. q175/q115
-    * keep paying their mines per repetition — they ARE the declared mine
-    * queries. Built in the named q176_pairs bench phase.
+  /** The audio/video verified pair frames as stages (the same contract as
+    * [[cappedPairs]]): q176's dashboard reads all three miners per
+    * repetition, and re-running the audio/video band joins per read is
+    * exactly the re-mining the image leg already avoids. q175/q115 keep
+    * paying their mines per repetition — they ARE the declared mine
+    * queries.
     */
-  private val audioPairCache = new SessionCache[DataFrame]
-  private val videoPairCache = new SessionCache[DataFrame]
+  private[graft] val audioPairs = Stage("q175_pairs")((spark, dir) => q175AudioNeardup(spark, dir).localCheckpoint())
 
-  private[graft] def audioPairsCached(spark: SparkSession, dir: String): DataFrame =
-    audioPairCache.getOrBuild(spark, dir)(q175AudioNeardup(spark, dir).localCheckpoint())
-
-  private[graft] def videoPairsCached(spark: SparkSession, dir: String): DataFrame =
-    videoPairCache.getOrBuild(spark, dir)(q115VideoNeardup(spark, dir).localCheckpoint())
-
-  /** Bench-phase entry: materialize both pair frames. */
-  def buildMediaPairs(spark: SparkSession, dir: String): Unit = {
-    audioPairsCached(spark, dir)
-    videoPairsCached(spark, dir)
-    ()
-  }
+  private[graft] val videoPairs = Stage("q115_pairs")((spark, dir) => q115VideoNeardup(spark, dir).localCheckpoint())
 
   /** q114's chain, the df rollup, the rare-bucket prune, then the same
     * candidate join + exact hamming verify over rare instances only.
@@ -788,18 +770,14 @@ object Multimodal {
     * (session, dir): the decode pass runs once; the capped miner table and
     * the q177 boilerplate audit both derive from it.
     */
-  private[graft] def videoFpsRawCached(spark: SparkSession, dir: String): DataFrame =
-    mediaStageCache.getOrBuild(spark, s"$dir@media_vfp_raw") {
-      videoFpsRawOf(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
-    }
+  private[graft] val videoFpsRaw = Stage("q115_fps_raw") { (spark, dir) =>
+    videoFpsRawOf(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
+  }
 
   /** q115's staged df-capped fingerprint table — what nf + both pair sides
     * (plus q176/bench re-entries) read.
     */
-  private[graft] def videoFpsCached(spark: SparkSession, dir: String): DataFrame =
-    mediaStageCache.getOrBuild(spark, s"$dir@media_vfp") {
-      rareMediaFps(videoFpsRawCached(spark, dir)).localCheckpoint()
-    }
+  private[graft] val videoFps = Stage("q115_fps")((spark, dir) => rareMediaFps(videoFpsRaw(spark, dir)).localCheckpoint())
 
   /** The shared containment pair tail over a (df-capped) fingerprint
     * table: exact fp equi-join, >= 50% containment of the smaller side's
@@ -827,7 +805,7 @@ object Multimodal {
   }
 
   def q115VideoNeardup(spark: SparkSession, dir: String): DataFrame =
-    mediaNeardupFrom(videoFpsCached(spark, dir), "shared_frames")
+    mediaNeardupFrom(videoFps(spark, dir), "shared_frames")
 
   /** The raw distinct (media_id, fp) video frame-fingerprint derivation —
     * ONE statement nested by both q115's pair oracle and q177's
@@ -926,19 +904,15 @@ object Multimodal {
     * staging pattern over the audio energy shingles; feeds the capped
     * miner table and the q177 boilerplate audit.
     */
-  private[graft] def audioFpsRawCached(spark: SparkSession, dir: String): DataFrame =
-    mediaStageCache.getOrBuild(spark, s"$dir@media_afp_raw") {
-      audioFpsRawOf(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
-    }
+  private[graft] val audioFpsRaw = Stage("q175_fps_raw") { (spark, dir) =>
+    audioFpsRawOf(Tables.balanced(Tables.documents(spark, dir))).localCheckpoint()
+  }
 
   /** q175's staged df-capped fingerprint table (the q115 shape). */
-  private[graft] def audioFpsCached(spark: SparkSession, dir: String): DataFrame =
-    mediaStageCache.getOrBuild(spark, s"$dir@media_afp") {
-      rareMediaFps(audioFpsRawCached(spark, dir)).localCheckpoint()
-    }
+  private[graft] val audioFps = Stage("q175_fps")((spark, dir) => rareMediaFps(audioFpsRaw(spark, dir)).localCheckpoint())
 
   def q175AudioNeardup(spark: SparkSession, dir: String): DataFrame =
-    mediaNeardupFrom(audioFpsCached(spark, dir), "shared_fps")
+    mediaNeardupFrom(audioFps(spark, dir), "shared_fps")
 
   /** The raw distinct (media_id, fp) audio energy-shingle derivation —
     * nested by q175's pair oracle and q177's audit (q115's pattern).
@@ -1022,9 +996,9 @@ object Multimodal {
   // ---------------------------------------------------------------------------
   def q177MediaBoilerplate(spark: SparkSession, dir: String): DataFrame =
     mediaAuditOver(
-      audioFpsRawCached(spark, dir),
-      imageBandInstancesOf(imageBandsCached(spark, dir)),
-      videoFpsRawCached(spark, dir)
+      audioFpsRaw(spark, dir),
+      imageBandInstancesOf(imageBands(spark, dir)),
+      videoFpsRaw(spark, dir)
     )
 
   /** q114's (media_id, bands) table exploded to per-bucket instances with
@@ -1123,9 +1097,9 @@ object Multimodal {
 
   def q183MediaHotLedger(spark: SparkSession, dir: String): DataFrame =
     hotLedgerOver(
-      audioFpsRawCached(spark, dir),
-      imageBandInstancesOf(imageBandsCached(spark, dir)),
-      videoFpsRawCached(spark, dir),
+      audioFpsRaw(spark, dir),
+      imageBandInstancesOf(imageBands(spark, dir)),
+      videoFpsRaw(spark, dir),
       Tables
         .balanced(Tables.documents(spark, dir))
         .select(col("doc_id").as("media_id"), col("source"))
@@ -1265,39 +1239,25 @@ object Multimodal {
     head + "\n" + q175InstSql + "\n" + mid + "\n" + q115InstSql + "\n" + midImg + "\n" + q114BandsSql + "\n" + tail
   }
 
-  /** Warm the three media fingerprint stages for this session — named as a
-    * build phase by Bench (the buildShingleStage shape), since q114/q115/
-    * q175/q176 all re-enter the staged tables per repetition.
+  /** The decoded image feature table as a stage: q161's alignment screen
+    * re-ran the whole image decode stage per repetition — the one part of
+    * its plan the scale notes call the dominant cost. q39 (the declared
+    * extraction query) stays fresh per repetition.
     */
-  private[graft] def buildMediaStage(spark: SparkSession, dir: String): Unit = {
-    imageBandsCached(spark, dir)
-    videoFpsCached(spark, dir)
-    audioFpsCached(spark, dir)
-    imageFeaturesCached(spark, dir)
-    ()
+  private[graft] val imageFeatures = Stage("q161_features") { (spark, dir) =>
+    extractFeatures(mediaTable(spark, dir).filter(col("kind") === lit("image"))).toDF().localCheckpoint()
   }
-
-  /** The decoded image feature table as a session artifact (built in the
-    * media_fps phase): q161's alignment screen re-ran the whole image
-    * decode stage per repetition — the one part of its plan the scale
-    * notes call the dominant cost. q39 (the declared extraction query)
-    * stays fresh per repetition.
-    */
-  private[graft] def imageFeaturesCached(spark: SparkSession, dir: String): DataFrame =
-    mediaStageCache.getOrBuild(spark, s"$dir@img_features") {
-      extractFeatures(mediaTable(spark, dir).filter(col("kind") === lit("image"))).toDF().localCheckpoint()
-    }
 
   def q176MediaDedupProfile(spark: SparkSession, dir: String): DataFrame = {
     val totals = mediaTable(spark, dir).groupBy(col("kind")).agg(count(lit(1)).as("n_media"))
-    // all three pair supplies are session artifacts (see the *PairsCached
+    // all three pair supplies are stages (see the cappedPairs/audioPairs
     // docs), and the three per-leg one-row aggregates fuse into ONE
     // kind-grouped aggregate over their tagged union (guide §2.4)
     def tagged(kind: String, pairs: DataFrame): DataFrame =
       pairs.select(lit(kind).as("kind"), col("media_a"), col("media_b"))
-    val legs = tagged("image", cappedPairsCached(spark, dir))
-      .unionByName(tagged("audio", audioPairsCached(spark, dir)))
-      .unionByName(tagged("video", videoPairsCached(spark, dir)))
+    val legs = tagged("image", cappedPairs(spark, dir))
+      .unionByName(tagged("audio", audioPairs(spark, dir)))
+      .unionByName(tagged("video", videoPairs(spark, dir)))
       .select(col("kind"), explode(array(col("media_a"), col("media_b"))).as("m"))
       .groupBy(col("kind"))
       .agg(
@@ -1476,7 +1436,7 @@ object Multimodal {
   def q156ImageDupClusters(spark: SparkSession, dir: String): DataFrame =
     Dedup
       .clustersFrom(
-        cappedPairsCached(spark, dir)
+        cappedPairs(spark, dir)
           .select(col("media_a").as("doc_a"), col("media_b").as("doc_b"))
       )
       .select(col("doc_id").as("media_id"), col("cluster"), col("cluster_size"))
@@ -1526,7 +1486,7 @@ object Multimodal {
   // with and the closest one (deterministic argmin via the winnow-style
   // fixed-width string encode, identical in both engines).
   //
-  // Scale shape: the staged band table built once (imageBandsCached),
+  // Scale shape: the staged band table built once (imageBands),
   // one df rollup over its instances (8 rows per image), one left-anti
   // prune per side, then the (band, bv) equi-join between the two sides
   // — every surviving bucket fans out <= MEDIA_FP_MAXDF^2 cross-split
@@ -1535,7 +1495,7 @@ object Multimodal {
   // anywhere in the engine plan.
   // ---------------------------------------------------------------------------
   def q178ImageDecontam(spark: SparkSession, dir: String): DataFrame =
-    imageDecontamFrom(imageBandsCached(spark, dir))
+    imageDecontamFrom(imageBands(spark, dir))
 
   /** The screen over ANY (media_id, bands) band table — shared by the
     * batch query and [[graft.streaming.StreamingDecontam]]'s serve path
@@ -1681,33 +1641,29 @@ object Multimodal {
       .agg(expr("CAST(floor(CAST(sum(ua * ub) AS DOUBLE) / 1e6 + 5e-1) AS BIGINT)").as("align_micro"))
   }
 
-  /** The per-doc alignment cosine frame as a session artifact (named bench
-    * phase q161_align): the image side decodes once via
-    * [[imageFeaturesCached]], and the text side's 64-dim posexplode +
+  /** The per-doc alignment cosine frame as a stage: the image side decodes
+    * once via [[imageFeatures]], and the text side's 64-dim posexplode +
     * fold + unit-normalize chain builds once instead of per repetition.
     */
-  private val alignCache = new SessionCache[DataFrame]
-
-  def buildAlignStage(spark: SparkSession, dir: String): DataFrame =
-    alignCache.getOrBuild(spark, dir) {
-      val img = imageFeaturesCached(spark, dir)
-        .select(col("media_id").as("doc_id"), posexplode(col("features")).as(Seq("pos", "f")))
-        .select(col("doc_id"), col("pos"), expr("CAST(floor(CAST(f AS DOUBLE) * 1e6 + 5e-1) AS BIGINT)").as("v"))
-      val txt = Tables
-        .balanced(Tables.embeddings(spark, dir))
-        .select(col("vec_id").as("doc_id"), posexplode(col("embedding")).as(Seq("j", "x")))
-        .select(
-          col("doc_id"),
-          (col("j") % 16).as("pos"),
-          expr("CAST(floor(CAST(x AS DOUBLE) * 1e6 + 5e-1) AS BIGINT)").as("v")
-        )
-        .groupBy(col("doc_id"), col("pos"))
-        .agg(sum(col("v")).as("v"))
-      alignCosMicro(img, txt).localCheckpoint()
-    }
+  private val alignStage = Stage("q161_align") { (spark, dir) =>
+    val img = imageFeatures(spark, dir)
+      .select(col("media_id").as("doc_id"), posexplode(col("features")).as(Seq("pos", "f")))
+      .select(col("doc_id"), col("pos"), expr("CAST(floor(CAST(f AS DOUBLE) * 1e6 + 5e-1) AS BIGINT)").as("v"))
+    val txt = Tables
+      .balanced(Tables.embeddings(spark, dir))
+      .select(col("vec_id").as("doc_id"), posexplode(col("embedding")).as(Seq("j", "x")))
+      .select(
+        col("doc_id"),
+        (col("j") % 16).as("pos"),
+        expr("CAST(floor(CAST(x AS DOUBLE) * 1e6 + 5e-1) AS BIGINT)").as("v")
+      )
+      .groupBy(col("doc_id"), col("pos"))
+      .agg(sum(col("v")).as("v"))
+    alignCosMicro(img, txt).localCheckpoint()
+  }
 
   def q161ImageTextAlign(spark: SparkSession, dir: String): DataFrame = {
-    buildAlignStage(spark, dir)
+    alignStage(spark, dir)
       .join(Tables.balanced(Tables.documents(spark, dir)).select(col("doc_id"), col("source")), "doc_id")
       .groupBy(col("source"))
       .agg(

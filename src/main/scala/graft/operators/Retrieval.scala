@@ -70,25 +70,17 @@ object Retrieval {
   // ---------------------------------------------------------------------------
   // q103 — BM25 top-k retrieval for the fixed query-term set.
   // ---------------------------------------------------------------------------
-  private val scoredCache = new SessionCache[DataFrame]()
-
   /** q103's scoring pass BEFORE the top-k: every matching document with its
     * floor-6dp BM25 score and matched-term count. Factored out so q120's
     * graded qrels read the SAME arithmetic (rel = n_matched) instead of a
     * near-duplicate scan that could drift from the ranker it judges.
     * Session-cached: q103, q118's lexical leg, and q120's qrels all read
     * this frame, and each used to pay its own corpus scan + checkpoint.
-    * Same contract as knCache/the index caches: the documents table is
-    * immutable within a session run, and the streaming maintainer ticks
-    * call SessionCache.invalidateAllFor after landing data.
+    * Same contract as the other stages: the documents table is immutable
+    * within a session run, and the streaming maintainer ticks call
+    * SessionCache.invalidateAllFor after landing data.
     */
-  private def bm25Scored(spark: SparkSession, dir: String): DataFrame =
-    scoredCache.getOrBuild(spark, dir)(bm25ScoredFresh(spark, dir))
-
-  /** Force the shared scoring frame (bench phase hook — the cold corpus
-    * scan + checkpoint is a NAMED number, not q103's hidden first repeat).
-    */
-  def buildBm25Scored(spark: SparkSession, dir: String): Unit = { bm25Scored(spark, dir); () }
+  private val bm25Scored = Stage("q103_scored")((spark, dir) => bm25ScoredFresh(spark, dir))
 
   private def bm25ScoredFresh(spark: SparkSession, dir: String): DataFrame = {
     // Per-doc stats in ONE text scan: document length + tf per query term as
@@ -317,14 +309,9 @@ object Retrieval {
     * copy instead of re-running the full hybrid build (q103 top-k + seed +
     * dense scan + fusion — ~10 scheduler barriers) per repetition. q118's
     * own timed path still computes fresh (it IS the declared fusion query —
-    * the q181/q156 discipline); the build cost is a NAMED bench phase.
+    * the q181/q156 discipline).
     */
-  private val fusedCache = new SessionCache[DataFrame]()
-  private def q118Fused(spark: SparkSession, dir: String): DataFrame =
-    fusedCache.getOrBuild(spark, dir)(q118HybridRrf(spark, dir).localCheckpoint())
-
-  /** Force the cached fused frame (bench phase hook). */
-  def buildQ118Fused(spark: SparkSession, dir: String): Unit = { q118Fused(spark, dir); () }
+  private val q118Fused = Stage("q118_fused")((spark, dir) => q118HybridRrf(spark, dir).localCheckpoint())
 
   def q120RetrievalEval(spark: SparkSession, dir: String): DataFrame = {
     // one q118 build feeds all three run lists (<=2*TOP_K rows)
@@ -458,27 +445,18 @@ object Retrieval {
     * longer pays two embeddings scans + a documents join + the normalize
     * projection per call.
     */
-  private val unitEmbCache = new SessionCache[DataFrame]()
-
-  /** Bench-phase entry: materialize the session-cached unit-embedding frame
-    * so q125's timed repetitions read the warm artifact and the build cost
-    * is a NAMED number (the q103_scored/q118_fused precedent).
-    */
-  def buildUnitEmb(spark: SparkSession, dir: String): DataFrame = unitEmb(spark, dir)
-
-  private def unitEmb(spark: SparkSession, dir: String): DataFrame =
-    unitEmbCache.getOrBuild(spark, dir) {
-      Tables
-        .balanced(Tables.embeddings(spark, dir))
-        .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")), col("vec_id") === col("doc_id"))
-        .withColumn(
-          "__nrm",
-          expr("sqrt(aggregate(embedding, 0D, (a, e) -> a + cast(e AS double) * cast(e AS double)))")
-        )
-        .withColumn("unit", expr("transform(embedding, x -> cast(x AS double) / __nrm)"))
-        .select(col("vec_id"), col("lang"), col("unit"), col("embedding"))
-        .localCheckpoint()
-    }
+  private val unitEmb = Stage("q125_emb") { (spark, dir) =>
+    Tables
+      .balanced(Tables.embeddings(spark, dir))
+      .join(Tables.documents(spark, dir).select(col("doc_id"), col("lang")), col("vec_id") === col("doc_id"))
+      .withColumn(
+        "__nrm",
+        expr("sqrt(aggregate(embedding, 0D, (a, e) -> a + cast(e AS double) * cast(e AS double)))")
+      )
+      .withColumn("unit", expr("transform(embedding, x -> cast(x AS double) / __nrm)"))
+      .select(col("vec_id"), col("lang"), col("unit"), col("embedding"))
+      .localCheckpoint()
+  }
 
   /** The margin-mining tail shared by q121 (exhaustive pair block) and
     * q125 (IVF-candidate pair block): kNN averages as keyed windows over
@@ -678,32 +656,26 @@ object Retrieval {
         expr("CASE WHEN n_docs = 0 THEN NULL ELSE CAST(dl_sum AS DOUBLE) / CAST(n_docs AS DOUBLE) END").as("avgdl")
       )
 
-  private val bm25Cache = new SessionCache[(DataFrame, DataFrame)]()
-
   /** Resolve the (postings, 1-row consts) pair: session cache → persisted
     * bucketed table (when `graft.bm25.indexDir` is set and the sidecar
     * matches the current documents fingerprint — a stale index is never
     * served) → in-session build staged off one tokenize pass.
     */
-  private def resolveBm25(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bm25Cache.getOrBuild(spark, dir) {
-      val persisted = spark.conf
-        .getOption(Bm25IndexDirConf)
-        .filter(_.nonEmpty)
-        .flatMap { ix =>
-          val path = bm25Path(ix, dir)
-          Similarity
-            .resolvePersistedFor(spark, docSource(spark, dir), "doc_id", bm25Table(dir), path, bm25Spec)
-            .map(postings => (postings, bm25ConstsFrom(Tables.parquet(spark, bm25StatsPath(path))).localCheckpoint()))
-        }
-      persisted.getOrElse {
-        val tok = bm25TokFrame(docSource(spark, dir)).localCheckpoint()
-        (bm25PostingsOf(tok).localCheckpoint(), bm25ConstsFrom(bm25StatsSliceOf(tok)).localCheckpoint())
+  private val resolveBm25 = Stage("q122_build") { (spark, dir) =>
+    val persisted = spark.conf
+      .getOption(Bm25IndexDirConf)
+      .filter(_.nonEmpty)
+      .flatMap { ix =>
+        val path = bm25Path(ix, dir)
+        Similarity
+          .resolvePersistedFor(spark, docSource(spark, dir), "doc_id", bm25Table(dir), path, bm25Spec)
+          .map(postings => (postings, bm25ConstsFrom(Tables.parquet(spark, bm25StatsPath(path))).localCheckpoint()))
       }
+    persisted.getOrElse {
+      val tok = bm25TokFrame(docSource(spark, dir)).localCheckpoint()
+      (bm25PostingsOf(tok).localCheckpoint(), bm25ConstsFrom(bm25StatsSliceOf(tok)).localCheckpoint())
     }
-
-  /** Force the index build (bench phase hook — mirrors buildLshIndex). */
-  def buildBm25Index(spark: SparkSession, dir: String): Unit = { resolveBm25(spark, dir); () }
+  }
 
   /** Materialize the BM25 index under `indexDir` with the shared ANN-family
     * contract: idempotent ([[Similarity.Current]] on a matching sidecar),
@@ -734,7 +706,7 @@ object Retrieval {
       table,
       path,
       bm25Spec,
-      invalidate = () => bm25Cache.invalidate(spark, dir),
+      invalidate = () => resolveBm25.invalidate(spark, dir),
       computeDeltaRows = delta => bm25PostingsOf(tokOf(delta)),
       rebuild = () => {
         Similarity.deletePath(spark, statsDir)
@@ -767,7 +739,7 @@ object Retrieval {
       bm25Table(dir),
       path,
       bm25Spec,
-      () => bm25Cache.invalidate(spark, dir)
+      () => resolveBm25.invalidate(spark, dir)
     )
   }
 

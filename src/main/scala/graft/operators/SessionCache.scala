@@ -5,7 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Session-scoped build-once artifact cache, keyed by (session, data dir):
   * a built artifact (ANN index, verified pair graph) outlives the query that
   * built it and is shared by every later call in the same session — the
-  * "build once, query many" shape indexes exist for. Entries strongly retain
+  * "build once, query many" shape indexes exist for. Its callers are the
+  * named [[Stage]]s (one cache each) and the two ANN index caches keyed by
+  * `dir@<profile>` in Similarity, which a dir-keyed stage would serve for
+  * the wrong profile. Entries strongly retain
   * their session, so they are swept once the session's context is stopped
   * (checked on every access) — a static map that never evicted would pin
   * every historical session and its checkpoint blocks for the JVM lifetime.

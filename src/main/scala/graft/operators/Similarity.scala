@@ -1160,20 +1160,20 @@ object Similarity {
       i
     }
 
-  private val pqIndexCache = new SessionCache[(Array[Array[Array[Double]]], DataFrame)]
-  private val plantedPqCache = new SessionCache[(Array[Array[Array[Double]]], DataFrame)]
+  private val pqIndex = Stage("q75_build") { (spark, dir) =>
+    readPersistedPq(spark, dir).getOrElse(
+      computePqIndexFrom(spark, Tables.embeddings(spark, dir))
+    )
+  }
+  private val plantedPqIndex =
+    Stage("q75_planted_index")((spark, dir) => computePqIndexFrom(spark, plantedCorpus(spark, dir)))
 
   /** Build (or fetch) the PQ index: trained codebooks + the (vec_id, code)
     * table — 8 bytes of code per corpus vector, the whole point. Same
     * resolution order as LSH/IVF: session cache → persisted table (current
     * sidecar only) → train + encode.
     */
-  def buildPqIndex(spark: SparkSession, dir: String): (Array[Array[Array[Double]]], DataFrame) =
-    pqIndexCache.getOrBuild(spark, dir) {
-      readPersistedPq(spark, dir).getOrElse(
-        computePqIndexFrom(spark, Tables.embeddings(spark, dir))
-      )
-    }
+  def buildPqIndex(spark: SparkSession, dir: String): (Array[Array[Array[Double]]], DataFrame) = pqIndex(spark, dir)
 
   private def computePqIndexFrom(
       spark: SparkSession,
@@ -1224,9 +1224,7 @@ object Similarity {
   /** q75 on the planted clustered corpus — the recall yardstick. */
   def plantedPqTopK(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    val (books, codes) = plantedPqCache.getOrBuild(spark, dir) {
-      computePqIndexFrom(spark, plantedCorpus(spark, dir))
-    }
+    val (books, codes) = plantedPqIndex(spark, dir)
     pqTopKFrom(spark, plantedQueries(spark, dir), books, codes, unitCorpus(plantedCorpus(spark, dir)))
   }
 
@@ -1253,10 +1251,13 @@ object Similarity {
   // past it only helps cluster-free corpora, where the `quality` profile
   // is the documented path.
   // ---------------------------------------------------------------------------
-  private val ivfPqCache =
-    new SessionCache[(Array[Array[Double]], Array[Array[Array[Double]]], DataFrame)]
-  private val plantedIvfPqCache =
-    new SessionCache[(Array[Array[Double]], Array[Array[Array[Double]]], DataFrame)]
+  private val ivfPqIndex = Stage("q76_build") { (spark, dir) =>
+    readPersistedIvfPq(spark, dir).getOrElse(
+      computeIvfPqIndexFrom(spark, Tables.embeddings(spark, dir))
+    )
+  }
+  private val plantedIvfPqIndex =
+    Stage("q76_planted_index")((spark, dir) => computeIvfPqIndexFrom(spark, plantedCorpus(spark, dir)))
 
   private def computeIvfPqIndexFrom(
       spark: SparkSession,
@@ -1284,12 +1285,7 @@ object Similarity {
   def buildIvfPqIndex(
       spark: SparkSession,
       dir: String
-  ): (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) =
-    ivfPqCache.getOrBuild(spark, dir) {
-      readPersistedIvfPq(spark, dir).getOrElse(
-        computeIvfPqIndexFrom(spark, Tables.embeddings(spark, dir))
-      )
-    }
+  ): (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = ivfPqIndex(spark, dir)
 
   /** Materialize the composed index: the (vec_id, cluster, code) table
     * BUCKETED ON CLUSTER — a cold session's probe join reads only the
@@ -1307,7 +1303,7 @@ object Similarity {
       table,
       path,
       ivfPqSpec,
-      invalidate = () => ivfPqCache.invalidate(spark, dir),
+      invalidate = () => ivfPqIndex.invalidate(spark, dir),
       computeDeltaRows = delta =>
         ivfPqRowsFor(spark, delta, readCentroidsAt(spark, centsPath), readBooksAt(spark, booksPath)),
       rebuild = () => {
@@ -1385,9 +1381,7 @@ object Similarity {
   /** q76 on the planted clustered corpus — the recall yardstick. */
   def plantedIvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    val (cents, books, index) = plantedIvfPqCache.getOrBuild(spark, dir) {
-      computeIvfPqIndexFrom(spark, plantedCorpus(spark, dir))
-    }
+    val (cents, books, index) = plantedIvfPqIndex(spark, dir)
     ivfPqTopKFrom(
       spark,
       plantedQueries(spark, dir),
@@ -1473,26 +1467,21 @@ object Similarity {
   // top-10 stays within-cluster). Everything below is expression-level and
   // deterministic: one broadcast join of G center rows onto the corpus.
   // ---------------------------------------------------------------------------
-  private val plantedCache = new SessionCache[DataFrame]
-  private val plantedLshCache = new SessionCache[DataFrame]
-  private val plantedIvfCache = new SessionCache[(Array[Array[Double]], DataFrame)]
-
   /** Derived clustered corpus (vec_id, embedding: array<double>). */
-  def plantedCorpus(spark: SparkSession, dir: String): DataFrame =
-    plantedCache.getOrBuild(spark, dir) {
-      val base = withUnit(Tables.balanced(Tables.embeddings(spark, dir)), "embedding", "u")
-        .select(col("vec_id"), col("u"))
-      val n = base.count()
-      val g = math.max(4L, math.min(64L, n / 64L))
-      val centers = base.filter(col("vec_id") < g).select(col("vec_id").as("cid"), col("u").as("cu"))
-      base
-        .withColumn("cid", pmod(col("vec_id"), lit(g)))
-        .join(broadcast(centers), "cid")
-        // 3e-1 not 0.3: decimal-point literals are DECIMAL in Spark SQL text
-        .withColumn("embedding", expr("zip_with(cu, u, (c, x) -> c + 3e-1 * x)"))
-        .select(col("vec_id"), col("embedding"))
-        .localCheckpoint()
-    }
+  private[graft] val plantedCorpus = Stage("q35_planted") { (spark, dir) =>
+    val base = withUnit(Tables.balanced(Tables.embeddings(spark, dir)), "embedding", "u")
+      .select(col("vec_id"), col("u"))
+    val n = base.count()
+    val g = math.max(4L, math.min(64L, n / 64L))
+    val centers = base.filter(col("vec_id") < g).select(col("vec_id").as("cid"), col("u").as("cu"))
+    base
+      .withColumn("cid", pmod(col("vec_id"), lit(g)))
+      .join(broadcast(centers), "cid")
+      // 3e-1 not 0.3: decimal-point literals are DECIMAL in Spark SQL text
+      .withColumn("embedding", expr("zip_with(cu, u, (c, x) -> c + 3e-1 * x)"))
+      .select(col("vec_id"), col("embedding"))
+      .localCheckpoint()
+  }
 
   private def plantedQueries(spark: SparkSession, dir: String): DataFrame =
     queriesOf(plantedCorpus(spark, dir))
@@ -1509,12 +1498,11 @@ object Similarity {
     * operating point that profile is calibrated for, and the published
     * planted floors/curves must not move when a session flips profiles.
     */
-  private[operators] def buildPlantedLshIndex(spark: SparkSession, dir: String): DataFrame =
-    plantedLshCache.getOrBuild(spark, dir) {
-      graft.functions.VecFunctions.install(spark)
-      installPlaneBuckets(spark, Fast)
-      withBuckets(unitCorpus(plantedCorpus(spark, dir)), "vb", bsName = "cbs").localCheckpoint()
-    }
+  private[operators] val plantedLshIndex = Stage("q35_planted_index") { (spark, dir) =>
+    graft.functions.VecFunctions.install(spark)
+    installPlaneBuckets(spark, Fast)
+    withBuckets(unitCorpus(plantedCorpus(spark, dir)), "vb", bsName = "cbs").localCheckpoint()
+  }
 
   /** q35's pipeline on the planted corpus; `extra` < 0 takes the session
     * conf. Same index, same probe predicate — only the data differs.
@@ -1523,7 +1511,7 @@ object Similarity {
     graft.functions.VecFunctions.install(spark)
     installPlaneBuckets(spark, Fast)
     val m = if (extra < 0) lshExtraProbes(spark, Fast) else math.min(extra, Fast.lshPlanes)
-    topKRanked(lshCandidates(plantedQueries(spark, dir), buildPlantedLshIndex(spark, dir), m))
+    topKRanked(lshCandidates(plantedQueries(spark, dir), plantedLshIndex(spark, dir), m))
   }
 
   /** LSH candidate count on the planted corpus — the measured scanned
@@ -1532,22 +1520,21 @@ object Similarity {
   def plantedLshCandidateCount(spark: SparkSession, dir: String, extra: Int): Long = {
     graft.functions.VecFunctions.install(spark)
     installPlaneBuckets(spark, Fast)
-    lshCandidates(plantedQueries(spark, dir), buildPlantedLshIndex(spark, dir), math.min(extra, Fast.lshPlanes))
+    lshCandidates(plantedQueries(spark, dir), plantedLshIndex(spark, dir), math.min(extra, Fast.lshPlanes))
       .count()
   }
 
-  private def buildPlantedIvf(spark: SparkSession, dir: String): (Array[Array[Double]], DataFrame) =
-    plantedIvfCache.getOrBuild(spark, dir) {
-      graft.functions.VecFunctions.install(spark)
-      computeIvfIndexFrom(spark, plantedCorpus(spark, dir))
-    }
+  private val plantedIvfIndex = Stage("q36_planted_index") { (spark, dir) =>
+    graft.functions.VecFunctions.install(spark)
+    computeIvfIndexFrom(spark, plantedCorpus(spark, dir))
+  }
 
   /** q36's pipeline on the planted corpus; `nprobe` < 1 takes the conf.
     * Fast-profile geometry, same pinning rationale as the planted LSH eval.
     */
   def plantedIvfTopK(spark: SparkSession, dir: String, nprobe: Int = -1): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    val (cents, corpus) = buildPlantedIvf(spark, dir)
+    val (cents, corpus) = plantedIvfIndex(spark, dir)
     val np = if (nprobe < 1) ivfNprobe(spark, Fast) else math.min(nprobe, C)
     ivfTopKFrom(spark, plantedQueries(spark, dir), cents, corpus, np)
   }
@@ -1555,7 +1542,7 @@ object Similarity {
   /** IVF probed-candidate count on the planted corpus (scan fraction). */
   def plantedIvfCandidateCount(spark: SparkSession, dir: String, nprobe: Int): Long = {
     graft.functions.VecFunctions.install(spark)
-    val (cents, corpus) = buildPlantedIvf(spark, dir)
+    val (cents, corpus) = plantedIvfIndex(spark, dir)
     val fn = installCentroidRanks(spark, cents)
     val probes = plantedQueries(spark, dir)
       .withColumn("qraw_d", expr(toDouble("qraw")))
@@ -2003,7 +1990,7 @@ object Similarity {
       pqTable(dir),
       pqPath(indexDir, dir),
       pqSpec,
-      () => pqIndexCache.invalidate(spark, dir)
+      () => pqIndex.invalidate(spark, dir)
     )
 
   def compactIvfPqIndex(spark: SparkSession, dir: String, indexDir: String): Boolean =
@@ -2013,7 +2000,7 @@ object Similarity {
       ivfPqTable(dir),
       ivfPqPath(indexDir, dir),
       ivfPqSpec,
-      () => ivfPqCache.invalidate(spark, dir)
+      () => ivfPqIndex.invalidate(spark, dir)
     )
 
   /** Shared persist orchestration for every index family: [[Current]] on a
@@ -2212,7 +2199,7 @@ object Similarity {
       table,
       path,
       pqSpec,
-      invalidate = () => pqIndexCache.invalidate(spark, dir),
+      invalidate = () => pqIndex.invalidate(spark, dir),
       computeDeltaRows = delta => pqCodesFor(spark, delta, readBooksAt(spark, booksPath)),
       rebuild = () => {
         deletePath(spark, booksPath)

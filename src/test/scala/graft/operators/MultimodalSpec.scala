@@ -654,7 +654,7 @@ class MultimodalSpec extends SparkSpec {
     assert(capped(leakTrain) === ((1L, capped(leakTrain)._2, leakEval)) && capped(leakTrain)._2 <= 6L)
     // the uncapped screen flags the boilerplate too — and the capped
     // flagged set is a subset of it with identical ledger rows
-    val bands = Multimodal.imageBandsCached(spark, dir)
+    val bands = Multimodal.imageBands(spark, dir)
     val uncapped = Multimodal
       .imageDecontamFrom(bands, None)
       .collect()
@@ -666,7 +666,7 @@ class MultimodalSpec extends SparkSpec {
     // sf0.001 has no hot buckets: capped == uncapped on the real corpus
     val c0 = Multimodal.q178ImageDecontam(spark, sfDir).collect().map(_.toSeq).toSet
     val u0 = Multimodal
-      .imageDecontamFrom(Multimodal.imageBandsCached(spark, sfDir), None)
+      .imageDecontamFrom(Multimodal.imageBands(spark, sfDir), None)
       .collect()
       .map(_.toSeq)
       .toSet

@@ -47,17 +47,17 @@ class StreamingMediaFpsSpec extends SparkSpec {
     def assertServedEqualsBatch(stage: String): Unit = {
       assert(
         canon(StreamingMediaFps.fpTable(spark, stateDir, "video")) ===
-          canon(Multimodal.videoFpsRawCached(spark, dataDir)),
+          canon(Multimodal.videoFpsRaw(spark, dataDir)),
         s"$stage: video fp table must equal the batch stage"
       )
       assert(
         canon(StreamingMediaFps.fpTable(spark, stateDir, "audio")) ===
-          canon(Multimodal.audioFpsRawCached(spark, dataDir)),
+          canon(Multimodal.audioFpsRaw(spark, dataDir)),
         s"$stage: audio fp table must equal the batch stage"
       )
       assert(
         canon(StreamingMediaFps.bandTable(spark, stateDir)) ===
-          canon(Multimodal.imageBandsCached(spark, dataDir)),
+          canon(Multimodal.imageBands(spark, dataDir)),
         s"$stage: image band table must round-trip the hex encode exactly"
       )
       assert(
