@@ -27,11 +27,14 @@ object SelfCheck {
   private def pairSet(df: DataFrame, a: String, b: String): DataFrame =
     df.select(col(a).cast("long").as("pa"), col(b).cast("long").as("pb"))
 
-  def run(spark: SparkSession, sfDir: String): Seq[(String, Result)] = {
+  /** Every check, or only those of the queries in `names` when it is
+    * non-empty (checks are keyed by query name).
+    */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String]): Seq[(String, Result)] = {
     graft.functions.VecFunctions.install(spark)
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Result)]
     def check(name: String)(body: => Result): Unit =
-      out += name -> (try body
+      if (names.isEmpty || names.contains(name)) out += name -> (try body
       catch {
         case e: Throwable =>
           Result(s"ERRORED: ${String.valueOf(e.getMessage).linesIterator.find(_.trim.nonEmpty).getOrElse("")}", -1.0, -1L, pass = false)
@@ -231,7 +234,6 @@ object SelfCheck {
     // set the banding surfaces per run.
     check("q113_neardup_contamination") {
       val rep = operators.Dedup.q113NeardupContamination(spark, sfDir).localCheckpoint()
-      val n = rep.count()
       // exact cross-split near-dup pairs, re-derived from raw text and the
       // q49 md5 coin independently of the query's code path (including an
       // inline re-spelling of the coin — the q107 tautology rule); token

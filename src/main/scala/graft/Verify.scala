@@ -7,8 +7,8 @@ import java.nio.file.{Files, Paths}
   *   sbt "runMain graft.Verify <sfDir> <outDir> [queryName...]"
   *   python3 tools/check_oracle.py <outDir> <sfDir>
   *
-  * Named queries restrict the dump (and oracle_sql.json) to those queries
-  * and skip the selfcheck pass — the quick loop for one query. */
+  * Named queries restrict the dump, oracle_sql.json and selfcheck.json to
+  * those queries — the quick loop for one query. */
 object Verify {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
@@ -65,18 +65,17 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     // Data-derived pass/fail for the no-oracle queries (SelfCheck): gives
     // the driver a numeric gate where DuckDB can't express the semantics.
-    if (named.isEmpty) {
-      val selfJson = SelfCheck
-        .run(spark, sfDir)
-        .map { case (name, r) =>
-          // Locale.ROOT: a comma-decimal default locale would emit 0,997 —
-          // invalid JSON — and crash the driver's gate instead of reporting
-          s"${q(name)}: {${q("check")}: ${q(r.check)}, ${q("metric")}: ${String.format(java.util.Locale.ROOT, "%.6f", Double.box(r.metric))}, " +
-            s"${q("violations")}: ${r.violations}, ${q("pass")}: ${r.pass}}"
-        }
-        .mkString("{", ",", "}")
-      Files.writeString(Paths.get(s"$outDir/selfcheck.json"), selfJson)
-    }
+    // Always written, so a stale file from an earlier run never survives.
+    val selfJson = SelfCheck
+      .run(spark, sfDir, named)
+      .map { case (name, r) =>
+        // Locale.ROOT: a comma-decimal default locale would emit 0,997 —
+        // invalid JSON — and crash the oracle gate's json.load instead of reporting
+        s"${q(name)}: {${q("check")}: ${q(r.check)}, ${q("metric")}: ${String.format(java.util.Locale.ROOT, "%.6f", Double.box(r.metric))}, " +
+          s"${q("violations")}: ${r.violations}, ${q("pass")}: ${r.pass}}"
+      }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/selfcheck.json"), selfJson)
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 import scala.jdk.CollectionConverters._

@@ -14,9 +14,6 @@ import java.time.temporal.ChronoUnit
   * production entry ([[CronMain]]) passes the system clock. Each tick runs
   * the full batch pipeline — the scheduling layer stays outside the Spark
   * plan, exactly as cron stays outside the reference's `main.py`.
-  * (`streaming.StreamingRollup` offers the Spark-native alternative where
-  * the engine owns the cadence via `Trigger.ProcessingTime`; this module is
-  * the operational parity path.)
   */
 object Scheduler {
 

@@ -1069,21 +1069,16 @@ object Dedup {
   // ---------------------------------------------------------------------------
   /** Candidate pairs touching >= 1 delta doc: the delta's band keys probe
     * the full bucket table, so new-new pairs surface too (both directions —
-    * least/greatest + distinct canonicalizes). Shared by the q108 batch
-    * delta and the streaming maintainer so the two spec-pinned-equal paths
-    * cannot drift.
-    */
-  /** Delta-probes-index candidate pairs, with the verify's implied
+    * least/greatest + distinct canonicalizes), with the verify's implied
     * SIZE-RATIO conjunct applied before the distinct (j <= min(sz)/max(sz),
     * so a >= 0.8-jaccard edge needs sizes within 0.8x — the q30/q113 prune
     * discipline; sz rides in the bucket rows). Deliberately NOT a lang
     * equi-conjunct here: an equality between the two sides would join-key
-    * lang and break the persisted index's bucketed-on-(band, key) layout
-    * satisfying the join distribution (DedupSpec pins the probe plan to at
-    * most one Exchange). Semantics-free: every removed pair fails the
-    * verify.
+    * lang, and a bucket store laid out on (band, key) would no longer
+    * satisfy the join distribution. Semantics-free: every removed pair
+    * fails the verify.
     */
-  private[graft] def deltaCandidates(newBuckets: DataFrame, allBuckets: DataFrame): DataFrame = {
+  private def deltaCandidates(newBuckets: DataFrame, allBuckets: DataFrame): DataFrame = {
     // the size-ratio prune hard-requires sz on BOTH sides: a bucket source
     // without the column (e.g. a pre-sz persisted index table) would fail
     // the analyzer confusingly, and a null sz would silently DROP candidate
@@ -1113,16 +1108,21 @@ object Dedup {
       .distinct()
   }
 
-  /** Apply a delta to an existing label table. `t` is the full signature
-    * frame (old + new docs), `isNew` marks the delta, `oldLabels` is the
-    * (doc_id, cluster) state from the previous run. Returns the same
-    * (doc_id, cluster, cluster_size) contract as clustersFrom.
+  /** Apply a delta to an existing label table: the delta's bucket rows
+    * `newBuckets` probe `allBuckets` (old + new docs, both [[bandBuckets]]
+    * frames), the candidates verify against the token sets in `t`, and the
+    * verified edges repair `oldLabels`, the (doc_id, cluster) state from
+    * the previous run. Returns the same (doc_id, cluster, cluster_size)
+    * contract as clustersFrom. q108 and the streaming maintainer both run
+    * exactly this.
     */
-  private[operators] def clustersApply(t: DataFrame, isNew: Column, oldLabels: DataFrame): DataFrame = {
-    val allBuckets = bandBuckets(t.select(col("doc_id"), col("sig"), col("sz")))
-    val newBuckets = bandBuckets(t.filter(isNew).select(col("doc_id"), col("sig"), col("sz")))
+  private[graft] def clustersApply(
+      t: DataFrame,
+      newBuckets: DataFrame,
+      allBuckets: DataFrame,
+      oldLabels: DataFrame
+  ): DataFrame =
     applyEdgesToLabels(verifyEdges(t, deltaCandidates(newBuckets, allBuckets)), oldLabels)
-  }
 
   /** Row count up to which a frame counts as driver-sized: the propagation
     * loop broadcasts a frontier this small, and the label repair collects a
@@ -1132,10 +1132,9 @@ object Dedup {
 
   /** The label-repair half of the incremental path: merge a verified edge
     * frame (every edge touches >= 1 unlabeled-or-new doc) into an existing
-    * label table via the contracted-graph propagation. Shared by the q108
-    * batch delta and the streaming maintainer.
+    * label table via the contracted-graph propagation.
     */
-  private[graft] def applyEdgesToLabels(edges: DataFrame, oldLabels: DataFrame): DataFrame = {
+  private def applyEdgesToLabels(edges: DataFrame, oldLabels: DataFrame): DataFrame = {
     // contract: old clustered docs -> their label; everything else -> itself
     val la = oldLabels.select(col("doc_id").as("doc_a"), col("cluster").as("la"))
     val lb = oldLabels.select(col("doc_id").as("doc_b"), col("cluster").as("lb"))
@@ -1182,36 +1181,6 @@ object Dedup {
     bandBuckets(sigTokenFrame(spark, dir).select(col("doc_id"), col("sig"), col("sz"))).localCheckpoint()
   }
 
-  /** Persist the corpus LSH bucket table BUCKETED on the (band, key) probe
-    * key — the 100 TB layout the scale notes promise, shipped: a delta
-    * probe against the persisted index then plans with the INDEX side
-    * scanning shuffle-free (its bucketed layout already satisfies the join
-    * distribution; only the delta-sized side exchanges — DedupSpec pins
-    * exactly one hashpartitioning Exchange in the probe plan). Rebuild
-    * cadence is the ann-build pattern (periodic full rewrite); the
-    * streaming maintainer's slice store carries the between-rebuild deltas.
-    */
-  def persistBucketIndex(
-      spark: SparkSession,
-      dir: String,
-      table: String,
-      path: String,
-      buckets: Int = 32
-  ): Unit =
-    graft.sources.Layouts.writeBucketed(bucketFrame(spark, dir), table, Seq("band", "key"), buckets, path)
-
-  /** Candidate pairs for a delta probing the PERSISTED bucket index —
-    * [[deltaCandidates]] with the big side supplied by the bucketed table.
-    */
-  def deltaCandidatesAgainstIndex(spark: SparkSession, table: String, newBuckets: DataFrame): DataFrame =
-    deltaCandidates(newBuckets, spark.table(table))
-
-  /** The delta's bucket rows for a probe — bandBuckets over the signature
-    * frame restricted to `doc_id > pivot` (the ingest-watermark shape).
-    */
-  def deltaBucketsAbove(spark: SparkSession, dir: String, pivot: Long): DataFrame =
-    bucketFrame(spark, dir).filter(col("doc_id") > pivot)
-
   /** q108's ingest pivot at the 90 % id mark — a deterministic stand-in
     * for the ingest watermark separating "already clustered" (the bulk
     * state, mined once and session-cached) from "this tick's delta" (the
@@ -1251,13 +1220,12 @@ object Dedup {
     val t = sigTokenFrame(spark, dir)
     val pivot = incrPivot(spark, dir)
     val oldLabels = incrOldLabels(spark, dir)
-    // same semantics as clustersApply (a per-doc delta's bandBuckets ==
-    // a doc_id filter of the corpus bucket table), but probing the
-    // session-persisted bucket index instead of re-exploding signatures —
-    // the read path an ingest tick actually runs against persisted state
+    // a per-doc delta's bandBuckets == a doc_id filter of the corpus bucket
+    // table, so the delta probes the session-persisted bucket index instead
+    // of re-exploding signatures — the read path an ingest tick runs
+    // against persisted state
     val allBuckets = bucketFrame(spark, dir)
-    val newBuckets = allBuckets.filter(col("doc_id") > pivot)
-    applyEdgesToLabels(verifyEdges(t, deltaCandidates(newBuckets, allBuckets)), oldLabels)
+    clustersApply(t, allBuckets.filter(col("doc_id") > pivot), allBuckets, oldLabels)
   }
 
   /** Oracle: q61's recursive-CTE cluster labels left-joined onto documents,
@@ -1612,26 +1580,15 @@ object Dedup {
   private val clusterSources = Stage("q142_sources") { (spark, dir) =>
     val labels = lshClusters(spark, dir).select(col("doc_id"), col("cluster"))
     val src = Tables.balanced(Tables.documents(spark, dir)).select(col("doc_id"), col("source"))
-    clusterSourcesOver(labels, src).localCheckpoint()
-  }
-
-  /** The rollup over ANY (doc_id, cluster) label frame and (doc_id,
-    * source) attribution frame — shared by the batch cache above and
-    * [[graft.streaming.StreamingDupClusters]]'s maintained-state serves
-    * (labels off the cluster maintainer, attribution off the corpus
-    * maintainer's stage table).
-    */
-  private[graft] def clusterSourcesOver(labels: DataFrame, src: DataFrame): DataFrame =
     labels
       .join(src, "doc_id")
       .groupBy(col("cluster"), col("source"))
       .agg(count(lit(1)).as("n_docs"))
+      .localCheckpoint()
+  }
 
-  def q142SyndicationMatrix(spark: SparkSession, dir: String): DataFrame =
-    q142MatrixOver(clusterSources(spark, dir))
-
-  /** q142's pair rollup over ANY (cluster, source, n_docs) frame. */
-  private[graft] def q142MatrixOver(cs: DataFrame): DataFrame = {
+  def q142SyndicationMatrix(spark: SparkSession, dir: String): DataFrame = {
+    val cs = clusterSources(spark, dir)
     val a = cs.select(col("cluster"), col("source").as("source_a"), col("n_docs").as("da"))
     val b = cs.select(col("cluster"), col("source").as("source_b"), col("n_docs").as("db"))
     a.join(b, Seq("cluster"))
@@ -1680,27 +1637,15 @@ object Dedup {
   private val SYND_DAMP_MICRO = 850000L
   private val SYND_ITERS = 10
 
-  /** The symmetric edge frame plus the node list, both |sources|-bounded
-    * and session-cached — the dashboard re-reads the ranking against the
-    * same corpus snapshot, so the warm path is two bounded collects.
+  /** The symmetric shared-cluster edge weights plus the node list, both
+    * |sources|-bounded and session-cached, the nodes riding the same frame
+    * as w-NULL rows so ONE frame carries the whole graph — the dashboard
+    * re-reads the ranking against the same corpus snapshot, so the warm
+    * path is two bounded collects.
     */
   private val syndGraph = Stage("q185_graph") { (spark, dir) =>
-    syndGraphOf(
-      clusterSources(spark, dir),
-      Tables.balanced(Tables.documents(spark, dir)).select(col("source"))
-    ).localCheckpoint()
-  }
-
-  def q185SyndicationRank(spark: SparkSession, dir: String): DataFrame =
-    q185RankOfGraph(spark, syndGraph(spark, dir))
-
-  /** The bounded syndication graph over ANY (cluster, source, n_docs)
-    * frame and (source) attribution frame: symmetric shared-cluster edge
-    * weights, with the node list riding the same frame as w-NULL rows so
-    * ONE frame carries the whole graph. Shared by the batch cache above
-    * and the maintained-state serve.
-    */
-  private[graft] def syndGraphOf(cs: DataFrame, sources: DataFrame): DataFrame = {
+    val cs = clusterSources(spark, dir)
+    val sources = Tables.balanced(Tables.documents(spark, dir)).select(col("source"))
     val edges = cs
       .select(col("cluster"), col("source").as("u"))
       .join(cs.select(col("cluster"), col("source").as("s")), Seq("cluster"))
@@ -1711,13 +1656,14 @@ object Dedup {
       .select(col("source").as("u"), lit(null).cast("string").as("s"), lit(null).cast("long").as("w"))
       .distinct()
       .unionByName(edges)
+      .localCheckpoint()
   }
 
-  /** The T-iteration integer-micro PageRank over a bounded graph frame —
-    * the driver-side tail both the batch query and the serve share.
+  /** The T-iteration integer-micro PageRank over the bounded graph, on the
+    * driver.
     */
-  private[graft] def q185RankOfGraph(spark: SparkSession, graph: DataFrame): DataFrame = {
-    val rows = graph.collect() // <= |sources|^2 + |sources| rows by construction
+  def q185SyndicationRank(spark: SparkSession, dir: String): DataFrame = {
+    val rows = syndGraph(spark, dir).collect() // <= |sources|^2 + |sources| rows by construction
     val edgeRows = rows.filter(!_.isNullAt(2)).map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val nodes = rows.filter(_.isNullAt(2)).map(_.getString(0)).sorted
     // greatest(N,1) keeps the constants well-defined on an empty corpus
@@ -2049,11 +1995,14 @@ object Dedup {
   private[graft] def winnowFingerprints(spark: SparkSession, dir: String): DataFrame =
     winnowPositions(spark, dir).select(col("doc_id"), col("fp")).distinct()
 
-  /** The selected (doc_id, wmin) winnow encodings over ANY (doc_id, text)
-    * frame — the shared core of the fp-set view (q144/q152/streaming) and
-    * the position-carrying view (q162's run profile).
+  /** Position-carrying fingerprints over ANY (doc_id, text) frame: the
+    * selected gram's position decodes from the enc suffix (1e6 - pos, the
+    * same fixed-width field the rightmost-min trick encodes), so the run
+    * profile costs no extra pass. Fingerprinting is per-doc LOCAL (no
+    * cross-doc state), so the streaming maintainer winnows each delta with
+    * the same code and the union of slices IS the batch table.
     */
-  private def winnowSelectedEnc(docs: DataFrame): DataFrame = {
+  private[graft] def winnowFingerprintPositions(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos")).rowsBetween(0, WIN_W - 1)
     docs
@@ -2075,34 +2024,16 @@ object Dedup {
       .select(col("doc_id"), col("m"), col("g.enc").as("enc"), col("g.pos").as("pos"))
       .withColumn("wmin", min(col("enc")).over(w))
       .filter(col("pos") <= greatest(col("m") - WIN_W + 1, lit(1)))
-      .select(col("doc_id"), col("wmin"))
-  }
-
-  /** Winnowing over ANY (doc_id, text) frame — fingerprinting is per-doc
-    * LOCAL (no cross-doc state), so the streaming maintainer winnows each
-    * delta with the same code and the union of slices IS the batch table.
-    */
-  private[graft] def winnowFingerprintsOf(docs: DataFrame): DataFrame =
-    winnowSelectedEnc(docs)
-      .select(col("doc_id"), substring(col("wmin"), 1, 32).as("fp"))
-      .distinct()
-
-  /** Position-carrying fingerprints: the selected gram's position decodes
-    * from the enc suffix (1e6 - pos, the same fixed-width field the
-    * rightmost-min trick encodes), so the run profile costs no extra pass.
-    */
-  private[graft] def winnowFingerprintPositions(docs: DataFrame): DataFrame =
-    winnowSelectedEnc(docs)
       .select(
         col("doc_id"),
         substring(col("wmin"), 1, 32).as("fp"),
         (lit(1000000) - substring(col("wmin"), 33, 7).cast("int")).as("fpos")
       )
       .distinct()
+  }
 
   /** The rare-fingerprint table (MOSS df cap applied) over any fingerprint
-    * frame — shared by the batch q144/q152 and the streaming maintainer's
-    * served reports.
+    * frame — shared by the batch q144/q152.
     */
   private[graft] def winnowRare(fps: DataFrame): DataFrame =
     fps.join(
@@ -2111,13 +2042,10 @@ object Dedup {
       "fp"
     )
 
-  def q144WinnowPairs(spark: SparkSession, dir: String): DataFrame =
-    winnowPairsFrom(winnowFingerprints(spark, dir).localCheckpoint())
-
-  private[graft] def winnowPairsFrom(fps: DataFrame): DataFrame = {
+  def q144WinnowPairs(spark: SparkSession, dir: String): DataFrame = {
     // one fingerprint build feeds the df cap, both pair sides, and the
     // per-doc totals
-    val kept = winnowRare(fps)
+    val kept = winnowRare(winnowFingerprints(spark, dir).localCheckpoint())
     val perDoc = kept.groupBy(col("doc_id")).agg(count(lit(1)).as("n_fp"))
     kept.as("a")
       .join(kept.as("b"), col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
@@ -2196,27 +2124,12 @@ object Dedup {
   // df cap), two narrow rollups. Everything is the q144 plan plus windows
   // over already-bounded frames.
   // ---------------------------------------------------------------------------
-  /** (doc_id, max_run): each doc's longest verbatim run against any
-    * partner — factored over a plain (doc_id, text) frame so the spec can
-    * plant a known shared span and check the measured length against the
-    * SIGMOD'03 winnowing bounds.
-    */
-  private[graft] def verbatimRunsFrom(docs: DataFrame): DataFrame =
-    verbatimRunPairs(docs)
-      .groupBy(col("doc_id"))
-      .agg(max(col("run_len")).as("max_run"))
-
-  /** The island level UNDER the per-doc max: every (doc, partner,
-    * island) verbatim run with its token length — q162 maxes it per doc;
-    * q163 keeps the partner so the runs can be restricted to pairs that
-    * CROSS the train/test split.
-    */
-  private[graft] def verbatimRunPairs(docs: DataFrame): DataFrame =
-    verbatimRunPairsFromFps(winnowFingerprintPositions(docs).localCheckpoint())
-
   /** The islands walk over an ALREADY-BUILT position-carrying fingerprint
-    * frame — the batch path builds it fresh; the streaming maintainer
-    * serves it from its append-only slices (winnowing is per-doc local, so
+    * frame: every (doc, partner, island) verbatim run with its token length
+    * — q162 maxes it per doc; q163 keeps the partner so the runs can be
+    * restricted to pairs that CROSS the train/test split. The batch path
+    * builds the frame fresh; the decontamination serve reads it from the
+    * winnow maintainer's append-only slices (winnowing is per-doc local, so
     * the union of delta slices IS this frame).
     */
   private[graft] def verbatimRunPairsFromFps(fpp: DataFrame): DataFrame = {
@@ -2250,27 +2163,19 @@ object Dedup {
     * positions, itself session-cached: THREE batch consumers rebuilt it
     * per call (q162's profile, the q163_actions composition's run leg, and
     * q182's mask intervals) — it is the next artifact up the winnow chain
-    * a pipeline persists (positions → runs). The streaming maintainers keep their own slice-fed
-    * supplies ([[verbatimRunPairsFromFps]] stays the shared core).
+    * a pipeline persists (positions → runs). The decontamination serve
+    * builds its own off the winnow slices ([[verbatimRunPairsFromFps]]
+    * stays the shared core).
     */
   private[graft] val verbatimRuns = Stage("q162_runs") { (spark, dir) =>
     verbatimRunPairsFromFps(winnowPositions(spark, dir)).localCheckpoint()
   }
 
   def q162VerbatimRunProfile(spark: SparkSession, dir: String): DataFrame =
-    verbatimRunProfileFrom(
-      verbatimRuns(spark, dir),
-      Tables.balanced(Tables.documents(spark, dir)).select(col("doc_id"), col("source"))
-    )
-
-  /** The per-source bucket rollup over a run frame — shared by the batch
-    * q162 and the maintained serve ([[graft.streaming.StreamingWinnow]]).
-    */
-  private[graft] def verbatimRunProfileFrom(runs: DataFrame, src: DataFrame): DataFrame =
-    runs
+    verbatimRuns(spark, dir)
       .groupBy(col("doc_id"))
       .agg(max(col("run_len")).as("max_run"))
-      .join(src, "doc_id")
+      .join(Tables.balanced(Tables.documents(spark, dir)).select(col("doc_id"), col("source")), "doc_id")
       .withColumn(
         "bucket",
         expr(
@@ -3168,11 +3073,8 @@ object Dedup {
   // Oracle: q144's CTE chain through the rare-capped fingerprint table,
   // plus q49's coin and the cross-split equi-join.
   // ---------------------------------------------------------------------------
-  def q152WinnowContamination(spark: SparkSession, dir: String): DataFrame =
-    winnowContaminationFrom(winnowFingerprints(spark, dir).localCheckpoint())
-
-  private[graft] def winnowContaminationFrom(fps: DataFrame): DataFrame = {
-    val kept = winnowRare(fps)
+  def q152WinnowContamination(spark: SparkSession, dir: String): DataFrame = {
+    val kept = winnowRare(winnowFingerprints(spark, dir).localCheckpoint())
       .withColumn("split", Sampling.hashSplitCoin(col("doc_id")))
     kept
       .filter(col("split") === "train")

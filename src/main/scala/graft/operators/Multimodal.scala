@@ -444,8 +444,6 @@ object Multimodal {
     * additionally pins values against a direct JVM recomputation.
     */
   def q39MediaFeatures(spark: SparkSession, dir: String): DataFrame = {
-    val spark0 = spark
-    import spark0.implicits._
     extractFeatures(mediaTable(spark, dir))
       .withColumn(
         "l2",
@@ -541,8 +539,7 @@ object Multimodal {
   }
 
   /** q114's banded mine + exact verify over a staged band table — shared
-    * verbatim by the batch query and the streaming maintainer's served
-    * report. `capDf = Some(n)` is q181's mode: band BUCKETS carried by
+    * verbatim by q114 and q181. `capDf = Some(n)` is q181's mode: band BUCKETS carried by
     * more than n images are excluded from candidate generation (the
     * q115/q175 MOSS rule applied to the bucket join) — the pigeonhole
     * completeness guarantee is deliberately traded for bounded fan-out,
@@ -732,8 +729,7 @@ object Multimodal {
   private[graft] val MEDIA_FP_MAXDF = 100
 
   /** The rare-fingerprint table over any (media_id, fp) frame — the MOSS
-    * df cap shared by q115/q175 (Dedup.winnowRare's exact shape) and the
-    * streaming maintainer's serve path.
+    * df cap shared by q115/q175 (Dedup.winnowRare's exact shape).
     */
   private[graft] def rareMediaFps(inst: DataFrame): DataFrame =
     inst.join(
@@ -781,9 +777,7 @@ object Multimodal {
 
   /** The shared containment pair tail over a (df-capped) fingerprint
     * table: exact fp equi-join, >= 50% containment of the smaller side's
-    * distinct rare fingerprints. Shared verbatim by batch q115/q175 and
-    * the streaming maintainer's served reports, so the two views cannot
-    * drift (the StreamingWinnow discipline).
+    * distinct rare fingerprints. Shared verbatim by q115/q175.
     */
   private[graft] def mediaNeardupFrom(inst: DataFrame, sharedName: String): DataFrame = {
     val nf = inst.groupBy(col("media_id")).agg(count(lit(1)).as("nf"))
@@ -994,28 +988,7 @@ object Multimodal {
   // global aggregates, so each kind emits one all-zero row (shares NULL —
   // CASE-guarded, the ANSI rule) in both engines.
   // ---------------------------------------------------------------------------
-  def q177MediaBoilerplate(spark: SparkSession, dir: String): DataFrame =
-    mediaAuditOver(
-      audioFpsRaw(spark, dir),
-      imageBandInstancesOf(imageBands(spark, dir)),
-      videoFpsRaw(spark, dir)
-    )
-
-  /** q114's (media_id, bands) table exploded to per-bucket instances with
-    * the audit's `band:value` key encoding — one definition for q177,
-    * q183, and the maintained-state serves.
-    */
-  private[graft] def imageBandInstancesOf(bands: DataFrame): DataFrame =
-    bands
-      .select(col("media_id"), posexplode(col("bands")).as(Seq("band", "bv")))
-      .select(col("media_id"), concat(col("band").cast("string"), lit(":"), col("bv").cast("string")).as("fp"))
-
-  /** The audit rollup over ANY three (media_id, fp) instance frames —
-    * shared by batch q177 and [[graft.streaming.StreamingMediaFps]]'s
-    * maintained-state serve.
-    */
-  private[graft] def mediaAuditOver(audio: DataFrame, imageBandInst: DataFrame, video: DataFrame): DataFrame = {
-    val spark = audio.sparkSession
+  def q177MediaBoilerplate(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // ONE unioned instance frame with a kind column, so the df rollup, the
     // grid stats, and the per-item affected counts each run once grouped by
@@ -1024,10 +997,10 @@ object Multimodal {
     // the old shape paid 9 one-row aggregates and 6 broadcast crossJoins).
     // A literal kind spine left-joins the rollups so an empty corpus still
     // emits one all-zero row per kind (shares NULL), the declared contract.
-    val inst = audio
+    val inst = audioFpsRaw(spark, dir)
       .withColumn("kind", lit("audio"))
-      .unionByName(imageBandInst.withColumn("kind", lit("image_bands")))
-      .unionByName(video.withColumn("kind", lit("video")))
+      .unionByName(imageBandInstancesOf(imageBands(spark, dir)).withColumn("kind", lit("image_bands")))
+      .unionByName(videoFpsRaw(spark, dir).withColumn("kind", lit("video")))
     val df = inst.groupBy(col("kind"), col("fp")).agg(count(lit(1)).as("df"))
     val grid = df
       .groupBy(col("kind"))
@@ -1071,6 +1044,15 @@ object Multimodal {
       .orderBy(col("kind"))
   }
 
+  /** q114's (media_id, bands) table exploded to per-bucket instances with
+    * the audit's `band:value` key encoding — one definition for q177 and
+    * q183.
+    */
+  private[graft] def imageBandInstancesOf(bands: DataFrame): DataFrame =
+    bands
+      .select(col("media_id"), posexplode(col("bands")).as(Seq("band", "bv")))
+      .select(col("media_id"), concat(col("band").cast("string"), lit(":"), col("bv").cast("string")).as("fp"))
+
   // ---------------------------------------------------------------------------
   // q183 — media boilerplate LEDGER: the per-KEY drill-down of q177's
   // per-kind aggregate — for each kind the LEDGER_TOP_N hottest
@@ -1095,28 +1077,14 @@ object Multimodal {
   // ---------------------------------------------------------------------------
   private[graft] val LEDGER_TOP_N = 20
 
-  def q183MediaHotLedger(spark: SparkSession, dir: String): DataFrame =
-    hotLedgerOver(
-      audioFpsRaw(spark, dir),
-      imageBandInstancesOf(imageBands(spark, dir)),
-      videoFpsRaw(spark, dir),
-      Tables
-        .balanced(Tables.documents(spark, dir))
-        .select(col("doc_id").as("media_id"), col("source"))
-    )
-
-  /** The ledger rollup over ANY three (media_id, fp) instance frames plus
-    * a (media_id, source) attribution frame — shared by batch q183 and
-    * [[graft.streaming.StreamingMediaFps]]'s maintained-state serve
-    * (whose attribution comes off the corpus maintainer's stage table).
-    */
-  private[graft] def hotLedgerOver(
-      audio: DataFrame,
-      imageBandInst: DataFrame,
-      video: DataFrame,
-      src: DataFrame
-  ): DataFrame = {
+  def q183MediaHotLedger(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val audio = audioFpsRaw(spark, dir)
+    val imageBandInst = imageBandInstancesOf(imageBands(spark, dir))
+    val video = videoFpsRaw(spark, dir)
+    val src = Tables
+      .balanced(Tables.documents(spark, dir))
+      .select(col("doc_id").as("media_id"), col("source"))
     def leg(kind: String, raw: DataFrame): DataFrame = {
       val perSrc = raw.join(src, "media_id").groupBy(col("fp"), col("source")).agg(count(lit(1)).as("cnt"))
       perSrc

@@ -777,9 +777,6 @@ object Similarity {
     cents
   }
 
-  def trainCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    trainCentroidsFrom(Tables.embeddings(spark, dir))
-
   /** Cluster-assigned unit corpus (vec_id, vb, cluster) — the IVF index
     * rows, computed fresh (no cache/persistence resolution; see
     * computeLshIndex for why persist needs this).
@@ -1793,7 +1790,7 @@ object Similarity {
 
   /** The (delta rows, fingerprint-to-commit, new-row count) when the
     * current data is an APPEND-ONLY extension of what `s` indexed — every
-    * already-indexed row still present (same count at vec_id <= s.maxId)
+    * already-indexed row still present (same count at `idCol` <= s.maxId)
     * and at least one new row above it. None for any other change
     * (rewrite, shrink): those need a full rebuild.
     *
@@ -1806,15 +1803,8 @@ object Similarity {
     * a count-preserving in-place EDIT below s.maxId is not detectable
     * from (rows, maxId) — append mode trusts that indexed rows are
     * immutable; keep the default `rebuild` policy when they can mutate.
+    * Any source with a monotone id column (see [[fingerprintOf]]).
     */
-  private def appendOnlyDelta(
-      spark: SparkSession,
-      dir: String,
-      s: Sidecar
-  ): Option[(DataFrame, (Long, Long), Long)] =
-    appendOnlyDeltaFor(Tables.embeddings(spark, dir), "vec_id", s)
-
-  /** Source-generalized append-only delta (see [[fingerprintOf]]). */
   private[operators] def appendOnlyDeltaFor(
       source: DataFrame,
       idCol: String,
@@ -1838,7 +1828,7 @@ object Similarity {
 
   /** The persisted sidecar at `path` iff it matches `spec`'s geometry AND
     * the session opted into append refresh — the precondition for trying
-    * [[appendOnlyDelta]] instead of a rebuild.
+    * [[appendOnlyDeltaFor]] instead of a rebuild.
     */
   private[operators] def appendableSidecar(
       spark: SparkSession,
@@ -1868,7 +1858,7 @@ object Similarity {
       spec: IndexSpec,
       fp: (Long, Long),
       invalidate: () => Unit,
-      onAppend: () => Unit = () => ()
+      onAppend: () => Unit
   ): Unit = {
     deleteSidecar(spark, path)
     invalidate()
@@ -2445,12 +2435,11 @@ object Similarity {
   // 3) — the "where" clause every production vector store has to support
   // alongside similarity. Exact form: pre-filter the corpus, then
   // brute-force rank (oracle-gated — it's q34's plan over the filtered
-  // corpus, and the label predicate reaches the parquet scan). The scale
-  // path is `filteredIvfTopK` below: PRE-filtering the IVF index by label
-  // before the probe join — the candidate set shrinks with predicate
-  // selectivity, and recall vs this exact baseline is what the spec pins.
-  // (Post-filtering the top-k instead would return < k rows under selective
-  // predicates — the classic filtered-ANN failure mode.)
+  // corpus, and the label predicate reaches the parquet scan). A scale path
+  // would PRE-filter the IVF index by label before the probe join — the
+  // candidate set shrinks with predicate selectivity. (Post-filtering the
+  // top-k instead would return < k rows under selective predicates — the
+  // classic filtered-ANN failure mode.)
   // ---------------------------------------------------------------------------
   private val FILTER_LABEL = 3
 
@@ -2480,21 +2469,6 @@ object Similarity {
        |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(cosine, 6) AS cosine
        |FROM ranked WHERE rank <= $K
        |ORDER BY query_id, rank""".stripMargin
-
-  /** IVF-accelerated filtered search: the index rows are label-joined and
-    * pre-filtered BEFORE the probe join. Same contract as q36, restricted
-    * to the predicate's stratum; recall vs q93's exact baseline.
-    */
-  def filteredIvfTopK(spark: SparkSession, dir: String, label: Int): DataFrame = {
-    graft.functions.VecFunctions.install(spark)
-    val prof = annProfile(spark)
-    val (cents, corpus) = buildIvfIndexWith(spark, dir, prof)
-    val labeled = corpus.join(
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("label")),
-      Seq("vec_id")
-    )
-    ivfTopKFrom(spark, queriesDf(spark, dir), cents, labeled.filter(col("label") === label).drop("label"), ivfNprobe(spark, prof))
-  }
 
   // ---------------------------------------------------------------------------
   // q119 — contrastive TRIPLET mining: for each anchor vector, the nearest

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Physical table layouts for shuffle avoidance and partition pruning —
+/** Physical table layouts for shuffle avoidance and small-file compaction —
   * the storage-side half of the 100 TB design (SURVEY §4: the reference
   * leans on Catalyst defaults; a real deployment co-locates its big joins).
   *
@@ -11,12 +11,9 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     same key with the same bucket count plans as a SortMergeJoin with NO
   *     Exchange on either side — the shuffle is paid once at write time and
   *     amortized over every subsequent join/aggregation on that key.
-  *   - **Date-partitioned tables**: `partitionBy(col)` gives directory-level
-  *     partition pruning — a date-range predicate reads only matching
-  *     directories (the 100 TB fact table becomes day-sized scans).
   *
   * Bucket counts should match downstream parallelism (a multiple of
-  * executor-core count); both layouts are plain parquet readable by any
+  * executor-core count); the layout is plain parquet readable by any
   * engine.
   */
 object Layouts {
@@ -54,7 +51,7 @@ object Layouts {
     * first repartitioned on the bucket keys into `buckets` partitions —
     * the same hash the bucketed writer uses — so each append adds AT MOST
     * one file per bucket instead of one per (task, bucket); without this a
-    * frequent append cadence (the streaming index maintainer) multiplies
+    * frequent append cadence (the ingest tick's index refresh) multiplies
     * file counts by core count every tick. Bucket pruning and co-located
     * joins keep working across appends (Spark unions a bucket's files; it
     * inserts a sort above the scan when per-bucket sortedness can no
@@ -74,24 +71,6 @@ object Layouts {
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .saveAsTable(table)
-
-  /** Persist `df` partitioned by `partitionCol` (directory-level pruning). */
-  def writePartitioned(
-      df: DataFrame,
-      partitionCol: String,
-      path: String
-  ): Unit =
-    df.write
-      .mode(SaveMode.Overwrite)
-      .format("parquet")
-      .partitionBy(partitionCol)
-      .parquet(path)
-
-  /** Join two same-key bucketed tables — plans shuffle-free (verified by
-    * LayoutsSpec: zero ShuffleExchange below the join).
-    */
-  def coLocatedJoin(spark: SparkSession, tableA: String, tableB: String, key: String): DataFrame =
-    spark.table(tableA).join(spark.table(tableB), key)
 
   final case class CompactionReport(
       filesBefore: Int,
@@ -136,43 +115,5 @@ object Layouts {
       if (f.getPath.getName.endsWith(".parquet")) { n += 1; bytes += f.getLen }
     }
     (n, bytes)
-  }
-
-  /** Write `df` Z-ORDER-clustered on two integer-like columns: rows are
-    * range-partitioned and sorted by the bit-interleaving of the two
-    * columns' low 16 bits, so each output file covers a compact rectangle
-    * of the (a, b) plane instead of a thin slice of one dimension. Parquet
-    * footer min/max stats on BOTH columns then stay tight per file, and a
-    * 2-D box predicate skips most files — the multi-dimensional data-
-    * skipping technique single-column sorting cannot give (sorting by `a`
-    * leaves every file's `b` range spanning the whole domain).
-    *
-    * The z-value is a write-time-only expression (interpreted HOF fold is
-    * fine off the query hot path); values must be non-negative and fit in
-    * 16 bits for perfect interleaving — callers with wider domains should
-    * rank-normalize first.
-    */
-  def writeZOrdered(
-      df: DataFrame,
-      colA: String,
-      colB: String,
-      path: String,
-      files: Int
-  ): Unit = {
-    import org.apache.spark.sql.functions._
-    df.withColumn(
-        "__z",
-        expr(
-          s"aggregate(sequence(0, 15), 0L, (acc, i) -> " +
-            s"acc | shiftleft(shiftright(cast($colA AS bigint), i) & 1, 2 * i) " +
-            s"| shiftleft(shiftright(cast($colB AS bigint), i) & 1, 2 * i + 1))"
-        )
-      )
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write
-      .mode(SaveMode.Overwrite)
-      .parquet(path)
   }
 }

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The one tick protocol of the incremental maintainers — the slice
   * families ([[StreamingDriftWatch]], [[StreamingSourceSketch]],
@@ -25,9 +24,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *      the grown input, then compact the slice families.
   *
   * Contracts (each load-bearing, spec-pinned via the maintainers):
-  *   - the file stream is a CHANGE SIGNAL only ([[onFileDrop]]); the tick
-  *     re-derives the delta from table state, so a redelivered batch is a
-  *     no-op;
+  *   - the tick re-derives the delta from table state, so re-running a
+  *     tick over input it already covered is a no-op;
   *   - slices are keyed by the delta's FIRST id — a crashed tick's replay
   *     overwrites its own partial slice instead of leaving an overlapping
   *     id range to double-merge, and rewritten tables anti-join the delta
@@ -163,23 +161,4 @@ private[streaming] object SliceMaintainer {
       slice(d.rows, d.lo).write.mode("overwrite").parquet(s"$stateDir/$family/delta_${d.lo}")
       d.n
     }
-
-  /** Run `onBatch` once per micro-batch of a file stream over the parquet
-    * table at `path` — the stream is a change signal only, every
-    * maintainer re-derives its delta from its own state.
-    * `Trigger.AvailableNow` drains what has landed and stops (cron /
-    * entrypoint cadence); a processing-time trigger runs a long-lived
-    * maintainer.
-    */
-  def onFileDrop(spark: SparkSession, path: String, checkpoint: String, trigger: Trigger)(
-      onBatch: => Unit
-  ): StreamingQuery =
-    spark.readStream
-      .schema(graft.core.Tables.parquet(spark, path).schema)
-      .parquet(path)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch((_: DataFrame, _: Long) => onBatch)
-      .start()
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Curation
 
@@ -30,8 +29,7 @@ import graft.operators.Curation
 object StreamingBloomScreen {
 
   /** One maintenance tick; returns the number of delta docs processed
-    * (0 = no-op tick). Callable directly (cron cadence) — `start` wires it
-    * to a file stream.
+    * (0 = no-op tick).
     */
   def tick(spark: SparkSession, dataDir: String, stateDir: String): Long =
     SliceMaintainer.tick(spark, dataDir, stateDir, "shingles", Curation.stagedShingles)
@@ -45,17 +43,5 @@ object StreamingBloomScreen {
     Curation.bloomScreenFrom(
       spark,
       SliceStore.read(spark, s"$stateDir/shingles").localCheckpoint()
-    )
-
-  /** Wire the tick to a file stream over the documents landing path. */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: Long => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_bloom_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
     )
 }

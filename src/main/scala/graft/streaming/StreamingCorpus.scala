@@ -4,7 +4,6 @@ import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.core.{StagedTable, Tables}
@@ -228,16 +227,4 @@ object StreamingCorpus {
       TickOutcome("incremental", n, retro, hi)
     }
   }
-
-  /** Start the maintainer over `docsDir` (parquet drops of documents). */
-  def start(
-      spark: SparkSession,
-      docsDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: TickOutcome => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, docsDir, s"$stateDir/checkpoint", trigger)(
-      onTick(tick(spark, docsDir, stateDir))
-    )
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Importance
 
@@ -30,8 +29,7 @@ import graft.operators.Importance
 object StreamingDriftWatch {
 
   /** One maintenance tick; returns the number of delta docs processed
-    * (0 = no-op tick). Callable directly (cron cadence) — `start` wires it
-    * to a file stream.
+    * (0 = no-op tick).
     */
   def tick(spark: SparkSession, dataDir: String, stateDir: String): Long =
     SliceMaintainer.tick(
@@ -54,21 +52,5 @@ object StreamingDriftWatch {
         .groupBy(col("source"), col("bucket"))
         .agg(sum(col("pn")).as("pn"))
         .localCheckpoint() // one fold feeds per-source and corpus histograms
-    )
-
-  /** Wire the tick to a file stream over the documents landing path —
-    * `Trigger.AvailableNow` drains what has landed and stops; pass a
-    * processing-time trigger for a long-lived watcher. `onTick` sees each
-    * tick's delta count.
-    */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: Long => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_drift_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
     )
 }

@@ -4,22 +4,20 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.core.StagedTable
 import graft.operators.Dedup
 
 /** Live dup-cluster maintenance: keeps a persisted (doc_id, cluster,
   * cluster_size) label table current as document files LAND in `dataDir`,
-  * by running the q108 incremental path (`Dedup.applyEdgesToLabels`) once
-  * per micro-batch — O(delta) per tick, never a corpus re-mine.
+  * by running the q108 incremental path (`Dedup.clustersApply`) once per
+  * tick — O(delta) per tick, never a corpus re-mine.
   *
-  * Same contract as `StreamingIndexer`: the file stream is a CHANGE SIGNAL
-  * only. Each tick recomputes the actual delta from table state (docs with
+  * Each tick recomputes the actual delta from table state (docs with
   * `doc_id` above the persisted watermark — monotone ingest ids, the
-  * StreamingCorpus/StreamingIndexer contract), so a redelivered or
-  * coalesced batch can never double-process a document: its ids are
-  * already at-or-below the watermark and the delta is empty.
+  * [[SliceMaintainer]] contract), so a re-run tick can never double-process
+  * a document: its ids are already at-or-below the watermark and the delta
+  * is empty.
   *
   * Persisted state under `stateDir`:
   *   - `toks/delta_<lo>/`    token sets + minhash sigs per ingest slice
@@ -62,8 +60,7 @@ object StreamingDupClusters {
   private[streaming] val StateFormat = 2
 
   /** One maintenance tick against current table state; returns the number
-    * of delta docs processed (0 = no-op tick). Callable directly (cron
-    * cadence) — `start` wires it to a file stream.
+    * of delta docs processed (0 = no-op tick).
     */
   def tick(spark: SparkSession, dataDir: String, stateDir: String): Long =
     SliceMaintainer.run(
@@ -101,13 +98,9 @@ object StreamingDupClusters {
       // with every historical slice's file count
       val allBuckets = SliceStore.read(spark, s"$stateDir/buckets")
       val deltaBuckets = graft.core.Tables.parquet(spark, s"$stateDir/buckets/$sliceName")
-      val cand = Dedup.deltaCandidates(deltaBuckets, allBuckets)
-
       // verification reads candidate docs' token sets from persisted state
       val allToks = SliceStore.read(spark, s"$stateDir/toks")
-      val edges = Dedup.verifyEdges(allToks, cand)
-
-      val updated = Dedup.applyEdgesToLabels(edges, oldLabels).localCheckpoint()
+      val updated = Dedup.clustersApply(allToks, deltaBuckets, allBuckets, oldLabels).localCheckpoint()
       StagedTable.commit(updated, labelsDir(stateDir))
       d.n
     }
@@ -134,50 +127,4 @@ object StreamingDupClusters {
         Seq.empty[(Long, Long)].toDF("doc_id", "cluster")
     }
   }
-
-  /** q142's syndication matrix from maintained state — the cluster
-    * labels off this maintainer, the source attribution off the corpus
-    * maintainer's stage table (the cross-family serve pattern), so the
-    * duplication-flow view stays current per tick with no corpus
-    * re-scan. Equal to batch [[Dedup.q142SyndicationMatrix]] over every
-    * document both families' ticks have covered.
-    */
-  def syndicationMatrix(spark: SparkSession, stateDir: String, corpusStateDir: String): DataFrame =
-    Dedup.q142MatrixOver(servedClusterSources(spark, stateDir, corpusStateDir))
-
-  /** q185's centrality ranking from the same maintained states — the
-    * bounded graph built fresh per serve (the iterations are driver-side
-    * integer arithmetic either way). Equal to batch
-    * [[Dedup.q185SyndicationRank]].
-    */
-  def syndicationRank(spark: SparkSession, stateDir: String, corpusStateDir: String): DataFrame =
-    Dedup.q185RankOfGraph(
-      spark,
-      Dedup.syndGraphOf(
-        servedClusterSources(spark, stateDir, corpusStateDir),
-        StreamingCorpus.readStages(spark, corpusStateDir).select(col("source"))
-      )
-    )
-
-  private def servedClusterSources(spark: SparkSession, stateDir: String, corpusStateDir: String): DataFrame =
-    Dedup.clusterSourcesOver(
-      readLabels(spark, stateDir),
-      StreamingCorpus.readStages(spark, corpusStateDir).select(col("doc_id"), col("source"))
-    )
-
-  /** Wire the tick to a file stream over the documents landing path —
-    * `Trigger.AvailableNow` drains what has landed and stops (cron /
-    * entrypoint cadence); pass a processing-time trigger for a long-lived
-    * maintainer. `onTick` sees each tick's delta count.
-    */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: Long => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_clusters_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
-    )
 }

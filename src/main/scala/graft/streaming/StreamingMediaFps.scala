@@ -2,17 +2,16 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Multimodal
 
 /** Live media fingerprint index: keeps the raw fingerprint/band tables of
   * all three media miners (q114 image aHash bands, q115 video frame fps,
   * q175 audio energy shingles) current as document files land, at O(delta)
-  * per tick — so the near-dup miners and the q177 boilerplate audit run
-  * against a maintained index on every ingest drop instead of re-decoding
-  * the corpus. The 17th maintainer family, and the first over the
-  * multimodal pillar.
+  * per tick — so the decontamination serve's image leg
+  * ([[StreamingDecontam]]) reads a maintained index on every ingest drop
+  * instead of re-decoding the corpus. The 17th maintainer family, and the
+  * first over the multimodal pillar.
   *
   * Why the tick is exact (the [[StreamingWinnow]] argument verbatim):
   * fingerprinting is per-ITEM LOCAL — a video's frame hashes and an
@@ -72,22 +71,6 @@ object StreamingMediaFps {
       .filter(col("kind") === lit(kind))
       .select(col("media_id"), col("fp"))
 
-  /** q115's pair report served from the maintained index — df cap and
-    * containment tail recomputed through the shared batch code.
-    */
-  def videoNeardup(spark: SparkSession, stateDir: String): DataFrame =
-    Multimodal.mediaNeardupFrom(
-      Multimodal.rareMediaFps(fpTable(spark, stateDir, "video").localCheckpoint()),
-      "shared_frames"
-    )
-
-  /** q175's pair report served from the maintained index. */
-  def audioNeardup(spark: SparkSession, stateDir: String): DataFrame =
-    Multimodal.mediaNeardupFrom(
-      Multimodal.rareMediaFps(fpTable(spark, stateDir, "audio").localCheckpoint()),
-      "shared_fps"
-    )
-
   /** The maintained image band table — the hex encode inverted back to
     * q114's 8-band array.
     */
@@ -99,63 +82,4 @@ object StreamingMediaFps {
         col("media_id"),
         expr("transform(sequence(0, 7), i -> CAST(conv(substring(fp, i*2 + 1, 2), 16, 10) AS INT))").as("bands")
       )
-
-  /** q114's pair report served from the maintained index — the banded
-    * mine + exact verify recomputed through the shared batch code.
-    */
-  def imageNeardup(spark: SparkSession, stateDir: String): DataFrame =
-    Multimodal.imageNeardupFrom(bandTable(spark, stateDir).localCheckpoint())
-
-  /** q181's DF-CAPPED mine served from the same maintained index — the
-    * serving-mode report (what q156/q176/q178's downstream consume), hot
-    * band buckets excluded through the shared batch code.
-    */
-  def imageNeardupCapped(spark: SparkSession, stateDir: String): DataFrame =
-    Multimodal.imageNeardupFrom(
-      bandTable(spark, stateDir).localCheckpoint(),
-      Some(Multimodal.MEDIA_FP_MAXDF)
-    )
-
-  /** q177's boilerplate audit served from the maintained index — the
-    * observability half of the df-cap contract, current after every tick
-    * with no corpus re-decode. Equal to batch
-    * [[Multimodal.q177MediaBoilerplate]] over every document the ticks
-    * have covered.
-    */
-  def audit(spark: SparkSession, stateDir: String): DataFrame =
-    Multimodal.mediaAuditOver(
-      fpTable(spark, stateDir, "audio").localCheckpoint(),
-      Multimodal.imageBandInstancesOf(bandTable(spark, stateDir)).localCheckpoint(),
-      fpTable(spark, stateDir, "video").localCheckpoint()
-    )
-
-  /** q183's hot-key ledger served from the maintained index — the per-key
-    * drill-down with source attribution, which lives in ANOTHER family's
-    * state: the corpus maintainer's stage table carries every landed
-    * doc's source, so the ledger composes the two states (the
-    * StreamingDecontam cross-family pattern) and touches no corpus file.
-    * Equal to batch [[Multimodal.q183MediaHotLedger]] over every document
-    * both families' ticks have covered.
-    */
-  def hotLedger(spark: SparkSession, stateDir: String, corpusStateDir: String): DataFrame =
-    Multimodal.hotLedgerOver(
-      fpTable(spark, stateDir, "audio").localCheckpoint(),
-      Multimodal.imageBandInstancesOf(bandTable(spark, stateDir)).localCheckpoint(),
-      fpTable(spark, stateDir, "video").localCheckpoint(),
-      StreamingCorpus
-        .readStages(spark, corpusStateDir)
-        .select(col("doc_id").as("media_id"), col("source"))
-    )
-
-  /** Wire the tick to a file stream over the documents landing path. */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: Long => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_media_fp_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
-    )
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.Curation
@@ -93,16 +92,4 @@ object StreamingPack {
     SliceStore
       .read(spark, s"$stateDir/manifest")
       .orderBy(col("lang"), col("shard"), col("doc_id"))
-
-  /** Wire the tick to a file stream over the documents landing path. */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: Long => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_pack_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
-    )
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Sampling
 
@@ -47,16 +46,4 @@ object StreamingSample {
         (col("key_micro") / lit(1e6)).as("sample_key")
       )
       .orderBy(col("lang"), col("rank"))
-
-  /** Wire the tick to a file stream over the documents landing path. */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: Long => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_sample_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
-    )
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.core.StagedTable
@@ -13,16 +12,14 @@ import graft.operators.Temporal
   * with [[Temporal.scd2Apply]] — only users that changed this tick are
   * touched.
   *
-  * Same single-source-of-truth discipline as [[StreamingIndexer]]: the file
-  * stream is a CHANGE SIGNAL only. Each tick re-derives the actual delta
-  * from table state — events with `event_id` above the high-watermark the
-  * history's sidecar records — never from the micro-batch rows, so a
-  * redelivered or coalesced batch is a no-op (its ids are already under the
-  * watermark). The landing contract is monotone ingest ids in event-time
-  * order per user (ann-build's contract); a drop that VIOLATES it (an event
-  * at-or-before some user's open interval) is detected at tick time and
-  * triggers a full rebuild from the accumulated log — rebuild, never a
-  * corrupt append (the JSONL-funnel rule).
+  * Each tick re-derives the actual delta from table state — events with
+  * `event_id` above the high-watermark the history's sidecar records — so
+  * a re-run tick over the same drops is a no-op (their ids are already
+  * under the watermark). The landing contract is monotone ingest ids in
+  * event-time order per user (ann-build's contract); a drop that VIOLATES
+  * it (an event at-or-before some user's open interval) is detected at
+  * tick time and triggers a full rebuild from the accumulated log —
+  * rebuild, never a corrupt append.
   *
   * History commits are stage-then-swap (ParquetWarehouse's two-rename
   * shape), with the watermark sidecar written only after the swap: a crash
@@ -51,9 +48,8 @@ object StreamingScd2 {
   def readHistory(spark: SparkSession, historyDir: String): DataFrame =
     StateStore.readTable(spark, historyDir, historySchema)
 
-  /** One maintenance tick over the accumulated event log (exposed for the
-    * batch/cron path and the spec; the stream calls exactly this). The
-    * watermark sidecar is `<historyDir>.state.json` ([[SliceMaintainer.Sidecar]]).
+  /** One maintenance tick over the accumulated event log. The watermark
+    * sidecar is `<historyDir>.state.json` ([[SliceMaintainer.Sidecar]]).
     */
   def tick(spark: SparkSession, eventsDir: String, historyDir: String): TickOutcome = {
     val all = graft.core.Tables.parquet(spark, eventsDir).select("user_id", "event_type", "ts", "event_id")
@@ -82,18 +78,4 @@ object StreamingScd2 {
       TickOutcome(mode, readHistory(spark, historyDir).count(), d.hi)
     }
   }
-
-  /** Start the maintainer over `eventsDir` (parquet drops). Ticks are
-    * change signals; `Trigger.AvailableNow` drains-and-stops (cron shape).
-    */
-  def start(
-      spark: SparkSession,
-      eventsDir: String,
-      historyDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: TickOutcome => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, eventsDir, historyDir + ".checkpoint", trigger)(
-      onTick(tick(spark, eventsDir, historyDir))
-    )
 }

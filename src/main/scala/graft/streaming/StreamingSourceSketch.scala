@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Curation
 
@@ -32,8 +31,7 @@ import graft.operators.Curation
 object StreamingSourceSketch {
 
   /** One maintenance tick; returns the number of delta docs processed
-    * (0 = no-op tick). Callable directly (cron cadence) — `start` wires it
-    * to a file stream.
+    * (0 = no-op tick).
     */
   def tick(spark: SparkSession, dataDir: String, stateDir: String): Long =
     SliceMaintainer.tick(
@@ -59,20 +57,4 @@ object StreamingSourceSketch {
     */
   def sketchTable(spark: SparkSession, stateDir: String): DataFrame =
     Curation.sketchPairsFromSignatures(signatures(spark, stateDir))
-
-  /** Wire the tick to a file stream over the documents landing path —
-    * `Trigger.AvailableNow` drains what has landed and stops; pass a
-    * processing-time trigger for a long-lived watcher. `onTick` sees each
-    * tick's delta count.
-    */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: Long => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_sketch_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
-    )
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.core.StagedTable
@@ -37,10 +36,9 @@ import graft.operators.Curation
   * and stats, so there is no merge step whose replay could double-count —
   * the failure mode an incrementally-merged counts table would have had.
   *
-  * Same contract as StreamingIndexer/StreamingDupClusters: the file stream
-  * is a CHANGE SIGNAL only; each tick re-derives the delta from the
-  * persisted watermark (docs with `doc_id` above it — monotone ingest
-  * ids), so redelivered or coalesced batches can never double-process.
+  * Same contract as StreamingDupClusters: each tick re-derives the delta
+  * from the persisted watermark (docs with `doc_id` above it — monotone
+  * ingest ids), so a re-run tick can never double-process.
   *
   * Persisted state under `stateDir`:
   *   - `grams/delta_<lo>/` k-gram instance slices (doc_id, n_toks, key, pos),
@@ -134,19 +132,4 @@ object StreamingSpanDedup {
     */
   def readStats(spark: SparkSession, stateDir: String): DataFrame =
     StateStore.readTable(spark, s"$stateDir/stats", statsSchema)
-
-  /** Wire the tick to a file stream over the documents landing path — the
-    * StreamingDupClusters shape: `Trigger.AvailableNow` drains and stops,
-    * a processing-time trigger runs a long-lived maintainer.
-    */
-  def start(
-      spark: SparkSession,
-      dataDir: String,
-      stateDir: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      onTick: ((Long, Long)) => Unit = _ => ()
-  ): StreamingQuery =
-    SliceMaintainer.onFileDrop(spark, s"$dataDir/documents.parquet", s"$stateDir/_spans_checkpoint", trigger)(
-      onTick(tick(spark, dataDir, stateDir))
-    )
 }

@@ -3,8 +3,7 @@ package graft.tools
 import graft.streaming.{StreamingBloomScreen, StreamingCorpus, StreamingDriftWatch, StreamingMediaFps, StreamingPack, StreamingDupClusters, StreamingSample, StreamingScd2, StreamingSourceSketch, StreamingSpanDedup, StreamingWinnow}
 
 /** CLI entry points for the incremental maintainers — one tick per
-  * invocation (the cron / entrypoint shape; the file-stream variants run
-  * the same tick per micro-batch).
+  * invocation (the cron / entrypoint shape).
   *
   *   bin/graft.sh scd2-maintain    <eventsDir> <historyDir>
   *   bin/graft.sh corpus-maintain  <docsDir>   <stateDir>
@@ -130,8 +129,8 @@ object IngestTick {
     val mediaDelta = StreamingMediaFps.tick(spark, dataDir, s"$stateDir/media")
     val ann =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(dataDir, "embeddings.parquet"))) {
-        // StreamingIndexer's discipline: refresh conf on a DEDICATED session
-        // clone, so a serving session's conf is never mutated mid-query
+        // refresh conf on a DEDICATED session clone, so a serving session's
+        // conf is never mutated mid-query
         val m = spark.newSession()
         m.conf.set(graft.operators.Similarity.IndexDirConf, s"$stateDir/ann")
         m.conf.set(graft.operators.Similarity.RefreshConf, "append")

@@ -559,7 +559,9 @@ class CurationSpec extends SparkSpec {
     assert(keptRows.forall(_.getAs[String]("text") != null), "kept docs carry their text")
 
     // build → pack: packing the kept corpus conserves its docs and tokens
-    val packed = Curation.corpusBuildPacked(spark, sfDir).collect()
+    val packed = Curation
+      .packOver(Curation.corpusBuildKept(spark, sfDir).select("lang", "doc_id", "n_tokens"), Curation.SHARDS, Curation.CTX)
+      .collect()
     assert(packed.map(_.getAs[Long]("n_docs")).sum === kept, "packing must conserve kept docs")
     assert(
       packed.map(_.getAs[Long]("bin_tokens")).sum === keptRows.map(_.getAs[Long]("n_tokens")).sum,

@@ -480,32 +480,6 @@ class DedupSpec extends SparkSpec {
     info(s"sf0.001: ${got.size} sources profiled; ${isDup.values.sum} exact-dup docs, ${inCluster.size} clustered")
   }
 
-  test("persisted bucket index: probe equals in-memory candidates; index side scans shuffle-free") {
-    val path = java.nio.file.Files.createTempDirectory("dedup_bidx").toString + "/t"
-    spark.sql("DROP TABLE IF EXISTS dedup_bidx_spec")
-    Dedup.persistBucketIndex(spark, sfDir, "dedup_bidx_spec", path)
-
-    // delta = top ~10% of ids, the ingest-watermark shape
-    val ids = graft.core.Tables.documents(spark, sfDir).agg(
-      org.apache.spark.sql.functions.expr("min(doc_id)"), org.apache.spark.sql.functions.expr("max(doc_id)")).head()
-    val pivot = ids.getLong(0) + (ids.getLong(1) - ids.getLong(0)) * 9 / 10
-    val delta = Dedup.deltaBucketsAbove(spark, sfDir, pivot)
-
-    val probed = Dedup.deltaCandidatesAgainstIndex(spark, "dedup_bidx_spec", delta)
-    val expected = Dedup.deltaCandidatesAgainstIndex(spark, "dedup_bidx_spec", delta) // plan handle for explain
-    val inMem = Dedup.deltaCandidates(delta, spark.read.parquet(path))
-    val got = probed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === inMem.collect().map(r => (r.getLong(0), r.getLong(1))).toSet, "probe != in-memory candidates")
-    assert(got.nonEmpty, "delta should collide with some bucket")
-
-    // the whole point of the layout: the INDEX side scans shuffle-free —
-    // the only hashpartitioning Exchange in the plan is the delta side
-    val plan = expected.queryExecution.executedPlan.toString
-    val nExchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(nExchanges <= 1, s"bucketed index probe must shuffle at most the delta side:\n$plan")
-    assert(plan.contains("Bucketed: true"), s"index scan must be bucketed:\n$plan")
-  }
-
   test("q117 degenerate source: all docs below the span domain report 0.0, never NULL") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("q117deg").toString
@@ -778,7 +752,13 @@ class DedupSpec extends SparkSpec {
       (2L, (1 to 15).map(i => s"bx$i").mkString(" ") + " " + shared + " " + (1 to 25).map(i => s"by$i").mkString(" ")),
       (3L, (1 to 60).map(i => s"cz$i").mkString(" ")) // no shared content at all
     ).toDF("doc_id", "text")
-    val runs = Dedup.verbatimRunsFrom(docs).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // q162's per-doc max over the shared islands walk, fed a plain frame
+    def maxRuns(d: org.apache.spark.sql.DataFrame) =
+      Dedup
+        .verbatimRunPairsFromFps(Dedup.winnowFingerprintPositions(d))
+        .groupBy(col("doc_id"))
+        .agg(max(col("run_len")))
+    val runs = maxRuns(docs).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(!runs.contains(3L), "a doc sharing nothing must not appear in the run profile")
     // SIGMOD'03 bounds: within a shared span of L tokens, the first selected
     // fingerprint sits within the first winnow window and the last within the
@@ -791,8 +771,7 @@ class DedupSpec extends SparkSpec {
     // bucket rollup at the corpus scale stays consistent with the per-doc frame
     val prof = Dedup.q162VerbatimRunProfile(spark, sfDir).collect()
     assert(prof.nonEmpty)
-    val corpus = Dedup
-      .verbatimRunsFrom(graft.core.Tables.documents(spark, sfDir))
+    val corpus = maxRuns(graft.core.Tables.documents(spark, sfDir))
       .collect()
       .map(_.getInt(1))
     assert(prof.map(_.getAs[Long]("n_docs")).sum === corpus.length.toLong, "buckets partition the profiled docs")
@@ -842,7 +821,7 @@ class DedupSpec extends SparkSpec {
     assert(rows.count(_._2._2 > 0) === expB.size)
     // leg 3: max_run recomposed from the run table x the coin
     val runPairs = Dedup
-      .verbatimRunPairs(graft.core.Tables.documents(spark, sfDir))
+      .verbatimRunPairsFromFps(Dedup.winnowFingerprintPositions(graft.core.Tables.documents(spark, sfDir)))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
     val expC = runPairs

@@ -58,7 +58,9 @@ class IncrementalClustersPropSpec extends SparkSpec {
       for (pivot <- Seq(23L, -1L, rnd.nextInt(24).toLong)) {
         val tOld = t.filter(col("doc_id") <= pivot)
         val oldLabels = Dedup.clustersFrom(edgesOf(tOld)).select(col("doc_id"), col("cluster"))
-        val inc = Dedup.clustersApply(t, col("doc_id") > pivot, oldLabels).collect()
+        val allBuckets = Dedup.bandBuckets(t.select(col("doc_id"), col("sig"), col("sz")))
+        val newBuckets = allBuckets.filter(col("doc_id") > pivot)
+        val inc = Dedup.clustersApply(t, newBuckets, allBuckets, oldLabels).collect()
         def rows(a: Array[org.apache.spark.sql.Row]) =
           a.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
         assert(

@@ -282,7 +282,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("q36 centroids: C centroids of corpus dimension, finite values") {
-    val cents = Similarity.trainCentroids(spark, sfDir)
+    val cents = Similarity.trainCentroidsFrom(graft.core.Tables.embeddings(spark, sfDir))
     assert(cents.length === 16)
     cents.foreach { c =>
       assert(c.length === 64)
@@ -333,7 +333,7 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("q93 filtered search: exact results honor the predicate; IVF path recalls them") {
+  test("q93 filtered search: exact results honor the predicate, k per query") {
     val exact = Similarity.q93FilteredTopK(spark, sfDir).collect()
     assert(exact.nonEmpty)
     val labels = graft.core.Tables
@@ -344,22 +344,6 @@ class SimilaritySpec extends SparkSpec {
     // every exact result is from the filtered stratum, k per query
     exact.foreach(r => assert(labels(r.getLong(2)) === 3, s"vec ${r.getLong(2)} outside filter"))
     exact.groupBy(_.getLong(0)).values.foreach(rs => assert(rs.map(_.getInt(1)).sorted.sameElements(1 to rs.length)))
-
-    val approx = Similarity.filteredIvfTopK(spark, sfDir, 3).collect()
-    approx.foreach(r => assert(labels(r.getLong(2)) === 3, s"IVF leaked vec ${r.getLong(2)} outside filter"))
-    val exactSet = exact.map(r => (r.getLong(0), r.getLong(2))).toSet
-    val approxSet = approx.map(r => (r.getLong(0), r.getLong(2))).toSet
-    val recall = approxSet.intersect(exactSet).size.toDouble / exactSet.size
-    info(s"filtered IVF recall vs exact at sf0.001: $recall")
-    // near-uniform corpus at nprobe=4/64 cells: recall tracks scanned
-    // fraction; the floor only guards collapse (planted-corpus recall for
-    // the unfiltered family is pinned >= 0.9 elsewhere)
-    assert(recall >= 0.2, s"filtered IVF recall collapsed: $recall")
-    // exact cosine parity on the intersection
-    val exactCos = exact.map(r => (r.getLong(0), r.getLong(2)) -> r.getDouble(3)).toMap
-    approx.filter(r => exactSet.contains((r.getLong(0), r.getLong(2)))).foreach { r =>
-      assert(math.abs(exactCos((r.getLong(0), r.getLong(2))) - r.getDouble(3)) < 1e-9)
-    }
   }
 
   test("q119 triplet mining: equals a first-principles recomputation; margins well-formed") {

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Physical-layout behavior: bucketed joins must not shuffle; partitioned
-  * reads must prune directories.
+/** Physical-layout behavior: bucketed joins and aggregations must not
+  * shuffle; compaction keeps rows while collapsing files.
   */
 class LayoutsSpec extends SparkSpec {
 
@@ -27,7 +27,7 @@ class LayoutsSpec extends SparkSpec {
     // is that bucketing removes the Exchange, not that broadcast hides it
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = Layouts.coLocatedJoin(spark, "orders_b", "customer_b", "o_custkey")
+      val joined = spark.table("orders_b").join(spark.table("customer_b"), "o_custkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
       assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
@@ -49,20 +49,6 @@ class LayoutsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
   }
 
-  test("partitioned table prunes to the matching date directories") {
-    val base = Files.createTempDirectory("parts")
-    val ev = graft.core.Tables
-      .events(spark, sfDir)
-      .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-    Layouts.writePartitioned(ev, "day", s"$base/events_p")
-    val read = spark.read.parquet(s"$base/events_p").filter(col("day") === "2024-01-02")
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), "partition filter must reach the scan")
-    val expected = ev.filter(col("day") === "2024-01-02").count()
-    assert(read.count() === expected)
-    assert(expected > 0)
-  }
-
   test("compaction: many small files collapse to the target count, rows preserved") {
     val base = Files.createTempDirectory("compaction")
     val in = s"$base/in"
@@ -77,47 +63,5 @@ class LayoutsSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 2000)
     assert(spark.read.parquet(out).agg(sum(col("v"))).collect().head.getLong(0) ===
       spark.read.parquet(in).agg(sum(col("v"))).collect().head.getLong(0))
-  }
-
-  test("z-order clustering: per-file boxes prune a 2-D predicate better than linear sort") {
-    val base = Files.createTempDirectory("zorder")
-    import spark.implicits._
-    // uniform 64x64 grid, ids shuffled so neither layout gets it for free
-    val grid = (0 until 64).flatMap(a => (0 until 64).map(b => (a, b)))
-    // seeded: input order feeds repartitionByRange's sampling, so file
-    // boundaries (and the pruning pin below) must not vary across runs
-    val df = new scala.util.Random(42).shuffle(grid).toDF("a", "b")
-    val nFiles = 64
-
-    Layouts.writeZOrdered(df, "a", "b", s"$base/z", nFiles)
-    df.repartitionByRange(nFiles, col("a"), col("b"))
-      .sortWithinPartitions(col("a"), col("b"))
-      .write.parquet(s"$base/linear")
-
-    // which files COULD a box predicate (both dims restricted) touch?
-    def touchedFiles(dir: String, lo: Int, hi: Int): Int = {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .map(_.getPath.toString).filter(_.endsWith(".parquet"))
-      files.count { f =>
-        val stats = spark.read.parquet(f)
-          .agg(min(col("a")), max(col("a")), min(col("b")), max(col("b")))
-          .collect().head
-        val (aLo, aHi, bLo, bHi) = (stats.getInt(0), stats.getInt(1), stats.getInt(2), stats.getInt(3))
-        aHi >= lo && aLo <= hi && bHi >= lo && bLo <= hi
-      }
-    }
-    // an 8x8 box = 1/64 of the plane: a z-tile (~8x8 at 64 files) confines
-    // it to a couple of files; linear slices are ~1 a-value wide x full b
-    val zTouched = touchedFiles(s"$base/z", 8, 15)
-    val linTouched = touchedFiles(s"$base/linear", 8, 15)
-    info(s"files intersecting the box: z-order=$zTouched linear=$linTouched of $nFiles")
-    // linear sort keeps every file's b-range spanning the whole domain, so
-    // the box intersects ~(a-overlapping) files; z-order confines both dims
-    assert(zTouched < linTouched, s"z-order ($zTouched) should beat linear ($linTouched)")
-    assert(zTouched <= 6, s"z-order touched $zTouched files for a 1/64 box")
-    // layout changes bytes, never rows
-    assert(spark.read.parquet(s"$base/z").count() === 4096)
   }
 }

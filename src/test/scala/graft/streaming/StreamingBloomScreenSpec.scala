@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 
 /** The live bloom decontamination screen: tick-by-tick equality with the
@@ -43,8 +41,7 @@ class StreamingBloomScreenSpec extends SparkSpec {
       (3L, s"prefix words then $leak closing words")
     )
     writeDocs(dataDir, "overwrite", drop1)
-    val q1 = StreamingBloomScreen.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    StreamingBloomScreen.tick(spark, dataDir, stateDir)
     val t1 = served(stateDir)
     assert(t1 === batch(dataDir), "tick 1 must equal the batch screen")
     assert(t1.exists(_.head == 1L), "the planted leak must be flagged")
@@ -58,8 +55,7 @@ class StreamingBloomScreenSpec extends SparkSpec {
       (44L, "noise then alpha beta gamma delta epsilon zeta eta theta ending")
     )
     writeDocs(dataDir, "append", drop2)
-    val q2 = StreamingBloomScreen.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    StreamingBloomScreen.tick(spark, dataDir, stateDir)
     val t2 = served(stateDir)
     assert(t2 === batch(dataDir), "tick 2 must equal the batch screen over old + delta")
     assert(t2.exists(_.head == 2L), "the late test drop must retroactively flag train doc 2")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 
 /** The live drift watch: tick-by-tick equality with the batch q128 (the
@@ -36,8 +34,7 @@ class StreamingDriftWatchSpec extends SparkSpec {
       (2L, "epsilon zeta eta theta", "src1")
     )
     writeDocs(dataDir, "overwrite", drop1)
-    val q1 = StreamingDriftWatch.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    StreamingDriftWatch.tick(spark, dataDir, stateDir)
     assert(served(stateDir) === batch(dataDir), "tick 1 must equal the batch drift table")
 
     // drop 2: one existing source shifts vocabulary, one new source lands
@@ -47,8 +44,7 @@ class StreamingDriftWatchSpec extends SparkSpec {
       (5L, "mu nu xi omicron pi", "src2")
     )
     writeDocs(dataDir, "append", drop2)
-    val q2 = StreamingDriftWatch.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    StreamingDriftWatch.tick(spark, dataDir, stateDir)
     assert(served(stateDir) === batch(dataDir), "tick 2 must equal the batch drift table over old + delta")
 
     // redelivery: a direct tick with nothing new is a no-op

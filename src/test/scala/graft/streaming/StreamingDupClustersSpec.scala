@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 
 /** The live dup-cluster maintainer: tick-by-tick equality with a
@@ -61,8 +59,7 @@ class StreamingDupClustersSpec extends SparkSpec {
       0L -> aToks, 1L -> aToks, 2L -> bToks, 3L -> bToks, 4L -> dToks
     )
     writeDocs(dataDir, "overwrite", oldDocs)
-    val q1 = StreamingDupClusters.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    StreamingDupClusters.tick(spark, dataDir, stateDir)
     assert(readState(stateDir) === exactClusters(oldDocs), "tick 1 must equal the exact rebuild")
     assert(readState(stateDir).keySet === Set(0L, 1L, 2L, 3L), "singleton must stay unlabeled")
 
@@ -70,8 +67,7 @@ class StreamingDupClustersSpec extends SparkSpec {
     // old singleton — both across the tick boundary
     val newDocs = Seq[(Long, Seq[String])](8L -> cToks, 9L -> dToks)
     writeDocs(dataDir, "append", newDocs)
-    val q2 = StreamingDupClusters.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    StreamingDupClusters.tick(spark, dataDir, stateDir)
     val all = oldDocs ++ newDocs
     val got = readState(stateDir)
     assert(got === exactClusters(all), "tick 2 must equal the exact rebuild over old + delta")

@@ -7,12 +7,26 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.Similarity
 
-/** Live index maintenance: file drops in the embeddings directory drive
-  * append-only refresh ticks — a redundant tick is a no-op (`Current`), a
-  * tick over newly landed rows appends exactly the delta under the frozen
-  * geometry, and a cold session then serves the grown index.
+/** Index maintenance as the ingest tick runs it (`IngestTick.run`'s ANN
+  * and BM25 legs): append-only refresh ticks on a dedicated session clone —
+  * a redundant tick is a no-op (`Current`), a tick over newly landed rows
+  * appends exactly the delta under the frozen geometry, and a cold session
+  * then serves the grown index.
   */
 class StreamingIndexerSpec extends SparkSpec {
+
+  private def annTick(dataDir: String, indexDir: String): Seq[(String, Similarity.PersistOutcome)] = {
+    val m = spark.newSession()
+    m.conf.set(Similarity.IndexDirConf, indexDir)
+    m.conf.set(Similarity.RefreshConf, "append")
+    graft.tools.AnnBuild.run(m, dataDir, indexDir, Seq("fast"))
+  }
+
+  private def bm25Tick(dataDir: String, indexDir: String): Similarity.PersistOutcome = {
+    val m = spark.newSession()
+    m.conf.set(graft.operators.Retrieval.Bm25RefreshConf, "append")
+    graft.operators.Retrieval.persistBm25Index(m, dataDir, indexDir)
+  }
 
   test("ticks append newly landed embedding files; redelivery is a no-op") {
     val indexDir = Files.createTempDirectory("annidx").toString
@@ -29,16 +43,10 @@ class StreamingIndexerSpec extends SparkSpec {
       graft.tools.AnnBuild.run(spark, dataDir, indexDir, Seq("fast")).forall(_._2 == Similarity.Rebuilt)
     )
 
-    val outcomes = scala.collection.mutable.Buffer.empty[Seq[(String, Similarity.PersistOutcome)]]
-
-    // drain 1: the initial file is an unseen batch, but the index already
-    // covers those rows — the tick must be a no-op, not a double-index
-    StreamingIndexer.start(spark, dataDir, indexDir, onTick = outcomes += _).awaitTermination()
-    assert(outcomes.nonEmpty, "AvailableNow over existing files should fire one tick")
-    assert(
-      outcomes.last.forall(_._2 == Similarity.Current),
-      s"already-indexed rows must tick to Current: ${outcomes.last}"
-    )
+    // tick 1: the index already covers every landed row — the tick must be
+    // a no-op, not a double-index
+    val t1 = annTick(dataDir, indexDir)
+    assert(t1.forall(_._2 == Similarity.Current), s"already-indexed rows must tick to Current: $t1")
 
     // 20 more rows land as new part files
     src
@@ -47,10 +55,10 @@ class StreamingIndexerSpec extends SparkSpec {
       .mode("append")
       .parquet(s"$dataDir/embeddings.parquet")
 
-    StreamingIndexer.start(spark, dataDir, indexDir, onTick = outcomes += _).awaitTermination()
+    val t2 = annTick(dataDir, indexDir)
     assert(
-      outcomes.last.forall(_._2 == Similarity.Appended(20)),
-      s"a tick over 20 new rows must append exactly 20 everywhere: ${outcomes.last}"
+      t2.forall(_._2 == Similarity.Appended(20)),
+      s"a tick over 20 new rows must append exactly 20 everywhere: $t2"
     )
 
     // a cold session serves the grown index
@@ -68,17 +76,16 @@ class StreamingIndexerSpec extends SparkSpec {
     src.filter(col("doc_id") < 300).write.mode("overwrite").parquet(s"$dataDir/documents.parquet")
     assert(Retrieval.persistBm25Index(spark.newSession(), dataDir, indexDir) === Similarity.Rebuilt)
 
-    val outcomes = scala.collection.mutable.Buffer.empty[Similarity.PersistOutcome]
-    StreamingIndexer.startBm25(spark, dataDir, indexDir, onTick = outcomes += _).awaitTermination()
-    assert(outcomes.lastOption.contains(Similarity.Current), s"already-indexed docs must tick to Current: $outcomes")
+    val t1 = bm25Tick(dataDir, indexDir)
+    assert(t1 === Similarity.Current, s"already-indexed docs must tick to Current: $t1")
 
     src
       .filter(col("doc_id") >= 300 && col("doc_id") < 450)
       .write
       .mode("append")
       .parquet(s"$dataDir/documents.parquet")
-    StreamingIndexer.startBm25(spark, dataDir, indexDir, onTick = outcomes += _).awaitTermination()
-    assert(outcomes.lastOption.contains(Similarity.Appended(150)), s"tick must append exactly the landed docs: $outcomes")
+    val t2 = bm25Tick(dataDir, indexDir)
+    assert(t2 === Similarity.Appended(150), s"tick must append exactly the landed docs: $t2")
 
     // a cold session serves exactly what the scan path computes over the grown corpus
     val serve = spark.newSession()

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 
 /** The live pack manifest: tick-by-tick equality with the batch q170 (the
@@ -40,8 +38,7 @@ class StreamingPackSpec extends SparkSpec {
       (16L, words(100, "delta"), "en")
     )
     writeDocs(dataDir, "overwrite", drop1)
-    val q1 = StreamingPack.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    StreamingPack.tick(spark, dataDir, stateDir)
     val t1 = served(stateDir)
     assert(t1 === batch(dataDir), "tick 1 must equal the batch manifest")
     assert(t1.nonEmpty)
@@ -54,8 +51,7 @@ class StreamingPackSpec extends SparkSpec {
       (21L, words(75, "eta"), "fr")
     )
     writeDocs(dataDir, "append", drop2)
-    val q2 = StreamingPack.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    StreamingPack.tick(spark, dataDir, stateDir)
     val t2 = served(stateDir)
     assert(t2 === batch(dataDir), "tick 2 must equal the batch manifest over old + delta")
     assert(t1.toSet.subsetOf(t2.toSet), "earlier placements must be append-only (never rewritten)")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 
 /** The live weighted reservoir: tick-by-tick equality with batch q145 (the
@@ -31,8 +29,7 @@ class StreamingSampleSpec extends SparkSpec {
     val stateDir = java.nio.file.Files.createTempDirectory("res_state").toString
 
     writeDocs(dataDir, "overwrite", 0 until 80)
-    val q1 = StreamingSample.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    StreamingSample.tick(spark, dataDir, stateDir)
     assert(
       canon(StreamingSample.sampleTable(spark, stateDir)) ===
         canon(graft.operators.Sampling.q145WeightedSample(spark, dataDir)),
@@ -41,8 +38,7 @@ class StreamingSampleSpec extends SparkSpec {
 
     // drop 2: higher ids land; the merged reservoir must still equal batch
     writeDocs(dataDir, "append", 80 until 200)
-    val q2 = StreamingSample.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    StreamingSample.tick(spark, dataDir, stateDir)
     assert(
       canon(StreamingSample.sampleTable(spark, stateDir)) ===
         canon(graft.operators.Sampling.q145WeightedSample(spark, dataDir)),

@@ -3,8 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 import graft.operators.Temporal
 
@@ -68,22 +66,5 @@ class StreamingScd2Spec extends SparkSpec {
       canon(StreamingScd2.readHistory(spark, hist)) ===
         canon(Temporal.scd2Of(eventsDf(drop1 ++ drop2 ++ late)))
     )
-  }
-
-  test("scd2 maintainer runs as a stream: AvailableNow drains drops into the history") {
-    val land = Files.createTempDirectory("scd2s_land").toString
-    val hist = Files.createTempDirectory("scd2s_hist").resolve("history").toString
-    val rows = Seq(
-      (7L, "click", "2024-02-01 08:00:00", 0L),
-      (7L, "view", "2024-02-01 09:00:00", 1L),
-      (8L, "view", "2024-02-01 08:30:00", 2L)
-    )
-    eventsDf(rows).write.mode("append").parquet(land)
-
-    val outcomes = scala.collection.mutable.ArrayBuffer.empty[StreamingScd2.TickOutcome]
-    val q = StreamingScd2.start(spark, land, hist, Trigger.AvailableNow(), outcomes += _)
-    q.awaitTermination(60000)
-    assert(outcomes.nonEmpty && outcomes.head.mode === "incremental")
-    assert(canon(StreamingScd2.readHistory(spark, hist)) === canon(Temporal.scd2Of(eventsDf(rows))))
   }
 }

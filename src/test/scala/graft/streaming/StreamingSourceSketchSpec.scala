@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 
 /** The live source sketch: tick-by-tick equality with batch q134 (the
@@ -38,8 +36,7 @@ class StreamingSourceSketchSpec extends SparkSpec {
       (2L, shared, "src1") // src1 mirrors src0's first doc -> shared shingles
     )
     writeDocs(dataDir, "overwrite", drop1)
-    val q1 = StreamingSourceSketch.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    StreamingSourceSketch.tick(spark, dataDir, stateDir)
     val t1 = served(stateDir)
     assert(t1 === batch(dataDir), "tick 1 must equal the batch sketch table")
     // the planted mirror must actually register as similar
@@ -57,8 +54,7 @@ class StreamingSourceSketchSpec extends SparkSpec {
       (5L, "moon star planet comet nebula quasar pulsar galaxy cluster void", "src2")
     )
     writeDocs(dataDir, "append", drop2)
-    val q2 = StreamingSourceSketch.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    StreamingSourceSketch.tick(spark, dataDir, stateDir)
     assert(served(stateDir) === batch(dataDir), "tick 2 must equal the batch sketch over old + delta")
 
     // redelivery: a direct tick with nothing new is a no-op

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 import graft.operators.Curation
 
@@ -38,8 +36,7 @@ class StreamingSpanDedupSpec extends SparkSpec {
     val u = (1 to 40).map(i => s"u$i")
     val selfRep = Seq.fill(3)((1 to 8).map(i => s"rep$i")).flatten
     writeDocs(dataDir, "overwrite", Seq(0L -> u, 1L -> selfRep))
-    val q1 = StreamingSpanDedup.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    StreamingSpanDedup.tick(spark, dataDir, stateDir)
     val t1 = snap(StreamingSpanDedup.readStats(spark, stateDir))
     assert(t1 === snap(Curation.q110SpanDedup(spark, dataDir)), "tick 1 must equal the batch rebuild")
     assert(t1(0L) === ((40L, 0L, 0L, 0L, 0.0)), "unique doc starts clean")

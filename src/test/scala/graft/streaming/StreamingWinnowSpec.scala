@@ -1,14 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
-
 import graft.SparkSpec
 
-/** The live winnow index: tick-by-tick equality of the served fingerprint
-  * table, pair report, and contamination screen with their batch twins
-  * (per-doc locality is the exactness claim), redelivery no-op, crash
-  * replay, and compaction transparency. Texts carry >= 11 tokens so the
-  * winnowing guarantee window exists.
+/** The live winnow index: tick-by-tick equality of the maintained
+  * fingerprint and position tables with the batch winnow stage the q144,
+  * q152 and q162 tails consume (per-doc locality is the exactness claim),
+  * redelivery no-op, crash replay, and compaction transparency. Texts
+  * carry >= 11 tokens so the winnowing guarantee window exists.
   */
 class StreamingWinnowSpec extends SparkSpec {
 
@@ -25,7 +23,7 @@ class StreamingWinnowSpec extends SparkSpec {
   private def canon(df: org.apache.spark.sql.DataFrame) =
     df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
 
-  test("maintainer ticks serve the batch fingerprint table, pair report and screen; replay/redelivery safe") {
+  test("maintainer ticks keep the batch fingerprint and position tables; replay/redelivery safe") {
     val dataDir = java.nio.file.Files.createTempDirectory("winnow_data").toString
     val stateDir = java.nio.file.Files.createTempDirectory("winnow_state").toString
 
@@ -36,22 +34,16 @@ class StreamingWinnowSpec extends SparkSpec {
       (2L, run + " rho sigma tau upsilon") // shares a 12-token run with doc 0
     )
     writeDocs(dataDir, "overwrite", drop1)
-    val q1 = StreamingWinnow.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q1.awaitTermination(120000)
+    assert(StreamingWinnow.tick(spark, dataDir, stateDir) === 3L)
     assert(
       canon(StreamingWinnow.fpTable(spark, stateDir)) ===
         canon(graft.operators.Dedup.winnowFingerprints(spark, dataDir)),
       "tick 1 fingerprint table must equal the batch winnowing"
     )
+    val fps = StreamingWinnow.fpTable(spark, stateDir).collect().map(r => r.getLong(0) -> r.getString(1))
     assert(
-      canon(StreamingWinnow.pairReport(spark, stateDir)) ===
-        canon(graft.operators.Dedup.q144WinnowPairs(spark, dataDir)),
-      "served pair report must equal batch q144"
-    )
-    val pairs1 = StreamingWinnow.pairReport(spark, stateDir).collect()
-    assert(
-      pairs1.exists(r => r.getLong(0) == 0L && r.getLong(1) == 2L),
-      "the planted shared 12-token run must pair docs 0 and 2"
+      fps.filter(_._1 == 0L).map(_._2).toSet.intersect(fps.filter(_._1 == 2L).map(_._2).toSet).nonEmpty,
+      "the planted shared 12-token run must give docs 0 and 2 a common fingerprint"
     )
 
     // drop 2: new docs, one sharing doc 1's run — state grows by union only
@@ -60,22 +52,16 @@ class StreamingWinnowSpec extends SparkSpec {
       (4L, "red orange yellow green blue indigo violet white black grey brown pink")
     )
     writeDocs(dataDir, "append", drop2)
-    val q2 = StreamingWinnow.start(spark, dataDir, stateDir, Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    assert(StreamingWinnow.tick(spark, dataDir, stateDir) === 2L)
     assert(
       canon(StreamingWinnow.fpTable(spark, stateDir)) ===
         canon(graft.operators.Dedup.winnowFingerprints(spark, dataDir)),
       "tick 2 must equal the batch over old + delta"
     )
     assert(
-      canon(StreamingWinnow.contamination(spark, stateDir)) ===
-        canon(graft.operators.Dedup.q152WinnowContamination(spark, dataDir)),
-      "served contamination screen must equal batch q152"
-    )
-    assert(
-      canon(StreamingWinnow.runProfile(spark, dataDir, stateDir)) ===
-        canon(graft.operators.Dedup.q162VerbatimRunProfile(spark, dataDir)),
-      "served verbatim-run profile must equal batch q162 (positions ride the slices)"
+      canon(StreamingWinnow.fpPositions(spark, stateDir)) ===
+        canon(graft.operators.Dedup.winnowPositions(spark, dataDir)),
+      "the position table must equal the batch q144_winnow stage (positions ride the slices)"
     )
 
     // redelivery: nothing new is a no-op

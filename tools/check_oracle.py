@@ -123,7 +123,8 @@ def main():
         selfcheck = json.load(open(f"{out_dir}/selfcheck.json"))
     except FileNotFoundError:
         selfcheck = {}
-        print("WARN no selfcheck.json in output dir (old Verify build?)")
+        print("FAIL selfcheck.json: missing from the output dir (Verify always writes it)")
+        n_self_fail += 1
     for name in sorted(selfcheck):
         r = selfcheck[name]
         if r["pass"]:
