@@ -402,23 +402,21 @@ object Bench {
         quality("q60_recall_uniform") = recall(pairSet(operators.Dedup.q60LshNearDup(spark, sfDir)), exactPairsU)
 
       // recall / scanned-fraction curves (bench_details only): the
-      // trade-off each knob buys — LSH extra probes, IVF nprobe.
+      // trade-off each knob buys — LSH extra probes, IVF nprobe — with the
+      // uniform leg under the session profile's geometry.
+      val prof = operators.Similarity.annProfile(spark)
       for (m <- Seq(0, 1, 2, 4)) {
-        spark.conf.set(operators.Similarity.LshProbesConf, m.toString)
         val rp = recall(topkSet(operators.Similarity.plantedLshTopK(spark, sfDir, m)), exactP)
-        val ru = recall(topkSet(operators.Similarity.q35LshTopK(spark, sfDir)), exactU)
+        val ru = recall(topkSet(operators.Similarity.lshTopKWith(spark, sfDir, prof, m, prof.lshMinHits)), exactU)
         val frac = operators.Similarity.plantedLshCandidateCount(spark, sfDir, m) / (5.0 * n)
         curves += f"""{"knob":"lsh_probes","value":$m,"planted":$rp%.3f,"uniform":$ru%.3f,"cand_frac":$frac%.3f}"""
       }
-      spark.conf.unset(operators.Similarity.LshProbesConf)
       for (np <- Seq(1, 2, 4, 6)) {
-        spark.conf.set(operators.Similarity.IvfNprobeConf, np.toString)
         val rp = recall(topkSet(operators.Similarity.plantedIvfTopK(spark, sfDir, np)), exactP)
-        val ru = recall(topkSet(operators.Similarity.q36IvfTopK(spark, sfDir)), exactU)
+        val ru = recall(topkSet(operators.Similarity.ivfTopKWith(spark, sfDir, prof, np)), exactU)
         val frac = operators.Similarity.plantedIvfCandidateCount(spark, sfDir, np) / (5.0 * n)
         curves += f"""{"knob":"ivf_nprobe","value":$np,"planted":$rp%.3f,"uniform":$ru%.3f,"cand_frac":$frac%.3f}"""
       }
-      spark.conf.unset(operators.Similarity.IvfNprobeConf)
 
       // the `quality` profile's uniform-corpus operating point (the preset
       // AnnTune's counting-LSH re-sweep chose: T=24 x P=6, 5 probes,
@@ -434,26 +432,30 @@ object Bench {
       // number lives only in the scored_frac field (new in r15).
       // SimilaritySpec pins scored_frac <= 0.5 at recall >= 0.9.
       spark.conf.set(operators.Similarity.ProfileConf, "quality")
-      val qProf = operators.Similarity.Quality
-      quality("q35_recall_uniform_quality") =
-        recall(topkSet(operators.Similarity.q35LshTopK(spark, sfDir)), exactU)
-      quality("q36_recall_uniform_quality") =
-        recall(topkSet(operators.Similarity.q36IvfTopK(spark, sfDir)), exactU)
-      val qCollL =
-        operators.Similarity.lshCandidateCountWith(spark, sfDir, qProf, qProf.lshProbes) / (5.0 * n)
-      val qFracL = operators.Similarity
-        .lshCandidateCountWith(spark, sfDir, qProf, qProf.lshProbes, qProf.lshMinHits) / (5.0 * n)
-      val qFracI = operators.Similarity.ivfCandidateCountWith(spark, sfDir, qProf, qProf.ivfNprobe) / (5.0 * n)
-      quality("q35_scored_frac_quality") = qFracL
-      quality("q35_collision_frac_quality") = qCollL
-      quality("q36_scored_frac_quality") = qFracI
-      curves += f"""{"knob":"lsh_profile_quality","value":${qProf.lshProbes},"planted":-1.0,"uniform":${quality(
-          "q35_recall_uniform_quality"
-        )}%.3f,"cand_frac":$qCollL%.3f,"collision_frac":$qCollL%.3f,"scored_frac":$qFracL%.3f}"""
-      curves += f"""{"knob":"ivf_profile_quality","value":${qProf.ivfNprobe},"planted":-1.0,"uniform":${quality(
-          "q36_recall_uniform_quality"
-        )}%.3f,"cand_frac":$qFracI%.3f}"""
-      spark.conf.unset(operators.Similarity.ProfileConf)
+      // unset in `finally`: a throw here must not leave `quality` set for
+      // the plan audit below, which re-executes q35/q36 under the session
+      // profile
+      try {
+        val qProf = operators.Similarity.Quality
+        quality("q35_recall_uniform_quality") =
+          recall(topkSet(operators.Similarity.q35LshTopK(spark, sfDir)), exactU)
+        quality("q36_recall_uniform_quality") =
+          recall(topkSet(operators.Similarity.q36IvfTopK(spark, sfDir)), exactU)
+        val qCollL =
+          operators.Similarity.lshCandidateCountWith(spark, sfDir, qProf, qProf.lshProbes) / (5.0 * n)
+        val qFracL = operators.Similarity
+          .lshCandidateCountWith(spark, sfDir, qProf, qProf.lshProbes, qProf.lshMinHits) / (5.0 * n)
+        val qFracI = operators.Similarity.ivfCandidateCountWith(spark, sfDir, qProf, qProf.ivfNprobe) / (5.0 * n)
+        quality("q35_scored_frac_quality") = qFracL
+        quality("q35_collision_frac_quality") = qCollL
+        quality("q36_scored_frac_quality") = qFracI
+        curves += f"""{"knob":"lsh_profile_quality","value":${qProf.lshProbes},"planted":-1.0,"uniform":${quality(
+            "q35_recall_uniform_quality"
+          )}%.3f,"cand_frac":$qCollL%.3f,"collision_frac":$qCollL%.3f,"scored_frac":$qFracL%.3f}"""
+        curves += f"""{"knob":"ivf_profile_quality","value":${qProf.ivfNprobe},"planted":-1.0,"uniform":${quality(
+            "q36_recall_uniform_quality"
+          )}%.3f,"cand_frac":$qFracI%.3f}"""
+      } finally spark.conf.unset(operators.Similarity.ProfileConf)
     } catch { case e: Throwable => System.err.println(s"[bench] recall failed: ${e.getMessage}") }
 
     // Load-calibration probe, reading 2 of 2 (after all timed work): a

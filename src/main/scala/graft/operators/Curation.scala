@@ -35,42 +35,25 @@ object Curation {
   //
   // Scale shape: packing is inherently sequential per stream, so the corpus
   // is SHARDED into independent streams first — parallelism = langs x
-  // shards, each stream a separate window partition. The default 8 shards
-  // saturate this box; at 100 TB set `graft.curation.shards` to
-  // O(executor count) — each shard is an independent packing problem, so
-  // more shards = more parallelism with identical per-stream semantics —
-  // and the one shuffle is the window's (lang, shard)-hash exchange. No
-  // driver traffic.
+  // shards, each stream a separate window partition. SHARDS = 8 saturates
+  // this box; each shard is an independent packing problem, so more shards
+  // = more parallelism with identical per-stream semantics (`packOver`
+  // takes the shape as arguments) — and the one shuffle is the window's
+  // (lang, shard)-hash exchange. No driver traffic. The registered q66,
+  // q170, q180 and the maintained pack manifest all pack at (SHARDS, CTX),
+  // the shape their oracles assume.
   // ---------------------------------------------------------------------------
-  val ShardsConf = "graft.curation.shards"
-  val CtxConf = "graft.curation.ctx"
   private[graft] val CTX = 512
   private[graft] val SHARDS = 8
 
-  def q66ContextPack(spark: SparkSession, dir: String): DataFrame = {
-    // defaults match the registered DuckDB oracle; the confs are the
-    // cluster-size knobs. A non-default knob changes the query's semantics,
-    // so the REGISTERED oracle (q66Oracle, pinned to the defaults) no longer
-    // applies — warn loudly so a gated run with a leaked conf fails
-    // diagnosably, not opaquely (q66OracleFor gives the matching SQL).
-    val shards = spark.conf.getOption(ShardsConf).map(_.toInt).getOrElse(SHARDS)
-    val ctx = spark.conf.getOption(CtxConf).map(_.toInt).getOrElse(CTX)
-    if (shards != SHARDS || ctx != CTX)
-      org.slf4j.LoggerFactory
-        .getLogger(getClass)
-        .warn(
-          s"q66_context_pack running with non-default knobs (shards=$shards, ctx=$ctx): " +
-            s"the registered oracle assumes shards=$SHARDS, ctx=$CTX — compare against " +
-            s"Curation.q66OracleFor($shards, $ctx) instead"
-        )
-    packOver(
-      Tables
-        .documents(spark, dir)
-        .select(col("lang"), col("doc_id"), size(split(trim(col("text")), "\\s+")).as("n_tokens")),
-      shards,
-      ctx
-    )
-  }
+  def q66ContextPack(spark: SparkSession, dir: String): DataFrame =
+    packOver(docWordCounts(spark, dir), SHARDS, CTX)
+
+  /** q66's packing input: (lang, doc_id, n_tokens) by whitespace words. */
+  private[graft] def docWordCounts(spark: SparkSession, dir: String): DataFrame =
+    Tables
+      .documents(spark, dir)
+      .select(col("lang"), col("doc_id"), size(split(trim(col("text")), "\\s+")).as("n_tokens"))
 
   /** q66's sharded greedy packing over ANY (lang, doc_id, n_tokens) frame —
     * q66 feeds it the raw corpus, q180 its BPE token counts.
@@ -89,8 +72,8 @@ object Curation {
       .orderBy(col("lang"), col("shard"), col("bin"))
   }
 
-  /** The q66 oracle at an arbitrary knob setting — the registered gate uses
-    * the defaults; specs use this to oracle-check non-default knobs too.
+  /** The q66 oracle at an arbitrary pack shape — the registered gate uses
+    * (SHARDS, CTX); specs use this to oracle-check `packOver` at other shapes.
     */
   def q66OracleFor(shards: Int, ctx: Int): String =
     s"""WITH d AS (
@@ -122,19 +105,9 @@ object Curation {
   // Scale shape: exactly q66's plan minus the final aggregate — one
   // (lang, shard)-hash exchange for the cumulative window, then pure
   // projections; output is one row per doc (an export, written not
-  // collected). Shares q66's knobs and their oracle-pinning warning.
+  // collected). Packs at q66's (SHARDS, CTX).
   // ---------------------------------------------------------------------------
   def q170PackManifest(spark: SparkSession, dir: String): DataFrame = {
-    val shards = spark.conf.getOption(ShardsConf).map(_.toInt).getOrElse(SHARDS)
-    val ctx = spark.conf.getOption(CtxConf).map(_.toInt).getOrElse(CTX)
-    if (shards != SHARDS || ctx != CTX)
-      org.slf4j.LoggerFactory
-        .getLogger(getClass)
-        .warn(
-          s"q170_pack_manifest running with non-default knobs (shards=$shards, ctx=$ctx): " +
-            s"the registered oracle assumes shards=$SHARDS, ctx=$CTX — compare against " +
-            s"Curation.q170OracleFor($shards, $ctx) instead"
-        )
     val base = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(
@@ -145,7 +118,7 @@ object Curation {
         )
       )
     )
-    manifestFrom(Tables.documents(spark, dir), base, shards, ctx)
+    manifestFrom(Tables.documents(spark, dir), base, SHARDS, CTX)
   }
 
   /** The manifest over a documents frame given per-(lang, shard) BASE
@@ -185,13 +158,13 @@ object Curation {
       .orderBy(col("lang"), col("shard"), col("doc_id"))
   }
 
-  /** The manifest oracle at arbitrary knobs — q66OracleFor's stream CTE
-    * with the projection instead of the rollup.
+  /** The manifest oracle — q66OracleFor's stream CTE with the projection
+    * instead of the rollup.
     */
-  def q170OracleFor(shards: Int, ctx: Int): String =
+  val q170Oracle: String =
     s"""WITH d AS (
        |  SELECT doc_id, lang, len(string_split_regex(trim(text), '\\s+')) AS n_tokens,
-       |         CAST(doc_id % $shards AS INT) AS shard
+       |         CAST(doc_id % $SHARDS AS INT) AS shard
        |  FROM documents),
        |c AS (
        |  SELECT lang, shard, doc_id, n_tokens,
@@ -201,15 +174,13 @@ object Curation {
        |SELECT lang, shard, doc_id,
        |       CAST(cum_before AS BIGINT) AS start_offset,
        |       CAST(n_tokens AS BIGINT) AS n_tokens,
-       |       CAST(floor(cum_before / $ctx.0) AS INT) AS bin,
-       |       CAST(cum_before % $ctx AS BIGINT) AS offset_in_bin,
-       |       CAST(floor((cum_before + n_tokens - 1) / $ctx.0) AS INT) AS end_bin,
-       |       CAST(CASE WHEN floor((cum_before + n_tokens - 1) / $ctx.0) > floor(cum_before / $ctx.0)
+       |       CAST(floor(cum_before / $CTX.0) AS INT) AS bin,
+       |       CAST(cum_before % $CTX AS BIGINT) AS offset_in_bin,
+       |       CAST(floor((cum_before + n_tokens - 1) / $CTX.0) AS INT) AS end_bin,
+       |       CAST(CASE WHEN floor((cum_before + n_tokens - 1) / $CTX.0) > floor(cum_before / $CTX.0)
        |                 THEN 1 ELSE 0 END AS INT) AS crosses
        |FROM c
        |ORDER BY lang, shard, doc_id""".stripMargin
-
-  val q170Oracle: String = q170OracleFor(SHARDS, CTX)
 
   // ---------------------------------------------------------------------------
   // q67 — train/test contamination screen: which TRAIN-split documents share

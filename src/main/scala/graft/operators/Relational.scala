@@ -359,58 +359,17 @@ object Relational {
         round(stddev(col("l_extendedprice")), 2).as("std_price"),
         count(lit(1)).as("n")
       )
-    // cumulative ranks over the (flag, price) value grid. Two plans, same
-    // integers (spec-pinned equal):
-    //   - rankBuckets <= 1 (default): one keyed window per flag — the
-    //     right plan while a flag's distinct-price grid fits one task.
-    //   - rankBuckets = R (production, graft.q12.rankBuckets — the r16
-    //     ADVICE fix): prices bucket into R monotone ranges; per-(flag,
-    //     bucket) partial counts prefix-sum over a BOUNDED grid (<= R rows
-    //     per flag) and the within-bucket running count windows over
-    //     ~1/R of the grid, so no task ever sorts a whole flag. Bucket
-    //     offset + within-bucket running sum IS the global running sum
-    //     (buckets are price-monotone); boundaries only affect
-    //     partitioning, never values. Locally the extra exchanges cost
-    //     more than 3 tiny windows, which is why the default stays 1 (the
-    //     round rule: scale knobs parameterised, local default comparable).
-    val rankBuckets =
-      spark.conf.getOption("graft.q12.rankBuckets").flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(1)
-    val valueGrid = li
+    // cumulative ranks over the (flag, price) value grid: one keyed window
+    // per flag, the right plan while a flag's distinct-price grid fits one
+    // task (ADVICE's q12 scale note: at 100 TB a flag's grid is one sort).
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("l_returnflag"))
+      .orderBy(col("l_extendedprice"))
+    val grid = li
       .groupBy(col("l_returnflag"), col("l_extendedprice"))
       .agg(count(lit(1)).as("c"))
-    val ranked =
-      if (rankBuckets <= 1) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("l_returnflag"))
-          .orderBy(col("l_extendedprice"))
-        valueGrid.withColumn("hi_rank", sum(col("c")).over(w))
-      } else {
-        val rng = li.agg(min(col("l_extendedprice")).as("pmin"), max(col("l_extendedprice")).as("pmax"))
-        val bucketed = valueGrid
-          .crossJoin(broadcast(rng))
-          .withColumn(
-            "bkt",
-            expr(
-              s"CAST(least(CASE WHEN pmax = pmin THEN 0 ELSE floor((l_extendedprice - pmin) * $rankBuckets.0 / (pmax - pmin)) END, ${rankBuckets - 1}) AS INT)"
-            )
-          )
-        val wOff = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("l_returnflag"))
-          .orderBy(col("bkt"))
-        val offs = bucketed
-          .groupBy(col("l_returnflag"), col("bkt"))
-          .agg(sum(col("c")).as("bc"))
-          .withColumn("off", sum(col("bc")).over(wOff) - col("bc"))
-          .select(col("l_returnflag"), col("bkt"), col("off"))
-        val wIn = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("l_returnflag"), col("bkt"))
-          .orderBy(col("l_extendedprice"))
-        bucketed
-          .join(offs, Seq("l_returnflag", "bkt"))
-          .withColumn("hi_rank", col("off") + sum(col("c")).over(wIn))
-          .select(col("l_returnflag"), col("l_extendedprice"), col("c"), col("hi_rank"))
-      }
-    val grid = ranked.withColumn("lo_rank", col("hi_rank") - col("c") + 1)
+      .withColumn("hi_rank", sum(col("c")).over(w))
+      .withColumn("lo_rank", col("hi_rank") - col("c") + 1)
     val med = grid
       .join(base.select(col("l_returnflag"), col("n")), "l_returnflag")
       .withColumn("p_lo", expr("(n + 1) div 2"))

@@ -25,11 +25,12 @@ import graft.core.Tables
   *     The [[plantedCorpus]] eval slice — a deterministic clustered corpus
   *     derived from the same table — is where a correct ANN demonstrates
   *     high recall at a small scanned fraction; the bench reports both.
-  *   - LSH recall/probe trade-off is tunable at query time: multiprobe
-  *     flips the least-confident sign bits (smallest |projection|) per
-  *     table, probing neighbor buckets without growing the index
-  *     (`graft.ann.lsh.probes`, default 2 extra probes per table). IVF's
-  *     lever is `graft.ann.ivf.nprobe` (default 4 of 16 cells).
+  *   - LSH recall/probe trade-off: multiprobe flips the least-confident
+  *     sign bits (smallest |projection|) per table, probing neighbor
+  *     buckets without growing the index (the profile's `lshProbes`;
+  *     `fast` flips 1 bit per table). IVF's lever is the profile's
+  *     `ivfNprobe` (`fast`: 4 of 16 cells). The `*With` entries and the
+  *     planted evals take either as an argument for sweeps.
   *   - IVF centroids are learned with 3 Lloyd iterations over a bounded
   *     deterministic sample (corpus-size-independent); only the sample and
   *     k×dim centroid summaries ever reach the driver.
@@ -183,6 +184,21 @@ object Similarity {
     private[operators] def fnSuffix: String = if (name == "fast") "" else s"_$name"
   }
 
+  /** `fast`'s probe widths:
+    *   - lshProbes 1 is the knee of the published recall/scan-fraction
+    *     curve (bench_details.json, sf0.1 planted corpus): it reaches
+    *     planted recall 1.00 at candidate fraction 0.199. probes=2 buys NO
+    *     planted recall for another 0.075 of the corpus scanned (0.274),
+    *     and probes=0 gives up the last 2 points (0.98 at 0.13).
+    *   - ivfNprobe 4: unlike the LSH probes, the sf0.1 curve's knee
+    *     (planted 1.00 at nprobe=1) does NOT hold at smaller corpora.
+    *     Measured planted recall at sf0.001/sf0.01 is 0.66/0.64 at
+    *     nprobe=1 and 0.90/0.90 at nprobe=2 (boundary queries whose true
+    *     cluster is not their nearest centroid), so fast probes 4 cells
+    *     (planted >= 0.98 at every SF) rather than chasing the
+    *     large-corpus knee.
+    *   - lshMinHits 1 is plain bucket union, the planted operating point.
+    */
   val Fast: AnnProfile = AnnProfile("fast", lshTables = 6, lshPlanes = 6, lshProbes = 1, ivfC = 16, ivfNprobe = 4)
 
   /** Sweep-chosen (tools.AnnTune, sf0.001/0.01/0.1 uniform corpus; r14
@@ -235,40 +251,6 @@ object Similarity {
       case Some(other) =>
         throw new IllegalArgumentException(s"$ProfileConf must be fast or quality, got '$other'")
     }
-
-  /** Query-time knob: extra flipped-bit probes per table (multiprobe LSH),
-    * overriding the profile's default. `fast`'s default 1 is the knee of
-    * the published recall/scan-fraction curve (bench_details.json, sf0.1
-    * planted corpus): probes=1 reaches planted recall 1.00 at candidate
-    * fraction 0.199 — probes=2 buys NO planted recall for another 0.075 of
-    * the corpus scanned (0.274), and probes=0 gives up the last 2 points
-    * (0.98 at 0.13).
-    */
-  val LshProbesConf = "graft.ann.lsh.probes"
-
-  private def lshExtraProbes(spark: SparkSession, prof: AnnProfile): Int =
-    spark.conf
-      .getOption(LshProbesConf)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(prof.lshProbes)
-      .max(0)
-      .min(prof.lshPlanes)
-
-  /** Query-time knob: minimum DISTINCT-table collisions before a candidate
-    * reaches the exact-distance pass (counting LSH), overriding the
-    * profile default. 1 = plain bucket union (fast's default and the
-    * planted operating point); `quality` runs [[Quality]].lshMinHits (3)
-    * — see the preset comment.
-    */
-  val LshMinHitsConf = "graft.ann.lsh.minhits"
-
-  private def lshMinHits(spark: SparkSession, prof: AnnProfile): Int =
-    spark.conf
-      .getOption(LshMinHitsConf)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(prof.lshMinHits)
-      .max(1)
-      .min(prof.lshTables)
 
   /** Deterministic hyperplane weights in [-1,1] (splitmix64-derived),
     * indexed [t * planes + p][dim]. Seeded by (t, p) alone, so a profile's
@@ -578,18 +560,8 @@ object Similarity {
   }
 
   def q35LshTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecFunctions.install(spark)
     val prof = annProfile(spark)
-    installPlaneBuckets(spark, prof)
-    topKRanked(
-      lshCandidates(
-        queriesDf(spark, dir),
-        buildLshIndexWith(spark, dir, prof),
-        lshExtraProbes(spark, prof),
-        prof.fnSuffix,
-        lshMinHits(spark, prof)
-      )
-    )
+    lshTopKWith(spark, dir, prof, prof.lshProbes, prof.lshMinHits)
   }
 
   // ---------------------------------------------------------------------------
@@ -603,26 +575,6 @@ object Similarity {
     * planted-eval and spec floors are calibrated against it.
     */
   private val C = Fast.ivfC
-
-  /** Query-time knob: how many of the profile's C cells each query probes,
-    * overriding the profile default. `fast`'s default 4: unlike the LSH
-    * probes knob, the published sf0.1 curve's knee (planted 1.00 at
-    * nprobe=1) does NOT hold at smaller corpora — measured planted recall
-    * at sf0.001/sf0.01 is 0.66/0.64 at nprobe=1 and 0.90/0.90 at nprobe=2
-    * (boundary queries whose true cluster is not their nearest centroid),
-    * so the default stays at 4 (planted ≥ 0.98 at every SF) rather than
-    * chasing the large-corpus knee. `quality`'s default 13 is the uniform
-    * recall >= 0.9 point (see AnnProfile).
-    */
-  val IvfNprobeConf = "graft.ann.ivf.nprobe"
-
-  private def ivfNprobe(spark: SparkSession, prof: AnnProfile): Int =
-    spark.conf
-      .getOption(IvfNprobeConf)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(prof.ivfNprobe)
-      .max(1)
-      .min(prof.ivfC)
 
   /** Centroid indexes of `child` sorted by L2 distance, with the centroid
     * table held as a REFERENCE OBJECT: inlining 16×64 literal doubles into
@@ -845,20 +797,13 @@ object Similarity {
   }
 
   def q36IvfTopK(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecFunctions.install(spark)
     val prof = annProfile(spark)
-    val (cents, corpus) = buildIvfIndexWith(spark, dir, prof)
     // quality sizes nprobe to the corpus (over-quantized toy corpora take
-    // the widened constant); the conf override and the C clamp still win
-    val base =
-      if (prof.name == Quality.name) qualityNprobeFor(corpus.count()) else prof.ivfNprobe
-    val np = spark.conf
-      .getOption(IvfNprobeConf)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(base)
-      .max(1)
-      .min(prof.ivfC)
-    ivfTopKFrom(spark, queriesDf(spark, dir), cents, corpus, np)
+    // the widened constant)
+    val np =
+      if (prof.name == Quality.name) qualityNprobeFor(buildIvfIndexWith(spark, dir, prof)._2.count())
+      else prof.ivfNprobe
+    ivfTopKWith(spark, dir, prof, np)
   }
 
   // ---------------------------------------------------------------------------
@@ -889,23 +834,15 @@ object Similarity {
   private val PQ_SUB = DIM / PQ_M // dims per subspace
   private val PQ_K = 256 // codewords per subspace -> 8-bit codes (standard PQ)
 
-  /** Query-time knob: ADC candidates per query before exact re-rank (the
-    * PQ recall/re-rank-cost lever, like LSH probes / IVF nprobe). The
-    * default 64 measures planted recall 0.98/0.96/1.00 and uniform
-    * 0.98/1.00/0.84 at sf0.001/0.01/0.1 — a CONSTANT shortlist dilutes on
-    * uniform data as the corpus grows (it is 3% of sf0.1's corpus), which
-    * is the honest trade; raise it per-corpus when uniform retrieval
-    * matters more than re-rank cost.
+  /** ADC candidates per query before exact re-rank (the PQ
+    * recall/re-rank-cost lever, like LSH probes / IVF nprobe). 64 measures
+    * planted recall 0.98/0.96/1.00 and uniform 0.98/1.00/0.84 at
+    * sf0.001/0.01/0.1 — a CONSTANT shortlist dilutes on uniform data as
+    * the corpus grows (it is 3% of sf0.1's corpus), which is the honest
+    * trade; the `shortlist` arguments of the sweep entries measure wider
+    * ones.
     */
-  val PqShortlistConf = "graft.ann.pq.shortlist"
   private val PQ_SHORTLIST_DEFAULT = 64
-
-  private def pqShortlist(spark: SparkSession): Int =
-    spark.conf
-      .getOption(PqShortlistConf)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(PQ_SHORTLIST_DEFAULT)
-      .max(K)
 
   /** Lloyd over an in-memory sample (init = first k, empty cluster keeps
     * its centroid — the trainCentroidsFrom conventions, generalized).
@@ -1195,34 +1132,38 @@ object Similarity {
       queries: DataFrame,
       books: Array[Array[Array[Double]]],
       codes: DataFrame,
-      corpus: DataFrame
+      corpus: DataFrame,
+      shortlist: Int
   ): DataFrame = {
     val i = installPq(spark, books)
-    val shortlistN = pqShortlist(spark)
+    val shortlistN = math.max(shortlist, K)
     val q = queries
       .withColumn("lut", expr(s"pq_lut_$i(va)"))
       .select(col("query_id"), col("va"), col("lut"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("vec_id"))
-    val shortlist = broadcast(q)
+    val shortlisted = broadcast(q)
       .join(codes, col("query_id") =!= col("vec_id"))
       .withColumn("adc", expr("pq_adc(lut, code)"))
       .withColumn("srank", row_number().over(w))
       .filter(col("srank") <= shortlistN)
       .select(col("query_id"), col("va"), col("vec_id"))
-    topKRanked(broadcast(shortlist).join(corpus, "vec_id"))
+    topKRanked(broadcast(shortlisted).join(corpus, "vec_id"))
   }
 
-  def q75PqTopK(spark: SparkSession, dir: String): DataFrame = {
+  def q75PqTopK(spark: SparkSession, dir: String): DataFrame = pqTopKWith(spark, dir, PQ_SHORTLIST_DEFAULT)
+
+  /** Uniform-corpus PQ top-k at an arbitrary shortlist width. */
+  def pqTopKWith(spark: SparkSession, dir: String, shortlist: Int): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val (books, codes) = buildPqIndex(spark, dir)
-    pqTopKFrom(spark, queriesDf(spark, dir), books, codes, unitCorpus(Tables.embeddings(spark, dir)))
+    pqTopKFrom(spark, queriesDf(spark, dir), books, codes, unitCorpus(Tables.embeddings(spark, dir)), shortlist)
   }
 
   /** q75 on the planted clustered corpus — the recall yardstick. */
-  def plantedPqTopK(spark: SparkSession, dir: String): DataFrame = {
+  def plantedPqTopK(spark: SparkSession, dir: String, shortlist: Int = PQ_SHORTLIST_DEFAULT): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val (books, codes) = plantedPqIndex(spark, dir)
-    pqTopKFrom(spark, plantedQueries(spark, dir), books, codes, unitCorpus(plantedCorpus(spark, dir)))
+    pqTopKFrom(spark, plantedQueries(spark, dir), books, codes, unitCorpus(plantedCorpus(spark, dir)), shortlist)
   }
 
   // ---------------------------------------------------------------------------
@@ -1243,8 +1184,8 @@ object Similarity {
   // knob on clustered data — planted recall jumps 0.44 -> 1.00 at
   // shortlist 32 -> 64 for EVERY nprobe in {2,4,6} — while nprobe buys
   // uniform recall roughly linearly (0.36/0.48/0.60 at np=2/4/6,
-  // shortlist 64). The defaults (nprobe=4 via IvfNprobeConf, shortlist=64
-  // via PqShortlistConf) sit exactly at the planted knee; raising nprobe
+  // shortlist 64). q76 runs nprobe = Fast.ivfNprobe (4) and shortlist =
+  // PQ_SHORTLIST_DEFAULT (64), exactly the planted knee; raising nprobe
   // past it only helps cluster-free corpora, where the `quality` profile
   // is the documented path.
   // ---------------------------------------------------------------------------
@@ -1340,28 +1281,34 @@ object Similarity {
       books: Array[Array[Array[Double]]],
       index: DataFrame,
       corpus: DataFrame,
-      nprobe: Int
+      nprobe: Int,
+      shortlist: Int
   ): DataFrame = {
     val fnC = installCentroidRanks(spark, cents)
     val i = installPq(spark, books)
-    val shortlistN = pqShortlist(spark)
+    val np = math.min(math.max(nprobe, 1), C)
+    val shortlistN = math.max(shortlist, K)
     val probes = queries
       .withColumn("qraw_d", expr(toDouble("qraw")))
       .withColumn("lut", expr(s"pq_lut_$i(va)"))
-      .withColumn("cluster", explode(expr(s"slice($fnC(qraw_d), 1, $nprobe)")))
+      .withColumn("cluster", explode(expr(s"slice($fnC(qraw_d), 1, $np)")))
       .select(col("query_id"), col("va"), col("lut"), col("cluster"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("vec_id"))
-    val shortlist = broadcast(probes)
+    val shortlisted = broadcast(probes)
       .join(index, Seq("cluster"))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("adc", expr("pq_adc(lut, code)"))
       .withColumn("srank", row_number().over(w))
       .filter(col("srank") <= shortlistN)
       .select(col("query_id"), col("va"), col("vec_id"))
-    topKRanked(broadcast(shortlist).join(corpus, "vec_id"))
+    topKRanked(broadcast(shortlisted).join(corpus, "vec_id"))
   }
 
-  def q76IvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
+  def q76IvfPqTopK(spark: SparkSession, dir: String): DataFrame =
+    ivfPqTopKWith(spark, dir, Fast.ivfNprobe, PQ_SHORTLIST_DEFAULT)
+
+  /** Uniform-corpus IVF-PQ top-k at an arbitrary nprobe and shortlist. */
+  def ivfPqTopKWith(spark: SparkSession, dir: String, nprobe: Int, shortlist: Int): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val (cents, books, index) = buildIvfPqIndex(spark, dir)
     ivfPqTopKFrom(
@@ -1371,12 +1318,18 @@ object Similarity {
       books,
       index,
       unitCorpus(Tables.embeddings(spark, dir)),
-      ivfNprobe(spark, Fast)
+      nprobe,
+      shortlist
     )
   }
 
   /** q76 on the planted clustered corpus — the recall yardstick. */
-  def plantedIvfPqTopK(spark: SparkSession, dir: String): DataFrame = {
+  def plantedIvfPqTopK(
+      spark: SparkSession,
+      dir: String,
+      nprobe: Int = Fast.ivfNprobe,
+      shortlist: Int = PQ_SHORTLIST_DEFAULT
+  ): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val (cents, books, index) = plantedIvfPqIndex(spark, dir)
     ivfPqTopKFrom(
@@ -1386,7 +1339,8 @@ object Similarity {
       books,
       index,
       unitCorpus(plantedCorpus(spark, dir)),
-      ivfNprobe(spark, Fast)
+      nprobe,
+      shortlist
     )
   }
 
@@ -1501,13 +1455,13 @@ object Similarity {
     withBuckets(unitCorpus(plantedCorpus(spark, dir)), "vb", bsName = "cbs").localCheckpoint()
   }
 
-  /** q35's pipeline on the planted corpus; `extra` < 0 takes the session
-    * conf. Same index, same probe predicate — only the data differs.
+  /** q35's pipeline on the planted corpus. Same index, same probe
+    * predicate — only the data differs.
     */
-  def plantedLshTopK(spark: SparkSession, dir: String, extra: Int = -1): DataFrame = {
+  def plantedLshTopK(spark: SparkSession, dir: String, extra: Int = Fast.lshProbes): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     installPlaneBuckets(spark, Fast)
-    val m = if (extra < 0) lshExtraProbes(spark, Fast) else math.min(extra, Fast.lshPlanes)
+    val m = math.min(extra, Fast.lshPlanes)
     topKRanked(lshCandidates(plantedQueries(spark, dir), plantedLshIndex(spark, dir), m))
   }
 
@@ -1526,14 +1480,13 @@ object Similarity {
     computeIvfIndexFrom(spark, plantedCorpus(spark, dir))
   }
 
-  /** q36's pipeline on the planted corpus; `nprobe` < 1 takes the conf.
-    * Fast-profile geometry, same pinning rationale as the planted LSH eval.
+  /** q36's pipeline on the planted corpus. Fast-profile geometry, same
+    * pinning rationale as the planted LSH eval.
     */
-  def plantedIvfTopK(spark: SparkSession, dir: String, nprobe: Int = -1): DataFrame = {
+  def plantedIvfTopK(spark: SparkSession, dir: String, nprobe: Int = Fast.ivfNprobe): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val (cents, corpus) = plantedIvfIndex(spark, dir)
-    val np = if (nprobe < 1) ivfNprobe(spark, Fast) else math.min(nprobe, C)
-    ivfTopKFrom(spark, plantedQueries(spark, dir), cents, corpus, np)
+    ivfTopKFrom(spark, plantedQueries(spark, dir), cents, corpus, math.min(nprobe, C))
   }
 
   /** IVF probed-candidate count on the planted corpus (scan fraction). */

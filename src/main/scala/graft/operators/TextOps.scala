@@ -995,9 +995,8 @@ object TextOps {
   // curve is exactly how much); this is the q66 rollup a loader can trust
   // at the tokenizer it will really use. Population contract: the q98
   // apply population (docs with >= 1 whitespace word; training covers
-  // every corpus word, so the tokenize join is total on it). Shares
-  // q66/q170's shards/ctx knobs and their oracle-pinning warning (the
-  // registered oracle assumes the defaults).
+  // every corpus word, so the tokenize join is total on it). Packs at
+  // q66/q170's (SHARDS, CTX) shape, the one its oracle assumes.
   //
   // Scale shape: the per-doc token sum is q98's broadcast tokenize join +
   // one doc-keyed aggregate; packing is q66's single (lang, shard)-hash
@@ -1027,22 +1026,8 @@ object TextOps {
       .select(col("lang"), col("doc_id"), col("n_tokens"))
   }
 
-  def q180BpePack(spark: SparkSession, dir: String): DataFrame = {
-    // same knob discipline as q66/q170/StreamingPack: honor the session
-    // confs so one session's q66/q170/q180 outputs stay mutually
-    // consistent, and warn loudly that the REGISTERED oracle (pinned to
-    // the defaults) no longer applies under non-default knobs
-    val shards = spark.conf.getOption(Curation.ShardsConf).map(_.toInt).getOrElse(Curation.SHARDS)
-    val ctx = spark.conf.getOption(Curation.CtxConf).map(_.toInt).getOrElse(Curation.CTX)
-    if (shards != Curation.SHARDS || ctx != Curation.CTX)
-      org.slf4j.LoggerFactory
-        .getLogger(getClass)
-        .warn(
-          s"q180_bpe_pack running with non-default knobs (shards=$shards, ctx=$ctx): " +
-            s"the registered oracle assumes shards=${Curation.SHARDS}, ctx=${Curation.CTX}"
-        )
-    Curation.packOver(bpeDocTokens(spark, dir), shards, ctx)
-  }
+  def q180BpePack(spark: SparkSession, dir: String): DataFrame =
+    Curation.packOver(bpeDocTokens(spark, dir), Curation.SHARDS, Curation.CTX)
 
   /** q94's chain + q98's tokenize join reduced to per-doc totals, then
     * q66's prefix-sum packing arithmetic verbatim.

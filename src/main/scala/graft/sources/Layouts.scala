@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
-/** Physical table layouts for shuffle avoidance and small-file compaction —
+/** Physical table layouts for shuffle avoidance —
   * the storage-side half of the 100 TB design (SURVEY §4: the reference
   * leans on Catalyst defaults; a real deployment co-locates its big joins).
   *
@@ -71,49 +71,4 @@ object Layouts {
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .saveAsTable(table)
-
-  final case class CompactionReport(
-      filesBefore: Int,
-      bytesBefore: Long,
-      filesAfter: Int,
-      bytesAfter: Long
-  )
-
-  /** Compact a directory of small parquet files into ~`targetBytes` outputs —
-    * the small-files problem: a 100 TB table ingested in thousands of
-    * micro-batches accumulates millions of KB-sized files, and every scan
-    * then pays file-open/footer-parse/scheduling cost per file instead of
-    * per row group. Output file count = ceil(totalBytes / targetBytes),
-    * materialized with `coalesce` — a NARROW dependency (tasks concatenate
-    * input partitions, no shuffle), which is what makes compaction cheap
-    * enough to run continuously. Use `repartition` instead only when input
-    * sizes are so skewed that bin-packing by partition order misbalances
-    * outputs (that is a full shuffle of the table).
-    */
-  def compact(
-      spark: SparkSession,
-      inDir: String,
-      outDir: String,
-      targetBytes: Long = 128L << 20
-  ): CompactionReport = {
-    val (nBefore, bytesBefore) = dirStats(spark, inDir)
-    val nOut = math.max(1, math.ceil(bytesBefore.toDouble / targetBytes).toInt)
-    graft.core.Tables.parquet(spark, inDir).coalesce(nOut).write.mode(SaveMode.Overwrite).parquet(outDir)
-    val (nAfter, bytesAfter) = dirStats(spark, outDir)
-    CompactionReport(nBefore, bytesBefore, nAfter, bytesAfter)
-  }
-
-  /** (parquet file count, total bytes) under `dir`. */
-  def dirStats(spark: SparkSession, dir: String): (Int, Long) = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var n = 0
-    var bytes = 0L
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet")) { n += 1; bytes += f.getLen }
-    }
-    (n, bytes)
-  }
 }

@@ -21,12 +21,9 @@ import graft.operators.Curation
   * documents' placements never change (append-only state, no retroactive
   * repair by construction).
   *
-  * The maintainer packs at the DEFAULT knobs (shards/ctx): state written
-  * across ticks must not depend on a session conf that could differ
-  * between ticks — and a tick under a session whose confs differ warns
-  * loudly (the batch q66/q170 oracle-pinning warning, mirrored here so a
-  * maintained manifest diverging from its session's batch q170 is visible,
-  * not silent). The tick/watermark/crash protocol is
+  * The maintainer packs at q170's shape (`Curation.SHARDS`/`CTX`), so the
+  * maintained manifest and the batch q170 cannot diverge. The
+  * tick/watermark/crash protocol is
   * [[SliceMaintainer.tickWithLo]]'s — the variant that exposes the
   * delta's first id so this slice can read its prior-state base at the
   * correct crash-replay boundary.
@@ -53,23 +50,7 @@ object StreamingPack {
     * BELOW its own delta key, so a crashed tick's replay never reads its
     * own stale slice.
     */
-  def tick(spark: SparkSession, dataDir: String, stateDir: String): Long = {
-    // the batch q66/q170 warn when session knobs diverge from the defaults
-    // their registered oracle assumes; the maintainer must be just as loud —
-    // it ALWAYS packs at the defaults (state written across ticks cannot
-    // depend on a conf that could differ between ticks), so a session with
-    // non-default knobs gets a manifest that silently diverges from its own
-    // batch q170 unless told
-    val shards = spark.conf.getOption(Curation.ShardsConf).map(_.toInt).getOrElse(Curation.SHARDS)
-    val ctx = spark.conf.getOption(Curation.CtxConf).map(_.toInt).getOrElse(Curation.CTX)
-    if (shards != Curation.SHARDS || ctx != Curation.CTX)
-      org.slf4j.LoggerFactory
-        .getLogger(getClass)
-        .warn(
-          s"StreamingPack ticking at the DEFAULT knobs (shards=${Curation.SHARDS}, ctx=${Curation.CTX}) " +
-            s"while this session sets shards=$shards, ctx=$ctx — the maintained manifest will diverge " +
-            "from this session's batch q170_pack_manifest; clear the confs or re-pack in batch"
-        )
+  def tick(spark: SparkSession, dataDir: String, stateDir: String): Long =
     SliceMaintainer.tickWithLo(
       spark,
       dataDir,
@@ -83,7 +64,6 @@ object StreamingPack {
         Curation.manifestFrom(delta, base, Curation.SHARDS, Curation.CTX)
       }
     )
-  }
 
   /** The maintained manifest — q170's exact output over every document
     * the ticks have covered.

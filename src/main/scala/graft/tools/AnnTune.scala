@@ -7,12 +7,20 @@ import graft.operators.{Dedup, Similarity}
 /** ANN recall/scan-fraction sweep — the tuning companion to Bench's
   * `quality` numbers. Prints, for the uniform corpus AND the planted
   * clustered corpus, recall@10 vs the exact baseline at each multiprobe /
-  * nprobe setting, with the measured candidate fraction. Run:
+  * nprobe / shortlist setting, with the measured candidate fraction. Each
+  * swept value is passed to a `Similarity` entry that takes it as an
+  * argument (`lshTopKWith`, `ivfTopKWith`, `pqTopKWith`, `ivfPqTopKWith`
+  * and the `planted*` evals). Run:
   *
   *   sbt "runMain graft.tools.AnnTune /root/testdata/sf0.1"
   *   (or SPARK_GRAFT_SF_DIR=... with no argument)
   */
 object AnnTune {
+  private def topkSet(df: DataFrame): Set[(Long, Long)] =
+    df.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+  private def recall(got: Set[(Long, Long)], want: Set[(Long, Long)]): Double =
+    if (want.isEmpty) Double.NaN else got.intersect(want).size.toDouble / want.size
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
@@ -23,35 +31,29 @@ object AnnTune {
     val spark = graft.core.Sessions.local("graft-ann-tune")
     if (only == "clsh") { clshSweep(spark, sfDir); spark.stop(); return }
 
-    def topkSet(df: DataFrame): Set[(Long, Long)] =
-      df.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     def pairSet(df: DataFrame): Set[(Long, Long)] =
       df.select("vec_a", "vec_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recall(got: Set[(Long, Long)], want: Set[(Long, Long)]): Double =
-      if (want.isEmpty) Double.NaN else got.intersect(want).size.toDouble / want.size
 
     val n = graft.core.Tables.embeddings(spark, sfDir).count()
     println(s"corpus n=$n dir=$sfDir")
 
     val exactU = topkSet(Similarity.q34BruteForceTopK(spark, sfDir))
     val exactP = topkSet(Similarity.plantedBruteTopK(spark, sfDir))
+    // uniform legs under the session profile's geometry, as q35/q36 serve
+    val prof = Similarity.annProfile(spark)
     for (m <- 0 to 4) {
-      spark.conf.set(Similarity.LshProbesConf, m.toString)
-      val ru = recall(topkSet(Similarity.q35LshTopK(spark, sfDir)), exactU)
+      val ru = recall(topkSet(Similarity.lshTopKWith(spark, sfDir, prof, m, prof.lshMinHits)), exactU)
       val rp = recall(topkSet(Similarity.plantedLshTopK(spark, sfDir, m)), exactP)
       val frac = Similarity.plantedLshCandidateCount(spark, sfDir, m).toDouble / (5.0 * n)
       println(f"lsh m=$m uniform=$ru%.3f planted=$rp%.3f planted_cand_frac=$frac%.3f")
     }
-    spark.conf.unset(Similarity.LshProbesConf)
 
     for (np <- 1 to 6) {
-      spark.conf.set(Similarity.IvfNprobeConf, np.toString)
-      val ru = recall(topkSet(Similarity.q36IvfTopK(spark, sfDir)), exactU)
+      val ru = recall(topkSet(Similarity.ivfTopKWith(spark, sfDir, prof, np)), exactU)
       val rp = recall(topkSet(Similarity.plantedIvfTopK(spark, sfDir, np)), exactP)
       val frac = Similarity.plantedIvfCandidateCount(spark, sfDir, np).toDouble / (5.0 * n)
       println(f"ivf np=$np uniform=$ru%.3f planted=$rp%.3f planted_cand_frac=$frac%.3f")
     }
-    spark.conf.unset(Similarity.IvfNprobeConf)
 
     val exactPairsP = pairSet(Dedup.plantedExactNearDup(spark, sfDir))
     val lshPairsP = pairSet(Dedup.plantedLshNearDup(spark, sfDir))
@@ -62,30 +64,23 @@ object AnnTune {
 
     // PQ: recall vs shortlist width (the ADC pass always scans every 8-byte
     // code; the shortlist is the exact-re-rank budget).
-    val exactP2 = topkSet(Similarity.plantedBruteTopK(spark, sfDir))
     for (sl <- Seq(16, 32, 64, 128)) {
-      spark.conf.set(Similarity.PqShortlistConf, sl.toString)
-      val ru = recall(topkSet(Similarity.q75PqTopK(spark, sfDir)), exactU)
-      val rp = recall(topkSet(Similarity.plantedPqTopK(spark, sfDir)), exactP2)
+      val ru = recall(topkSet(Similarity.pqTopKWith(spark, sfDir, sl)), exactU)
+      val rp = recall(topkSet(Similarity.plantedPqTopK(spark, sfDir, sl)), exactP)
       println(f"pq shortlist=$sl uniform=$ru%.3f planted=$rp%.3f rerank_frac=${sl.toDouble / n}%.3f")
     }
-    spark.conf.unset(Similarity.PqShortlistConf)
 
     // IVF-PQ: the production composition's 2-D grid — nprobe sets how much
     // of the code table the ADC pass reads (nprobe/C), shortlist the exact
-    // re-rank budget. Both knobs are the session confs q76 already reads.
+    // re-rank budget (q76 serves nprobe 4, shortlist 64).
     for {
       np <- Seq(2, 4, 6)
       sl <- Seq(32, 64, 128)
     } {
-      spark.conf.set(Similarity.IvfNprobeConf, np.toString)
-      spark.conf.set(Similarity.PqShortlistConf, sl.toString)
-      val ru = recall(topkSet(Similarity.q76IvfPqTopK(spark, sfDir)), exactU)
-      val rp = recall(topkSet(Similarity.plantedIvfPqTopK(spark, sfDir)), exactP)
+      val ru = recall(topkSet(Similarity.ivfPqTopKWith(spark, sfDir, np, sl)), exactU)
+      val rp = recall(topkSet(Similarity.plantedIvfPqTopK(spark, sfDir, np, sl)), exactP)
       println(f"ivfpq np=$np shortlist=$sl uniform=$ru%.3f planted=$rp%.3f")
     }
-    spark.conf.unset(Similarity.IvfNprobeConf)
-    spark.conf.unset(Similarity.PqShortlistConf)
 
     // Structural sweep (uniform corpus): the grid the profile presets were
     // chosen from. Tables x planes x probes for LSH, nprobe (x centroid
@@ -133,10 +128,6 @@ object AnnTune {
     * neighbors). scan fraction = exact-distance evaluations.
     */
   private def clshSweep(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
-    def topkSet(df: DataFrame): Set[(Long, Long)] =
-      df.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def recall(got: Set[(Long, Long)], want: Set[(Long, Long)]): Double =
-      if (want.isEmpty) Double.NaN else got.intersect(want).size.toDouble / want.size
     val n = graft.core.Tables.embeddings(spark, sfDir).count()
     val exactU = topkSet(Similarity.q34BruteForceTopK(spark, sfDir))
     println("-- counting-lsh sweep (uniform corpus): tables x probes x minhits --")

@@ -12,6 +12,10 @@ class CurationSpec extends SparkSpec {
   private def tokens(text: String): Array[String] =
     text.trim.toLowerCase.replaceAll("\\s+", " ").split(" ")
 
+  /** q66's packing at a non-registered (shards, ctx) shape. */
+  private def packAt(dir: String, shards: Int, ctx: Int) =
+    Curation.packOver(Curation.docWordCounts(spark, dir), shards, ctx).collect()
+
   test("q66 packing: conserves docs, bins contiguous, boundaries at CTX multiples") {
     val rows = Curation.q66ContextPack(spark, sfDir).collect()
     assert(rows.nonEmpty)
@@ -35,32 +39,25 @@ class CurationSpec extends SparkSpec {
 
   test("q66 shard/ctx knobs: any shard count conserves docs and token mass") {
     val base = Curation.q66ContextPack(spark, sfDir).collect()
-    try {
-      spark.conf.set(Curation.ShardsConf, "32")
-      spark.conf.set(Curation.CtxConf, "128")
-      val scaled = Curation.q66ContextPack(spark, sfDir).collect()
-      assert(
-        scaled.map(_.getAs[Long]("n_docs")).sum === base.map(_.getAs[Long]("n_docs")).sum,
-        "re-sharding lost or duplicated docs"
-      )
-      assert(
-        scaled.map(_.getAs[Long]("bin_tokens")).sum === base.map(_.getAs[Long]("bin_tokens")).sum,
-        "re-sharding changed total token mass"
-      )
-      assert(
-        scaled.map(r => (r.getAs[String]("lang"), r.getAs[Int]("shard"))).distinct.length >
-          base.map(r => (r.getAs[String]("lang"), r.getAs[Int]("shard"))).distinct.length,
-        "more shards must mean more independent packing streams"
-      )
-    } finally {
-      spark.conf.unset(Curation.ShardsConf)
-      spark.conf.unset(Curation.CtxConf)
-    }
+    val scaled = packAt(sfDir, 32, 128)
+    assert(
+      scaled.map(_.getAs[Long]("n_docs")).sum === base.map(_.getAs[Long]("n_docs")).sum,
+      "re-sharding lost or duplicated docs"
+    )
+    assert(
+      scaled.map(_.getAs[Long]("bin_tokens")).sum === base.map(_.getAs[Long]("bin_tokens")).sum,
+      "re-sharding changed total token mass"
+    )
+    assert(
+      scaled.map(r => (r.getAs[String]("lang"), r.getAs[Int]("shard"))).distinct.length >
+        base.map(r => (r.getAs[String]("lang"), r.getAs[Int]("shard"))).distinct.length,
+      "more shards must mean more independent packing streams"
+    )
   }
 
   test("q66 packing matches a sequential reference packer on random corpora and knobs") {
     // the distributed window/bin math vs the obvious single-threaded
-    // packer, across random doc sizes and non-default knob settings
+    // packer, across random doc sizes and other (shards, ctx) shapes
     import spark.implicits._
     val rng = new scala.util.Random(42)
     for (trial <- 1 to 3) {
@@ -90,20 +87,10 @@ class CurationSpec extends SparkSpec {
         .toSeq
         .sorted
 
-      val got =
-        try {
-          spark.conf.set(Curation.ShardsConf, shards.toString)
-          spark.conf.set(Curation.CtxConf, ctx.toString)
-          Curation
-            .q66ContextPack(spark, dir)
-            .collect()
-            .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
-            .toSeq
-            .sorted
-        } finally {
-          spark.conf.unset(Curation.ShardsConf)
-          spark.conf.unset(Curation.CtxConf)
-        }
+      val got = packAt(dir, shards, ctx)
+        .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getLong(4)))
+        .toSeq
+        .sorted
       assert(got === expected, s"trial $trial: shards=$shards ctx=$ctx")
     }
   }
@@ -160,8 +147,8 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q66 at shards=3/ctx=128: Spark matches the parameterized DuckDB oracle") {
-    // The registered gate only ever runs the DEFAULT knobs; this is the one
-    // non-default oracle check, via the driver-side python/duckdb env (the
+    // The registered gate only ever runs q66's own (SHARDS, CTX); this is the
+    // one other-shape oracle check, via the driver-side python/duckdb env (the
     // same engine the gate uses). Skipped — not silently passed — when that
     // env is absent, so `sbt test` stays green on a bare JVM box.
     import scala.sys.process._
@@ -185,19 +172,9 @@ class CurationSpec extends SparkSpec {
     assert(code === 0, "duckdb oracle run failed")
     val want = out.toString.linesIterator.toSeq
 
-    val got =
-      try {
-        spark.conf.set(Curation.ShardsConf, shards.toString)
-        spark.conf.set(Curation.CtxConf, ctx.toString)
-        Curation
-          .q66ContextPack(spark, sfDir)
-          .collect()
-          .map(r => Seq(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4)).mkString("\t"))
-          .toSeq
-      } finally {
-        spark.conf.unset(Curation.ShardsConf)
-        spark.conf.unset(Curation.CtxConf)
-      }
+    val got = packAt(sfDir, shards, ctx)
+      .map(r => Seq(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4)).mkString("\t"))
+      .toSeq
     assert(got.length === want.length, s"row counts differ: spark=${got.length} duckdb=${want.length}")
     got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
       assert(g === w, s"row $i differs")

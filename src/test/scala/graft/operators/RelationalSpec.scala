@@ -77,13 +77,4 @@ class RelationalSpec extends SparkSpec {
       assert(mn <= md && md <= mx)
     }
   }
-
-  test("q12 stats: bucketed rank plan (graft.q12.rankBuckets) equals the single-window plan") {
-    val plain = Relational.q12Stats(spark, sfDir).collect().toSeq
-    spark.conf.set("graft.q12.rankBuckets", "64")
-    try {
-      val bucketed = Relational.q12Stats(spark, sfDir).collect().toSeq
-      assert(bucketed == plain)
-    } finally spark.conf.unset("graft.q12.rankBuckets")
-  }
 }

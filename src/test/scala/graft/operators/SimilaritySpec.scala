@@ -229,11 +229,8 @@ class SimilaritySpec extends SparkSpec {
     // with the shortlist covering the whole corpus the ADC stage cannot
     // exclude anyone, so the exact re-rank must reproduce q34 verbatim
     val brute = Similarity.q34BruteForceTopK(spark, sfDir).collect().map(_.toString)
-    spark.conf.set(Similarity.PqShortlistConf, "1000000")
-    try {
-      val full = Similarity.q75PqTopK(spark, sfDir).collect().map(_.toString)
-      assert(full.sameElements(brute), "full-shortlist PQ must equal brute force exactly")
-    } finally spark.conf.unset(Similarity.PqShortlistConf)
+    val full = Similarity.pqTopKWith(spark, sfDir, shortlist = 1000000).collect().map(_.toString)
+    assert(full.sameElements(brute), "full-shortlist PQ must equal brute force exactly")
   }
 
   test("q76 IVF-PQ: shape, exact cosines, planted recall >= 0.9, index is 12 bytes/vector") {
@@ -270,15 +267,8 @@ class SimilaritySpec extends SparkSpec {
     // for the approximation to exclude — the exact re-rank must reproduce
     // q34 verbatim, which pins the whole probe/ADC/shortlist plumbing
     val brute = Similarity.q34BruteForceTopK(spark, sfDir).collect().map(_.toString)
-    spark.conf.set(Similarity.IvfNprobeConf, "16")
-    spark.conf.set(Similarity.PqShortlistConf, "1000000")
-    try {
-      val full = Similarity.q76IvfPqTopK(spark, sfDir).collect().map(_.toString)
-      assert(full.sameElements(brute), "fully-open IVF-PQ must equal brute force exactly")
-    } finally {
-      spark.conf.unset(Similarity.IvfNprobeConf)
-      spark.conf.unset(Similarity.PqShortlistConf)
-    }
+    val full = Similarity.ivfPqTopKWith(spark, sfDir, nprobe = 16, shortlist = 1000000).collect().map(_.toString)
+    assert(full.sameElements(brute), "fully-open IVF-PQ must equal brute force exactly")
   }
 
   test("q36 centroids: C centroids of corpus dimension, finite values") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Physical-layout behavior: bucketed joins and aggregations must not
-  * shuffle; compaction keeps rows while collapsing files.
+  * shuffle.
   */
 class LayoutsSpec extends SparkSpec {
 
@@ -47,21 +47,5 @@ class LayoutsSpec extends SparkSpec {
       val plan = agg.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"), s"bucketed agg must not shuffle:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-  }
-
-  test("compaction: many small files collapse to the target count, rows preserved") {
-    val base = Files.createTempDirectory("compaction")
-    val in = s"$base/in"
-    val out = s"$base/out"
-    // simulate a micro-batched ingest: 20 tiny files
-    spark.range(0, 2000).withColumn("v", col("id") * 2).repartition(20).write.parquet(in)
-    val (nBefore, _) = Layouts.dirStats(spark, in)
-    assert(nBefore === 20)
-
-    val report = Layouts.compact(spark, in, out, targetBytes = 1L << 30)
-    assert(report.filesBefore === 20 && report.filesAfter === 1)
-    assert(spark.read.parquet(out).count() === 2000)
-    assert(spark.read.parquet(out).agg(sum(col("v"))).collect().head.getLong(0) ===
-      spark.read.parquet(in).agg(sum(col("v"))).collect().head.getLong(0))
   }
 }
