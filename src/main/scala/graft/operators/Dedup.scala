@@ -513,25 +513,30 @@ object Dedup {
   // ---------------------------------------------------------------------------
   // q60 — embedding near-dup via hyperplane-LSH candidates + exact verify:
   // the sub-quadratic scale path over the same data as q33. Candidate pairs
-  // = corpus vectors sharing any (table, bucket) in the shared LSH index
-  // (Similarity.buildLshIndex — built once per session, reused by q35);
-  // exact cosine is computed on candidates ONLY. Reported pairs are always a
-  // SUBSET of q33's exact output (precision 1); recall < 1 is the ANN trade
-  // — DedupSpec pins it against q33 at sf0.001. Plan shape: bucket
-  // equi-join, never a cartesian/BNLJ.
+  // = corpus vectors sharing any (table, bucket) in the shared LSH postings
+  // index (Similarity.buildLshIndex — built once per session, reused by
+  // q35); the pair stage carries ids and bucket arrays only, and the unit
+  // vectors are joined by id from the shared unit-corpus stage after the
+  // first-collision dedup, so exact cosine is computed on candidates ONLY.
+  // Reported pairs are always a SUBSET of q33's exact output (precision 1);
+  // recall < 1 is the ANN trade — DedupSpec pins it against q33 at
+  // sf0.001. Plan shape: bucket equi-join, never a cartesian/BNLJ.
   // ---------------------------------------------------------------------------
-  /** LSH-candidate near-dup over any prebuilt LSH index at `threshold` —
-    * the q60 machinery, index-parametric so the planted clustered eval
-    * corpus reuses it against [[exactNearDupFrom]] ground truth.
+  /** LSH-candidate near-dup over any prebuilt postings index and its unit
+    * corpus (vec_id, vb) at `threshold` — the q60 machinery,
+    * index-parametric so the planted clustered eval corpus reuses it
+    * against [[exactNearDupFrom]] ground truth.
     */
-  private[operators] def lshNearDupFrom(idx: DataFrame, threshold: Double): DataFrame = {
-    val l = idx.select(col("t"), col("b"), col("vec_id").as("vec_a"), col("vb").as("ua"), col("cbs").as("a_bs"))
-    val r = idx.select(col("t"), col("b"), col("vec_id").as("vec_b"), col("vb").as("ub"), col("cbs").as("b_bs"))
+  private[operators] def lshNearDupFrom(idx: DataFrame, unit: DataFrame, threshold: Double): DataFrame = {
+    val l = idx.select(col("t"), col("b"), col("vec_id").as("vec_a"), col("cbs").as("a_bs"))
+    val r = idx.select(col("t"), col("b"), col("vec_id").as("vec_b"), col("cbs").as("b_bs"))
     l.as("l")
       .join(r.as("r"), col("l.t") === col("r.t") && col("l.b") === col("r.b") && col("vec_a") < col("vec_b"))
       // a pair can collide in several tables: keep it only at the FIRST
       // colliding table — exact dedup as a predicate, no shuffle
       .filter(Similarity.firstCollision("a_bs", "b_bs", tCol = "l.t"))
+      .join(unit.select(col("vec_id").as("vec_a"), col("vb").as("ua")), "vec_a")
+      .join(unit.select(col("vec_id").as("vec_b"), col("vb").as("ub")), "vec_b")
       .withColumn("cosine", expr("vec_dot(ua, ub)"))
       .filter(col("cosine") >= threshold)
       .select(col("vec_a"), col("vec_b"), round(col("cosine"), 6).as("cosine"))
@@ -540,7 +545,7 @@ object Dedup {
 
   def q60LshNearDup(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    lshNearDupFrom(Similarity.buildLshIndex(spark, dir), 0.45)
+    lshNearDupFrom(Similarity.buildLshIndex(spark, dir), Similarity.unitEmbeddings(spark, dir), 0.45)
   }
 
   // -- planted-clusters near-dup eval (see Similarity.plantedCorpus) -----------
@@ -559,7 +564,11 @@ object Dedup {
   /** q60's pipeline on the planted clustered corpus. */
   def plantedLshNearDup(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    lshNearDupFrom(Similarity.plantedLshIndex(spark, dir), PLANTED_NEARDUP_THRESHOLD)
+    lshNearDupFrom(
+      Similarity.plantedLshIndex(spark, dir),
+      Similarity.plantedUnit(spark, dir),
+      PLANTED_NEARDUP_THRESHOLD
+    )
   }
 
   // ---------------------------------------------------------------------------

@@ -77,6 +77,14 @@ object Similarity {
   private def unitCorpus(emb: DataFrame): DataFrame =
     withUnit(Tables.balanced(emb), "embedding", "vb").select(col("vec_id"), col("vb"))
 
+  /** The embeddings' unit corpus, materialized once per session: the one
+    * vector copy that every exact re-rank joins by vec_id (q34's scan, the
+    * LSH candidates of q35/q60, the q75/q76 shortlists). Index tables
+    * carry ids, never vectors.
+    */
+  private[operators] val unitEmbeddings =
+    Stage("q34_unit")((spark, dir) => unitCorpus(Tables.embeddings(spark, dir)).localCheckpoint())
+
   /** Exact cosine re-rank of a candidate set (query_id, va, vec_id, vb) →
     * the common tail of every top-k variant.
     */
@@ -89,6 +97,13 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("vec_id"), round(col("cosine"), 6).as("cosine"))
       .orderBy(col("query_id"), col("rank"))
   }
+
+  /** [[topKRanked]] over candidate ids (query_id, va, vec_id): each
+    * candidate meets its unit vector (vec_id, vb) by id — the re-rank of
+    * every index-pruned variant.
+    */
+  private def rerankIds(cands: DataFrame, unit: DataFrame): DataFrame =
+    topKRanked(cands.join(unit, "vec_id"))
 
   // ---------------------------------------------------------------------------
   // q34 — brute-force cosine top-k: broadcast queries × one corpus scan →
@@ -103,7 +118,7 @@ object Similarity {
 
   def q34BruteForceTopK(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    bruteTopKFrom(queriesDf(spark, dir), unitCorpus(Tables.embeddings(spark, dir)))
+    bruteTopKFrom(queriesDf(spark, dir), unitEmbeddings(spark, dir))
   }
 
   val q34Oracle: String =
@@ -129,7 +144,9 @@ object Similarity {
   // q35 — random-hyperplane LSH ANN: T tables × P sign-bits per table.
   // Hyperplane weights are splitmix64-derived (deterministic, no stored
   // model). Candidates = corpus vectors sharing any probed table-bucket with
-  // the query; exact cosine re-rank on candidates only.
+  // the query; exact cosine re-rank on candidates only, against the unit
+  // vectors fetched by vec_id from the shared `q34_unit` stage (the index
+  // rows are postings: ids and buckets, no vector).
   //
   // Index/query separation: the bucketed corpus is an INDEX — built once per
   // (session, dir) into a localCheckpoint (executor storage, lineage
@@ -438,7 +455,8 @@ object Similarity {
   /** (t, b) bucket rows of `vcol`: one plane_buckets call, posexploded so
     * the table index IS the position. The full bucket array rides along as
     * `bsName` — downstream joins use it to dedup multi-table collisions
-    * WITHOUT a shuffle (see firstCollision).
+    * WITHOUT a shuffle (see firstCollision). Every input column is kept;
+    * the corpus index projects `vcol` away (see [[lshPostings]]).
     */
   private[operators] def withBuckets(
       df: DataFrame,
@@ -473,30 +491,35 @@ object Similarity {
   private val lshIndexCache = new SessionCache[DataFrame]
   private val ivfIndexCache = new SessionCache[(Array[Array[Double]], DataFrame)]
 
-  /** The LSH corpus index rows WITHOUT caching/persistence resolution —
-    * always computed fresh from the source parquet (persist writes this, so
-    * a re-persist never reads the table it is about to overwrite).
+  /** The LSH postings of a unit corpus (vec_id, vb): one (t, b, vec_id, cbs)
+    * row per table. The vector is hashed, then dropped — re-ranks fetch it
+    * from the unit-corpus stage by vec_id, so the index never stores
+    * `lshTables` copies of it.
     */
-  private def computeLshIndex(spark: SparkSession, dir: String, prof: AnnProfile): DataFrame =
-    computeLshIndexOn(spark, Tables.embeddings(spark, dir), prof)
+  private def lshPostings(unit: DataFrame, prof: AnnProfile): DataFrame =
+    withBuckets(unit, "vb", bsName = "cbs", fnSuffix = prof.fnSuffix)
+      .select(col("t"), col("b"), col("vec_id"), col("cbs"))
 
-  /** LSH index rows for an arbitrary embedding frame — the append-refresh
-    * path indexes just the delta through here; the planes are deterministic
-    * functions of the profile geometry, so delta-hashing is bit-identical
-    * to what a full rebuild would produce for those rows.
+  /** LSH postings for an arbitrary embedding frame, computed from source —
+    * persist writes this (a re-persist never reads the table it is about
+    * to overwrite), and the append-refresh path indexes just the delta
+    * through here; the planes are deterministic functions of the profile
+    * geometry, so delta-hashing is bit-identical to what a full rebuild
+    * would produce for those rows.
     */
   private def computeLshIndexOn(spark: SparkSession, emb: DataFrame, prof: AnnProfile): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     installPlaneBuckets(spark, prof)
-    withBuckets(unitCorpus(emb), "vb", bsName = "cbs", fnSuffix = prof.fnSuffix)
+    lshPostings(unitCorpus(emb), prof)
   }
 
-  /** Build (or fetch) the LSH corpus index for the session profile:
-    * (t, b, vec_id, vb-unit-vector), materialized. Resolution order:
-    * session cache → persisted table (when `graft.ann.indexDir` is set and
-    * holds a CURRENT one — sidecar fingerprint and parameters must match;
-    * anything stale is skipped and the index computed fresh) → compute.
-    * Callers time this separately from the query phase.
+  /** Build (or fetch) the LSH corpus index for the session profile: the
+    * postings (t, b, vec_id, cbs), materialized — no vector column; the
+    * re-rank joins [[unitEmbeddings]]. Resolution order: session cache →
+    * persisted table (when `graft.ann.indexDir` is set and holds a CURRENT
+    * one — sidecar fingerprint and parameters must match; anything stale
+    * is skipped and the index computed fresh) → hash the unit-corpus
+    * stage. Callers time this separately from the query phase.
     */
   def buildLshIndex(spark: SparkSession, dir: String): DataFrame =
     buildLshIndexWith(spark, dir, annProfile(spark))
@@ -507,14 +530,15 @@ object Similarity {
       installPlaneBuckets(spark, prof)
       confIndexDir(spark)
         .flatMap(ix => resolvePersisted(spark, dir, lshTable(dir, prof), lshPath(ix, dir, prof), lshSpec(prof)))
-        .getOrElse(computeLshIndex(spark, dir, prof).localCheckpoint())
+        .getOrElse(lshPostings(unitEmbeddings(spark, dir), prof).localCheckpoint())
     }
 
-  /** LSH candidate pairs (query_id, va, vec_id, vb) for an arbitrary query
-    * frame against an index, deduplicated across tables and probes by a
+  /** LSH candidate ids (query_id, va, vec_id) for an arbitrary query frame
+    * against a postings index, deduplicated across tables and probes by a
     * first-hit predicate (no shuffle): a pair is kept only at its earliest
     * probe position, where "hit" compares the query's flat probe array
-    * against the corpus row's exact per-table buckets.
+    * against the corpus row's exact per-table buckets. No vector is read:
+    * the top-k callers join the unit corpus by vec_id, the counts do not.
     */
   private def lshCandidates(
       queries: DataFrame,
@@ -556,7 +580,7 @@ object Similarity {
           s"size(filter(sequence(0, size(cbs) - 1), " +
             s"t -> exists(slice(ps, t * $stride + 1, $stride), pb -> pb = element_at(cbs, t + 1)))) >= $minHits"
         ))
-    filtered.select(col("query_id"), col("va"), col("vec_id"), col("vb"))
+    filtered.select(col("query_id"), col("va"), col("vec_id"))
   }
 
   def q35LshTopK(spark: SparkSession, dir: String): DataFrame = {
@@ -731,7 +755,7 @@ object Similarity {
 
   /** Cluster-assigned unit corpus (vec_id, vb, cluster) — the IVF index
     * rows, computed fresh (no cache/persistence resolution; see
-    * computeLshIndex for why persist needs this).
+    * computeLshIndexOn for why persist needs this).
     */
   private def ivfAssign(spark: SparkSession, emb: DataFrame, cents: Array[Array[Double]]): DataFrame = {
     // cluster assignment + probe distances in RAW space (matching the
@@ -1147,7 +1171,7 @@ object Similarity {
       .withColumn("srank", row_number().over(w))
       .filter(col("srank") <= shortlistN)
       .select(col("query_id"), col("va"), col("vec_id"))
-    topKRanked(broadcast(shortlisted).join(corpus, "vec_id"))
+    rerankIds(broadcast(shortlisted), corpus)
   }
 
   def q75PqTopK(spark: SparkSession, dir: String): DataFrame = pqTopKWith(spark, dir, PQ_SHORTLIST_DEFAULT)
@@ -1156,14 +1180,14 @@ object Similarity {
   def pqTopKWith(spark: SparkSession, dir: String, shortlist: Int): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val (books, codes) = buildPqIndex(spark, dir)
-    pqTopKFrom(spark, queriesDf(spark, dir), books, codes, unitCorpus(Tables.embeddings(spark, dir)), shortlist)
+    pqTopKFrom(spark, queriesDf(spark, dir), books, codes, unitEmbeddings(spark, dir), shortlist)
   }
 
   /** q75 on the planted clustered corpus — the recall yardstick. */
   def plantedPqTopK(spark: SparkSession, dir: String, shortlist: Int = PQ_SHORTLIST_DEFAULT): DataFrame = {
     graft.functions.VecFunctions.install(spark)
     val (books, codes) = plantedPqIndex(spark, dir)
-    pqTopKFrom(spark, plantedQueries(spark, dir), books, codes, unitCorpus(plantedCorpus(spark, dir)), shortlist)
+    pqTopKFrom(spark, plantedQueries(spark, dir), books, codes, plantedUnit(spark, dir), shortlist)
   }
 
   // ---------------------------------------------------------------------------
@@ -1301,7 +1325,7 @@ object Similarity {
       .withColumn("srank", row_number().over(w))
       .filter(col("srank") <= shortlistN)
       .select(col("query_id"), col("va"), col("vec_id"))
-    topKRanked(broadcast(shortlisted).join(corpus, "vec_id"))
+    rerankIds(broadcast(shortlisted), corpus)
   }
 
   def q76IvfPqTopK(spark: SparkSession, dir: String): DataFrame =
@@ -1317,7 +1341,7 @@ object Similarity {
       cents,
       books,
       index,
-      unitCorpus(Tables.embeddings(spark, dir)),
+      unitEmbeddings(spark, dir),
       nprobe,
       shortlist
     )
@@ -1338,7 +1362,7 @@ object Similarity {
       cents,
       books,
       index,
-      unitCorpus(plantedCorpus(spark, dir)),
+      plantedUnit(spark, dir),
       nprobe,
       shortlist
     )
@@ -1365,9 +1389,8 @@ object Similarity {
     graft.functions.VecFunctions.install(spark)
     installPlaneBuckets(spark, prof)
     val m = math.min(math.max(extra, 0), prof.lshPlanes)
-    topKRanked(
-      lshCandidates(queriesDf(spark, dir), buildLshIndexWith(spark, dir, prof), m, prof.fnSuffix, minHits)
-    )
+    val cands = lshCandidates(queriesDf(spark, dir), buildLshIndexWith(spark, dir, prof), m, prof.fnSuffix, minHits)
+    rerankIds(cands, unitEmbeddings(spark, dir))
   }
 
   /** Uniform-corpus LSH candidate count (scan-fraction numerator: pairs
@@ -1437,10 +1460,17 @@ object Similarity {
   private def plantedQueries(spark: SparkSession, dir: String): DataFrame =
     queriesOf(plantedCorpus(spark, dir))
 
+  /** The planted corpus's unit vectors (vec_id, vb), materialized once per
+    * session — the planted twin of [[unitEmbeddings]], shared by every
+    * planted re-rank and by the planted near-dup eval.
+    */
+  private[operators] val plantedUnit =
+    Stage("q35_planted_unit")((spark, dir) => unitCorpus(plantedCorpus(spark, dir)).localCheckpoint())
+
   /** Exact top-k ground truth on the planted corpus. */
   def plantedBruteTopK(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.VecFunctions.install(spark)
-    bruteTopKFrom(plantedQueries(spark, dir), unitCorpus(plantedCorpus(spark, dir)))
+    bruteTopKFrom(plantedQueries(spark, dir), plantedUnit(spark, dir))
   }
 
   /** LSH index over the planted corpus (session-cached, never persisted —
@@ -1452,7 +1482,7 @@ object Similarity {
   private[operators] val plantedLshIndex = Stage("q35_planted_index") { (spark, dir) =>
     graft.functions.VecFunctions.install(spark)
     installPlaneBuckets(spark, Fast)
-    withBuckets(unitCorpus(plantedCorpus(spark, dir)), "vb", bsName = "cbs").localCheckpoint()
+    lshPostings(plantedUnit(spark, dir), Fast).localCheckpoint()
   }
 
   /** q35's pipeline on the planted corpus. Same index, same probe
@@ -1462,7 +1492,8 @@ object Similarity {
     graft.functions.VecFunctions.install(spark)
     installPlaneBuckets(spark, Fast)
     val m = math.min(extra, Fast.lshPlanes)
-    topKRanked(lshCandidates(plantedQueries(spark, dir), plantedLshIndex(spark, dir), m))
+    val cands = lshCandidates(plantedQueries(spark, dir), plantedLshIndex(spark, dir), m)
+    rerankIds(cands, plantedUnit(spark, dir))
   }
 
   /** LSH candidate count on the planted corpus — the measured scanned
@@ -1504,10 +1535,13 @@ object Similarity {
   // ---------------------------------------------------------------------------
   // Persisted ANN indexes — the 100 TB shape: an index is a materialized
   // TABLE, not a per-session computation. persistLshIndex/persistIvfIndex
-  // write the index through sources.Layouts.writeBucketed — LSH
-  // bucketed+sorted on (t, b), IVF on (cluster) — so index-side joins on
-  // those keys plan shuffle-free, and a COLD session (or a different JVM)
-  // reads the table back instead of rebuilding. Discovery is via the spark
+  // write the index through sources.Layouts.writeBucketed — LSH postings
+  // (t, b, vec_id, cbs) bucketed+sorted on (t, b), IVF on (cluster) — so
+  // index-side joins on those keys plan shuffle-free, and a COLD session
+  // (or a different JVM) reads the table back instead of rebuilding. The
+  // LSH table stores no vectors: the exact re-rank joins the session's
+  // unit-corpus stage by vec_id, one copy per vector instead of one per
+  // LSH table. Discovery is via the spark
   // conf `graft.ann.indexDir`: when set, build*Index consults the persisted
   // layout first (the session cache stays on top as the read-through layer).
   //
@@ -1560,7 +1594,7 @@ object Similarity {
     */
   private[operators] final case class IndexSpec(buckets: Int, keys: Seq[String], params: String)
   private def lshSpec(prof: AnnProfile) =
-    IndexSpec(LSH_BUCKETS, Seq("t", "b"), s"lsh:t${prof.lshTables}:p${prof.lshPlanes}")
+    IndexSpec(LSH_BUCKETS, Seq("t", "b"), s"lsh:t${prof.lshTables}:p${prof.lshPlanes}:postings")
   private def ivfSpec(prof: AnnProfile) = IndexSpec(IVF_BUCKETS, Seq("cluster"), s"ivf:c${prof.ivfC}")
   private def pqSpec = IndexSpec(PQ_BUCKETS, Seq("vec_id"), s"pq:m$PQ_M:k$PQ_K")
   // bucketed on cluster: the probe equi-join reads only the probed cells'
@@ -1973,7 +2007,9 @@ object Similarity {
       table,
       path,
       spec,
-      invalidate,
+      // the re-ranks join the unit corpus by vec_id: an index refreshed
+      // over changed embeddings must not meet this session's old vectors
+      () => { invalidate(); unitEmbeddings.invalidate(spark, dir) },
       computeDeltaRows,
       rebuild
     )
@@ -2039,7 +2075,11 @@ object Similarity {
   /** Materialize the LSH index as a bucketed table under `indexDir`
     * (default: the `graft.ann.indexDir` conf) — one write, then every
     * session (this JVM or another) reads it back via [[buildLshIndex]]
-    * instead of rebuilding.
+    * instead of rebuilding. The table holds postings only,
+    * (t, b, vec_id, cbs): the vectors stay in the source embeddings, read
+    * once per session into [[unitEmbeddings]]. A table persisted with a
+    * vector column carries the old params string, so it never matches a
+    * sidecar check and is rebuilt, never served or appended to.
     *
     * Idempotent: returns [[Current]] without touching anything when the
     * persisted index already matches the current data and parameters.
@@ -2066,7 +2106,7 @@ object Similarity {
       computeDeltaRows = delta => computeLshIndexOn(spark, delta, prof),
       rebuild = () =>
         graft.sources.Layouts.writeBucketed(
-          computeLshIndex(spark, dir, prof),
+          computeLshIndexOn(spark, Tables.embeddings(spark, dir), prof),
           table,
           spec.keys,
           spec.buckets,

@@ -89,6 +89,22 @@ class SimilarityPersistSpec extends SparkSpec {
     assert(sf.catalog.tableExists(Similarity.lshTable(sfDir, Similarity.Fast)))
   }
 
+  test("LSH index layout: the persisted (fast, quality) and session indexes are postings without vectors") {
+    val postings = Seq("b", "cbs", "t", "vec_id")
+    assert(Similarity.buildLshIndex(spark.newSession(), sfDir).columns.toSeq.sorted === postings, "session index")
+    val indexDir = Files.createTempDirectory("annidx").toString
+    for (prof <- Seq(Similarity.Fast, Similarity.Quality)) {
+      val s = coldSession(indexDir)
+      s.conf.set(Similarity.ProfileConf, prof.name)
+      assert(Similarity.persistLshIndex(s, sfDir, indexDir).wrote, s"${prof.name} persist should write")
+      val path = s"$indexDir/lsh_${Similarity.indexKey(sfDir)}${prof.fnSuffix}"
+      assert(spark.read.parquet(path).columns.toSeq.sorted === postings, s"${prof.name} persisted table")
+      val served = coldSession(indexDir)
+      served.conf.set(Similarity.ProfileConf, prof.name)
+      assert(Similarity.buildLshIndex(served, sfDir).columns.toSeq.sorted === postings, s"${prof.name} served index")
+    }
+  }
+
   test("re-persist over a current index is an idempotent no-op") {
     val indexDir = Files.createTempDirectory("annidx").toString
     assert(Similarity.persistLshIndex(spark, sfDir, indexDir).wrote)

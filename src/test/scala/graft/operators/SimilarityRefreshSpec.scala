@@ -64,6 +64,40 @@ class SimilarityRefreshSpec extends SparkSpec {
     assert(served === computed, "appended LSH index must serve exactly what a fresh build computes")
   }
 
+  test("an LSH table in the retired vector-carrying layout is rebuilt, never appended to or served") {
+    val indexDir = Files.createTempDirectory("annidx").toString
+    val scratchDir = Files.createTempDirectory("annidx_new").toString
+    val dataDir = Files.createTempDirectory("anndata").toString
+    writeRows(dataDir, 30)
+    // the retired layout: today's postings plus each row's unit vector `vb`,
+    // under the params string that layout was persisted with
+    val s0 = session(scratchDir, Some("append"))
+    assert(Similarity.persistLshIndex(s0, dataDir, scratchDir) === Similarity.Rebuilt)
+    val oldPath = s"$indexDir/lsh_${Similarity.indexKey(dataDir)}"
+    val withVectors = spark.read
+      .parquet(s"$scratchDir/lsh_${Similarity.indexKey(dataDir)}")
+      .join(Similarity.unitEmbeddings(s0, dataDir), "vec_id")
+    graft.sources.Layouts.writeBucketed(withVectors, "graft_lsh_retired_layout", Seq("t", "b"), 16, oldPath)
+    spark.sql("DROP TABLE IF EXISTS `graft_lsh_retired_layout`")
+    Similarity.writeSidecar(spark, oldPath, Similarity.IndexSpec(16, Seq("t", "b"), "lsh:t6:p6"), (30L, 29L))
+    assert(spark.read.parquet(oldPath).columns.contains("vb"))
+
+    // never served: a reader over the same data computes the postings fresh
+    assert(!Similarity.buildLshIndex(session(indexDir, None), dataDir).columns.contains("vb"))
+
+    writeRows(dataDir, 50)
+    val s1 = session(indexDir, Some("append"))
+    assert(
+      Similarity.persistLshIndex(s1, dataDir, indexDir) === Similarity.Rebuilt,
+      "an append-only change over a retired-layout index must rebuild, never append"
+    )
+    assert(!spark.read.parquet(oldPath).columns.contains("vb"), "the rebuild must replace the retired layout")
+    assert(Similarity.persistLshIndex(s1, dataDir, indexDir) === Similarity.Current)
+    val served = rowsOf(Similarity.q35LshTopK(session(indexDir, None), dataDir))
+    val computed = rowsOf(Similarity.q35LshTopK(spark.newSession(), dataDir))
+    assert(served === computed, "the rebuilt index must serve exactly what a fresh build computes")
+  }
+
   test("default rebuild policy retrains on the same append-only change") {
     val indexDir = Files.createTempDirectory("annidx").toString
     val dataDir = Files.createTempDirectory("anndata").toString

@@ -28,6 +28,8 @@ class StageSpec extends SparkSpec {
     SparkEntry.queries // initializes every operator object, so Stage.all lists every stage
     val stages = Stage.all
     assert(stages.size >= 57, s"only ${stages.size} stages registered")
+    val unitStages = Set("q34_unit", "q35_planted_unit")
+    assert(unitStages.subsetOf(stages.map(_.name).toSet), s"unit-corpus stages missing: $unitStages")
     val mismatches = stages.flatMap { s =>
       val shared = s(spark, sfDir)
       val want = canon(s.fresh(spark, sfDir))

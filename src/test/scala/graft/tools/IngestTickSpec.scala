@@ -92,6 +92,16 @@ class IngestTickSpec extends SparkSpec {
     part.write.mode("append").parquet(s"$dstDir/$table.parquet")
   }
 
+  /** Bytes of the parquet data files of the one `<family>_<key>` index
+    * table under `annDir` (geometry side tables such as `_centroids` and
+    * local-FS `.crc` shadows excluded).
+    */
+  private def indexBytes(annDir: String, family: String): Long = {
+    val dirs = new java.io.File(annDir).listFiles().filter(_.getName.matches(s"${family}_[0-9a-f]+")).toSeq
+    assert(dirs.size === 1, s"expected one $family table under $annDir: $dirs")
+    dirs.head.listFiles().filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).map(_.length).sum
+  }
+
   private def labelSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
@@ -199,6 +209,13 @@ class IngestTickSpec extends SparkSpec {
       assert(o.ann.nonEmpty, "embeddings present: ann refresh must run")
       o.ann.foreach { case (fam, out) =>
         assert(out.wrote, s"drop first=$first: ann $fam did not write for a grown corpus ($out)")
+      }
+      // the LSH table is postings only: it holds fewer bytes than the IVF
+      // table, which stores each vector once
+      if (first) {
+        val (lsh, ivf) = (indexBytes(s"$stateDir/ann", "lsh"), indexBytes(s"$stateDir/ann", "ivf"))
+        info(s"bootstrap: LSH table $lsh bytes, IVF table $ivf bytes")
+        assert(lsh < ivf, s"bootstrap: LSH table $lsh bytes, IVF table $ivf bytes")
       }
       if (!first)
         assert(
